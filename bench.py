@@ -35,8 +35,7 @@ import os
 import time
 
 from gentropy_spark.plans import full_registry
-from gentropy_spark.plans.registry import _PLAN_CACHE_KEYS
-from gentropy_spark.session import get_session, release_caches
+from gentropy_spark.session import get_session, is_prepared, release_caches
 
 # Headline set: one per operator family (SURVEY §2 A/C/D/E).
 # Queries whose best run reaches this many seconds get a third timing
@@ -460,11 +459,11 @@ def main() -> None:
             "GENTROPY_SPARK_APPROX_PERCENTILES", ""
         ) == "1",
         # Prepared-plan provenance (r13 verdict item 7): how many timed
-        # keys hit the registry's plan memo on their warm repeat; the
+        # keys hit the prepared-plan memo on their warm repeat; the
         # per-key map is in BENCH_FULL.json. Plan construction only —
-        # execution always runs (registry.py _PLAN_CACHE_KEYS).
+        # execution always runs (session.prepared).
         "plan_cache_keys": sum(
-            1 for k in timings if k in _PLAN_CACHE_KEYS
+            1 for k in timings if is_prepared(registry[k].fn)
         ),
         "full": "BENCH_FULL.json",
         **({"errors": errors} if errors else {}),
@@ -486,13 +485,13 @@ def main() -> None:
         # DataFrame plan is memoized per (app, sf_dir, profile), so
         # the min-of-2's warm run excludes py4j plan construction
         # (legitimate prepared-statement behaviour; execution still
-        # runs per action). "pairs-only" = corpus_curate memoizes just
-        # its MinHash pair subplan (r14); the rest of its eager fn
-        # rebuilds every call.
+        # runs per action). "subplans-only" = corpus_curate reads
+        # prepared subplans (scan, MinHash pairs, Bloom decon); the
+        # rest of its eager fn rebuilds every call.
         "plan_cache": {
-            **{k: (k in _PLAN_CACHE_KEYS) for k in timings},
+            **{k: is_prepared(registry[k].fn) for k in timings},
             **(
-                {"corpus_curate": "pairs-only"}
+                {"corpus_curate": "subplans-only"}
                 if "corpus_curate" in timings
                 else {}
             ),

@@ -56,10 +56,3 @@ def parse_region_col(spec: Column) -> tuple[Column, Column, Column]:
         F.when(valid, start.cast("long")).alias("region_start"),
         F.when(valid, end.cast("long")).alias("region_end"),
     )
-
-
-def in_region(contig: Column, pos: Column, region: GenomicRegion) -> Column:
-    """Membership predicate for a literal region (pushdown-friendly)."""
-    return (
-        (contig == region.contig) & (pos >= region.start) & (pos <= region.end)
-    )

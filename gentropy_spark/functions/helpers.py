@@ -42,13 +42,6 @@ def string2camelcase(name: str) -> str:
     return parts[0].lower() + "".join(p.capitalize() for p in parts[1:])
 
 
-def rename_all_columns(df: DataFrame, prefix: str) -> DataFrame:
-    """Prefix every column (spark.py:490) — the overlap-join alias tool."""
-    return df.select(
-        *[F.col(c).alias(f"{prefix}{c}") for c in df.columns]
-    )
-
-
 def order_array_of_structs_by_field(col: Column, field: str, asc: bool = False) -> Column:
     """Sort an array<struct> by one numeric field (spark.py:256).
 
@@ -80,11 +73,6 @@ def safe_array_union(a: Column, b: Column) -> Column:
     )
 
 
-def filter_array_struct(col: Column, field: str, value: Any) -> Column:
-    """Keep struct elements whose field equals value (spark.py:788)."""
-    return F.filter(col, lambda x: x.getField(field) == F.lit(value))
-
-
 def get_record_with_maximum_value(
     df: DataFrame, group_cols: list[str], order_col: str, tie_col: str
 ) -> DataFrame:
@@ -92,20 +80,6 @@ def get_record_with_maximum_value(
     deterministic via the tie column."""
     w = Window.partitionBy(*group_cols).orderBy(
         F.col(order_col).desc(), F.col(tie_col).asc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def get_record_with_minimum_value(
-    df: DataFrame, group_cols: list[str], order_col: str, tie_col: str
-) -> DataFrame:
-    """One row per group holding the min value (spark.py:139)."""
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col(order_col).asc(), F.col(tie_col).asc()
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))

@@ -134,11 +134,6 @@ def fit_tree(
     return grow(np.arange(len(g)), 0)
 
 
-def fit_stump2(X: np.ndarray, g: np.ndarray, h: np.ndarray, lam: float = 1.0) -> dict:
-    """Depth-2 special case kept for the frozen r4 scorer lineage."""
-    return fit_tree(X, g, h, max_depth=2, lam=lam)
-
-
 def predict_tree(tree: dict, X: np.ndarray) -> np.ndarray:
     if "leaf" in tree:
         return np.full(len(X), tree["leaf"])

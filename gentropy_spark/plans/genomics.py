@@ -26,6 +26,7 @@ from gentropy_spark.operators.finemapping import carma_like, pics, susie_like
 from gentropy_spark.operators.coloc import beta_ratio_sign_avg, coloc, ecaviar_clpp
 from gentropy_spark.operators.overlaps import overlap_join, overlap_length
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table, ts_micros
 
 DEC = "decimal(38,6)"
@@ -89,6 +90,7 @@ _RANKED_SQL_TEMPLATE = """
 
 
 # --- C1: window-based clumping -------------------------------------------
+@prepared
 def q_window_clump_leads(spark: SparkSession, sf_dir: str) -> DataFrame:
     return window_clump(
         sumstats(spark, sf_dir),
@@ -107,6 +109,7 @@ WHERE lead_rank = 1
 
 
 # --- C3: locus-breaker sessionization ------------------------------------
+@prepared
 def q_locus_breaker(spark: SparkSession, sf_dir: str) -> DataFrame:
     return locus_breaker(
         sumstats(spark, sf_dir),
@@ -161,6 +164,7 @@ def _loci_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     return left, right
 
 
+@prepared
 def q_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     left, right = _loci_sides(spark, sf_dir)
     # Tiled equi-join (scale path): proven pair-identical to the plain
@@ -267,6 +271,7 @@ TAG_OVERLAPS_SQL = f"""
 
 
 # --- C6: COLOC -----------------------------------------------------------
+@prepared
 def q_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = coloc(
         _tag_overlaps(spark, sf_dir),
@@ -373,6 +378,7 @@ GROUP BY 1, 2, 3
 
 
 # --- C9: 95% credible set filter -----------------------------------------
+@prepared
 def q_credible_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order by posterior desc per locus, keep rows until cum-mass ≥ 0.95.
 
@@ -446,6 +452,7 @@ REGISTRY: dict[str, QuerySpec] = {
 PICS_TAU = 10_800_000_000  # 3 h distance-decay scale for synthetic r²
 
 
+@prepared
 def q_pics_finemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
     clustered = _cluster_seq(
@@ -498,6 +505,7 @@ PICS_SQL = _pics_sql()
 LD_R2_THRESHOLD = 0.5
 
 
+@prepared
 def q_ld_clump(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep associations not linked to any more-significant one.
 
@@ -879,6 +887,7 @@ GROUP BY 1, 2, 3
 """
 
 
+@prepared
 def q_sumstat_qc_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All QC metrics joined into one per-study table — the
     summary_statistics_qc dataset shape (dataset/summary_statistics_qc.py)."""

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from gentropy_spark.operators.graph import transitive_closure
 from gentropy_spark.plans.genomics import SUMSTATS_SQL, sumstats
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 
@@ -201,6 +202,7 @@ LD_INDEX_MIN_R2 = 0.25
 LD_INDEX_SIGNIF = 100.0
 
 
+@prepared
 def q_ld_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded per-population triangular matrices → per-variant LD sets.
 

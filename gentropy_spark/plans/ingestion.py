@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -69,6 +70,7 @@ def _clean_symbols(c):
     return F.regexp_replace(F.lower(c), "[^a-z0-9-_]+", "_")
 
 
+@prepared
 def q_eqtl_susie_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """eQTL-Catalogue SuSiE finemapping → credible-set study loci.
 
@@ -1987,6 +1989,7 @@ _DECODE_MIN_MAC = 20
 _DECODE_RANGE_US = 1_000_000
 
 
+@prepared
 def q_decode_sumstat_harmonise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """deCODE proteomics summary-stats harmonisation — fifth dialect.
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from gentropy_spark.functions.distributions import chi2_sf_1df_col, chi2_sf_1df_sql
 from gentropy_spark.plans.genomics import SUMSTATS_SQL, sumstats
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 from gentropy_spark.plans.synthmap import (
@@ -66,6 +67,7 @@ GENE_INDEX_SQL = f"""
 
 
 # --- v2g distance weighting ----------------------------------------------
+@prepared
 def q_v2g_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Variants joined to genes within flank; linear distance decay weight.
 
@@ -415,6 +417,7 @@ L2G_W = {"max_weight": 2.0, "rel_weight": 1.5, "genes_in_flank": -0.2}
 L2G_B = -1.0
 
 
+@prepared
 def q_l2g_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _l2g_features_base(spark, sf_dir)
     logit = (
@@ -818,6 +821,7 @@ REGISTRY["interval_evidence"] = QuerySpec(q_interval_evidence, INTERVAL_EVIDENCE
 
 
 # --- extended feature matrix (r4): all families via the factory ------------
+@prepared
 def q_l2g_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL L2G feature matrix: distance + coloc families (base)
     plus the VEP / gene-structure / interval families assembled by the

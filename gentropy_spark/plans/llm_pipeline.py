@@ -40,6 +40,7 @@ from gentropy_spark.operators.similarity import (
     lsh_topk,
 )
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 
@@ -95,6 +96,7 @@ FROM documents
 
 
 # --- E2: rare-shingle Jaccard near-dup -----------------------------------
+@prepared
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rare_shingle_jaccard_pairs(
         read_table(spark, sf_dir, "documents"),
@@ -137,6 +139,7 @@ WHERE ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) >= {MIN_JACCAR
 
 # --- E3/E4: MinHash LSH + SimHash (oracle-exact since r2: the hashes
 # are the cross-engine polynomial family from functions/xhash.py) -----------
+@prepared
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
         read_table(spark, sf_dir, "documents"),
@@ -144,51 +147,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=MINHASH_NUM_HASHES,
         bands=MINHASH_BANDS,
         min_jaccard=MIN_JACCARD,
-    )
-
-
-# Prepared-plan memo for the MinHash pair table (r14): composing
-# pipelines (corpus_curate) re-request the SAME resolved pair plan per
-# (application, sf_dir) instead of paying ~1.7s of py4j construction
-# for the banded-signature expression tree on every call. Plan-only
-# memoisation, mirroring plans/registry.py's prepared-plan cache —
-# execution still happens per action. A stable DataFrame identity also
-# means a repeat caller inside one cache window (bench min-of-2) finds
-# the fixpoint's edge persist still live instead of re-running the LSH
-# pipeline; release_caches() drops that between bench keys as usual.
-# The memo stores the build's track_cache handles next to the plan and
-# re-registers them on every hit (r18, r17 advisory): the builder never
-# re-runs on a hit, so without this the shingle/signature persists
-# would stay unpersisted after a release and every pair consumer would
-# recompute the LSH pipeline from the raw corpus.
-_PAIRS_PLAN_MEMO: dict[tuple, tuple[DataFrame, list[DataFrame]]] = {}
-
-
-def _prepared_subplan(spark: SparkSession, sf_dir: str, tag, build) -> DataFrame:
-    """Generic prepared-subplan memo: the resolved PURE subplan per
-    (application, sf_dir, tag), with the build's track_cache handles
-    re-registered on every hit (same posture as registry._plan_cached).
-    Only for pure plan builders — never a subplan whose construction
-    runs jobs or localCheckpoints.
-    """
-    from gentropy_spark.session import cache_snapshot, caches_since, track_cache
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    entry = _PAIRS_PLAN_MEMO.get(key)
-    if entry is None:
-        before = cache_snapshot()
-        df = build()
-        _PAIRS_PLAN_MEMO[key] = (df, caches_since(before))
-        return df
-    df, tracked = entry
-    for t in tracked:
-        track_cache(t)
-    return df
-
-
-def minhash_pairs_prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _prepared_subplan(
-        spark, sf_dir, "minhash_pairs", lambda: q_dedup_minhash(spark, sf_dir)
     )
 
 
@@ -308,6 +266,7 @@ COS_SQL = (
 )
 
 
+@prepared
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -337,6 +296,7 @@ SELECT query_id, corpus_id, cosine, rank FROM ranked WHERE rank <= 5
 
 # --- E11: embedding-cosine near-dup pairs (LSH-blocked since r2;
 # r3: vectorized packed-sign-bit UDF + 16-bit bands) ----------------------
+@prepared
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs blocked by banded sign-pattern LSH — the scale
     path (candidate space follows the data, not a label column)."""
@@ -391,6 +351,7 @@ WHERE cosine >= {format(EMB_MIN_COSINE, ".17e")}
 
 
 # --- E7: text quality profile --------------------------------------------
+@prepared
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Values identical to ``quality_profile`` (the oracle is unchanged)
     but STAGED: tokenize once, token aggregates over the column ref,
@@ -507,6 +468,7 @@ FROM scored
 
 
 # --- E9: token counting ---------------------------------------------------
+@prepared
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     return docs.select(
@@ -933,6 +895,7 @@ IVFPQ_N_LISTS = 16
 IVFPQ_N_PROBE = 4
 
 
+@prepared
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-k (operators/similarity.py ivfpq_topk): queries
     probe their IVFPQ_N_PROBE closest of IVFPQ_N_LISTS inverted lists
@@ -1062,13 +1025,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gentropy_spark.operators.dedup import duplicate_clusters
 
     docs = read_table(spark, sf_dir, "documents")
-    # Prepared pair PLAN (r17): this key is not registry-plan-cached
-    # (the fixpoint acts eagerly), so every call rebuilt the banded
-    # MinHash expression tree over py4j — the event-log probe showed a
-    # 3.9s zero-task driver gap before the first fixpoint job. The
-    # memo returns the same resolved plan per (application, sf_dir);
-    # execution still happens per action.
-    return duplicate_clusters(docs, minhash_pairs_prepared(spark, sf_dir))
+    # The fixpoint acts eagerly, so this key is not prepared; its pair
+    # plan is (the banded MinHash tree costs ~3.9 s of py4j to build).
+    return duplicate_clusters(docs, q_dedup_minhash(spark, sf_dir))
 
 
 # Min-label propagation as a recursive CTE: a label walks an edge only
@@ -1440,6 +1399,7 @@ BLOOM_K = 4
 _BLOOM_COEFFS = seed_coeffs(BLOOM_K)
 
 
+@prepared
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc Bloom-probe contamination counts against the eval split.
 
@@ -1684,14 +1644,14 @@ CURATE_MAX_CONTAMINATION = 0.5
 CURATE_MIN_QSCORE = 0.48
 
 
+@prepared
 def _curate_scanned(
     spark: SparkSession, sf_dir: str, classifier_gate: bool
 ) -> DataFrame:
     """The curation pipeline's fused quality+langid(+classifier) scan,
     persisted (see the r14 note inside). Factored out of
-    q_corpus_curate (r18) so the PURE scan subplan can be prepared per
-    (application, sf_dir, gate) — repeat curate calls were re-paying
-    its py4j construction + Catalyst analysis on every invocation.
+    q_corpus_curate so the PURE scan subplan can be prepared: repeat
+    curate calls skip its py4j construction + Catalyst analysis.
     """
     from gentropy_spark.functions.text import STOPWORDS
     from gentropy_spark.operators.dedup import spread_if_narrow
@@ -1832,16 +1792,7 @@ def q_corpus_curate(
     """
     from gentropy_spark.operators.dedup import duplicate_drop_ids
 
-    # The fused quality+langid(+classifier) scan is a PURE subplan —
-    # prepared per (application, sf_dir, gate) like the MinHash pairs
-    # (r18): repeat curate calls skip its py4j construction + Catalyst
-    # analysis, and the scan's persist mark re-registers on every hit.
-    scanned = _prepared_subplan(
-        spark,
-        sf_dir,
-        ("curate_scanned", classifier_gate),
-        lambda: _curate_scanned(spark, sf_dir, classifier_gate),
-    )
+    scanned = _curate_scanned(spark, sf_dir, classifier_gate)
     # is_canonical via ANTI-join on the non-canonical drop set (tiny:
     # bounded by duplicate-edge endpoints) — not an inner join against
     # the full duplicate_clusters output, which would drag every corpus
@@ -1849,9 +1800,8 @@ def q_corpus_curate(
     # values identical by construction). The broadcast hint is explicit
     # (r14): leaving it to AQE planned a SortMergeJoin LeftAnti in the
     # static plan whose ensure-requirements exchanges survived the
-    # runtime BHJ conversion as dead stages; the pair PLAN is the
-    # prepared one so repeat calls skip its py4j construction.
-    drop = duplicate_drop_ids(minhash_pairs_prepared(spark, sf_dir))
+    # runtime BHJ conversion as dead stages.
+    drop = duplicate_drop_ids(q_dedup_minhash(spark, sf_dir))
     # Decontamination via the BLOOM probe (r13, was the exact 5-gram
     # set join): the Bloom path is the scale posture E20b exists for —
     # the eval side compresses to a fixed 4096-word broadcast array and
@@ -1861,16 +1811,8 @@ def q_corpus_curate(
     # cross-engine-identical) false-positive-stricter; the oracle SQL
     # below uses the same bloom semantics, bit-identical. The exact
     # variant stays registered as the `decontaminate` key.
-    # Prepared like the scan (r18): q_bloom_decontaminate is a pure
-    # plan builder (registry plan-cache posture), but the raw call here
-    # rebuilt it per curate invocation.
-    decon = _prepared_subplan(
-        spark,
-        sf_dir,
-        "curate_decon",
-        lambda: q_bloom_decontaminate(spark, sf_dir).select(
-            "doc_id", F.col("bloom_hit_ratio").alias("contamination_ratio")
-        ),
+    decon = q_bloom_decontaminate(spark, sf_dir).select(
+        "doc_id", F.col("bloom_hit_ratio").alias("contamination_ratio")
     )
     gate = (
         (F.col("n_tokens") >= CURATE_MIN_TOKENS)
@@ -2069,6 +2011,7 @@ def _proj_chain_dec12(
         ).cast("decimal(38,12)")
         s = t if s is None else (s + t).cast("decimal(38,12)")
     return s
+@prepared
 def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leading eigenpair of the embedding covariance (E51).
 
@@ -2288,6 +2231,7 @@ PCA_ANN_BINS = 16
 PCA_ANN_K = 5
 
 
+@prepared
 def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k cosine neighbours through a PCA-projection band prefilter
     (E53). Candidate generation: proj(x) = Σ_j round((x_j − μ_j)·v_j, 9)
@@ -2542,6 +2486,7 @@ def _topm_eigen_kernel(pdf_iter):
     yield pd.DataFrame(out)
 
 
+@prepared
 def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-m eigenpairs of the embedding covariance by deflated power
     iteration (E54). Output one row per (component, dim): 6dp mean /
@@ -2578,9 +2523,8 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational SUM), re-quantizes unit vectors to 12dp, and
     left-associates the deflation update exactly like the SQL
     expression; outputs round to 6dp; trace = (Σ_j S_jj)/n from the
-    exact DECIMAL diagonal sums. Plan-cache memoized since r17
-    (registry._PLAN_CACHE_KEYS); the mus/gram persist marks are
-    re-registered on every memo hit (r18), so the release rule holds.
+    exact DECIMAL diagonal sums. ``prepared``, so the mus/gram persist
+    marks are re-registered on every memo hit.
     """
     from gentropy_spark.operators.dedup import spread_if_narrow
     from gentropy_spark.session import track_cache
@@ -2814,6 +2758,7 @@ REGISTRY["embedding_pca_topm"] = QuerySpec(
 PCA_PROJECT_COMPONENTS = 2
 
 
+@prepared
 def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector top-2 PC coordinates (E55): pc_k = Σ_j round((x_j −
     mean_j)·loading_kj, 9) as order-free DECIMAL sums, 6dp output.
@@ -3191,6 +3136,7 @@ REGISTRY["line_boilerplate"] = QuerySpec(q_line_boilerplate, LINE_BOILER_SQL)
 
 
 # --- E27: duplicate-graph triangle counts ---------------------------------
+@prepared
 def q_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the verified near-duplicate graph (the
     node-iterator algorithm): length-2 paths a<b<c by joining the
@@ -3203,11 +3149,7 @@ def q_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gentropy_spark.session import track_cache
 
     docs = read_table(spark, sf_dir, "documents")
-    # Prepared pair plan (r17): shared resolved MinHash tree, see
-    # q_dedup_clusters.
-    e = track_cache(
-        minhash_pairs_prepared(spark, sf_dir).select("id_a", "id_b")
-    )
+    e = track_cache(q_dedup_minhash(spark, sf_dir).select("id_a", "id_b"))
     path2 = (
         e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .join(
@@ -3395,6 +3337,7 @@ def _doc_bigrams(docs: DataFrame) -> DataFrame:
     )
 
 
+@prepared
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram-LM perplexity (SURVEY E30).
 
@@ -3525,6 +3468,7 @@ REGISTRY["lm_perplexity"] = QuerySpec(q_lm_perplexity, _lm_perplexity_sql())
 LM_KN_DISCOUNT = 0.75
 
 
+@prepared
 def q_lm_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document interpolated Kneser-Ney bigram perplexity (E50).
 
@@ -4739,11 +4683,7 @@ def q_dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     split proportionally to edge weight, so stronger duplicates
     concentrate rank on the family's most-similar member.
     """
-    # Prepared pair plan (r17): shared resolved MinHash tree, see
-    # q_dedup_clusters.
-    pairs = minhash_pairs_prepared(spark, sf_dir).select(
-        "id_a", "id_b", "jaccard"
-    )
+    pairs = q_dedup_minhash(spark, sf_dir).select("id_a", "id_b", "jaccard")
     from gentropy_spark.session import track_local_checkpoint
 
     # localCheckpoint, not cache (r17): a cache node keeps the MinHash
@@ -5321,6 +5261,7 @@ SEMDEDUP_TARGET_OCC = 256
 SEMDEDUP_NPROBE = 6
 
 
+@prepared
 def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup pruning over the embeddings table (SURVEY E45).
 
@@ -6111,10 +6052,10 @@ def _bpe_train_loop(spark: SparkSession, sf_dir: str):
         )
     # Safety note: once release_caches() frees these checkpoints the
     # returned DataFrames hold truncated-lineage RDDs that cannot
-    # recompute — which is why bpe_train/bpe_encode are deliberately
-    # NOT in registry._PLAN_CACHE_KEYS (pinned by
-    # tests/test_round16_ops.py): every wrapped call rebuilds the
-    # chain, so a release between calls can never strand a consumer.
+    # recompute — which is why the bpe builders are deliberately NOT
+    # ``prepared`` (pinned by tests/test_prepared.py): every call
+    # rebuilds the chain, so a release between calls can never strand
+    # a consumer.
     return merges, state
 
 

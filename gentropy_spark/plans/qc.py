@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from gentropy_spark.operators.coloc import grouped_logsumexp
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table, ts_micros
 
 DEC = "decimal(38,6)"
@@ -53,6 +54,7 @@ GWAS_SQL = f"""
 
 
 # --- D1: genomic-control lambda ------------------------------------------
+@prepared
 def q_gc_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _gwas(spark, sf_dir)
     # z*z, not pow(z, 2): POW is libm-evaluated and may differ by 1 ulp

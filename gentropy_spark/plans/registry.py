@@ -28,139 +28,6 @@ class QuerySpec:
     oracle: str | None
 
 
-# --- Prepared-plan cache ---------------------------------------------------
-# Building a large DataFrame plan through py4j costs 0.5-4s of driver
-# latency per call (one JVM round-trip per Column op — measured: q5
-# 0.76s, l2g_feature_matrix 4.0s). A resolved plan is a pure function
-# of (application, sf_dir, profile flags) for the keys listed below, so
-# re-requesting the same query returns the SAME resolved DataFrame —
-# the prepared-statement / plan-cache behaviour of any mature engine.
-# Execution still happens per action; nothing materialised is reused.
-#
-# Keys are opt-in and deliberately EXCLUDE queries whose fn performs
-# real computation eagerly (iterative fixpoints: dedup_clusters,
-# corpus_curate; streaming drains; writer-backed entries) — memoising
-# those would skip genuine work on re-run and misreport the engine.
-# study_locus_qc_flags carries its own memo inside plans/variants.py.
-_PLAN_CACHE_KEYS = frozenset(
-    {
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier",
-        "window_clump_leads",
-        "locus_breaker",
-        "overlap_join",
-        "coloc",
-        "pics_finemap",
-        "credible_set_filter",
-        "ld_clump",
-        "qc_gc_lambda",
-        "sumstat_qc_summary",
-        "v2g_distance",
-        "l2g_score",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
-        "ann_cosine_topk",
-        "dedup_embedding_cosine",
-        "text_quality",
-        "token_count",
-        "l2g_feature_matrix",
-        "ld_index_build",
-        "sumstat_harmonise_finngen",
-        "asof_join",
-        "eqtl_susie_ingest",
-        "decode_sumstat_harmonise",
-        "lm_perplexity",
-        "dup_triangles",
-        "gwas_study_ingest",
-        "gwas_top_hits",
-        "decode_study_ingest",
-        # r17: the heavy LLM keys that are PURE plan builders (no
-        # fixpoint, no localCheckpoint, no drain) but were rebuilt
-        # over py4j on every call — semdedup's quantizer DAG alone is
-        # ~2s of driver wall per build. Cache-marked subtrees are
-        # re-registered on every memo hit (r18) so they re-persist
-        # after release_caches(); only the resolved PLAN is reused
-        # (execution recurs per action, same as the r14
-        # minhash_pairs_prepared posture).
-        "semdedup_prune",
-        "bloom_decontaminate",
-        "ann_ivfpq_topk",
-        "embedding_pca_power",
-        "embedding_pca_topm",
-        "embedding_pca_project",
-        "ann_pca_topk",
-        "lm_kn_perplexity",
-    }
-)
-# Memo value is (resolved DataFrame, track_cache handles created by the
-# build): the handles are re-registered on every hit so the persist
-# marks survive release_caches() (see wrapped() below; r17 advisory).
-_PLAN_MEMO: dict[tuple, tuple[DataFrame, list[DataFrame]]] = {}
-# Env profile flags that change generated plans (relational.py): part
-# of the cache key so toggling a profile always rebuilds.
-_PROFILE_ENVS = ("GENTROPY_SPARK_NATIVE_SUMS", "GENTROPY_SPARK_APPROX_PERCENTILES")
-
-
-# Wrapper identity must be stable across full_registry() calls (the
-# CLI step resolver compares fns by identity), so wrappers are built
-# once per (key, raw fn) and reused.
-_WRAPPER_MEMO: dict[tuple[str, Callable], Callable] = {}
-
-
-def _plan_cached(
-    name: str, fn: Callable[[SparkSession, str], DataFrame]
-) -> Callable[[SparkSession, str], DataFrame]:
-    import os
-
-    cached = _WRAPPER_MEMO.get((name, fn))
-    if cached is not None:
-        return cached
-
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from gentropy_spark.session import (
-            cache_snapshot,
-            caches_since,
-            track_cache,
-        )
-
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            name,
-            tuple(os.environ.get(e, "") for e in _PROFILE_ENVS),
-        )
-        hit = _PLAN_MEMO.get(key)
-        if hit is not None:
-            df, tracked = hit
-            # Re-register the build's persist marks (r18, r17 advisory):
-            # on a hit the builder never re-runs, so after
-            # release_caches() its multi-consumer subtrees would
-            # otherwise execute uncached, once per consumer. track_cache
-            # is a no-op while the handle is still persisted.
-            for t in tracked:
-                track_cache(t)
-            return df
-        before = cache_snapshot()
-        df = fn(spark, sf_dir)
-        tracked = caches_since(before)
-        # Evict entries from other (stopped) SparkSessions: their
-        # DataFrames hold py4j references into dead JVM state, and a
-        # driver that recreates sessions would otherwise leak one
-        # entry per (appId, sf_dir, key, profile) forever.
-        app_id = key[0]
-        for stale in [k for k in _PLAN_MEMO if k[0] != app_id]:
-            del _PLAN_MEMO[stale]
-        _PLAN_MEMO[key] = (df, tracked)
-        return df
-
-    wrapped.__name__ = getattr(fn, "__name__", name)
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn  # tests can reach the raw builder
-    _WRAPPER_MEMO[(name, fn)] = wrapped
-    return wrapped
-
-
 # The external correctness snapshot verifies the FIRST 50 ``queries()``
 # entries. Rotation policy: every key whose newest driver evidence
 # predates its last code change (or the last testdata format change)
@@ -289,10 +156,7 @@ def full_registry() -> dict[str, QuerySpec]:
         overlap = merged.keys() & module.REGISTRY.keys()
         if overlap:
             raise ValueError(f"duplicate query keys: {sorted(overlap)}")
-        for key, spec in module.REGISTRY.items():
-            if key in _PLAN_CACHE_KEYS:
-                spec = QuerySpec(_plan_cached(key, spec.fn), spec.oracle)
-            merged[key] = spec
+        merged.update(module.REGISTRY)
     registry: dict[str, QuerySpec] = {}
     for key in _SNAPSHOT_PRIORITY:
         if key in merged:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from gentropy_spark.functions.arrays import HARMONIC_NORM, harmonic_sum
 from gentropy_spark.operators.reshape import long_to_wide, top_k_per_group, wide_to_long
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 DEC = "decimal(38,6)"
@@ -89,6 +90,7 @@ def _dsum(col: F.Column) -> F.Column:
 
 
 # --- A1: pricing summary (TPC-H Q1 shape) --------------------------------
+@prepared
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -128,6 +130,7 @@ GROUP BY l_returnflag, l_linestatus
 
 
 # --- A2: shipping priority (TPC-H Q3 shape) ------------------------------
+@prepared
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -173,6 +176,7 @@ LIMIT 10
 
 
 # --- A3: local supplier volume (TPC-H Q5 shape) --------------------------
+@prepared
 def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     nation = read_table(spark, sf_dir, "nation")
@@ -452,6 +456,7 @@ REGISTRY["complex_set_match"] = QuerySpec(q_complex_set_match, COMPLEX_SET_SQL)
 
 
 # --- A10: as-of join (time-series point-in-time lookup) -------------------
+@prepared
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time as-of join over the event stream (SURVEY A10).
 

@@ -20,6 +20,7 @@ from gentropy_spark.functions.stats import (
     split_pvalue,
 )
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 P_SQL = "value / 300.0"
@@ -397,6 +398,7 @@ FINNGEN_IMPUTATION_MIN_R2 = 0.8
 FINNGEN_MIN_ALLELE_COUNT = 20
 
 
+@prepared
 def q_sumstat_harmonise_finngen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     base = ev.select(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -306,6 +307,7 @@ def _raw_gwas_ancestry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@prepared
 def q_gwas_study_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GWAS Catalog study-index assembly.
 
@@ -1533,6 +1535,7 @@ _DECODE_ID_RE = (
 )
 
 
+@prepared
 def q_decode_study_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """deCODE pQTL study index: manifest → id-parts → aptamer → complex.
 
@@ -1826,6 +1829,7 @@ REGISTRY["decode_study_ingest"] = _decode_study_spec()
 _TOPHIT_DIST = 250_000
 
 
+@prepared
 def q_gwas_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GWAS Catalog top-hit ingestion step: split + window clumping.
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from gentropy_spark.plans.genomics import CREDIBLE_SQL, SUMSTATS_SQL, q_credible_set
 from gentropy_spark.plans.registry import QuerySpec
+from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table  # noqa: F401 (module pattern)
 
 ID_HASH_THRESHOLD = 40
@@ -544,7 +545,6 @@ MHC_END_US = 1_704_499_200_000_000  # 2024-01-06
 
 _QC_FLAGS_SPARK_SQL: dict[int, str] = {}
 _QC_FLAGS_SRC_VIEW = "qcflags_sumstats_src"
-_QC_FLAGS_DF_MEMO: dict[tuple[str, str], "DataFrame"] = {}
 
 
 def _study_locus_qc_spark_sql(n_parts: int) -> str:
@@ -806,35 +806,21 @@ FROM flagged
     return _QC_FLAGS_SPARK_SQL[n_parts]
 
 
+@prepared
 def q_study_locus_qc_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """23-flag QC sweep over the clustered significant associations.
 
-    The resolved DataFrame is memoised per (application, sf_dir):
-    the logical plan is a pure function of those two inputs, and the
-    repeated parse+analyze of the large SQL string (~0.4s driver
-    time) otherwise dominates the sub-second execution. The memo
-    holds the resolved plan, so later re-registrations of the temp
+    ``prepared``: the repeated parse+analyze of the large SQL string
+    (~0.4s driver time) otherwise dominates the sub-second execution.
+    The resolved plan is kept, so later re-registrations of the temp
     view by other sf_dirs don't affect earlier entries.
     """
     from gentropy_spark.plans.genomics import sumstats
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    hit = _QC_FLAGS_DF_MEMO.get(key)
-    if hit is not None:
-        return hit
     sumstats(spark, sf_dir).createOrReplaceTempView(_QC_FLAGS_SRC_VIEW)
-    df = spark.sql(
+    return spark.sql(
         _study_locus_qc_spark_sql(spark.sparkContext.defaultParallelism)
     )
-    # Same stale-app eviction as registry._plan_cached: entries from
-    # stopped applications hold dead py4j references — drop them so a
-    # driver that recreates SparkSessions doesn't leak one DataFrame
-    # per (app, sf_dir) forever.
-    for stale in [k for k in _QC_FLAGS_DF_MEMO if k[0] != app_id]:
-        del _QC_FLAGS_DF_MEMO[stale]
-    _QC_FLAGS_DF_MEMO[key] = df
-    return df
 
 
 def _study_locus_qc_sql() -> str:

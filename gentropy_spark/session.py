@@ -15,8 +15,11 @@ cluster scale:
 
 from __future__ import annotations
 
+import functools
 import os
 import warnings
+from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -77,6 +80,8 @@ def _default_driver_mem() -> str:
 # storms — measured 3-4x slowdowns (r3 advice item, fixed r4).
 _CACHED: list[DataFrame] = []
 _CACHE_CAP = 64
+# Handle lists of the ``prepared`` builds now running, innermost last.
+_OPEN_BUILDS: list[list[DataFrame]] = []
 
 
 def track_cache(df: DataFrame) -> DataFrame:
@@ -86,7 +91,12 @@ def track_cache(df: DataFrame) -> DataFrame:
     CacheManager keys cache entries by analyzed plan, so a second
     handle for the same plan would (a) warn, and (b) on FIFO eviction
     unpersist the shared entry out from under the first handle.
+
+    Every ``prepared`` build open at the time records ``df``, new or
+    already persisted, so a memo hit can re-register it later.
     """
+    for handles in _OPEN_BUILDS:
+        handles.append(df)
     level = df.storageLevel
     if level.useMemory or level.useDisk:
         return df
@@ -97,24 +107,66 @@ def track_cache(df: DataFrame) -> DataFrame:
     return df
 
 
-# --- plan-memo cache re-registration (r18, closing the r17 advisory) -------
-# A memoized plan builder (registry._plan_cached, the MinHash
-# pairs-prepared memo) is NOT re-invoked on a memo hit, so its
-# persist() calls never re-run: after release_caches() every
-# multi-consumer subtree under a memoized plan would silently recompute
-# per consumer (semdedup's own comment measures 13.5s uncached vs 3.6s
-# at sf0.1). The memo therefore stores the track_cache handles created
-# during the build and re-registers them on every hit — a no-op while
-# they are still persisted, a lazy re-persist after a release.
-def cache_snapshot() -> set[int]:
-    """Identity snapshot of the tracked-cache registry (take BEFORE a
-    memoized build; pass to ``caches_since`` after)."""
-    return {id(df) for df in _CACHED}
+# --- prepared plans ---------------------------------------------------------
+_PREPARED: dict[tuple, tuple[DataFrame, list[DataFrame]]] = {}
+# Env profile flags that change generated plans (relational.py): part
+# of the prepared key so toggling a profile always rebuilds.
+_PROFILE_ENVS = ("GENTROPY_SPARK_NATIVE_SUMS", "GENTROPY_SPARK_APPROX_PERCENTILES")
 
 
-def caches_since(before: set[int]) -> list[DataFrame]:
-    """The DataFrames track_cache()d since ``before`` was snapshotted."""
-    return [df for df in _CACHED if id(df) not in before]
+def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Memoize the resolved DataFrame of a pure plan builder.
+
+    Building a large plan through py4j costs 0.5-4 s of driver time
+    (one JVM round-trip per Column op), so ``build(spark, sf_dir,
+    *args)`` runs once per (application, build, sf_dir, args, profile
+    env flags) and later calls return the SAME DataFrame — the
+    prepared-statement behaviour of a mature engine. Execution still
+    happens per action; nothing materialised is reused. A miss evicts
+    the entries of other (stopped) applications, whose DataFrames hold
+    dead py4j references.
+
+    The ``track_cache`` handles the build records (its own persists and
+    those re-registered by inner prepared hits) are re-registered on
+    every hit: the builder does not re-run, so after
+    ``release_caches()`` its multi-consumer subtrees would otherwise
+    execute uncached, once per consumer.
+
+    Only PURE builders may carry this: a builder that runs jobs while
+    building (fixpoints, drains, writers) would skip real work on a
+    hit, and one that localCheckpoints (the BPE trainer) would hand
+    out truncated lineage that ``release_caches()`` has already freed.
+    """
+
+    @functools.wraps(build)
+    def wrapper(spark: SparkSession, sf_dir: str, *args) -> DataFrame:
+        app_id = spark.sparkContext.applicationId
+        flags = tuple(os.environ.get(e, "") for e in _PROFILE_ENVS)
+        key = (app_id, build, sf_dir, args, flags)
+        hit = _PREPARED.get(key)
+        if hit is not None:
+            df, handles = hit
+            for h in handles:
+                track_cache(h)
+            return df
+        handles: list[DataFrame] = []
+        _OPEN_BUILDS.append(handles)
+        try:
+            df = build(spark, sf_dir, *args)
+        finally:
+            _OPEN_BUILDS.pop()
+        for stale in [k for k in _PREPARED if k[0] != app_id]:
+            del _PREPARED[stale]
+        _PREPARED[key] = (df, handles)
+        return df
+
+    wrapper.prepared = True
+    return wrapper
+
+
+def is_prepared(fn: Callable) -> bool:
+    """True when ``fn`` is a ``prepared`` plan builder."""
+    return getattr(fn, "prepared", False) is True
 
 
 # localCheckpoint()ed intermediates (the BPE trainer's per-iteration
@@ -241,6 +293,9 @@ def get_session(
         # Python DataSource V2 pushFilters (sources/synthetic.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", _default_driver_mem())
+        # Python workers (mapInPandas kernels) must import this package
+        # even when the driver found it through sys.path alone.
+        .config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1]))
         .config("spark.ui.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():

@@ -1,20 +1,18 @@
 """Cloud object-store wiring, Spark-first (r9).
 
-Mirrors the reference's external/s3.py + external/gcs.py surface with
-the architecture inverted for a distributed engine: the reference
-copies bytes driver-side with vendor SDKs (boto-style clients,
-google-cloud-storage uploads); on Spark the executors should read and
-write ``s3a://`` / ``gs://`` URIs DIRECTLY through the Hadoop
-connectors, so what this module provides is the connector
+Mirrors the reference's external/s3.py surface with the architecture
+inverted for a distributed engine: the reference copies bytes
+driver-side with vendor SDKs (boto-style clients); on Spark the
+executors should read and write ``s3a://`` URIs DIRECTLY through the
+Hadoop connector, so what this module provides is the connector
 CONFIGURATION — a typed credentials/config record (stdlib dataclass,
-no pydantic dependency) and the public ``fs.s3a.* `` / ``fs.gs.*``
-Hadoop conf entries it expands to. A 100 TB read must never funnel
-through a driver-side SDK copy.
+no pydantic dependency) and the public ``fs.s3a.*`` Hadoop conf
+entries it expands to. A 100 TB read must never funnel through a
+driver-side SDK copy.
 
 Reference parity points: S3Config fields + ``from_file`` /
 ``from_env`` (external/s3.py:12,54,87 — same standard AWS_* env
-variables), GCS path handling (external/gcs.py:23 copy_to_gcs becomes
-``df.write.parquet("gs://...")`` once the conf is applied).
+variables).
 """
 
 from __future__ import annotations
@@ -91,27 +89,3 @@ class S3Config:
                 self.s3_host_port == 443
             ).lower(),
         }
-
-
-def gcs_hadoop_conf(
-    project_id: str | None = None,
-    service_account_json: str | None = None,
-) -> dict[str, str]:
-    """Public GCS connector settings — ``gs://`` paths become
-    executor-readable; the reference's driver-side copy_to_gcs
-    becomes an ordinary distributed ``df.write``."""
-    conf = {
-        "spark.hadoop.fs.AbstractFileSystem.gs.impl": (
-            "com.google.cloud.hadoop.fs.gcs.GoogleHadoopFS"
-        ),
-        "spark.hadoop.fs.gs.impl": (
-            "com.google.cloud.hadoop.fs.gcs.GoogleHadoopFileSystem"
-        ),
-    }
-    if project_id:
-        conf["spark.hadoop.fs.gs.project.id"] = project_id
-    if service_account_json:
-        conf[
-            "spark.hadoop.google.cloud.auth.service.account.json.keyfile"
-        ] = service_account_json
-    return conf

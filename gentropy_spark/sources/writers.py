@@ -76,19 +76,6 @@ def read_csv_quarantine(
     )
 
 
-def read_json_quarantine(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """JSON-lines ingest with malformed-row quarantine."""
-    full = schema.add("_corrupt_record", T.StringType())
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

@@ -787,37 +787,6 @@ def test_stream_upsert_sink_incremental(spark, sf_dir, tmp_path):
     assert diff.count() == 0
 
 
-def test_plan_cache_identity_and_keying(spark, sf_dir, monkeypatch):
-    """Prepared-plan cache (plans/registry.py): pure plan-builder keys
-    return the SAME resolved DataFrame for the same (app, sf_dir,
-    profile) — and rebuild when the sf_dir or a profile env flag
-    changes. Iterative keys (real work inside fn) must NOT be wrapped."""
-    from gentropy_spark.plans import full_registry
-    from gentropy_spark.plans.registry import _PLAN_CACHE_KEYS
-
-    # Pin a known baseline profile (save/restore via monkeypatch): the
-    # test must pass — and not strip the user's flags — when run under
-    # the GENTROPY_SPARK_NATIVE_SUMS=1 production profile.
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
-    reg = full_registry()
-    fn = reg["q3_shipping_priority"].fn
-    a = fn(spark, sf_dir)
-    assert fn(spark, sf_dir) is a
-    # env profile flips the key
-    monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
-    b = fn(spark, sf_dir)
-    assert b is not a
-    assert fn(spark, sf_dir) is b
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS")
-    assert fn(spark, sf_dir) is a
-    # iterative pipelines are deliberately unwrapped
-    for key in ("dedup_clusters", "corpus_curate"):
-        assert key not in _PLAN_CACHE_KEYS
-        assert not hasattr(reg[key].fn, "__wrapped__")
-    # wrapped fns expose the raw builder
-    assert hasattr(fn, "__wrapped__")
-
-
 def _repo_root() -> str:
     import os
 

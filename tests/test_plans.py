@@ -34,7 +34,7 @@ def test_window_clump_single_exchange(spark, sf_dir):
     """All clumping windows share the (study, contig) partitioning — the
     plan must contain exactly ONE shuffle exchange (plus AQE wrappers),
     not one per window function."""
-    plan = _formatted(q_window_clump_leads(spark, sf_dir))
+    plan = _formatted(q_window_clump_leads.__wrapped__(spark, sf_dir))
     n_exchanges = plan.count("+- Exchange") + plan.count("   Exchange")
     assert n_exchanges == 1, f"expected 1 exchange, got {n_exchanges}:\n{plan}"
 
@@ -100,7 +100,7 @@ def test_asof_single_exchange_no_range_join(spark, sf_dir):
     BroadcastNestedLoopJoin/CartesianProduct from a range predicate."""
     from gentropy_spark.plans.relational import q_asof_join
 
-    plan = _formatted(q_asof_join(spark, sf_dir))
+    plan = _formatted(q_asof_join.__wrapped__(spark, sf_dir))
     assert "NestedLoop" not in plan and "Cartesian" not in plan
     import re
 

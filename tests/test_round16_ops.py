@@ -57,25 +57,6 @@ def test_bpe_checkpoints_released(spark):
     )
 
 
-def test_bpe_keys_not_memoized_and_rebuild_after_release(spark):
-    """Releasing the checkpoints strands any HELD bpe DataFrame
-    (truncated lineage cannot recompute), so the registry must never
-    memoize bpe keys — every wrapped call rebuilds the chain, making
-    release-then-recollect safe. Pin the exclusion and prove the
-    rebuild survives a release between calls with identical values."""
-    from gentropy_spark.plans.registry import _PLAN_CACHE_KEYS, full_registry
-    from gentropy_spark.session import release_caches
-
-    assert "bpe_train" not in _PLAN_CACHE_KEYS
-    assert "bpe_encode" not in _PLAN_CACHE_KEYS
-    fn = full_registry()["bpe_train"].fn
-    rows1 = sorted((r.step, r.merged_pair) for r in fn(spark, SF).collect())
-    release_caches()
-    rows2 = sorted((r.step, r.merged_pair) for r in fn(spark, SF).collect())
-    assert rows1 == rows2
-    release_caches()
-
-
 def test_semi_lead_clump_width_scales_with_conf(spark):
     """The stream's shuffle width must follow
     spark.sql.shuffle.partitions (cluster-scalable), not the driver

@@ -668,7 +668,7 @@ def test_pca_topm_plan_shape(spark, sf_dir):
 
     release_caches()
     plan = (
-        q_embedding_pca_topm(spark, sf_dir)
+        q_embedding_pca_topm.__wrapped__(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -693,7 +693,7 @@ def test_pca_project_no_corpus_aggregate(spark, sf_dir):
 
     release_caches()
     plan = (
-        q_embedding_pca_project(spark, sf_dir)
+        q_embedding_pca_project.__wrapped__(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -11,67 +11,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 
-# --- plan-memo cache re-registration (r17 advisory) -------------------------
-# A memoized plan builder is not re-invoked on a memo hit, so after
-# release_caches() its multi-consumer persist marks were gone and every
-# consumer recomputed the subtree (measured live: corpus_curate_scored
-# 54.9s -> 13.5s in the same bench window once fixed). The memo now
-# stores the build's track_cache handles and re-registers them on hit.
-def test_plan_memo_repersists_tracked_caches_after_release(spark, sf_dir):
-    from gentropy_spark import session as S
-    from gentropy_spark.plans import full_registry
-    from gentropy_spark.plans.registry import _PLAN_CACHE_KEYS
-
-    assert "embedding_pca_power" in _PLAN_CACHE_KEYS
-    fn = full_registry()["embedding_pca_power"].fn
-    fn(spark, sf_dir)  # first build populates the memo + persists
-    key = next(
-        k
-        for k in __import__(
-            "gentropy_spark.plans.registry", fromlist=["_PLAN_MEMO"]
-        )._PLAN_MEMO
-        if k[2] == "embedding_pca_power"
-    )
-    from gentropy_spark.plans.registry import _PLAN_MEMO
-
-    _df, tracked = _PLAN_MEMO[key]
-    assert tracked, "build registered no track_cache handles"
-    S.release_caches()
-    for t in tracked:
-        lvl = t.storageLevel
-        assert not (lvl.useMemory or lvl.useDisk), "release did not sweep"
-    fn(spark, sf_dir)  # memo HIT must re-register the persist marks
-    for t in tracked:
-        lvl = t.storageLevel
-        assert lvl.useMemory or lvl.useDisk, (
-            "memo hit did not re-persist the tracked subtree"
-        )
-    S.release_caches()
-
-
-def test_pairs_prepared_repersists_after_release(spark, sf_dir):
-    from gentropy_spark import session as S
-    from gentropy_spark.plans.llm_pipeline import (
-        _PAIRS_PLAN_MEMO,
-        minhash_pairs_prepared,
-    )
-
-    minhash_pairs_prepared(spark, sf_dir)
-    key = next(
-        k
-        for k in _PAIRS_PLAN_MEMO
-        if k[1] == sf_dir and k[2] == "minhash_pairs"
-    )
-    _df, tracked = _PAIRS_PLAN_MEMO[key]
-    assert tracked
-    S.release_caches()
-    minhash_pairs_prepared(spark, sf_dir)
-    assert all(
-        t.storageLevel.useMemory or t.storageLevel.useDisk for t in tracked
-    )
-    S.release_caches()
-
-
 # --- codegen stopword count / tokens() --------------------------------------
 # tokens() and the stopword scores moved from CodegenFallback HOF
 # lambdas (filter / aggregate) to natively code-generated expressions
@@ -214,7 +153,7 @@ def test_l2g_score_single_data_exchange(spark, sf_dir):
 
     from gentropy_spark.plans.l2g import q_l2g_score
 
-    df = q_l2g_score(spark, sf_dir)
+    df = q_l2g_score.__wrapped__(spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
