@@ -1990,6 +1990,26 @@ def _dim_table_to_array(val_col: str) -> F.Column:
     )
 
 
+def _pca_x() -> F.Column:
+    """The row's embedding as ``array<double>`` for the PCA chains,
+    failing the query on a row whose width is not EMB_DIM. The chains
+    index dims 1..EMB_DIM, so a narrower row would break mid-chain and
+    a wider one would silently drop its tail. The guard is an inline
+    projection (no extra job); NULL embeddings pass through as NULL."""
+    e = F.col("embedding")
+    return F.when(
+        e.isNull() | (F.size(e) == EMB_DIM), e.cast("array<double>")
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"embeddings.vec_id %d has width %d, expected {EMB_DIM}",
+                F.col("vec_id"),
+                F.size(e),
+            )
+        )
+    )
+
+
 def _proj_chain_dec12(
     x: F.Column, mu_arr: F.Column, l_arr: F.Column, d: int
 ) -> F.Column:
@@ -1997,11 +2017,30 @@ def _proj_chain_dec12(
     chain — equal to the relational DECIMAL(38,12) SUM over the same
     9dp terms (decimal addition is exact, so association order cannot
     matter), and whole-stage-codegen where an explode+groupBy pays an
-    exchange. Per-step cast back to DECIMAL(38,12): Spark's decimal
-    `+` re-scales one digit narrower per chained addition, silently
-    rounding the 9dp partials once the scale crosses below 9 (the
-    q_embedding_pca_project measurement — 2e-6 drift vs the oracle's
-    SUM); the re-cast pins every partial at scale 12."""
+    exchange.
+
+    Per-step cast back to DECIMAL(38,12): Spark's decimal `+` widens
+    the nominal integer part and RE-SCALES the result one digit
+    narrower per chained addition (38,12 → 38,11 → 38,10 → ...),
+    silently rounding the 9dp partials once the scale crosses below 9
+    — measured as a 2e-6 drift vs the oracle's SUM in
+    q_embedding_pca_project. The re-cast pins every partial at scale
+    12, keeping the 9dp accumulation exact (= the relational SUM).
+
+    Placement: evaluate the chain in a projection BELOW any generator
+    over the same row. Selected next to ``posexplode``, Spark's
+    analyzer puts it in the Project above the Generate, so it runs
+    once per exploded element (d times per row);
+    tests/test_plans.py::test_no_cartesian_product_anywhere guards
+    that shape registry-wide.
+
+    Codegen budget: the generated Java grows linearly with d per
+    chain. Keep to the shapes in use — one chain per code-generated
+    stage (q_embedding_pca_power step 2, q_ann_pca_topk), two in
+    q_embedding_pca_project. An earlier E54 cut with more unrolled
+    chains per stage OOM'd Janino (300-650 KB generated sources, see
+    q_embedding_pca_topm); re-run the PCA keys with ``spark.sql.codegen.fallback=false`` before
+    raising EMB_DIM or adding chains to a stage."""
     s = None
     for j in range(1, d + 1):
         t = F.round(
@@ -2011,6 +2050,8 @@ def _proj_chain_dec12(
         ).cast("decimal(38,12)")
         s = t if s is None else (s + t).cast("decimal(38,12)")
     return s
+
+
 @prepared
 def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leading eigenpair of the embedding covariance (E51).
@@ -2032,6 +2073,13 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined per-dimension aggregate over the raw scan (only
     d-row combiner partials shuffle), and nothing driver-side ever
     sees more than d rows. No corpus-grain cache, no vec_id joins.
+
+    Evaluation grain: each step computes the row's projection d_i in
+    a select BELOW its posexplode, so step 2's 64-term DECIMAL chain
+    runs once per row. In the same select as the generator it would
+    run once per exploded element — d = 64 times per row, the bulk of
+    the key's task CPU. Every embedding must have width EMB_DIM; any other
+    width fails the query (``_pca_x``).
     """
     from gentropy_spark.operators.dedup import spread_if_narrow
     from gentropy_spark.session import track_cache
@@ -2040,11 +2088,12 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "embeddings"), "vec_id"
     )
     DEC12 = "decimal(38,12)"
-    x = F.col("embedding").cast("array<double>")
-    ex = emb.select(
-        "vec_id",
-        F.posexplode(x).alias("pos", "xj"),
-    ).select("vec_id", (F.col("pos") + 1).alias("dim"), "xj")
+    # The width-checked double array, evaluated once per row below
+    # every generator that reads it.
+    xs = emb.select(_pca_x().alias("__x"))
+    ex = xs.select(F.posexplode("__x").alias("pos", "xj")).select(
+        (F.col("pos") + 1).alias("dim"), "xj"
+    )
     n_row = emb.agg(F.count("*").cast("double").alias("n"))
     # mus feeds the μ-array pivot (both matvec scans) and the output
     # mean column — cache the d-row table once.
@@ -2065,31 +2114,43 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (x_j − μ_j) doubles, same round(·, 9) products, same order-free
     # DECIMAL(38,12) sums.
     mu_row = F.broadcast(mus.agg(_dim_table_to_array("mu").alias("mu_arr")))
-    # Step 1 onto v0 = e1: d_i is the centered first coordinate,
-    # computed inline from the row.
-    st1 = emb.crossJoin(mu_row).select(
-        (F.element_at(x, 1) - F.element_at(F.col("mu_arr"), 1)).alias("__d"),
-        F.col("mu_arr"),
-        F.posexplode(x).alias("pos", "xj"),
-    )
-    u1 = (
-        st1.select(
-            (F.col("pos") + 1).alias("dim"),
-            F.round(
-                F.col("__d")
-                * (
-                    F.col("xj")
-                    - F.element_at(F.col("mu_arr"), F.col("pos") + 1)
-                ),
-                9,
+
+    def matvec(d_i: F.Column, *model_rows: DataFrame) -> DataFrame:
+        """u = C v as the d-row (dim, u) table, given the per-row
+        projection d_i = (x_i − μ)·v over the model rows' arrays.
+        d_i is selected BEFORE the posexplode, so it runs once per
+        row: in the same select, the analyzer would evaluate it in
+        the Project above the Generate, once per element."""
+        rows = xs
+        for m in model_rows:
+            rows = rows.crossJoin(m)
+        return (
+            rows.select("__x", "mu_arr", d_i.alias("__d"))
+            .select(
+                "__d", "mu_arr", F.posexplode("__x").alias("pos", "xj")
             )
-            .cast(DEC12)
-            .alias("t"),
+            .select(
+                (F.col("pos") + 1).alias("dim"),
+                F.round(
+                    F.col("__d")
+                    * (
+                        F.col("xj")
+                        - F.element_at(F.col("mu_arr"), F.col("pos") + 1)
+                    ),
+                    9,
+                )
+                .cast(DEC12)
+                .alias("t"),
+            )
+            .groupBy("dim")
+            .agg(F.sum("t").cast("double").alias("su"))
+            .crossJoin(F.broadcast(n_row))
+            .select("dim", (F.col("su") / F.col("n")).alias("u"))
         )
-        .groupBy("dim")
-        .agg(F.sum("t").cast("double").alias("su"))
-        .crossJoin(F.broadcast(n_row))
-        .select("dim", (F.col("su") / F.col("n")).alias("u"))
+
+    # Step 1 onto v0 = e1: d_i is the centered first coordinate.
+    u1 = matvec(
+        F.element_at("__x", 1) - F.element_at(F.col("mu_arr"), 1), mu_row
     )
     # Norm fused as a global-window sum over the d-row u table (r18):
     # the old separate ``norm`` aggregate + broadcast crossJoin
@@ -2107,37 +2168,16 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
     )
     v1 = u1.select("dim", F.round(F.col("u") / nrm1, 12).alias("v"))
-    # Step 2 onto v1: v rides a 1-row broadcast array, the per-row
-    # projection d_i is the unrolled DECIMAL chain (== the relational
-    # SUM of the same 9dp terms), and the matvec sum is again one
-    # explode + per-dimension aggregate — no vec_id join, no
-    # groupBy(vec_id) exchange.
+    # Step 2 onto v1: v rides a 1-row broadcast array and d_i is the
+    # unrolled DECIMAL chain (== the relational SUM of the same 9dp
+    # terms) — no vec_id join, no groupBy(vec_id) exchange.
     v_row = F.broadcast(v1.agg(_dim_table_to_array("v").alias("v_arr")))
-    st2 = emb.crossJoin(mu_row).crossJoin(v_row).select(
-        _proj_chain_dec12(x, F.col("mu_arr"), F.col("v_arr"), EMB_DIM)
-        .cast("double")
-        .alias("__d"),
-        F.col("mu_arr"),
-        F.posexplode(x).alias("pos", "xj"),
-    )
-    u2 = (
-        st2.select(
-            (F.col("pos") + 1).alias("dim"),
-            F.round(
-                F.col("__d")
-                * (
-                    F.col("xj")
-                    - F.element_at(F.col("mu_arr"), F.col("pos") + 1)
-                ),
-                9,
-            )
-            .cast(DEC12)
-            .alias("t"),
-        )
-        .groupBy("dim")
-        .agg(F.sum("t").cast("double").alias("su"))
-        .crossJoin(F.broadcast(n_row))
-        .select("dim", (F.col("su") / F.col("n")).alias("u"))
+    u2 = matvec(
+        _proj_chain_dec12(
+            F.col("__x"), F.col("mu_arr"), F.col("v_arr"), EMB_DIM
+        ).cast("double"),
+        mu_row,
+        v_row,
     )
     nrm2 = F.sqrt(
         F.sum(F.round(F.col("u") * F.col("u"), 9).cast(DEC12))
@@ -2276,13 +2316,14 @@ def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _dim_table_to_array("loading").alias("l_arr"),
         )
     )
-    xcol = F.col("embedding").cast("array<double>")
     proj = track_cache(
-        emb.crossJoin(model).select(
+        emb.select("vec_id", _pca_x().alias("__x"))
+        .crossJoin(model)
+        .select(
             "vec_id",
             F.round(
                 _proj_chain_dec12(
-                    xcol, F.col("m_arr"), F.col("l_arr"), EMB_DIM
+                    F.col("__x"), F.col("m_arr"), F.col("l_arr"), EMB_DIM
                 ).cast("double"),
                 6,
             ).alias("proj"),
@@ -2533,13 +2574,13 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread_if_narrow(
         read_table(spark, sf_dir, "embeddings"), "vec_id"
     )
+    # The width-checked double array, evaluated once per row below
+    # every generator that reads it.
+    xs = emb.select(_pca_x().alias("__x"))
     # Means: one exploded-grain aggregation (E51's mu discipline).
-    ex = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "pos", "xj"
-        ),
-    ).select("vec_id", (F.col("pos") + 1).alias("dim"), "xj")
+    ex = xs.select(F.posexplode("__x").alias("pos", "xj")).select(
+        (F.col("pos") + 1).alias("dim"), "xj"
+    )
     n_row = emb.agg(F.count("*").cast("double").alias("n"))
     mus = track_cache(
         ex.groupBy("dim")
@@ -2560,22 +2601,31 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # commutes, so S_kj == S_jk EXACTLY — the kernel mirrors the
     # triangle, halving the 9dp round + DECIMAL-add cost that
     # dominates this pass at scale.
-    x = F.col("embedding").cast("array<double>")
+    # Per-grain placement: the per-j values (j, cxj) are selected
+    # BEFORE the second posexplode, so they run once per (row, j) and
+    # not once per (row, j, k); the k range is the suffix slice of the
+    # row's own width.
     mu_row = F.broadcast(mus.agg(_dim_table_to_array("mu").alias("mu_arr")))
-    e1 = emb.crossJoin(mu_row).select(
-        x.alias("__x"),
-        F.col("mu_arr"),
-        F.posexplode(x).alias("jpos", "xj"),
+    e1 = xs.crossJoin(mu_row).select(
+        "__x", "mu_arr", F.posexplode("__x").alias("jpos", "xj")
     )
     e2 = e1.select(
+        "__x",
+        "mu_arr",
+        "jpos",
         (F.col("jpos") + 1).alias("j"),
         (
             F.col("xj") - F.element_at(F.col("mu_arr"), F.col("jpos") + 1)
         ).alias("cxj"),
-        F.col("mu_arr"),
+    ).select(
+        "j",
+        "cxj",
+        "mu_arr",
         F.posexplode(
             F.slice(
-                F.col("__x"), F.col("jpos") + 1, F.lit(EMB_DIM) - F.col("jpos")
+                F.col("__x"),
+                F.col("jpos") + 1,
+                F.size("__x") - F.col("jpos"),
             )
         ).alias("kpos", "xk"),
     )
@@ -2794,30 +2844,23 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("component") == 2, F.col("l"))).alias("l2"),
         F.max(F.when(F.col("component") == 1, F.col("m"))).alias("mu"),
     )
-    x = F.col("embedding").cast("array<double>")
 
-    def proj(lcol) -> object:
-        # Per-step cast back to DECIMAL(38,12): Spark's decimal `+`
-        # widens the nominal integer part and RE-SCALES the result
-        # one digit narrower per chained addition (38,12 → 38,11 →
-        # 38,10 → ...), silently rounding the 9dp partials once the
-        # scale crosses below 9 — measured as a 2e-6 drift vs the
-        # oracle's SUM. The re-cast pins every partial at scale ≥ 11,
-        # keeping the 9dp accumulation exact (= the relational SUM).
-        s = None
-        for j in range(1, d + 1):
-            t = F.round(
-                (F.element_at(x, j) - F.element_at(F.col("mu"), j))
-                * F.element_at(lcol, j),
-                9,
-            ).cast("decimal(38,12)")
-            s = t if s is None else (s + t).cast("decimal(38,12)")
-        return F.round(s.cast("double"), 6)
+    def proj(lcol: F.Column) -> F.Column:
+        return F.round(
+            _proj_chain_dec12(F.col("__x"), F.col("mu"), lcol, d).cast(
+                "double"
+            ),
+            6,
+        )
 
-    return emb.crossJoin(F.broadcast(model)).select(
-        "vec_id",
-        proj(F.col("l1")).alias("pc1"),
-        proj(F.col("l2")).alias("pc2"),
+    return (
+        emb.select("vec_id", _pca_x().alias("__x"))
+        .crossJoin(F.broadcast(model))
+        .select(
+            "vec_id",
+            proj(F.col("l1")).alias("pc1"),
+            proj(F.col("l2")).alias("pc2"),
+        )
     )
 
 
@@ -4825,9 +4868,11 @@ CHUNK_STRIDE = 48  # 16-token overlap
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping fixed-token chunks with provenance (E42)."""
     docs = read_table(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
-    toks = F.col("_toks")
-    n = F.size(toks)
+    # _n is taken per document, below the explode, not per chunk.
+    toked = docs.select(
+        "doc_id", tokens(F.col("text")).alias("_toks")
+    ).withColumn("_n", F.size("_toks"))
+    n = F.col("_n")
     # Chunk start positions 1, 1+stride, ... — the last window is
     # allowed to be short (the tail chunk) but empty docs emit none.
     starts = F.when(
@@ -4844,7 +4889,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = toked.select(
         "doc_id",
         "_toks",
-        n.alias("_n"),
+        "_n",
         F.explode(starts).alias("start_tok"),
     ).withColumn(
         # start positions are 1, 1+stride, ... so the index is exact

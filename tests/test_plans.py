@@ -293,23 +293,92 @@ def test_gwas_study_ingest_scan_budget(spark, sf_dir):
         release_caches()
 
 
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _row_work_over_generate(plan) -> list[str]:
+    """Row-level work a Project evaluates directly above a Generate,
+    i.e. once per generated element instead of once per input row.
+
+    Walks the plan tree through py4j (descending into the physical
+    plans of cached subtrees, which the optimized plan shows as
+    InMemoryRelation leaves). For each Project over a Generate, every
+    project expression is searched top-down for a maximal
+    subexpression that references none of the Generate's
+    ``generatorOutput``. Such a subexpression is an offender when it
+    reads an array or map column: its cost can grow with the
+    collection, so per-element evaluation is quadratic — the shape of
+    the 64-term PCA chain run 64 times per row, or a whole-array cast
+    per element. Scalar row-level expressions cost O(1) per element
+    and are not reported; expressions over the generated columns (the
+    per-element hashes of the dedup and curation keys) never are."""
+    out = []
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "InMemoryRelation":
+            stack.append(node.cacheBuilder().cachedPlan())
+            continue
+        if name == "InMemoryTableScan":
+            stack.append(node.relation().cacheBuilder().cachedPlan())
+            continue
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.inputPlan())
+            continue
+        kids = _seq(node.children())
+        stack.extend(kids)
+        if name != "Project" or kids[0].nodeName() != "Generate":
+            continue
+        gen_ids = {a.exprId().id() for a in _seq(kids[0].generatorOutput())}
+        todo = _seq(node.projectList())
+        while todo:
+            e = todo.pop()
+            if e.nodeName() in (
+                "AttributeReference", "LambdaFunction", "NamedLambdaVariable"
+            ):
+                continue
+            refs = _seq(e.references().toSeq())
+            if gen_ids & {a.exprId().id() for a in refs}:
+                todo.extend(_seq(e.children()))
+            elif any(
+                a.dataType().typeName() in ("array", "map") for a in refs
+            ):
+                out.append(e.sql()[:160])
+    return out
+
+
 def test_no_cartesian_product_anywhere(spark, sf_dir):
     """Registry-wide scale-killer sweep (r9): no query plan may contain
     a CartesianProduct. BroadcastNestedLoopJoin against broadcast
     1-row aggregates is legitimate (scalar thresholds); an unbroadcast
     cross product is never acceptable at 100 TB and fails here the
-    moment a join loses its equi-condition."""
+    moment a join loses its equi-condition.
+
+    The same pass guards generator placement: no optimized plan may
+    evaluate array-reading row-level work above a Generate
+    (``_row_work_over_generate``) — the plan bug that ran
+    embedding_pca_power's projection chain once per exploded element.
+    Only plans with a Generate are walked."""
     from gentropy_spark.plans import full_registry
     from gentropy_spark.session import release_caches
 
     offenders = []
+    hoisted = {}
     for name, spec in full_registry().items():
         release_caches()
-        plan = spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
-        if "CartesianProduct" in plan.toString():
+        qe = spec.fn(spark, sf_dir)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        if "CartesianProduct" in plan:
             offenders.append(name)
+        if "Generate " in plan:
+            work = _row_work_over_generate(qe.optimizedPlan())
+            if work:
+                hoisted[name] = work
     release_caches()
     assert not offenders, f"cartesian products in: {offenders}"
+    assert not hoisted, f"row-level work above a Generate: {hoisted}"
 
 
 def test_pack_sequences_exchange_keyed_on_bucket(spark, sf_dir):
