@@ -17,7 +17,7 @@ Max absolute error vs the true functions: ~1.5e-7 (erfc),
 from __future__ import annotations
 
 import math
-from typing import Callable, TypeVar
+from typing import TypeVar
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F

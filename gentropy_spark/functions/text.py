@@ -1,7 +1,7 @@
 """Text-analysis column expressions (SURVEY §2.E7–E10).
 
 Pure `pyspark.sql.functions` expressions (JVM codegen, no UDFs) for
-tokenization, quality scoring, language ID and fingerprinting. The
+tokenization, stopword counting and fingerprinting. The
 regex character classes used here (`[a-z0-9]`, `\\p{Punct}`/ASCII
 punct, `\\s`) were chosen to behave identically under Java regex
 (Spark) and RE2 (DuckDB) so oracle parity holds.
@@ -63,60 +63,6 @@ def stopword_count_sql(toks_frag: str, words: list[str]) -> str:
     for w in words:
         chain = f"array_remove({chain}, '" + w.replace("'", "''") + "')"
     return f"(size({toks_frag}) - size({chain}))"
-
-
-def _count_class(text: Column, pattern_keep: str) -> Column:
-    """Number of characters matching a regex class."""
-    return F.length(F.regexp_replace(text, pattern_keep, ""))
-
-
-def quality_profile(text: Column) -> dict[str, Column]:
-    """Length/alpha/digit/punct/whitespace/upper/stopword profile.
-
-    Ratios are exact integer-over-integer divisions (oracle-exact).
-    """
-    toks = tokens(text)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    denom_c = F.greatest(n_chars, F.lit(1))
-    denom_t = F.greatest(n_tokens, F.lit(1))
-    stop_array = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "alpha_ratio": _count_class(text, "[^a-zA-Z]") / denom_c,
-        "digit_ratio": _count_class(text, "[^0-9]") / denom_c,
-        "ws_ratio": _count_class(text, "[^\\s]") / denom_c,
-        "upper_ratio": _count_class(text, "[^A-Z]") / denom_c,
-        "stop_ratio": F.size(F.filter(toks, lambda x: F.array_contains(stop_array, x)))
-        / denom_t,
-        "mean_token_len": F.aggregate(
-            toks, F.lit(0), lambda acc, x: acc + F.length(x)
-        )
-        / denom_t,
-    }
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Stopword-profile score per language (count of profile hits)."""
-    toks = tokens(text)
-    out = {}
-    for lang, words in STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in words])
-        out[lang] = F.size(F.filter(toks, lambda x: F.array_contains(arr, x)))
-    return out
-
-
-def predict_lang(text: Column) -> Column:
-    """argmax language with deterministic tie-break (lang name asc);
-    'und' when every score is zero."""
-    scores = lang_scores(text)
-    best = F.greatest(*scores.values())
-    pred = F.lit("und")
-    # Iterate langs in reverse-sorted order so the earliest name wins ties.
-    for lang in sorted(scores, reverse=True):
-        pred = F.when(scores[lang] == best, F.lit(lang)).otherwise(pred)
-    return F.when(best == 0, F.lit("und")).otherwise(pred)
 
 
 def normalized_fingerprint(text: Column) -> Column:

@@ -34,7 +34,6 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gentropy_spark.operators.susie import minimize_bounded

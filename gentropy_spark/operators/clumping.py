@@ -301,9 +301,9 @@ def exclude_regions(
 ) -> DataFrame:
     """Drop points falling inside any blacklist region.
 
-    Reference: study_locus.py:1145 ``exclude_region`` /
-    common/genomic_region.py (e.g. the MHC region filter). Regions are
-    a tiny literal list → pure predicate, fully pushed to the scan.
+    Reference: study_locus.py:1145 ``exclude_region`` (e.g. the MHC
+    region filter). Regions are (contig, start, end) tuples — a tiny
+    literal list → pure predicate, fully pushed to the scan.
     """
     keep = F.lit(True)
     for region_contig, start, end in regions:

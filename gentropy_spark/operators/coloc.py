@@ -271,53 +271,6 @@ def beta_ratio_sign_avg(
     return F.avg(F.when(valid, sign)).alias("beta_ratio_sign_avg")
 
 
-def append_study_metadata(
-    coloc_df: DataFrame,
-    study_locus: DataFrame,
-    study_index: DataFrame,
-    *,
-    metadata_cols: Sequence[str],
-    colocalisation_side: str = "right",
-    locus_id_col: str = "study_locus_id",
-    study_id_col: str = "study_id",
-) -> DataFrame:
-    """Append study metadata to one side of a colocalisation table.
-
-    Reference: dataset/colocalisation.py:130-183
-    ``Colocalisation.append_study_metadata`` — the (locus -> study ->
-    metadata) bridge joined back onto ``{side}_study_locus_id``. The
-    bridge is built DISTINCT and broadcast (locus/study dimensions are
-    small relative to the coloc pair table), so the pair table is
-    never shuffled; column names come out as ``{side}_{col}`` in this
-    repo's snake_case convention (the reference camelCases).
-    """
-    if colocalisation_side not in ("right", "left"):
-        raise ValueError(
-            "colocalisation_side must be either 'right' or 'left', got "
-            f"{colocalisation_side!r}"
-        )
-    side = colocalisation_side
-    cols = [study_id_col, *metadata_cols]
-    bridge = (
-        study_locus.select(locus_id_col, study_id_col)
-        .join(F.broadcast(study_index.select(study_id_col, *metadata_cols)), study_id_col)
-        .distinct()
-        .select(
-            F.col(locus_id_col).alias(f"{side}_{locus_id_col}"),
-            *[F.col(c).alias(f"{side}_{c}") for c in cols],
-        )
-    )
-    # Mirror the reference's studyType-collision rule: a requested
-    # metadata column replaces a same-named column already present on
-    # that side of the pair table.
-    drop = [
-        f"{side}_{c}" for c in cols if f"{side}_{c}" in coloc_df.columns
-    ]
-    return F.broadcast(bridge).join(
-        coloc_df.drop(*drop), on=f"{side}_{locus_id_col}", how="right"
-    )
-
-
 def annotate_study_type(
     locus_df: DataFrame,
     study_index: DataFrame,
@@ -343,34 +296,9 @@ def annotate_study_type(
     r16 removed from bpe_encode's vocab join. Size stats / AQE pick
     the strategy: a real study index measures dimension-sized and
     broadcasts; a grown one shuffle-joins instead of OOMing the
-    executors. This is the StudyLocus-side sibling of
-    ``append_study_metadata`` above (which serves the colocalisation
-    table's left/right sides, where the bridge is locus-bounded).
+    executors.
     """
     lut = study_index.select(study_id_col, study_type_col)
     return locus_df.drop(study_type_col).join(
         lut, on=study_id_col, how="left"
-    )
-
-
-def drop_trans_effects(
-    coloc_df: DataFrame,
-    study_locus: DataFrame,
-    *,
-    locus_id_col: str = "study_locus_id",
-    is_trans_col: str = "is_trans_qtl",
-) -> DataFrame:
-    """Keep only cis-QTL colocalisation rows (right side not trans).
-
-    Reference: dataset/colocalisation.py:185-210
-    ``Colocalisation.drop_trans_effects`` — NULL ``isTransQtl`` counts
-    as cis (the reference's ``~col | col.isNull()`` predicate), and
-    the filter is a broadcast semi-join on the right locus id so the
-    pair table is never shuffled.
-    """
-    cis = study_locus.filter(
-        (~F.col(is_trans_col)) | F.col(is_trans_col).isNull()
-    ).select(F.col(locus_id_col).alias(f"right_{locus_id_col}"))
-    return coloc_df.join(
-        F.broadcast(cis), on=f"right_{locus_id_col}", how="left_semi"
     )

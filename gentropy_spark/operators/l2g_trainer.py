@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def _leaf_value(

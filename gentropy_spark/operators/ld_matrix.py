@@ -3,8 +3,8 @@
 Re-expresses the reference's GnomAD LD-matrix handling
 (/root/reference/src/gentropy/datasource/gnomad/ld.py:101
 ``_convert_ld_matrix_to_table``, :223 ``_transpose_ld_matrix``, :200
-``_resolve_variant_indices``, :364/:405 square-slice extraction, :487
-``get_numpy_matrix``) as DataFrame transforms over an (i, j, r) entry
+``_resolve_variant_indices``, :364/:405 square-slice extraction) as
+DataFrame transforms over an (i, j, r) entry
 table — the storage shape a 100 TB LD release actually uses (Hail
 block-matrix entries → parquet):
 
@@ -13,18 +13,13 @@ block-matrix entries → parquet):
 - matrix indices → variant ids via two broadcast joins against the
   locus index;
 - square block slice for a [start, end] index window (predicate
-  pushdown prunes the scan to the block's row range);
-- per-locus dense numpy densification via ``applyInPandas`` — the
-  hand-off shape the fine-mappers (SuSiE/CARMA) consume.
+  pushdown prunes the scan to the block's row range).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def transpose_ld_triangular(
@@ -85,54 +80,4 @@ def ld_block_slice(
         & (F.col(i) <= end_idx)
         & (F.col(j) >= start_idx)
         & (F.col(j) <= end_idx)
-    )
-
-
-def locus_dense_matrices(
-    ld: DataFrame,
-    locus_col: str = "locus_id",
-    i: str = "idx_i",
-    j: str = "idx_j",
-    r: str = "r",
-) -> DataFrame:
-    """Per-locus dense symmetric matrix materialisation
-    (gnomad/ld.py:487 ``get_numpy_matrix``), Arrow-batched.
-
-    Emits one row per locus: the sorted index list and the dense
-    row-major r matrix (unit diagonal filled), ready to feed the
-    SuSiE/CARMA kernels without a driver round-trip.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("locus_id", T.LongType()),
-            T.StructField("n", T.IntegerType()),
-            T.StructField("indices", T.ArrayType(T.LongType())),
-            T.StructField("matrix", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        ]
-    )
-
-    def densify(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for locus, g in pdf.groupby(locus_col, sort=True):
-            idx = np.unique(
-                np.concatenate([g[i].to_numpy(), g[j].to_numpy()])
-            )
-            lookup = {v: k for k, v in enumerate(idx)}
-            n = len(idx)
-            M = np.eye(n)
-            ii = g[i].map(lookup).to_numpy()
-            jj = g[j].map(lookup).to_numpy()
-            M[ii, jj] = g[r].to_numpy()
-            M[jj, ii] = g[r].to_numpy()
-            rows.append(
-                (int(locus), n, [int(v) for v in idx], M.tolist())
-            )
-        return pd.DataFrame(
-            rows, columns=["locus_id", "n", "indices", "matrix"]
-        )
-
-    return (
-        ld.select(locus_col, i, j, r)
-        .groupBy(locus_col)
-        .applyInPandas(densify, schema=out_schema)
     )

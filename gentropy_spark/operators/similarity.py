@@ -2,10 +2,9 @@
 
 Brute-force cosine top-k as the verifiable per-bucket kernel, plus
 random-hyperplane LSH variants as the scale path for both ANN top-k
-and embedding near-dup pairs. Vector math is unrolled arithmetic over
-double-cast arrays — JVM-side, deterministic left-to-right
-accumulation (matches DuckDB's sequential list_dot_product for oracle
-parity).
+and embedding near-dup pairs. Vector math accumulates left-to-right
+over double-cast arrays, deterministically (matches DuckDB's
+sequential list_dot_product for oracle parity).
 
 Scale design (100 TB): candidate generation is always an equi-join on
 (band, band_val) sign-pattern buckets; the only cross join left is
@@ -59,28 +58,6 @@ def det_hyperplanes(n_planes: int = 3, dim: int = 64) -> list[list[float]]:
             [(_mix32(p * 100_003 + i * 7919 + 1) % 2001) / 1000.0 - 1.0 for i in range(dim)]
         )
     return planes
-
-
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Left-to-right dot product over double arrays.
-
-    When ``dim`` is known, unroll into explicit arithmetic: Spark's
-    higher-order functions (aggregate/zip_with) evaluate INTERPRETED
-    per row (no whole-stage codegen) — the unrolled form is ~10x
-    faster and numerically identical (left-associated addition, and
-    IEEE 0.0+x == x for the fold's seed).
-    """
-    if dim is not None:
-        terms = [
-            F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
 
 
 def plane_dot(v: Column, plane: list[float]) -> Column:
@@ -147,20 +124,15 @@ def packed_sign_bits(hyperplanes: list[list[float]]):
     return _packed
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    """dot/(‖a‖·‖b‖) with norms as sqrt of self-dot (mirrors the oracle)."""
-    return dot(a, b, dim) / (F.sqrt(dot(a, a, dim)) * F.sqrt(dot(b, b, dim)))
-
-
 def cosine_pairs_udf():
     """Arrow-batched pairwise cosine — the verify-join kernel of
     ``lsh_dup_pairs``.
 
-    The unrolled-expression ``cosine`` (3 × dim element_at terms) fused
+    An unrolled cosine expression (3 × dim element_at terms) fused
     into a generated method that ALSO contains two hash joins exceeds
     the JVM's 64KB limit, killing whole-stage codegen for the verify
-    stage. This UDF is constant code size. Numeric parity with the
-    expression form and with DuckDB's ``list_dot_product``: all three
+    stage. This UDF is constant code size. Numeric parity with DuckDB's
+    ``list_dot_product``: all three
     dot products accumulate left-to-right in float64 (IEEE add/mul),
     and sqrt/division are correctly-rounded IEEE ops in numpy and the
     JVM alike. Rounding stays OUTSIDE (JVM ``F.round``) — numpy rounds
@@ -266,58 +238,6 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id, corpus_id, "cosine", "rank")
-    )
-
-
-def embedding_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
-    block_col: str | None = "label",
-    min_cosine: float = 0.95,
-    dim: int | None = None,
-    allow_quadratic: bool = False,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within explicit blocks.
-
-    Kept as the *pre-blocked* kernel (e.g. per-language, per-shard
-    dedup where a block key already exists and is high-cardinality).
-    For unblocked corpora use ``lsh_dup_pairs`` — a low-cardinality
-    block key here means O(Σ block²) pairs.
-
-    ``block_col=None`` is a FULL cross join — O(n²) at corpus scale —
-    and must be opted into explicitly with ``allow_quadratic=True``
-    (r14 guard: the docstring warning alone did not stop a caller
-    from quietly going quadratic).
-    """
-    if block_col is None and not allow_quadratic:
-        raise ValueError(
-            "embedding_dup_pairs with block_col=None is a full O(n^2) "
-            "cross join; pass allow_quadratic=True for a deliberately "
-            "tiny input, or use lsh_dup_pairs for unblocked corpora"
-        )
-    cols = [F.col(id_col), as_double(F.col(vec)).alias("v")]
-    if block_col:
-        cols.append(F.col(block_col).alias("block"))
-    base = df.select(*cols)
-    a = base.select(
-        *(["block"] if block_col else []),
-        F.col(id_col).alias("id_a"),
-        F.col("v").alias("va"),
-    )
-    b = base.select(
-        *(["block"] if block_col else []),
-        F.col(id_col).alias("id_b"),
-        F.col("v").alias("vb"),
-    )
-    join_keys = ["block"] if block_col else []
-    pairs = (
-        a.join(b, on=join_keys) if join_keys else a.crossJoin(b)
-    ).filter(F.col("id_a") < F.col("id_b"))
-    return (
-        pairs.withColumn("cosine", F.round(cosine(F.col("va"), F.col("vb"), dim), 6))
-        .filter(F.col("cosine") >= min_cosine)
-        .select(*(["block"] if block_col else []), "id_a", "id_b", "cosine")
     )
 
 
@@ -518,10 +438,10 @@ def sq_l2_expr(a: Column, b: Column, dim: int) -> Column:
     KNOWN dimensionality: a left-to-right chain of
     ``(a[i]-b[i])*(a[i]-b[i])`` adds over ``element_at`` terms.
 
-    Bit-identical to ``sq_l2_pairs_udf``/``l2_pairs_udf`` (both fold
-    float64 additions dimension-by-dimension from index 0 — and
-    ``0 + x == x`` exactly, so dropping the kernel's zero seed changes
-    nothing) and to the oracle's ``list_sum(list_transform(...))``.
+    Bit-identical to ``l2_pairs_udf`` (which folds float64 additions
+    dimension-by-dimension from index 0 — and ``0 + x == x`` exactly,
+    so dropping the kernel's zero seed changes nothing) and to the
+    oracle's ``list_sum(list_transform(...))``.
     Exists because an Arrow round-trip on tens of millions of
     SHORT-vector rows is per-row-overhead-bound: the PQ encode leg
     measured 60s for 25.6M 8-dim pairs through the pandas kernel vs
@@ -854,29 +774,6 @@ def ivfpq_topk(
             ),
         )
     )
-
-
-def sq_l2_pairs_udf():
-    """Arrow-batched pairwise squared-L2 — the PQ encode/ADC kernel.
-
-    Same parity discipline as ``cosine_pairs_udf``: the accumulation
-    loops dimensions left-to-right in float64, matching the oracle's
-    ``list_dot_product(d, d)`` over the element-wise difference list,
-    and rounding stays OUTSIDE in the JVM."""
-
-    @pandas_udf("double")
-    def _l2(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(va.to_numpy()).astype(np.float64, copy=False)
-        B = np.stack(vb.to_numpy()).astype(np.float64, copy=False)
-        acc = np.zeros(A.shape[0])
-        for i in range(A.shape[1]):
-            d = A[:, i] - B[:, i]
-            acc += d * d
-        return pd.Series(acc)
-
-    return _l2
 
 
 def pq_topk(

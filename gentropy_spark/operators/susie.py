@@ -39,7 +39,6 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _INVPHI = (math.sqrt(5.0) - 1.0) / 2.0

@@ -1170,8 +1170,7 @@ def q_locus_study_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a filter; MISSING_STUDY flagging is ``study_validation``).
     The LUT is a broadcast dimension, so the locus table never
     shuffles. Composable surface: operators/coloc.py
-    ``annotate_study_type`` (the colocalisation-side sibling is
-    ``append_study_metadata``)."""
+    ``annotate_study_type``."""
     from gentropy_spark.operators.coloc import annotate_study_type
 
     loci = q_window_clump_leads(spark, sf_dir)

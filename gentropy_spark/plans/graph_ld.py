@@ -407,13 +407,11 @@ def q_pics_finemap_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing the distance-decay r² of ``pics_finemap``. Tags absent
     from the lead's LD set get a null posterior, exactly as the
     reference drops non-ldSet tags from the credible set."""
-    import math as _math
-
     from pyspark.sql import Window
 
     from gentropy_spark.functions.distributions import norm_sf_col
     from gentropy_spark.operators.clumping import _cluster_seq
-    from gentropy_spark.plans.genomics import CLUMP_WINDOW_US, SIGNIF_MIN
+    from gentropy_spark.plans.genomics import CLUMP_WINDOW_US
 
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= LD_INDEX_SIGNIF)
     clustered = _cluster_seq(
@@ -532,8 +530,7 @@ def q_panukbb_ld_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten to the annotation's orientation, and per-idx duplicates
     are resolved by rank over alleleOrder desc keeping rank 1 (:147)
     — preferring the direct-orientation row. The Hail-specific
-    ``BlockMatrix.read`` half-matrix densification lives behind the
-    ``PanUKBBEntryBackend`` seam (operators/ld_backend.py), not here.
+    ``BlockMatrix.read`` half-matrix densification is not reproduced.
     """
     from pyspark.sql import Window
 

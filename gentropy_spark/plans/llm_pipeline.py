@@ -353,10 +353,11 @@ WHERE cosine >= {format(EMB_MIN_COSINE, ".17e")}
 # --- E7: text quality profile --------------------------------------------
 @prepared
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Values identical to ``quality_profile`` (the oracle is unchanged)
-    but STAGED: tokenize once, token aggregates over the column ref,
-    then pure-codegen ratios (CollapseProject leaves multi-use
-    non-cheap aliases alone). r18: the stopword count and token-length
+    """Length/alpha/digit/whitespace/upper/stopword profile per
+    document; ratios are exact integer-over-integer divisions
+    (oracle-exact). STAGED: tokenize once, token aggregates over the
+    column ref, then pure-codegen ratios (CollapseProject leaves
+    multi-use non-cheap aliases alone). r18: the stopword count and token-length
     sum are codegen expressions — ``size - size(array_remove chain)``
     and ``length(array_join(toks, ''))`` — instead of interpreted
     CodegenFallback HOF lambdas; values identical (a token matches at
@@ -420,9 +421,11 @@ FROM base
 
 # --- E8: language ID ------------------------------------------------------
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Values identical to ``predict_lang`` (oracle unchanged) but
-    staged like q_text_quality: one tokenize projection, one
-    score projection, then a pure-codegen argmax. r18: the per-language
+    """Stopword-profile language ID: the argmax of per-language
+    stopword hits, ties broken by language name ascending, 'und' when
+    every score is zero. Staged like q_text_quality: one tokenize
+    projection, one score projection, then a pure-codegen argmax.
+    r18: the per-language
     scores are codegen ``size - size(array_remove chain)`` expressions
     instead of interpreted CodegenFallback filter lambdas (identical
     counts — a token matches at most one stopword per language)."""
@@ -439,7 +442,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = F.greatest(*[F.col(f"__s_{lg}") for lg in langs])
     pred = F.lit("und")
     # Iterate langs in reverse-sorted order so the earliest name wins
-    # ties — identical to functions.text.predict_lang.
+    # ties.
     for lg in sorted(langs, reverse=True):
         pred = F.when(F.col(f"__s_{lg}") == best, F.lit(lg)).otherwise(pred)
     return scored.select(

@@ -299,34 +299,9 @@ PIVOT_SQL = (
 
 
 # --- A8: quantile profile -------------------------------------------------
-# 100 TB posture for the exact-percentile queries: `percentile` sorts
-# every group member; `percentile_approx` (GK sketch) is single-pass,
-# mergeable, and bounded-memory. Exact stays the default because the
-# oracle gate needs bit-reproducible output; flip the env flag (or pass
-# approx=True) on a real cluster. PERCENTILE_ACCURACY trades sketch
-# size for error (~1/accuracy relative rank error).
-PERCENTILE_ACCURACY = 10_000
-
-
-def _approx_percentiles_enabled() -> bool:
-    import os
-
-    return os.environ.get("GENTROPY_SPARK_APPROX_PERCENTILES", "") == "1"
-
-
-def q_decile_stats(
-    spark: SparkSession, sf_dir: str, approx: bool | None = None
-) -> DataFrame:
+def q_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer")
-    use_approx = _approx_percentiles_enabled() if approx is None else approx
-    pct = (
-        F.expr(
-            "percentile_approx(c_acctbal, array(0.25, 0.5, 0.75), "
-            f"{PERCENTILE_ACCURACY})"
-        )
-        if use_approx
-        else F.expr("percentile(c_acctbal, array(0.25, 0.5, 0.75))")
-    )
+    pct = F.expr("percentile(c_acctbal, array(0.25, 0.5, 0.75))")
     return cust.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_customers"),
         F.round(F.min("c_acctbal"), 6).alias("min_bal"),
@@ -1197,17 +1172,13 @@ REGISTRY["funnel_analysis"] = QuerySpec(q_funnel_analysis, FUNNEL_SQL)
 
 
 # --- A22: inter-event dwell-time statistics -------------------------------
-def q_dwell_time_stats(
-    spark: SparkSession, sf_dir: str, approx: bool | None = None
-) -> DataFrame:
+def q_dwell_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type inter-arrival (dwell) time distribution: each
     user's consecutive-event gaps (one lag window on the user sort)
     aggregated to exact quartiles per event type — the latency-
     distribution view behind sessionization gap tuning (the C-family
-    cutoffs) and SLA monitoring. Exact percentile by default (the
-    oracle gate needs bit-reproducibility); approx=True or the
-    GENTROPY_SPARK_APPROX_PERCENTILES env flag switches to the
-    mergeable single-pass percentile_approx sketch — the 100 TB path."""
+    cutoffs) and SLA monitoring. Exact percentile: the oracle gate
+    needs bit-reproducible output."""
     from pyspark.sql import Window
 
     from gentropy_spark.sources.readers import read_table, ts_micros
@@ -1229,15 +1200,7 @@ def q_dwell_time_stats(
         "gap_s",
         F.expr("(pos - lag(pos) OVER (PARTITION BY user_id, event_type ORDER BY pos, event_id)) div 1000000"),
     ).filter(F.col("gap_s").isNotNull())
-    use_approx = _approx_percentiles_enabled() if approx is None else approx
-    pct = (
-        F.expr(
-            "percentile_approx(gap_s, array(0.25, 0.5, 0.9), "
-            f"{PERCENTILE_ACCURACY})"
-        )
-        if use_approx
-        else F.expr("percentile(gap_s, array(0.25, 0.5, 0.9))")
-    )
+    pct = F.expr("percentile(gap_s, array(0.25, 0.5, 0.9))")
     return gaps.groupBy("event_type").agg(
         F.count("*").alias("n_gaps"),
         F.round(pct.getItem(0), 6).alias("p25_gap_s"),

@@ -111,7 +111,7 @@ def track_cache(df: DataFrame) -> DataFrame:
 _PREPARED: dict[tuple, tuple[DataFrame, list[DataFrame]]] = {}
 # Env profile flags that change generated plans (relational.py): part
 # of the prepared key so toggling a profile always rebuilds.
-_PROFILE_ENVS = ("GENTROPY_SPARK_NATIVE_SUMS", "GENTROPY_SPARK_APPROX_PERCENTILES")
+_PROFILE_ENVS = ("GENTROPY_SPARK_NATIVE_SUMS",)
 
 
 def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:

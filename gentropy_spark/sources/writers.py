@@ -1,79 +1,8 @@
-"""Sinks: partitioned parquet writer + quarantining text readers (SURVEY §2.F4–F5).
-
-Writer re-expresses the reference Session write helpers
-(common/session.py write modes) with the layout a 100 TB deployment
-needs: range-partitioned by the query keys and sorted within files so
-parquet min/max stats prune region scans.
-"""
+"""Sinks: parquet small-file compaction (SURVEY §2.F10)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_cols: list[str],
-    num_partitions: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partition on sort keys, sort within partitions, write parquet.
-
-    The rangepartition + in-file sort gives every file a tight min/max
-    envelope on ``sort_cols`` → downstream position/range queries prune
-    at the footer level without reading data pages.
-    """
-    cols = [*partition_cols, *sort_cols]
-    shaped = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    ).sortWithinPartitions(*cols)
-    shaped.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed+sorted managed table for co-located joins.
-
-    Two tables bucketed the same way join WITHOUT a shuffle exchange —
-    the 100 TB answer for repeated joins on the same key (e.g. the
-    summary-stats ↔ loci ↔ LD joins every pipeline step repeats).
-    Verified shuffle-free in tests/test_framework.py.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def read_csv_quarantine(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """CSV ingest with malformed-row quarantine (never silent drops).
-
-    Mirrors the datasource-adapter posture: PERMISSIVE parse, corrupt
-    lines captured in ``_corrupt_record`` so a QC step can count and
-    route them (the reference adapters harmonise-then-flag rather than
-    fail — e.g. datasource/gwas_catalog sumstat ingestion).
-    """
-    full = schema.add("_corrupt_record", T.StringType())
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("header", "true")
-        .csv(path)
-    )
+from pyspark.sql import SparkSession
 
 
 def compact_parquet(

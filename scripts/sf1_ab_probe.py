@@ -92,11 +92,10 @@ def _ab(spark, registry, name: str, sf_dir: str) -> tuple[float, float]:
         ).save()
         best_s = min(best_s, time.perf_counter() - t0)
     con = _duck_con(sf_dir)
-    sql = registry[name].oracle
-    if os.environ.get("GENTROPY_SPARK_NATIVE_SUMS", "") == "1" and sql is not None:
-        from bench import _to_native_sums
+    from bench import _timed_oracle
 
-        sql = _to_native_sums(sql)  # symmetric profile, see bench.py
+    native = os.environ.get("GENTROPY_SPARK_NATIVE_SUMS", "") == "1"
+    sql = _timed_oracle(name, registry[name].oracle, native)  # see bench.py
     for _ in range(2):
         t0 = time.perf_counter()
         con.execute(f"SELECT bit_xor(hash(t)) FROM ({sql}) t").fetchall()

@@ -1,176 +1,10 @@
-"""Tests for helpers, region parsing, writers, and the typed dataset."""
+"""Tests for the framework: streaming, CLI, sources, registry, bench
+and module reachability."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from gentropy_spark.datasets.base import SchemaValidationError, TypedDataset
-from gentropy_spark.functions.genomic_region import GenomicRegion, parse_region_col
-from gentropy_spark.functions.helpers import (
-    clean_strings_from_symbols,
-    get_record_with_maximum_value,
-    map_column_by_dictionary,
-    nullify_empty_array,
-    order_array_of_structs_by_field,
-    safe_array_union,
-    string2camelcase,
-)
-from gentropy_spark.sources.writers import read_csv_quarantine, write_partitioned
-
-
-def test_string2camelcase():
-    """Mirrors spark.py:218 doctests."""
-    assert string2camelcase("hello_world") == "helloWorld"
-    assert string2camelcase("hello-world data") == "helloWorldData"
-    with pytest.raises(ValueError):
-        string2camelcase("")
-
-
-def test_map_and_clean_and_nullify(spark):
-    df = spark.createDataFrame([("a", []), ("b", [1]), ("Zz!x", [2])], ["k", "arr"])
-    out = df.select(
-        map_column_by_dictionary(F.col("k"), {"a": "alpha", "b": "beta"}).alias("m"),
-        clean_strings_from_symbols(F.col("k")).alias("c"),
-        nullify_empty_array(F.col("arr")).alias("n"),
-    ).collect()
-    assert [r.m for r in out] == ["alpha", "beta", None]
-    assert out[2].c == "zz_x"
-    assert out[0].n is None and out[1].n == [1]
-
-
-def test_order_array_of_structs(spark):
-    df = spark.createDataFrame(
-        [([{"v": 1.0, "id": "a"}, {"v": None, "id": "n"}, {"v": 3.0, "id": "b"}],)],
-        T.StructType(
-            [
-                T.StructField(
-                    "arr",
-                    T.ArrayType(
-                        T.StructType(
-                            [
-                                T.StructField("v", T.DoubleType()),
-                                T.StructField("id", T.StringType()),
-                            ]
-                        )
-                    ),
-                )
-            ]
-        ),
-    )
-    r = df.select(
-        order_array_of_structs_by_field(F.col("arr"), "v").alias("s")
-    ).first()
-    assert [x["id"] for x in r.s] == ["b", "a", "n"]  # desc, nulls last
-
-
-def test_safe_array_union(spark):
-    df = spark.createDataFrame(
-        [([1, 2], [2, 3]), (None, [4]), ([5], None)],
-        T.StructType(
-            [
-                T.StructField("a", T.ArrayType(T.IntegerType())),
-                T.StructField("b", T.ArrayType(T.IntegerType())),
-            ]
-        ),
-    )
-    out = [r.u for r in df.select(safe_array_union(F.col("a"), F.col("b")).alias("u")).collect()]
-    assert out == [[1, 2, 3], [4], [5]]
-
-
-def test_get_record_with_maximum_value(spark):
-    df = spark.createDataFrame(
-        [("g", 1, 10.0), ("g", 2, 30.0), ("g", 3, 30.0), ("h", 4, 5.0)],
-        ["grp", "id", "v"],
-    )
-    out = get_record_with_maximum_value(df, ["grp"], "v", "id").collect()
-    assert {(r.grp, r.id) for r in out} == {("g", 2), ("h", 4)}
-
-
-def test_genomic_region_parse_and_overlap(spark):
-    r = GenomicRegion.parse("chr1:100-200")
-    assert (r.contig, r.start, r.end, r.length()) == ("chr1", 100, 200, 101)
-    assert r.overlaps(GenomicRegion.parse("chr1:150-300"))
-    assert not r.overlaps(GenomicRegion.parse("chr2:150-300"))
-    with pytest.raises(ValueError):
-        GenomicRegion.parse("chr1:200-100")
-
-    df = spark.createDataFrame([("chr2:5-9",), ("bogus",)], ["spec"])
-    rows = df.select(*parse_region_col(F.col("spec"))).collect()
-    assert (rows[0].contig, rows[0].region_start, rows[0].region_end) == ("chr2", 5, 9)
-    assert rows[1].contig is None
-
-
-def test_write_partitioned_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(c, p, float(p)) for c in ("a", "b") for p in range(20)],
-        ["contig", "pos", "v"],
-    )
-    path = str(tmp_path / "out")
-    write_partitioned(df, path, ["contig"], ["pos"], num_partitions=2)
-    back = spark.read.parquet(path)
-    assert back.count() == 40
-    # partition pruning works on the layout
-    pruned = back.filter(F.col("contig") == "a")
-    assert pruned.count() == 20
-    files = {r[0] for r in pruned.select(F.input_file_name()).collect()}
-    assert all("contig=a" in f for f in files)
-
-
-def test_csv_quarantine(spark, tmp_path):
-    p = tmp_path / "in.csv"
-    p.write_text("id,v\n1,2.0\n2,notanumber\n3,4.5\n")
-    schema = T.StructType(
-        [T.StructField("id", T.IntegerType()), T.StructField("v", T.DoubleType())]
-    )
-    df = read_csv_quarantine(spark, str(p), schema).cache()
-    good = df.filter(F.col("_corrupt_record").isNull())
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    assert good.count() == 2
-    assert bad.count() == 1
-
-
-def test_typed_dataset_validation_and_flags(spark):
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    df = spark.createDataFrame([(1, 2.0), (2, -1.0)], schema)
-    ds = TypedDataset(df, schema, "demo")
-    flagged = ds.flag("qualityControls", F.col("v") < 0, "NEGATIVE")
-    rows = {r.id: r.qualityControls for r in flagged.df.collect()}
-    assert rows[1] == [] and rows[2] == ["NEGATIVE"]
-    assert flagged.valid_rows().count() == 1
-
-    with pytest.raises(SchemaValidationError):
-        TypedDataset(df.drop("v"), schema, "demo")
-    with pytest.raises(SchemaValidationError):
-        TypedDataset(df.withColumn("v", F.col("v").cast("string")), schema, "demo")
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Same-bucketed tables must sort-merge join with zero Exchange."""
-    from gentropy_spark.sources.writers import write_bucketed
-
-    a = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    b = spark.range(0, 1000).withColumn("w", F.col("id") * 3)
-    write_bucketed(a, "bt_a", ["id"], num_buckets=4, sort_cols=["id"])
-    write_bucketed(b, "bt_b", ["id"], num_buckets=4, sort_cols=["id"])
-    # disable broadcast so the join strategy is the bucketed SMJ
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bt_a").join(spark.table("bt_b"), on="id")
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        import re
-
-        assert not re.findall(r"\(\d+\) Exchange", plan), plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")
 
 
 def test_stream_checkpoint_idempotent(spark, sf_dir, tmp_path):
@@ -293,65 +127,6 @@ def test_sessionize_multibatch_no_split(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert multi == single
-
-
-def test_canonical_schema_validation(spark):
-    """Recursive schema comparison with the reference's issue taxonomy
-    (duplicates / missing-mandatory / unexpected / type-mismatch,
-    nested struct+array recursion) against the canonical registry."""
-    from pyspark.sql import types as T
-
-    from gentropy_spark.datasets.schemas import (
-        CANONICAL,
-        compare_structs,
-        is_fatal,
-        validate_against,
-    )
-
-    good = CANONICAL["sumstats"][1]
-    assert validate_against(good, "sumstats") == {}
-
-    # drop a mandatory column, retype another, add an extra
-    observed = T.StructType(
-        [
-            T.StructField("point_id", T.LongType()),
-            T.StructField("study_id", T.StringType()),  # wrong type
-            T.StructField("contig", T.StringType()),
-            T.StructField("pos", T.LongType()),
-            T.StructField("extra", T.DoubleType()),  # unexpected
-        ]
-    )  # signif missing
-    issues = validate_against(observed, "sumstats")
-    assert issues["missing_mandatory_columns"] == ["signif"]
-    assert any("study_id" in s for s in issues["columns_with_non_matching_type"])
-    assert issues["unexpected_columns"] == ["extra"]
-    assert is_fatal(issues)
-    assert not is_fatal({"unexpected_columns": ["x"]})
-
-    # nested recursion: array<struct> element mismatch is located
-    exp = T.StructType(
-        [
-            T.StructField(
-                "loci",
-                T.ArrayType(
-                    T.StructType([T.StructField("pp", T.DoubleType(), False)])
-                ),
-                False,
-            )
-        ]
-    )
-    obs = T.StructType(
-        [
-            T.StructField(
-                "loci",
-                T.ArrayType(
-                    T.StructType([T.StructField("pp", T.StringType(), False)])
-                ),
-            )
-        ]
-    )
-    nested = dict(compare_structs(obs, exp))
-    assert any("loci[].pp" in s for s in nested["columns_with_non_matching_type"])
 
 
 def test_cli_dag_topo_and_dry_run(tmp_path, capsys):
@@ -552,39 +327,6 @@ def test_stream_incremental_exactly_once(spark, sf_dir, tmp_path):
     )
     assert spark.table("incr_2").count() == batch.count()
     assert n1 <= batch.count()
-
-
-def test_range_sorted_writer_has_disjoint_envelopes(spark, sf_dir, tmp_path):
-    """write_partitioned must leave each file a tight, non-overlapping
-    min/max envelope on the sort key — the property parquet footer
-    pruning depends on (checked in the actual footers, not the API)."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    from gentropy_spark.sources.readers import read_table
-    from gentropy_spark.sources.writers import write_partitioned
-
-    ev = read_table(spark, sf_dir, "events").select("event_id", "user_id")
-    out = str(tmp_path / "ranged")
-    write_partitioned(ev, out, [], ["event_id"], num_partitions=8)
-    envelopes = []
-    for f in sorted(Path(out).glob("part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        col = next(
-            i for i in range(len(md.schema))
-            if md.schema.column(i).name == "event_id"
-        )
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        envelopes.append((min(mins), max(maxs)))
-    envelopes.sort()
-    assert len(envelopes) >= 2
-    for (lo1, hi1), (lo2, hi2) in zip(envelopes, envelopes[1:]):
-        assert hi1 < lo2, f"overlapping envelopes {(lo1, hi1)} vs {(lo2, hi2)}"
 
 
 def test_compact_parquet_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
@@ -876,3 +618,130 @@ def test_bench_prev_round_slim_parsed_record(tmp_path, monkeypatch):
     )
     prev = bench._prev_bench()
     assert prev is not None and prev[2] == {}
+
+
+
+def test_bench_native_sums_rewrite_matches_spark_plans(spark, sf_dir, monkeypatch):
+    """bench.py times DuckDB's native sums exactly where the Spark side
+    switches to native sums: among the headline keys whose oracle SQL
+    ``_to_native_sums`` changes, a key's timed SQL is rewritten iff its
+    optimized Spark plan differs between GENTROPY_SPARK_NATIVE_SUMS=1
+    and the parity profile."""
+    import re
+    import sys
+
+    sys.path.insert(0, _repo_root())
+    import bench
+
+    from gentropy_spark.plans.registry import full_registry
+
+    def optimized(fn) -> str:
+        raw = getattr(fn, "__wrapped__", fn)
+        plan = raw(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "", plan)
+
+    registry = full_registry()
+    mismatched = {}
+    for key in bench.HEADLINE:
+        sql = registry[key].oracle
+        if sql is None or bench._to_native_sums(sql) == sql:
+            continue
+        monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
+        parity = optimized(registry[key].fn)
+        monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
+        native = optimized(registry[key].fn)
+        switches = parity != native
+        rewritten = bench._timed_oracle(key, sql, native=True) != sql
+        if switches != rewritten:
+            mismatched[key] = {"spark_switches": switches, "sql_rewritten": rewritten}
+    assert not mismatched, mismatched
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    """No library module may sit outside what the entry points reach.
+
+    Walks the AST import graph (imports inside functions included) from
+    every plan module that defines ``REGISTRY``, ``api.py``, ``cli.py``,
+    ``hydra_compat.py`` and ``session.py``; a reached module also reaches
+    its parent packages. Fails naming every module under
+    ``gentropy_spark/`` that the walk never reaches.
+    """
+    import ast
+    from pathlib import Path
+
+    pkg_dir = Path(_repo_root()) / "gentropy_spark"
+    modules: dict[str, Path] = {}
+    for path in pkg_dir.rglob("*.py"):
+        parts = path.relative_to(pkg_dir.parent).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        modules[".".join(parts)] = path
+
+    def defines_registry(tree: ast.Module) -> bool:
+        for node in tree.body:
+            targets = (
+                node.targets
+                if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign) else []
+            )
+            if any(isinstance(t, ast.Name) and t.id == "REGISTRY" for t in targets):
+                return True
+        return False
+
+    def imported(name: str, tree: ast.Module) -> set[str]:
+        is_pkg = modules[name].name == "__init__.py"
+        here = name.split(".") if is_pkg else name.split(".")[:-1]
+        out: set[str] = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                out.update(alias.name for alias in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = here[: len(here) - node.level + 1] if node.level else []
+                mod = ".".join(base + ([node.module] if node.module else []))
+                out.add(mod)
+                out.update(f"{mod}.{alias.name}" for alias in node.names)
+        return out
+
+    trees = {name: ast.parse(path.read_text()) for name, path in modules.items()}
+    roots = {
+        name
+        for name, tree in trees.items()
+        if name.startswith("gentropy_spark.plans.") and defines_registry(tree)
+    }
+    roots |= {f"gentropy_spark.{m}" for m in ("api", "cli", "hydra_compat", "session")}
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name in seen or name not in modules:
+            continue
+        seen.add(name)
+        parts = name.split(".")
+        todo.extend(".".join(parts[:i]) for i in range(1, len(parts)))
+        todo.extend(imported(name, trees[name]))
+    unreached = sorted(str(modules[m].relative_to(pkg_dir)) for m in modules.keys() - seen)
+    assert not unreached, f"modules no entry point reaches: {unreached}"
+
+
+def test_ntz_normalization_is_session_tz_independent(spark):
+    """normalize_events_ts must interpret an NTZ wall clock as UTC no
+    matter what spark.sql.session.timeZone is set to."""
+    from gentropy_spark.sources.readers import normalize_events_ts, ts_micros
+
+    ntz = spark.sql(
+        "SELECT TIMESTAMP_NTZ '2024-03-01 12:34:56.789123' AS ts"
+    )
+    expected_us = 1709296496789123  # 2024-03-01T12:34:56.789123Z
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for tz in ("UTC", "America/New_York", "Asia/Tokyo"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            got = normalize_events_ts(ntz).select(
+                F.unix_micros("ts").alias("us")
+            ).first()["us"]
+            assert got == expected_us, f"session tz {tz}: {got}"
+            got2 = ntz.select(ts_micros(ntz).alias("us")).first()["us"]
+            assert got2 == expected_us, f"ts_micros under {tz}: {got2}"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+

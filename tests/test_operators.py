@@ -9,12 +9,14 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from gentropy_spark.functions.arrays import harmonic_sum
 from gentropy_spark.functions.distributions import (
     chi2_isf_1df_col,
+    chi2_sf_1df_col,
     erfc_col,
     norm_sf_col,
     probit_col,
@@ -170,6 +172,19 @@ def test_distribution_kernels_against_python(spark):
         assert abs(r.erfc - math.erfc(r.p)) < 1e-6
         assert abs(r.sf - (1 - nd.cdf(r.p))) < 1e-6
 
+    # The reference's chi2 UDF doctest fixtures (common/udf.py), at 2 dp.
+    isf = spark.createDataFrame([(0.1,), (0.05,), (0.001,)], "p double").select(
+        "p", F.round(chi2_isf_1df_col(F.col("p")), 2).alias("chi2")
+    )
+    assert {r.p: r.chi2 for r in isf.collect()} == {0.1: 2.71, 0.05: 3.84, 0.001: 10.83}
+    sf = spark.createDataFrame(
+        [(1.0, 1.0), (-1.0, 1.0), (10.0, 100.0)], "z double, chi2 double"
+    ).select(
+        F.round(chi2_sf_1df_col(F.col("z") ** 2), 2).alias("pz"),
+        F.round(chi2_sf_1df_col(F.col("chi2")), 2).alias("pc"),
+    )
+    assert [(r.pz, r.pc) for r in sf.collect()] == [(0.32, 0.32), (0.32, 0.32), (0.0, 0.0)]
+
 
 def test_overlap_join_tiled_matches_plain(spark):
     """The tiled (scale-path) overlap join must emit exactly the same
@@ -278,30 +293,6 @@ def test_pics_zero_signal_lead_no_nan(spark):
     for r in rows:
         assert r.pics_pp is not None and not math.isnan(r.pics_pp)
     assert abs(sum(r.pics_pp for r in rows) - 1.0) < 1e-6
-
-
-def test_ld_dense_matrix_densification(spark):
-    """Per-locus dense-matrix hand-off: symmetric fill, unit diagonal,
-    index ordering."""
-    from gentropy_spark.operators.ld_matrix import locus_dense_matrices
-
-    entries = spark.createDataFrame(
-        [
-            (1, 10, 11, 0.9),
-            (1, 10, 12, 0.5),
-            (1, 11, 12, 0.7),
-            (2, 3, 4, 0.2),
-        ],
-        "locus_id long, idx_i long, idx_j long, r double",
-    )
-    rows = {r.locus_id: r for r in locus_dense_matrices(entries).collect()}
-    m1 = rows[1]
-    assert m1.n == 3 and m1.indices == [10, 11, 12]
-    M = m1.matrix
-    assert M[0][0] == 1.0 and M[1][1] == 1.0
-    assert M[0][1] == 0.9 and M[1][0] == 0.9
-    assert M[0][2] == 0.5 and M[2][1] == 0.7
-    assert rows[2].n == 2 and rows[2].matrix[0][1] == 0.2
 
 
 def test_ivf_topk_subset_of_bruteforce(spark, sf_dir):
@@ -713,3 +704,143 @@ def test_bucketed_cumsum_single_scan_exchange_reuse(spark):
         and "ReusedExchange" not in line
     ]
     assert len(big_exchanges) == 1, final_section
+
+
+def test_salted_join_rejects_right_and_full_outer(spark):
+    from gentropy_spark.operators.reshape import salted_join
+
+    left = spark.range(4).withColumnRenamed("id", "k")
+    right = spark.range(8).withColumnRenamed("id", "k")
+    for bad in ("right", "full_outer", "full", "outer"):
+        with pytest.raises(ValueError, match="salted_join"):
+            salted_join(left, right, key="k", how=bad)
+    # the supported modes still work and match the plain join
+    plain = left.join(right, on="k", how="left").count()
+    assert salted_join(left, right, key="k", how="left").count() == plain
+
+
+
+def test_duplicate_clusters_string_ids_converge(spark):
+    """The fixpoint detector must work for non-numeric ids (the old
+    sum-of-labels test returned NULL==NULL after one round and stopped
+    early on >1-hop chains)."""
+    from gentropy_spark.operators.dedup import duplicate_clusters
+
+    docs = spark.createDataFrame(
+        [("a",), ("b",), ("c",), ("d",), ("e",)], ["doc_id"]
+    )
+    # chain a-b-c-d needs THREE propagation rounds to pull 'd' down
+    # to label 'a'; one round would leave d labelled 'c'.
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], ["id_a", "id_b"]
+    )
+    out = {
+        r["doc_id"]: r["cluster_id"]
+        for r in duplicate_clusters(docs, edges, id_col="doc_id").collect()
+    }
+    assert out == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e"}
+
+
+def test_trainer_empty_validation_fold_disables_early_stopping():
+    """r7 advisory: an empty last fold must not zero the ensemble."""
+    from gentropy_spark.operators.l2g_trainer import fit_gbm, predict_margin
+
+    rng = np.random.RandomState(7)
+    X = rng.rand(60, 4)
+    y = (X[:, 0] + 0.2 * rng.rand(60) > 0.6).astype(float)
+    # Directly: an all-False valid mask must behave like no early stop.
+    trees_none = fit_gbm(X, y, n_trees=10, lr=0.3, max_depth=2)
+    trees_guard = fit_gbm(
+        X, y, n_trees=10, lr=0.3, max_depth=2,
+        early_stopping_rounds=2, valid_mask=np.zeros(60, dtype=bool),
+    )
+    assert len(trees_guard) > 0
+    p1 = predict_margin(trees_none, X, 0.3)
+    assert np.isfinite(p1).all()
+
+
+# --- real uncompressed-format codecs (operators/codecs.py) -----------------
+def test_ppm_roundtrip_byte_exact():
+    from gentropy_spark.operators.codecs import decode_ppm, encode_ppm
+
+    rng = np.random.RandomState(3)
+    px = rng.randint(0, 256, size=(5, 7, 3), dtype=np.uint8)
+    meta = decode_ppm(encode_ppm(px))
+    assert (meta["width"], meta["height"], meta["n_channels"]) == (7, 5, 3)
+    assert meta["mean_value"] == pytest.approx(float(px.mean()))
+
+
+
+def test_ppm_header_comments_skipped():
+    from gentropy_spark.operators.codecs import decode_ppm
+
+    payload = b"P6\n# a comment\n2 1\n# another\n255\n" + bytes(
+        [10, 20, 30, 40, 50, 60]
+    )
+    meta = decode_ppm(payload)
+    assert (meta["width"], meta["height"]) == (2, 1)
+    assert meta["mean_value"] == pytest.approx(35.0)
+
+
+
+def test_bmp_roundtrip_handles_row_padding():
+    from gentropy_spark.operators.codecs import decode_bmp, encode_bmp
+
+    # width 3 → 9-byte rows padded to 12: padding must NOT skew the mean.
+    px = np.full((2, 3, 3), 200, dtype=np.uint8)
+    meta = decode_bmp(encode_bmp(px))
+    assert (meta["width"], meta["height"]) == (3, 2)
+    assert meta["mean_value"] == pytest.approx(200.0)
+
+
+
+def test_wav_pcm16_decode():
+    from gentropy_spark.operators.codecs import decode_wav, encode_wav
+
+    samples = np.array([0, 1000, -1000, 32000], dtype=np.int16)
+    meta = decode_wav(encode_wav(samples, rate=8000, channels=1))
+    assert meta["codec"] == "wav"
+    assert meta["sample_rate"] == 8000
+    assert meta["n_channels"] == 1
+    assert meta["width"] == 4
+    assert meta["mean_value"] == pytest.approx(np.abs(samples).mean())
+
+
+
+def test_decode_any_dispatch_and_corrupt_fallback():
+    from gentropy_spark.operators.codecs import decode_any, encode_ppm
+
+    px = np.zeros((2, 2, 3), dtype=np.uint8)
+    assert decode_any(encode_ppm(px))["codec"] == "ppm"
+    assert decode_any(b"plain text payload")["codec"] == "stub"
+    # Truncated PPM (valid magic, corrupt body) must fall back, not raise.
+    assert decode_any(b"P6\n100 100\n255\n\x00\x01")["codec"] == "stub"
+
+
+
+def test_decode_features_real_media_through_mapinpandas(spark):
+    """End-to-end: real BMP/PPM/WAV payloads through the SAME
+    mapInPandas decode plan as the registry query — real fields
+    populated, stub rows get NULLs."""
+    from gentropy_spark.operators.codecs import encode_bmp, encode_ppm, encode_wav
+    from gentropy_spark.operators.multimodal import decode_features
+
+    ppm = encode_ppm(np.full((4, 6, 3), 100, dtype=np.uint8))
+    bmp = encode_bmp(np.full((3, 5, 3), 50, dtype=np.uint8))
+    wav = encode_wav(np.array([500, -500], dtype=np.int16), rate=44100)
+    rows = [
+        (1, bytearray(ppm)),
+        (2, bytearray(bmp)),
+        (3, bytearray(wav)),
+        (4, bytearray(b"just text")),
+    ]
+    df = spark.createDataFrame(rows, "doc_id LONG, payload BINARY")
+    got = {r.doc_id: r for r in decode_features(df).collect()}
+    assert got[1].codec == "ppm" and (got[1].width, got[1].height) == (6, 4)
+    assert got[1].mean_value == pytest.approx(100.0)
+    assert got[2].codec == "bmp" and (got[2].width, got[2].height) == (5, 3)
+    assert got[3].codec == "wav" and got[3].sample_rate == 44100
+    assert got[4].codec == "stub" and got[4].width is None
+    # The stub byte-features remain populated for every row.
+    assert all(v.n_bytes > 0 for v in got.values())
+

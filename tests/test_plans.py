@@ -7,6 +7,8 @@ in a 100 TB run.
 
 from __future__ import annotations
 
+import pytest
+
 from gentropy_spark.plans.genomics import q_window_clump_leads
 from gentropy_spark.plans.relational import q1_pricing_summary, q5_local_supplier
 
@@ -423,3 +425,50 @@ def test_tfidf_no_driver_action_at_build(spark, sf_dir):
     # against (docs.count() at build) fired a SECOND, full-scan job.
     assert len(list(jobs)) <= 1, f"plan build fired extra jobs: {jobs}"
     assert "tfidf" in df.columns
+
+
+def test_mixture_rebalance_zero_rate_emits_zero_threshold(
+    spark, sf_dir, monkeypatch
+):
+    """A stratum with keep_rate 0 must emit threshold '0000' (keep
+    nothing), not 'ffff...' (keep everything) from %04x of -1."""
+    from gentropy_spark.plans import llm_pipeline as lp
+
+    monkeypatch.setattr(lp, "TARGET_SHARES", {"en": 1.0})
+    out = lp.q_mixture_rebalance(spark, sf_dir).collect()
+    by_lang = {r["lang"]: r for r in out}
+    assert "en" in by_lang and by_lang["en"]["keep_rate"] == 1.0
+    for lang, row in by_lang.items():
+        if lang == "en":
+            continue
+        assert row["keep_rate"] == 0.0
+        assert row["sample_threshold_hex"] == "0000", (
+            f"{lang}: zero keep rate must keep nothing, got "
+            f"{row['sample_threshold_hex']!r}"
+        )
+
+
+def test_native_sums_flag_switches_q1_profile(spark, sf_dir, monkeypatch):
+    """GENTROPY_SPARK_NATIVE_SUMS=1 must drop the decimal casts from the
+    q1 aggregate (native double sums) while keeping values within
+    float tolerance of the parity profile."""
+    import importlib
+
+    import gentropy_spark.plans.relational as R
+
+    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
+    exact = {
+        (r.l_returnflag, r.l_linestatus): r.sum_charge
+        for r in R.q1_pricing_summary(spark, sf_dir).collect()
+    }
+    plan_exact = R.q1_pricing_summary(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "decimal(38,6)" in plan_exact
+    monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
+    native_df = R.q1_pricing_summary(spark, sf_dir)
+    plan_native = native_df._jdf.queryExecution().executedPlan().toString()
+    assert "decimal(38,6)" not in plan_native
+    for r in native_df.collect():
+        assert exact[(r.l_returnflag, r.l_linestatus)] == pytest.approx(
+            r.sum_charge, rel=1e-9
+        )
+

@@ -155,36 +155,6 @@ def test_carma_pip_invariants(p, seed):
     assert np.array_equal(res["pip"], res2["pip"])
 
 
-@settings(max_examples=20, deadline=None)
-@given(st.data())
-def test_schema_comparison_properties(data):
-    """Schema comparison: reflexive (no issues vs itself) and the
-    issue taxonomy is stable under field-order permutation."""
-    from pyspark.sql import types as T
-
-    from gentropy_spark.datasets.schemas import compare_structs
-
-    names = data.draw(
-        st.lists(
-            st.text(alphabet="abcdef", min_size=1, max_size=4),
-            min_size=1,
-            max_size=5,
-            unique=True,
-        )
-    )
-    dtypes = [T.LongType(), T.DoubleType(), T.StringType()]
-    fields = [
-        T.StructField(n, dtypes[i % 3], nullable=bool(i % 2))
-        for i, n in enumerate(names)
-    ]
-    schema = T.StructType(fields)
-    assert dict(compare_structs(schema, schema)) == {}
-    perm = data.draw(st.permutations(fields))
-    shuffled = T.StructType(list(perm))
-    issues = dict(compare_structs(shuffled, schema))
-    assert issues == {}  # order never matters
-
-
 @settings(max_examples=8, deadline=None)
 @given(st.data())
 def test_span_self_pairs_matches_bruteforce(spark, data):
@@ -379,45 +349,6 @@ def test_dsir_importance_zero_sum_property(spark):
     total_feat = sum(r.n_feat for r in rows)
     mean_ratio = sum(r.log_importance for r in rows) / total_feat
     assert mean_ratio <= 1e-9  # -KL <= 0
-
-
-def test_panukbb_reconstruction_random_matrices(spark):
-    """Property: for random upper-half entry tables and random ±1
-    allele orders, the relational reconstruction equals the reference
-    numpy construction (half+halfᵀ−diag, outer sign, unit diagonal)."""
-    import numpy as np
-
-    from gentropy_spark.operators.ld_backend import (
-        PanUKBBEntryBackend,
-        locus_numpy_matrix,
-    )
-
-    rng = np.random.RandomState(11)
-    for trial in range(3):
-        n = int(rng.randint(2, 7))
-        H = np.triu(rng.uniform(-1, 1, size=(n, n)))
-        ao = rng.choice([1, -1], size=n)
-        index = spark.createDataFrame(
-            [(i, f"v{i}", "1", 100 + i, int(ao[i])) for i in range(n)],
-            ["idx", "variant_id", "contig", "pos", "allele_order"],
-        )
-        entries = spark.createDataFrame(
-            [
-                (i, j, float(H[i, j]))
-                for i in range(n)
-                for j in range(i, n)
-            ],
-            ["idx_i", "idx_j", "r"],
-        )
-        _, M = locus_numpy_matrix(
-            PanUKBBEntryBackend(index, entries), "1", 0, 10_000
-        )
-        E = H + H.T - np.diag(np.diag(H))
-        sign = np.outer(ao, ao)
-        np.fill_diagonal(sign, 1)
-        E = E * sign
-        np.fill_diagonal(E, 1.0)
-        np.testing.assert_allclose(M, E, atol=1e-12, err_msg=f"trial {trial}")
 
 
 def test_dsum_split_identity_matches_decimal_sum(spark):

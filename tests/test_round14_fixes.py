@@ -1,11 +1,10 @@
 """Round-14 fixes: exact TreeSHAP explanations, the coloc
-beta-ratio directionality column, the embedding_dup_pairs quadratic
-guard, and the bench native-sums symmetry rewriter."""
+beta-ratio directionality column, PQ ANN and the bench native-sums
+symmetry rewriter."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -134,21 +133,6 @@ def test_coloc_outputs_beta_ratio_sign_avg(spark, sf_dir):
             assert v is None or -1.0 <= v <= 1.0
 
 
-# --- embedding_dup_pairs quadratic guard ------------------------------------
-def test_embedding_dup_pairs_guards_unblocked_crossjoin(spark, sf_dir):
-    from gentropy_spark.operators.similarity import embedding_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    with pytest.raises(ValueError, match="allow_quadratic"):
-        embedding_dup_pairs(emb, block_col=None)
-    # Explicit opt-in still works for deliberately tiny inputs.
-    tiny = emb.limit(20)
-    out = embedding_dup_pairs(
-        tiny, block_col=None, allow_quadratic=True, min_cosine=-1.0
-    )
-    assert out.count() > 0
-
-
 # --- bench native-sums symmetry rewriter ------------------------------------
 def test_to_native_sums_rewrites_parity_casts():
     import bench
@@ -175,52 +159,6 @@ def test_to_native_sums_rewrites_parity_casts():
         assert abs(p - q) < 1e-6
 
 
-# --- composable post-coloc annotation surfaces -------------------------------
-def test_append_study_metadata_and_drop_trans_effects(spark):
-    from gentropy_spark.operators.coloc import (
-        append_study_metadata,
-        drop_trans_effects,
-    )
-
-    coloc_df = spark.createDataFrame(
-        [(1, 10, 0.9), (2, 20, 0.8), (3, 30, 0.7)],
-        "left_study_locus_id long, right_study_locus_id long, h4 double",
-    )
-    study_locus = spark.createDataFrame(
-        [(10, 100, False), (20, 200, True), (30, 300, None)],
-        "study_locus_id long, study_id long, is_trans_qtl boolean",
-    )
-    study_index = spark.createDataFrame(
-        [(100, "ENSG1", "eqtl"), (200, "ENSG2", "pqtl"), (300, None, "gwas")],
-        "study_id long, gene_id string, study_type string",
-    )
-    out = append_study_metadata(
-        coloc_df,
-        study_locus,
-        study_index,
-        metadata_cols=["gene_id", "study_type"],
-        colocalisation_side="right",
-    )
-    rows = {r["right_study_locus_id"]: r for r in out.collect()}
-    assert rows[10]["right_gene_id"] == "ENSG1"
-    assert rows[20]["right_study_type"] == "pqtl"
-    assert rows[30]["right_gene_id"] is None
-    assert out.count() == 3  # right join preserves every coloc row
-
-    with pytest.raises(ValueError, match="colocalisation_side"):
-        append_study_metadata(
-            coloc_df, study_locus, study_index,
-            metadata_cols=["gene_id"], colocalisation_side="middle",
-        )
-
-    # trans filter: right locus 20 is trans; NULL (30) counts as cis.
-    kept = sorted(
-        r["right_study_locus_id"]
-        for r in drop_trans_effects(coloc_df, study_locus).collect()
-    )
-    assert kept == [10, 30]
-
-
 # --- PQ ANN sanity -----------------------------------------------------------
 def test_pq_topk_shape_and_selfmatch(spark, sf_dir):
     from gentropy_spark.operators.similarity import pq_topk
@@ -245,21 +183,3 @@ def test_pq_topk_shape_and_selfmatch(spark, sf_dir):
     assert by_rank[1]["adc_dist"] == 0.0
     assert by_rank[1]["cosine"] == 1.0
     assert all(r["adc_dist"] >= 0.0 for r in out)
-
-
-# --- lint: no plan-level caller of the driver-side LD densifier --------------
-def test_no_plan_calls_locus_numpy_matrix():
-    """operators/ld_backend.py locus_numpy_matrix is a deliberate
-    driver-side per-locus densifier (the reference's own posture) —
-    any batch path in plans/ must route through the distributed
-    locus_dense_matrices (operators/ld_matrix.py) instead. Source
-    lint per the r13 verdict's anti-pattern note."""
-    import glob
-    import os
-
-    root = os.path.join(os.path.dirname(__file__), "..", "gentropy_spark")
-    offenders = []
-    for p in glob.glob(os.path.join(root, "plans", "*.py")):
-        if "locus_numpy_matrix" in open(p).read():
-            offenders.append(os.path.basename(p))
-    assert offenders == [], offenders

@@ -125,75 +125,6 @@ def test_png_through_mapinpandas_pipeline(spark):
     assert got[3].codec == "stub"
 
 
-# --- χ² Pandas-UDF adapters (functions/udf.py, reference common/udf.py) ----
-def test_chi2_udf_adapters_match_reference_doctests(spark):
-    """The reference's own doctest fixtures, verbatim."""
-    import pyspark.sql.functions as f
-
-    from gentropy_spark.functions.udf import (
-        chi2_inverse_survival_function,
-        chi2_survival_function,
-    )
-
-    df = spark.createDataFrame(
-        [(0.1,), (0.05,), (0.001,)], "pValue double"
-    )
-    got = {
-        r.pValue: r.chi2_stat
-        for r in df.select(
-            "pValue",
-            f.round(chi2_inverse_survival_function("pValue"), 2).alias(
-                "chi2_stat"
-            ),
-        ).collect()
-    }
-    assert got == {0.1: 2.71, 0.05: 3.84, 0.001: 10.83}
-
-    df2 = spark.createDataFrame(
-        [(1.0, 1.0), (-1.0, 1.0), (10.0, 100.0)], "zScore double, chi2 double"
-    )
-    rows = df2.select(
-        f.round(chi2_survival_function(f.col("zScore") ** 2), 2).alias("pz"),
-        f.round(chi2_survival_function("chi2"), 2).alias("pc"),
-    ).collect()
-    assert [(r.pz, r.pc) for r in rows] == [
-        (0.32, 0.32),
-        (0.32, 0.32),
-        (0.0, 0.0),
-    ]
-
-
-def test_chi2_udf_adapters_agree_with_column_kernels(spark):
-    """All three surfaces (numpy UDF, Column kernel, SQL builder) share
-    one coefficient table — they must agree to ~1e-9 pointwise."""
-    import numpy as np
-    import pyspark.sql.functions as f
-
-    from gentropy_spark.functions.distributions import (
-        chi2_isf_1df_col,
-        chi2_sf_1df_col,
-    )
-    from gentropy_spark.functions.udf import (
-        chi2_inverse_survival_function,
-        chi2_survival_function,
-    )
-
-    ps = [0.001, 0.01, 0.02425, 0.1, 0.3, 0.5, 0.7, 0.9, 0.97, 0.999]
-    xs = [0.01, 0.5, 1.0, 3.84, 10.0, 30.0, 80.0]
-    df = spark.createDataFrame([(p,) for p in ps], "p double")
-    rows = df.select(
-        chi2_inverse_survival_function("p").alias("udf"),
-        chi2_isf_1df_col(f.col("p")).alias("col"),
-    ).collect()
-    assert all(abs(r.udf - r.col) < 1e-9 for r in rows), rows
-    df2 = spark.createDataFrame([(x,) for x in xs], "x double")
-    rows2 = df2.select(
-        chi2_survival_function("x").alias("udf"),
-        chi2_sf_1df_col(f.col("x")).alias("col"),
-    ).collect()
-    assert all(abs(r.udf - r.col) < 1e-9 for r in rows2), rows2
-
-
 # --- streaming upsert sink: crash between staging write and swap -----------
 def test_upsert_sink_crash_and_resume_exactly_once(spark, sf_dir, tmp_path):
     """Failure-path evidence for the foreachBatch MERGE sink (r8 verdict
@@ -556,106 +487,6 @@ def test_mp4_through_mapinpandas_pipeline(spark):
     row = decode_features(df).collect()[0]
     assert row.codec == "mp4" and (row.width, row.height) == (640, 360)
     assert row.mean_value is None
-
-
-# --- static assets: Ensembl consequence table --------------------------------
-def test_variant_consequence_asset_reference_doctests():
-    """The reference's own doctest fixtures
-    (assets/variant_consequences.py): missense id/score, table size."""
-    from gentropy_spark.assets.variant_consequences import (
-        CONSEQUENCES,
-        map_score,
-        map_sequence_ontology,
-    )
-
-    so = map_sequence_ontology()
-    assert so["missense_variant"] == "SO_0001583"
-    assert len(so) == 41
-    assert map_score()["missense_variant"] == 0.68
-    # ranks are a dense 1..41 permutation-free sequence, impacts valid
-    assert [c.rank for c in CONSEQUENCES] == list(range(1, 42))
-    assert {c.impact for c in CONSEQUENCES} == {
-        "HIGH", "MODERATE", "LOW", "MODIFIER"
-    }
-    # the correct public Ensembl term (the reference file carries a
-    # find-and-replace typo here)
-    assert so["incomplete_terminal_codon_variant"] == "SO_0001626"
-
-
-# --- Ensembl REST client (offline, injectable transport) --------------------
-def test_ensembl_rsid_client_parses_and_batches():
-    from gentropy_spark.sources.ensembl_api import fetch_coordinates_from_rsids
-
-    calls = []
-
-    def fake_transport(batch):
-        calls.append(list(batch))
-        return {
-            rsid: {
-                "mappings": [
-                    {  # canonical chromosome: kept, two alts -> two ids
-                        "seq_region_name": "17",
-                        "start": 7041768,
-                        "allele_string": "G/C/T",
-                    },
-                    {  # patch scaffold: dropped
-                        "seq_region_name": "HSCHR17_1_CTG1",
-                        "start": 1,
-                        "allele_string": "G/C",
-                    },
-                ]
-            }
-            if rsid != "rs_unmapped"
-            else {"mappings": []}
-            for rsid in batch
-        }
-
-    rsids = [f"rs{i}" for i in range(5)] + ["rs_unmapped"]
-    got = fetch_coordinates_from_rsids(
-        rsids, batch_size=2, pause_time=0, transport=fake_transport
-    )
-    assert len(calls) == 3  # ceil(6/2) batches
-    assert got["rs0"] == ["17_7041768_G_C", "17_7041768_G_T"]
-    assert "rs_unmapped" not in got  # no-mapping rsIDs omitted
-
-
-def test_ensembl_rsid_client_wraps_batch_errors():
-    from gentropy_spark.sources.ensembl_api import fetch_coordinates_from_rsids
-
-    def boom(batch):
-        raise ConnectionError("offline")
-
-    with pytest.raises(RuntimeError, match="batch 1"):
-        fetch_coordinates_from_rsids(["rs1"], transport=boom)
-
-
-# --- cloud store wiring (sources/cloud.py) ----------------------------------
-def test_s3_config_from_file_env_and_conf(tmp_path, monkeypatch):
-    from gentropy_spark.sources.cloud import S3Config
-
-    cfg_path = tmp_path / "s3.json"
-    cfg_path.write_text(
-        '{"bucket_name": "b", "s3_host_port": 9000,'
-        ' "s3_host_url": "s3.local", "access_key_id": "ak",'
-        ' "secret_access_key": "sk"}'
-    )
-    cfg = S3Config.from_file(str(cfg_path))
-    assert cfg.bucket_name == "b" and cfg.endpoint == "s3.local:9000"
-    assert cfg.bucket_uri("data/x.parquet") == "s3a://b/data/x.parquet"
-    conf = cfg.hadoop_conf()
-    assert conf["spark.hadoop.fs.s3a.endpoint"] == "s3.local:9000"
-    assert conf["spark.hadoop.fs.s3a.connection.ssl.enabled"] == "false"
-
-    monkeypatch.setenv("AWS_S3_BUCKET_NAME", "envb")
-    monkeypatch.setenv("AWS_ENDPOINT_URL", "s3.example.com:9001")
-    monkeypatch.setenv("AWS_ACCESS_KEY_ID", "id")
-    monkeypatch.setenv("AWS_SECRET_ACCESS_KEY", "sec")
-    env_cfg = S3Config.from_env()
-    assert (env_cfg.bucket_name, env_cfg.s3_host_port) == ("envb", 9001)
-
-    monkeypatch.delenv("AWS_S3_BUCKET_NAME")
-    with pytest.raises(ValueError, match="AWS_S3_BUCKET_NAME"):
-        S3Config.from_env()
 
 
 # --- randomized codec round trips (hypothesis) ------------------------------
