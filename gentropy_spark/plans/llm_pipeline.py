@@ -2013,46 +2013,49 @@ def _pca_x() -> F.Column:
     )
 
 
-def _proj_chain_dec12(
-    x: F.Column, mu_arr: F.Column, l_arr: F.Column, d: int
-) -> F.Column:
-    """Σ_j round((x_j − μ_j)·l_j, 9) as an unrolled per-row DECIMAL
-    chain — equal to the relational DECIMAL(38,12) SUM over the same
-    9dp terms (decimal addition is exact, so association order cannot
-    matter), and whole-stage-codegen where an explode+groupBy pays an
-    exchange.
+def _proj_dec12(x: F.Column, mu_arr: F.Column, l_arr: F.Column) -> F.Column:
+    """Σ_j round((x_j − μ_j)·l_j, 9) as one per-row array kernel: a
+    ``zip_with`` builds the 9dp terms as DECIMAL(38,12) and an
+    ``aggregate`` sums them. Equal to the relational DECIMAL(38,12) SUM
+    over the same terms: decimal addition is exact, so the order of
+    the sum cannot matter.
 
-    Per-step cast back to DECIMAL(38,12): Spark's decimal `+` widens
+    The expression does not grow with the embedding width. An unrolled
+    element_at chain (about ten nodes per dim, ~640 at EMB_DIM = 64)
+    is re-planned and re-code-generated on every execution, memoized
+    plan or not: embedding_pca_power at sf0.01 (4 vCPU, median of 8
+    interleaved runs) spent 0.83 s of a 1.24 s action as driver time
+    between jobs with it, and 0.33 s of 0.72 s with this kernel. The
+    cost is the tree size, not DECIMAL arithmetic: an unrolled BIGINT
+    fixed-point chain kept a 0.67 s gap. The lambdas run interpreted,
+    and still do not lose on executor time at scale: on a synthetic
+    50k-row table the action took 6.2 s against 7.2 s unrolled.
+
+    Per-step cast back to DECIMAL(38,12): Spark's decimal ``+`` widens
     the nominal integer part and RE-SCALES the result one digit
     narrower per chained addition (38,12 → 38,11 → 38,10 → ...),
     silently rounding the 9dp partials once the scale crosses below 9
     — measured as a 2e-6 drift vs the oracle's SUM in
     q_embedding_pca_project. The re-cast pins every partial at scale
-    12, keeping the 9dp accumulation exact (= the relational SUM).
+    12, keeping the 9dp accumulation exact (= the relational SUM);
+    ``aggregate`` also requires its merge to return the accumulator's
+    type.
 
-    Placement: evaluate the chain in a projection BELOW any generator
+    Placement: evaluate the kernel in a projection BELOW any generator
     over the same row. Selected next to ``posexplode``, Spark's
     analyzer puts it in the Project above the Generate, so it runs
     once per exploded element (d times per row);
     tests/test_plans.py::test_no_cartesian_product_anywhere guards
-    that shape registry-wide.
-
-    Codegen budget: the generated Java grows linearly with d per
-    chain. Keep to the shapes in use — one chain per code-generated
-    stage (q_embedding_pca_power step 2, q_ann_pca_topk), two in
-    q_embedding_pca_project. An earlier E54 cut with more unrolled
-    chains per stage OOM'd Janino (300-650 KB generated sources, see
-    q_embedding_pca_topm); re-run the PCA keys with ``spark.sql.codegen.fallback=false`` before
-    raising EMB_DIM or adding chains to a stage."""
-    s = None
-    for j in range(1, d + 1):
-        t = F.round(
-            (F.element_at(x, j) - F.element_at(mu_arr, j))
-            * F.element_at(l_arr, j),
-            9,
-        ).cast("decimal(38,12)")
-        s = t if s is None else (s + t).cast("decimal(38,12)")
-    return s
+    that shape registry-wide."""
+    dec12 = "decimal(38,12)"
+    terms = F.zip_with(
+        F.zip_with(x, mu_arr, lambda xj, mj: xj - mj),
+        l_arr,
+        lambda cj, lj: F.round(cj * lj, 9).cast(dec12),
+    )
+    return F.aggregate(
+        terms, F.lit(0).cast(dec12), lambda acc, t: (acc + t).cast(dec12)
+    )
 
 
 @prepared
@@ -2069,23 +2072,25 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-dp-quantized terms (order-independent — the repo-wide FP-sum
     rule), per-row projections are themselves per-dimension DECIMAL
     sums (never a left-to-right double fold whose order a shuffle
-    could change — the per-row DECIMAL chain is exact, so it equals
-    the SUM), v1 components round to 12 dp before re-use and outputs
-    to 6 dp. Scale shape (array form, r18): μ and v ride 1-row
-    broadcast arrays, each matvec step is one explode +
+    could change — the per-row DECIMAL kernel ``_proj_dec12`` is
+    exact, so it equals the SUM), v1 components round to 12 dp before
+    re-use and outputs to 6 dp. Scale shape (array form, r18): μ and v
+    ride 1-row broadcast arrays, each matvec step is one explode +
     map-side-combined per-dimension aggregate over the raw scan (only
     d-row combiner partials shuffle), and nothing driver-side ever
-    sees more than d rows. No corpus-grain cache, no vec_id joins.
+    sees more than d rows. No cache at all: AQE reuses the d-row μ
+    table's exchange for its three consumers within one query, and a
+    tracked cache would only be re-persisted and re-filled on every
+    memo hit after ``release_caches()`` (23 → 14 jobs per warm run).
 
     Evaluation grain: each step computes the row's projection d_i in
-    a select BELOW its posexplode, so step 2's 64-term DECIMAL chain
-    runs once per row. In the same select as the generator it would
-    run once per exploded element — d = 64 times per row, the bulk of
-    the key's task CPU. Every embedding must have width EMB_DIM; any other
+    a select BELOW its posexplode, so step 2's DECIMAL kernel runs
+    once per row. In the same select as the generator it would run
+    once per exploded element — d = 64 times per row, the bulk of the
+    key's task CPU. Every embedding must have width EMB_DIM; any other
     width fails the query (``_pca_x``).
     """
     from gentropy_spark.operators.dedup import spread_if_narrow
-    from gentropy_spark.session import track_cache
 
     emb = spread_if_narrow(
         read_table(spark, sf_dir, "embeddings"), "vec_id"
@@ -2099,8 +2104,8 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_row = emb.agg(F.count("*").cast("double").alias("n"))
     # mus feeds the μ-array pivot (both matvec scans) and the output
-    # mean column — cache the d-row table once.
-    mus = track_cache(
+    # mean column; AQE reuses its exchange for all three.
+    mus = (
         ex.groupBy("dim")
         .agg(F.sum(F.col("xj").cast(DEC12)).cast("double").alias("sx"))
         .crossJoin(F.broadcast(n_row))
@@ -2172,13 +2177,13 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v1 = u1.select("dim", F.round(F.col("u") / nrm1, 12).alias("v"))
     # Step 2 onto v1: v rides a 1-row broadcast array and d_i is the
-    # unrolled DECIMAL chain (== the relational SUM of the same 9dp
+    # DECIMAL array kernel (== the relational SUM of the same 9dp
     # terms) — no vec_id join, no groupBy(vec_id) exchange.
     v_row = F.broadcast(v1.agg(_dim_table_to_array("v").alias("v_arr")))
     u2 = matvec(
-        _proj_chain_dec12(
-            F.col("__x"), F.col("mu_arr"), F.col("v_arr"), EMB_DIM
-        ).cast("double"),
+        _proj_dec12(F.col("__x"), F.col("mu_arr"), F.col("v_arr")).cast(
+            "double"
+        ),
         mu_row,
         v_row,
     )
@@ -2288,8 +2293,8 @@ def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the eigen-loading and per-dim means pivot into a
     1-row broadcast array from ``q_embedding_pca_power`` (the
     composition point — the E51 output IS this operator's input);
-    projections are an inline codegen DECIMAL chain over the scan
-    (r18 — no explode, no per-vector aggregation); the bin range is a
+    projections are an inline DECIMAL array kernel over the scan
+    (no explode, no per-vector aggregation); the bin range is a
     1-row broadcast aggregate; candidates meet through the bin
     equi-join, so shuffle ∝ corpus + 3×queries and the exact kernel
     touches ~3/16 of the corpus per query instead of all of it.
@@ -2308,11 +2313,11 @@ def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
     pca = q_embedding_pca_power(spark, sf_dir)
     # Array-form projection (r18): the d-row E51 output pivots into a
-    # 1-row (means, loadings) broadcast and proj is the unrolled
-    # per-row DECIMAL chain — one codegen projection over the scan
-    # instead of explode + d-row join + groupBy(vec_id) exchange.
-    # Identical terms: same round((x_j − mean_j)·loading_j, 9)
-    # products, and the exact DECIMAL chain equals the relational SUM.
+    # 1-row (means, loadings) broadcast and proj is the per-row
+    # DECIMAL array kernel — one projection over the scan instead of
+    # explode + d-row join + groupBy(vec_id) exchange. Identical
+    # terms: same round((x_j − mean_j)·loading_j, 9) products, and the
+    # exact DECIMAL sum equals the relational SUM.
     model = F.broadcast(
         pca.agg(
             _dim_table_to_array("mean").alias("m_arr"),
@@ -2325,8 +2330,8 @@ def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.round(
-                _proj_chain_dec12(
-                    F.col("__x"), F.col("m_arr"), F.col("l_arr"), EMB_DIM
+                _proj_dec12(
+                    F.col("__x"), F.col("m_arr"), F.col("l_arr")
                 ).cast("double"),
                 6,
             ).alias("proj"),
@@ -2817,15 +2822,14 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_j)·loading_kj, 9) as order-free DECIMAL sums, 6dp output.
     The consumed E54 output (its 6dp means and loadings — the
     composition contract) is pivoted into three d-length arrays on a
-    1-row broadcast; both coordinates are then unrolled element_at
-    DECIMAL chains inside ONE codegen projection over the embeddings
-    scan — zero exchanges downstream of the model build, no explode,
-    no per-vector aggregation (the pii_redact plan class, with the
-    E54 chain riding the broadcast side).
+    1-row broadcast; both coordinates are then DECIMAL array kernels
+    (``_proj_dec12``) inside ONE projection over the embeddings scan —
+    zero exchanges downstream of the model build, no explode, no
+    per-vector aggregation (the pii_redact plan class, with the E54
+    chain riding the broadcast side).
     """
     from gentropy_spark.operators.dedup import spread_if_narrow
 
-    d = EMB_DIM
     emb = spread_if_narrow(
         read_table(spark, sf_dir, "embeddings"), "vec_id"
     )
@@ -2850,9 +2854,7 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def proj(lcol: F.Column) -> F.Column:
         return F.round(
-            _proj_chain_dec12(F.col("__x"), F.col("mu"), lcol, d).cast(
-                "double"
-            ),
+            _proj_dec12(F.col("__x"), F.col("mu"), lcol).cast("double"),
             6,
         )
 

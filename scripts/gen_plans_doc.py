@@ -60,9 +60,9 @@ AUDIT = {
     "text_langid": "Same staging: one tokenize pass, four score HOFs evaluated once, codegen argmax; zero exchanges.",
     "bloom_decontaminate": "Bloom build = bit_or partial-agg over benchmark shingle positions (shuffle <= 4096 words, no build-side distinct -- bit_or absorbs duplicates); probe = K inline element_at lookups against the ONE-row broadcast dense word array; per-doc counts ride ONE doc_id groupBy (r13: the per-(doc, shingle) min-regroup was redundant -- shingles() emits distinct pairs).",
     # r17 additions
-    "ann_pca_topk": "E51 loading/means ride a d-row broadcast (the composition point); projections = one explode + map-side-combined groupBy, cached (feeds corpus bins AND query probes); bin range a 1-row broadcast; candidates meet via the bin EQUI-join (3 exploded probe keys per query, never a query x corpus product); exact cosine + per-query window only on the ~3/16 slice.",
+    "ann_pca_topk": "E51 loading/means ride a 1-row broadcast of d-length arrays (the composition point); projections = one per-row DECIMAL array kernel over the scan (zip_with terms, aggregate sum; its size does not grow with d), cached (feeds corpus bins AND query probes); bin range a 1-row broadcast; candidates meet via the bin EQUI-join (3 exploded probe keys per query, never a query x corpus product); exact cosine + per-query window only on the ~3/16 slice.",
     "embedding_pca_topm": "Covariance method: ONE corpus pass builds the d x d Gram table (explode -> vec_id self-join -> d^2-group DECIMAL partial agg; only combiner output crosses the wire), then ALL power blocks + matrix-level Hotelling deflations run as ONE Arrow task over 4096 values with exact HALF_UP Decimal arithmetic (= the relational SUM). Exactly two data-grain stages (mean agg, Gram agg); measured in over three rejected cuts (explode+join matvecs ~30 jobs; unrolled DECIMAL codegen chains OOM'd janino; relational tiny-table iteration ~20 scheduler-bound jobs).",
-    "embedding_pca_project": "E54's output pivoted to three d-length arrays on a 1-row broadcast; both coordinates are unrolled element_at DECIMAL chains in ONE codegen projection over the embeddings scan -- zero exchanges downstream of the model build (the pii_redact class). Chain partials re-cast to DECIMAL(38,12) per addition (Spark's decimal + re-scales a digit narrower per chained term -- unfixed, 9dp partials round silently).",
+    "embedding_pca_project": "E54's output pivoted to three d-length arrays on a 1-row broadcast; both coordinates are DECIMAL array kernels (zip_with terms, aggregate sum; their size does not grow with d) in ONE projection over the embeddings scan -- zero exchanges downstream of the model build (the pii_redact class). Partial sums re-cast to DECIMAL(38,12) per addition (Spark's decimal + re-scales a digit narrower per chained term -- unfixed, 9dp partials round silently).",
 }
 
 

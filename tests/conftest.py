@@ -18,6 +18,35 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def big_emb_dir(tmp_path_factory):
+    """A synthetic embeddings table big enough that semdedup's
+    two-level assignment leaves the exact regime:
+    n = 9990 -> K = ceil(n/256) = 40, K2 = ceil(sqrt(40)) = 7 > 6 =
+    SEMDEDUP_NPROBE. Deterministic (seeded numpy), same physical
+    schema as the testdata table. Also the random corpus of the E54
+    oracle-parity test in test_pca.py."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n, dim = 9990, 64
+    rng = np.random.default_rng(17)
+    emb = rng.standard_normal((n, dim)).astype(np.float32)
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(
+                [row for row in emb.tolist()], pa.list_(pa.float32())
+            ),
+            "label": pa.array([i % 7 for i in range(n)], pa.int32()),
+        }
+    )
+    d = tmp_path_factory.mktemp("bigemb")
+    pq.write_table(tbl, str(d / "embeddings.parquet"))
+    return str(d)
+
+
 @pytest.fixture(autouse=True, scope="module")
 def _release_tracked_caches():
     """Unpersist operator-tracked intermediates between test modules so

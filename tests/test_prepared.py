@@ -121,7 +121,7 @@ def test_prepared_identity_and_keying(spark, sf_dir, monkeypatch, tmp_path):
 def test_prepared_hit_repersists_tracked_caches_after_release(spark, sf_dir):
     from gentropy_spark.plans import full_registry
 
-    fn = full_registry()["embedding_pca_power"].fn
+    fn = full_registry()["embedding_pca_topm"].fn
     fn(spark, sf_dir)
     tracked = _handles(fn, sf_dir)
     assert tracked, "build registered no track_cache handles"

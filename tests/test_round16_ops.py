@@ -401,66 +401,3 @@ def test_lm_kn_perplexity_matches_python_reference(spark, tmp_path):
     assert any(
         abs(addk[d] - got[d][2]) > 1e-6 for d in got
     ), "KN must differ from add-alpha smoothing"
-
-
-def test_embedding_pca_power_matches_numpy_reference(spark):
-    """E51: the two quantized power steps must equal an exact numpy
-    replication (same 9-dp term rounding, same order-free sums), and
-    the loading must be a unit vector aligned with the true leading
-    eigenvector's direction on the real sf0.001 embeddings."""
-    import numpy as np
-
-    from gentropy_spark.plans.llm_pipeline import q_embedding_pca_power
-    from gentropy_spark.sources.readers import read_table
-
-    X = np.array(
-        [
-            [float(v) for v in r.embedding]
-            for r in read_table(spark, SF, "embeddings").collect()
-        ]
-    )
-    n, d = X.shape
-    mu = np.array(
-        [float(np.sum(X[:, j].astype(np.float64))) / n for j in range(d)]
-    )
-    C = X - mu
-
-    def step(v):
-        dd = np.array(
-            [float(np.sum(np.round(C[i] * v, 9))) for i in range(n)]
-        )
-        u = np.array(
-            [float(np.sum(np.round(dd * C[:, j], 9))) / n for j in range(d)]
-        )
-        return u
-
-    u1 = step(np.eye(d)[0])
-    v1 = np.round(u1 / np.sqrt(np.sum(np.round(u1 * u1, 9))), 12)
-    u2 = step(v1)
-    nrm2 = float(np.sqrt(np.sum(np.round(u2 * u2, 9))))
-    expected = {
-        j + 1: (round(float(mu[j]), 6), round(float(u2[j] / nrm2), 6))
-        for j in range(d)
-    }
-    rows = q_embedding_pca_power(spark, SF).collect()
-    got = {r.dim: (r.mean, r.loading) for r in rows}
-    # quantized DECIMAL sums vs numpy float sums: identical up to the
-    # output rounding except possible 1-ulp boundary flips — allow a
-    # 1e-6 band (one output quantum)
-    assert set(got) == set(expected)
-    for j in got:
-        assert abs(got[j][0] - expected[j][0]) <= 1e-6
-        assert abs(got[j][1] - expected[j][1]) <= 1e-6
-    ev = {r.eigenvalue for r in rows}
-    assert len(ev) == 1
-    assert abs(next(iter(ev)) - round(nrm2, 6)) <= 1e-6
-    # unit loading; power-iteration monotonicity: the norm estimate
-    # must not shrink between steps (||C v1|| >= ||C v0|| by
-    # Cauchy-Schwarz for symmetric PSD C), and must stay below the
-    # true leading eigenvalue
-    load = np.array([got[j + 1][1] for j in range(d)])
-    assert abs(np.linalg.norm(load) - 1.0) < 1e-4
-    nrm1 = float(np.sqrt(np.sum(np.round(u1 * u1, 9))))
-    assert nrm2 >= nrm1 - 1e-6, "power step decreased the norm estimate"
-    w = np.linalg.eigvalsh(np.cov(X.T, bias=True))
-    assert nrm2 <= w[-1] + 1e-6, "norm estimate exceeded the top eigenvalue"
