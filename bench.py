@@ -120,62 +120,6 @@ HEADLINE = [
 ]
 
 
-_DEC_SUM_PREFIX = "CAST(SUM(CAST("
-_DEC_SUM_SUFFIX = " AS DECIMAL(38,6))) AS DOUBLE)"
-
-# Headline keys whose Spark plan switches to native double sums under
-# GENTROPY_SPARK_NATIVE_SUMS=1 (their sums go through relational._dsum,
-# the flag's only reader). Other keys keep their DECIMAL sums on the
-# Spark side, so their oracle SQL is timed unrewritten.
-_NATIVE_SUM_KEYS = frozenset(
-    {"q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier"}
-)
-
-
-def _timed_oracle(name: str, sql: str | None, native: bool) -> str | None:
-    """The DuckDB SQL timed against key ``name``: the oracle, with its
-    parity decimal sums made native when the Spark side's are."""
-    if native and sql is not None and name in _NATIVE_SUM_KEYS:
-        return _to_native_sums(sql)
-    return sql
-
-
-def _to_native_sums(sql: str) -> str:
-    """Rewrite the oracle's parity decimal-sum casts to native double
-    sums: CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE) -> SUM(x).
-
-    Keeps the benchmark SYMMETRIC under GENTROPY_SPARK_NATIVE_SUMS=1
-    (r13 advice) for the keys in ``_NATIVE_SUM_KEYS``: their Spark side
-    times native double sums, so the DuckDB denominator must too — the
-    decimal casts exist only for the value-hash gate, which runs in a
-    separate process on the parity profile and is untouched by this
-    rewrite. Paren-aware (the inner expression may contain nested
-    parens); any non-matching text is left verbatim.
-    """
-    out = []
-    i = 0
-    while True:
-        j = sql.find(_DEC_SUM_PREFIX, i)
-        if j < 0:
-            out.append(sql[i:])
-            return "".join(out)
-        out.append(sql[i:j])
-        k = j + len(_DEC_SUM_PREFIX)
-        depth = 0
-        while k < len(sql) and (depth > 0 or not sql.startswith(_DEC_SUM_SUFFIX, k)):
-            if sql[k] == "(":
-                depth += 1
-            elif sql[k] == ")":
-                depth -= 1
-            k += 1
-        if k >= len(sql):  # unbalanced — bail out verbatim
-            out.append(sql[j:])
-            return "".join(out)
-        inner = sql[j + len(_DEC_SUM_PREFIX): k]
-        out.append(f"SUM({inner})")
-        i = k + len(_DEC_SUM_SUFFIX)
-
-
 def _prev_bench() -> tuple[int, dict, dict, object, str] | None:
     """Latest BENCH_r{N}.json next to this file, or None.
 
@@ -277,19 +221,6 @@ def _prev_bench() -> tuple[int, dict, dict, object, str] | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # r13 (verdict #5): the bench measures the PRODUCTION profile —
-    # native double sums — by default. The 10x probe showed q1's 7-9x
-    # ratio is a decimal-KERNEL speed gap (Spark's DECIMAL(38,6) sum
-    # buffer is BigDecimal-backed; DuckDB's decimal sums are native
-    # 128-bit kernels), not a plan defect, and no production Spark
-    # deployment pays the parity casts — they exist solely so the
-    # value hash matches DuckDB bit-for-bit. Correctness is gated
-    # elsewhere and UNCHANGED: the driver's correctness snapshot and
-    # tests/test_oracle_parity.py run in separate processes without
-    # this default, so the decimal-parity path remains the certified
-    # one. Export GENTROPY_SPARK_NATIVE_SUMS=0 (any non-"1") to bench
-    # the parity profile instead; the payload records the profile.
-    os.environ.setdefault("GENTROPY_SPARK_NATIVE_SUMS", "1")
     spark = get_session(app_name="gentropy_spark_bench")
     registry = full_registry()
 
@@ -335,14 +266,9 @@ def main() -> None:
     ratios: dict[str, float] = {}
     errors: dict[str, str] = {}
     spreads: dict[str, float] = {}
-    native = os.environ.get("GENTROPY_SPARK_NATIVE_SUMS", "") == "1"
     for name in HEADLINE:
         fn = registry[name].fn
-        # Symmetric profile: where the Spark side runs native double
-        # sums, the timed DuckDB SQL does too (see _timed_oracle; the
-        # correctness gate elsewhere still runs the parity profile on
-        # the unmodified oracle).
-        sql = _timed_oracle(name, registry[name].oracle, native)
+        sql = registry[name].oracle
         best_s = best_d = float("inf")
         # Repeat policy (r15 verdict item 7: the duck denominator swung
         # 45 -> 62s between same-SQL runs, so a 2.4x-class reading must
@@ -462,13 +388,6 @@ def main() -> None:
             else {}
         ),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # Perf-profile flag. native_sums defaults ON since r13 (the
-        # bench measures the production profile; the correctness gates
-        # run the decimal-parity path in their own processes — see the
-        # r13 note at the top of main()).
-        "native_sums": os.environ.get("GENTROPY_SPARK_NATIVE_SUMS", "")
-        == "1",
-        "native_sums_default_since": "r13",
         # Prepared-plan provenance (r13 verdict item 7): how many timed
         # keys hit the prepared-plan memo on their warm repeat; the
         # per-key map is in BENCH_FULL.json. Plan construction only —

@@ -3,10 +3,12 @@
 These exercise the engine's scan → filter → join → aggregate spine on
 the TPC-H-shaped tables. Design rules for oracle-exactness:
 
-- Every SUM over doubles is computed as SUM(CAST(x AS DECIMAL(38,6)))
-  then cast back to DOUBLE: decimal addition is associative, so Spark's
-  partial-aggregation order and DuckDB's serial order give bit-equal
-  results. (A plain double SUM is order-dependent in the last ulp.)
+- One exact sum discipline: every SUM over doubles equals
+  CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE). Decimal addition is
+  associative, so Spark's partial-aggregation order and DuckDB's serial
+  order give bit-equal results (a plain double SUM is order-dependent
+  in the last ulp). ``_dsum`` computes that value through exact long
+  micro-unit sums; there is no inexact profile.
 - Every average is decimal-sum / count in double.
 - Quantile/corr-style statistics are rounded to 6 dp on both sides.
 - Tie-breaking orderings are always total (include a unique key).
@@ -31,58 +33,62 @@ DEC = "decimal(38,6)"
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 
 
-def _native_sums_enabled() -> bool:
-    """Production sum profile: GENTROPY_SPARK_NATIVE_SUMS=1 switches the
-    cross-engine-parity DECIMAL(38,6) sum casts to native double sums.
-
-    The decimal casts exist ONLY so the value hash matches DuckDB
-    bit-for-bit regardless of reduction order; they cost ~2x on
-    sum-heavy aggregates (q1 at sf0.1: decimal ~1.7s vs native ~0.9s).
-    A production deployment that doesn't hash-compare against another
-    engine should run with this flag on — same plan shape, same
-    partial-aggregation, just native codegen arithmetic. Oracle
-    checks must keep it OFF (results differ in final ulps).
-    """
-    import os
-
-    return os.environ.get("GENTROPY_SPARK_NATIVE_SUMS", "") == "1"
-
-
 _SPLIT_SHIFT = 20  # micro-unit split base 2^20
 _SPLIT_BASE = 1 << _SPLIT_SHIFT
+_RINT_LIMIT = float(1 << 50)  # |x * 1e6| bound of the rint branch
 
 
 def _dsum(col: F.Column) -> F.Column:
     """Order-independent sum of a double column, bit-identical to
-    ``CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)`` but ~3x faster.
+    ``CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)`` for every input.
 
-    A DECIMAL(38,6) sum buffer is BigDecimal-backed in Spark (the
-    compact-long fast path stops at precision 18), costing ~0.24s per
-    column per 600k rows. The same exact value is reachable through
-    LONG arithmetic: the decimal cast makes every value an exact
-    multiple of 1e-6, so ``uv = value * 1e6`` is an exact integer and
+    Two costs of the decimal path are avoided:
 
-        SUM(dec) == (SUM(uv >> 20) * 2^20 + SUM(uv & (2^20 - 1))) / 1e6
+    - The per-row ``CAST(x AS DECIMAL(38,6))`` is BigDecimal work. It
+      yields ``uv``, the micro-unit integer of ``x``; for almost every
+      row ``rint(x * 1e6)`` is the same integer for the price of one
+      double multiply. With ``y = x * 1e6`` the conversion is
 
-    — arithmetic shift is floor division and two's-complement AND
-    gives a non-negative remainder, so the identity holds for
-    negative values too, and both partial sums are plain long adds
-    (codegen fast path, ANSI overflows loudly). The hi/lo split keeps
-    the long buffers in range up to ~9e12 rows per group at unit-ish
-    magnitudes (a single long sum of micro-units would overflow at
-    ~9e12 / max|x| rows). Recombination happens per GROUP (not per
-    row) in DECIMAL(38, 0), the division by 1e6 is exact (the
-    quotient has <= 6 decimals, below the result scale of 8), and the
-    final decimal->double cast is the same single correct rounding of
-    the same exact rational as the decimal-sum path — verified
-    value-hash-equal against the unchanged DuckDB oracles.
+          CASE WHEN |y - rint(y)| < 1e-3 AND |y| < 2^50
+               THEN CAST(rint(y) AS BIGINT)
+               ELSE CAST(CAST(x AS DECIMAL(38,6)) * 1e6 AS BIGINT) END
 
-    GENTROPY_SPARK_NATIVE_SUMS=1 still switches to a native double
-    sum (production profile; results differ in final ulps).
+      Why the first branch is exact: Spark's cast parses the decimal
+      string of ``x`` (Java's ``Double.toString``; any string that
+      round-trips to ``x`` will do) and rounds it HALF_UP to 6 dp.
+      That string is within ulp(x)/2 of ``x``, i.e. less than 1/8 in
+      micro-units, because ulp(x) * 1e6 < 2 * ulp(y) and ulp(y) <= 1/8
+      below 2^50. The product ``y`` is within ulp(y)/2 <= 1/16 of
+      ``x * 1e6``. So when ``y`` lies within 1e-3 of the integer ``n``
+      the string is within 1/8 + 1/16 + 1e-3 < 1/2 of ``n`` in
+      micro-units: far from a HALF_UP tie, and the cast rounds to the
+      same ``n`` that ``rint`` picks. Near 2^52, ulp(y) reaches 1 and
+      the argument fails, hence the 2^50 bound. Everything else (7-dp
+      ties, large magnitudes, NaN, NULL) takes the decimal branch.
+    - A DECIMAL(38,6) sum buffer is BigDecimal-backed in Spark (the
+      compact-long fast path stops at precision 18), but the same
+      exact value is reachable through LONG arithmetic:
+
+          SUM(dec) == (SUM(uv >> 20) * 2^20 + SUM(uv & (2^20 - 1))) / 1e6
+
+      — arithmetic shift is floor division and two's-complement AND
+      gives a non-negative remainder, so the identity holds for
+      negative values too, and both partial sums are plain long adds
+      (codegen fast path, ANSI overflows loudly). The hi/lo split keeps
+      the long buffers in range up to ~9e12 rows per group at unit-ish
+      magnitudes; ``uv`` itself must fit a long, i.e. |x| < ~9.2e12.
+      Recombination happens per GROUP (not per row) in DECIMAL(38, 0),
+      the division by 1e6 is exact (the quotient has <= 6 decimals,
+      below the result scale of 8), and the final decimal->double cast
+      is the same single correct rounding of the same exact rational
+      as the decimal-sum path.
     """
-    if _native_sums_enabled():
-        return F.sum(col)
-    uv = (col.cast(DEC) * F.lit(1_000_000)).cast("long")
+    y = col * F.lit(1e6)
+    n = F.rint(y)
+    uv = F.when(
+        (F.abs(y - n) < F.lit(1e-3)) & (F.abs(y) < F.lit(_RINT_LIMIT)),
+        n.cast("long"),
+    ).otherwise((col.cast(DEC) * F.lit(1_000_000)).cast("long"))
     hi = F.sum(F.shiftright(uv, _SPLIT_SHIFT))
     lo = F.sum(uv.bitwiseAND(F.lit(_SPLIT_BASE - 1)))
     total = hi.cast("decimal(38,0)") * F.lit(_SPLIT_BASE) + lo

@@ -109,9 +109,6 @@ def track_cache(df: DataFrame) -> DataFrame:
 
 # --- prepared plans ---------------------------------------------------------
 _PREPARED: dict[tuple, tuple[DataFrame, list[DataFrame]]] = {}
-# Env profile flags that change generated plans (relational.py): part
-# of the prepared key so toggling a profile always rebuilds.
-_PROFILE_ENVS = ("GENTROPY_SPARK_NATIVE_SUMS",)
 
 
 def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
@@ -119,12 +116,11 @@ def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
 
     Building a large plan through py4j costs 0.5-4 s of driver time
     (one JVM round-trip per Column op), so ``build(spark, sf_dir,
-    *args)`` runs once per (application, build, sf_dir, args, profile
-    env flags) and later calls return the SAME DataFrame — the
-    prepared-statement behaviour of a mature engine. Execution still
-    happens per action; nothing materialised is reused. A miss evicts
-    the entries of other (stopped) applications, whose DataFrames hold
-    dead py4j references.
+    *args)`` runs once per (application, build, sf_dir, args) and
+    later calls return the SAME DataFrame — the prepared-statement
+    behaviour of a mature engine. Execution still happens per action;
+    nothing materialised is reused. A miss evicts the entries of other
+    (stopped) applications, whose DataFrames hold dead py4j references.
 
     The ``track_cache`` handles the build records (its own persists and
     those re-registered by inner prepared hits) are re-registered on
@@ -141,8 +137,7 @@ def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
     @functools.wraps(build)
     def wrapper(spark: SparkSession, sf_dir: str, *args) -> DataFrame:
         app_id = spark.sparkContext.applicationId
-        flags = tuple(os.environ.get(e, "") for e in _PROFILE_ENVS)
-        key = (app_id, build, sf_dir, args, flags)
+        key = (app_id, build, sf_dir, args)
         hit = _PREPARED.get(key)
         if hit is not None:
             df, handles = hit

@@ -28,6 +28,40 @@ DEC = "decimal(38,6)"
 WINDOW_US = 86_400_000_000  # 1 day tumbling windows (epoch-aligned)
 
 
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table of ``sf_dir`` as a file stream with ``ts``
+    normalized to an instant TIMESTAMP. The file-stream basePath must
+    be a directory, so a glob filter selects the single table (the
+    same listing the batch reader would do)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return normalize_events_ts(
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+
+
+def _drain(out: DataFrame, query_name: str, mode: str) -> DataFrame:
+    """Drain the stream ``out`` into a memory sink with
+    trigger(availableNow) and return the sink as a batch DataFrame.
+
+    The memory sink keeps its rows in the driver, so the checkpoint is
+    only needed while the query runs and is removed after the drain.
+    """
+    with tempfile.TemporaryDirectory(prefix="gentropy_spark_ckpt_") as checkpoint:
+        q = (
+            out.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return out.sparkSession.table(query_name)
+
+
 def windowed_event_agg(stream: DataFrame) -> DataFrame:
     """Tumbling 1-day window count + exact sum per user over a stream.
 
@@ -79,25 +113,7 @@ def run_dedup_available_now(
     spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup"
 ) -> DataFrame:
     """Drain the events file-stream through the stateful dedup."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    out = dedup_keys(stream)
-    checkpoint = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(dedup_keys(_events_stream(spark, sf_dir)), query_name, "complete")
 
 
 def sessionize_stateful(stream: DataFrame, gap_us: int = 43_200_000_000) -> DataFrame:
@@ -214,25 +230,8 @@ def run_sessionize_available_now(
     spark: SparkSession, sf_dir: str, query_name: str = "stream_sessionize"
 ) -> DataFrame:
     """Drain the events file-stream through the stateful sessionizer."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    out = sessionize_stateful(stream)
-    checkpoint = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    out = sessionize_stateful(_events_stream(spark, sf_dir))
+    return _drain(out, query_name, "append")
 
 
 def run_available_now(
@@ -240,27 +239,8 @@ def run_available_now(
 ) -> DataFrame:
     """Drain the events file-stream with trigger(availableNow) and
     return the windowed aggregate as a batch DataFrame."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # File-stream basePath must be a directory; select the single table
-    # via a glob filter (same listing the batch reader would do).
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    out = windowed_event_agg(stream)
-    checkpoint = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    out = windowed_event_agg(_events_stream(spark, sf_dir))
+    return _drain(out, query_name, "complete")
 
 
 def stream_stream_enrich(
@@ -313,30 +293,10 @@ def run_stream_enrich_available_now(
     spark: SparkSession, sf_dir: str, query_name: str = "stream_enrich"
 ) -> DataFrame:
     """Drain the stream-stream enrichment join over the events file."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def src() -> DataFrame:
-        return normalize_events_ts(
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    left = src().filter(F.col("event_id") % 2 == 1)
-    right = src().filter(F.col("event_id") % 2 == 0)
+    left = _events_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 1)
+    right = _events_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 0)
     out = stream_stream_enrich(left, right)
-    checkpoint = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(out, query_name, "append")
 
 
 def run_stream_static_enrich(
@@ -352,13 +312,7 @@ def run_stream_static_enrich(
     Aggregates per dimension row so the availableNow drain is
     oracle-comparable.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     nation = F.broadcast(
         spark.read.parquet(f"{sf_dir}/nation.parquet").select(
             F.col("n_nationkey").alias("nation_key"),
@@ -372,17 +326,7 @@ def run_stream_static_enrich(
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(out, query_name, "complete")
 
 
 def run_sliding_available_now(
@@ -399,15 +343,9 @@ def run_sliding_available_now(
     counterpart (plans/streaming_plan.py q_hopping_window_agg) explodes
     memberships instead; a complete drain makes them coincide, which
     is exactly what the shared oracle asserts."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     out = (
-        stream.withColumn("event_time", F.col("ts"))
+        _events_stream(spark, sf_dir)
+        .withColumn("event_time", F.col("ts"))
         .withWatermark("event_time", "1 hour")
         .groupBy(
             F.window(
@@ -428,17 +366,7 @@ def run_sliding_available_now(
             "sum_value",
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain(out, query_name, "complete")
 
 
 def run_upsert_sink(

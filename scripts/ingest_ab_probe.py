@@ -62,7 +62,6 @@ spark.stop()
 def run_child(arm_dir: str, sf_dir: str) -> dict[str, float]:
     env = dict(os.environ)
     env["PYTHONPATH"] = arm_dir
-    env.setdefault("GENTROPY_SPARK_NATIVE_SUMS", "1")
     proc = subprocess.run(
         [sys.executable, "-c", CHILD, sf_dir, ",".join(KEYS)],
         cwd=arm_dir,

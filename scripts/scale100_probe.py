@@ -109,7 +109,6 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown --keys: {unknown}")
 
-    os.environ.setdefault("GENTROPY_SPARK_NATIVE_SUMS", "1")
     spark = get_session(app_name="gentropy_100x_probe")
     t0 = time.perf_counter()
     big = _stage(spark)

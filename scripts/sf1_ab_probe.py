@@ -92,10 +92,7 @@ def _ab(spark, registry, name: str, sf_dir: str) -> tuple[float, float]:
         ).save()
         best_s = min(best_s, time.perf_counter() - t0)
     con = _duck_con(sf_dir)
-    from bench import _timed_oracle
-
-    native = os.environ.get("GENTROPY_SPARK_NATIVE_SUMS", "") == "1"
-    sql = _timed_oracle(name, registry[name].oracle, native)  # see bench.py
+    sql = registry[name].oracle
     for _ in range(2):
         t0 = time.perf_counter()
         con.execute(f"SELECT bit_xor(hash(t)) FROM ({sql}) t").fetchall()
@@ -150,9 +147,6 @@ def main() -> None:
     else:
         worst = sorted(ratios, key=lambda k: -ratios[k])[:N_WORST]
 
-    # Same profile as bench.py (r13 advice: probe and bench timings
-    # must share one sum profile to be comparable).
-    os.environ.setdefault("GENTROPY_SPARK_NATIVE_SUMS", "1")
     spark = get_session(app_name="gentropy_sf1_ab")
     registry = full_registry()
     registry["q1_pricing_summary"].fn(spark, BASE_SF).collect()  # warm

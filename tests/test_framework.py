@@ -44,6 +44,24 @@ def test_stream_checkpoint_idempotent(spark, sf_dir, tmp_path):
     assert progress is None or progress["numInputRows"] == 0
 
 
+def test_stream_drains_leave_no_checkpoint_dir(spark, sf_dir):
+    """The memory-sink drains behind the streaming registry keys remove
+    their checkpoint dir once the drain ends."""
+    import tempfile
+    from pathlib import Path
+
+    from gentropy_spark.plans.registry import full_registry
+
+    def ckpts() -> set[str]:
+        return {p.name for p in Path(tempfile.gettempdir()).glob("gentropy_spark_ckpt_*")}
+
+    before = ckpts()
+    registry = full_registry()
+    for key in ("stream_window_agg", "stream_dedup"):
+        assert registry[key].fn(spark, sf_dir).count() > 0
+    assert ckpts() - before == set()
+
+
 def test_cli_list_and_run(capsys):
     from gentropy_spark.cli import main
 
@@ -59,8 +77,6 @@ def test_sessionize_multibatch_no_split(spark, sf_dir, tmp_path):
     three time-ordered files and drain one file per trigger: sessions
     spanning batch boundaries must come out whole, matching the
     watermark-aware single-batch result."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gentropy_spark.sources.readers import normalize_events_ts, read_table
@@ -106,7 +122,7 @@ def test_sessionize_multibatch_no_split(spark, sf_dir, tmp_path):
         .parquet(str(flat))
     )
     out = sessionize_stateful(stream)
-    ckpt = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         out.writeStream.format("memory")
         .queryName("sess_multibatch")
@@ -203,7 +219,6 @@ def test_stream_watermark_drops_late_file(spark, sf_dir, tmp_path):
     filtering), then the stale file."""
     import os
     import shutil
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -238,7 +253,7 @@ def test_stream_watermark_drops_late_file(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    ckpt = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         sessionize_stateful(stream)
         .writeStream.format("memory")
@@ -264,7 +279,6 @@ def test_stream_incremental_exactly_once(spark, sf_dir, tmp_path):
     only the new file and the union equals a batch over both."""
     import os
     import shutil
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -286,7 +300,7 @@ def test_stream_incremental_exactly_once(spark, sf_dir, tmp_path):
     shutil.copy(f1, src / "000.parquet")
     os.utime(src / "000.parquet", (t0, t0))
 
-    ckpt = tempfile.mkdtemp(prefix="gentropy_spark_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     schema = spark.read.parquet(str(src)).schema
 
     def drain(name):
@@ -620,42 +634,6 @@ def test_bench_prev_round_slim_parsed_record(tmp_path, monkeypatch):
     assert prev is not None and prev[2] == {}
 
 
-
-def test_bench_native_sums_rewrite_matches_spark_plans(spark, sf_dir, monkeypatch):
-    """bench.py times DuckDB's native sums exactly where the Spark side
-    switches to native sums: among the headline keys whose oracle SQL
-    ``_to_native_sums`` changes, a key's timed SQL is rewritten iff its
-    optimized Spark plan differs between GENTROPY_SPARK_NATIVE_SUMS=1
-    and the parity profile."""
-    import re
-    import sys
-
-    sys.path.insert(0, _repo_root())
-    import bench
-
-    from gentropy_spark.plans.registry import full_registry
-
-    def optimized(fn) -> str:
-        raw = getattr(fn, "__wrapped__", fn)
-        plan = raw(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
-        return re.sub(r"#\d+L?", "", plan)
-
-    registry = full_registry()
-    mismatched = {}
-    for key in bench.HEADLINE:
-        sql = registry[key].oracle
-        if sql is None or bench._to_native_sums(sql) == sql:
-            continue
-        monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
-        parity = optimized(registry[key].fn)
-        monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
-        native = optimized(registry[key].fn)
-        switches = parity != native
-        rewritten = bench._timed_oracle(key, sql, native=True) != sql
-        if switches != rewritten:
-            mismatched[key] = {"spark_switches": switches, "sql_rewritten": rewritten}
-    assert not mismatched, mismatched
-
 def test_every_package_module_is_reached_from_an_entry_point():
     """No library module may sit outside what the entry points reach.
 
@@ -720,6 +698,47 @@ def test_every_package_module_is_reached_from_an_entry_point():
         todo.extend(imported(name, trees[name]))
     unreached = sorted(str(modules[m].relative_to(pkg_dir)) for m in modules.keys() - seen)
     assert not unreached, f"modules no entry point reaches: {unreached}"
+
+
+# The deployment settings the package reads from the environment. A
+# new env var that changes plans or results would be a second profile
+# of the engine; make it an explicit argument instead.
+_DEPLOYMENT_ENVS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR"}
+
+
+def test_package_reads_only_deployment_env_vars():
+    """Every ``os.environ`` / ``os.getenv`` use under ``gentropy_spark/``
+    is a read of one literal name in ``_DEPLOYMENT_ENVS``. Fails naming
+    each other name read, and each read whose name is not a literal."""
+    import ast
+    from pathlib import Path
+
+    pkg_dir = Path(_repo_root()) / "gentropy_spark"
+    bad = []
+    for path in sorted(pkg_dir.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if name not in ("environ", "getenv"):
+                continue
+            use = parent[node]
+            if name == "environ" and isinstance(use, ast.Attribute):
+                use = parent[use]  # os.environ.get(...) -> the Call
+            if isinstance(use, ast.Call) and use.args:
+                key = use.args[0]
+            elif isinstance(use, ast.Subscript):
+                key = use.slice
+            elif isinstance(use, ast.Compare):  # "X" in os.environ
+                key = use.left
+            else:
+                key = None
+            where = f"{path.relative_to(pkg_dir)}:{node.lineno}"
+            if not (isinstance(key, ast.Constant) and isinstance(key.value, str)):
+                bad.append(f"{where} non-literal env read")
+            elif key.value not in _DEPLOYMENT_ENVS:
+                bad.append(f"{where} {key.value}")
+    assert not bad, f"env reads outside the deployment settings: {bad}"
 
 
 def test_ntz_normalization_is_session_tz_independent(spark):

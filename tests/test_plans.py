@@ -7,8 +7,6 @@ in a 100 TB run.
 
 from __future__ import annotations
 
-import pytest
-
 from gentropy_spark.plans.genomics import q_window_clump_leads
 from gentropy_spark.plans.relational import q1_pricing_summary, q5_local_supplier
 
@@ -446,29 +444,3 @@ def test_mixture_rebalance_zero_rate_emits_zero_threshold(
             f"{lang}: zero keep rate must keep nothing, got "
             f"{row['sample_threshold_hex']!r}"
         )
-
-
-def test_native_sums_flag_switches_q1_profile(spark, sf_dir, monkeypatch):
-    """GENTROPY_SPARK_NATIVE_SUMS=1 must drop the decimal casts from the
-    q1 aggregate (native double sums) while keeping values within
-    float tolerance of the parity profile."""
-    import importlib
-
-    import gentropy_spark.plans.relational as R
-
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
-    exact = {
-        (r.l_returnflag, r.l_linestatus): r.sum_charge
-        for r in R.q1_pricing_summary(spark, sf_dir).collect()
-    }
-    plan_exact = R.q1_pricing_summary(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "decimal(38,6)" in plan_exact
-    monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
-    native_df = R.q1_pricing_summary(spark, sf_dir)
-    plan_native = native_df._jdf.queryExecution().executedPlan().toString()
-    assert "decimal(38,6)" not in plan_native
-    for r in native_df.collect():
-        assert exact[(r.l_returnflag, r.l_linestatus)] == pytest.approx(
-            r.sum_charge, rel=1e-9
-        )
-

@@ -89,15 +89,11 @@ def test_registry_prepared_keys_are_pinned():
     assert {k for k, spec in reg.items() if S.is_prepared(spec.fn)} == PREPARED_KEYS
 
 
-def test_prepared_identity_and_keying(spark, sf_dir, monkeypatch, tmp_path):
-    """Same object on repeat; a new sf_dir or profile flag rebuilds;
-    builders that act eagerly are not prepared."""
+def test_prepared_identity_and_keying(spark, sf_dir, tmp_path):
+    """Same object on repeat; a new sf_dir rebuilds; builders that act
+    eagerly are not prepared."""
     from gentropy_spark.plans import full_registry
 
-    # Pin a known baseline profile (save/restore via monkeypatch): the
-    # test must pass — and not strip the user's flags — when run under
-    # the GENTROPY_SPARK_NATIVE_SUMS=1 production profile.
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
     reg = full_registry()
     fn = reg["q3_shipping_priority"].fn
     a = fn(spark, sf_dir)
@@ -106,11 +102,6 @@ def test_prepared_identity_and_keying(spark, sf_dir, monkeypatch, tmp_path):
     c = fn(spark, other)
     assert c is not a
     assert fn(spark, other) is c
-    monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
-    b = fn(spark, sf_dir)
-    assert b is not a
-    assert fn(spark, sf_dir) is b
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS")
     assert fn(spark, sf_dir) is a
     # the fixpoint and checkpointing builders rebuild on every call
     for key in ("dedup_clusters", "corpus_curate", "bpe_train", "bpe_encode"):
@@ -151,24 +142,11 @@ def test_minhash_pairs_evict_stopped_applications(spark, sf_dir, tmp_path):
     live one (the old pairs memo kept every application's entries)."""
     from gentropy_spark.plans.llm_pipeline import q_dedup_minhash
 
-    stale = ("app-stopped", q_dedup_minhash.__wrapped__, sf_dir, (), ("", ""))
+    stale = ("app-stopped", q_dedup_minhash.__wrapped__, sf_dir, ())
     S._PREPARED[stale] = (None, [])
     q_dedup_minhash(spark, _fresh_sf_dir(sf_dir, tmp_path))
     assert stale not in S._PREPARED
     assert all(k[0] == spark.sparkContext.applicationId for k in S._PREPARED)
-    S.release_caches()
-
-
-def test_minhash_pairs_key_includes_profile_flags(spark, sf_dir, monkeypatch):
-    from gentropy_spark.plans.llm_pipeline import q_dedup_minhash
-
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS", raising=False)
-    a = q_dedup_minhash(spark, sf_dir)
-    monkeypatch.setenv("GENTROPY_SPARK_NATIVE_SUMS", "1")
-    b = q_dedup_minhash(spark, sf_dir)
-    assert b is not a
-    monkeypatch.delenv("GENTROPY_SPARK_NATIVE_SUMS")
-    assert q_dedup_minhash(spark, sf_dir) is a
     S.release_caches()
 
 

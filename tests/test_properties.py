@@ -354,8 +354,9 @@ def test_dsir_importance_zero_sum_property(spark):
 def test_dsum_split_identity_matches_decimal_sum(spark):
     """Property: the split-sum dsum (plans/relational.py) is
     bit-identical to CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)
-    for mixed-sign values, many groups, NULLs, and all-NULL groups —
-    the negative-value arithmetic-shift/AND identity and the NULL
+    for mixed-sign values, many groups, NULLs, all-NULL groups, and
+    both branches of the per-row conversion — the negative-value
+    arithmetic-shift/AND identity, the rint guard and the NULL
     propagation are exactly what the q1/q3/q5 parity rests on."""
     import random
 
@@ -373,6 +374,32 @@ def test_dsum_split_identity_matches_decimal_sum(spark):
                 v = rng.uniform(-1e6, 1e6) * (10 ** rng.randint(-6, 3))
             rows.append((g, v))
     rows.extend([(98, None), (99, -0.000001), (99, 0.0000015)])
+    # The per-row conversion takes rint(x * 1e6) only within 1e-3 of an
+    # integer and below |x * 1e6| = 2^50; everything else takes the
+    # decimal cast. Pin both branches and the edges between them.
+    edge = {
+        # 7-dp HALF_UP ties, both signs
+        100: [s * (k * 1e-6 + 5e-7) for k in (0, 1, 7, 123456, 10**9) for s in (1, -1)],
+        # just inside and just outside |x * 1e6| = 2^50
+        101: [s * (2**50 + d) / 1e6 for d in (-3, -1, 0, 1, 3) for s in (1, -1)],
+        # large magnitudes (x = 1e12, |x * 1e6| = 2^53); rint(x * 1e6)
+        # is off by up to ulp/2 = 64 micro-units at 1e18, which the
+        # cancelling pair makes visible in the sum
+        102: [1e12, -1e12, 2**53 / 1e6, -(2**53) / 1e6],
+        105: [1e12 + 0.25, -1e12],
+        # groups that mix both branches
+        103: [12.34, -0.01, 0.0000025, 1e12, 99.99],
+        104: [2**50 / 1e6 - 1, 2**50 / 1e6, -7.5e-6, 0.5],
+    }
+    rows.extend((g, v) for g, vs in edge.items() for v in vs)
+
+    def rint_branch(v: float) -> bool:
+        y = v * 1e6
+        return abs(y - round(y)) < 1e-3 and abs(y) < 2**50
+
+    for g in (103, 104):
+        assert len({rint_branch(v) for v in edge[g]}) == 2, g
+    assert not any(rint_branch(v) for g in (100, 102, 105) for v in edge[g])
     df = spark.createDataFrame(rows, ["g", "x"])
     got = (
         df.groupBy("g").agg(_dsum(F.col("x")).alias("s")).orderBy("g").collect()

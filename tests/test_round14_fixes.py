@@ -133,32 +133,6 @@ def test_coloc_outputs_beta_ratio_sign_avg(spark, sf_dir):
             assert v is None or -1.0 <= v <= 1.0
 
 
-# --- bench native-sums symmetry rewriter ------------------------------------
-def test_to_native_sums_rewrites_parity_casts():
-    import bench
-
-    sql = (
-        "SELECT CAST(SUM(CAST(a * (1 - b) AS DECIMAL(38,6))) AS DOUBLE) "
-        "AS x, CAST(SUM(CAST(c AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) "
-        "AS y, SUM(d) AS z FROM t"
-    )
-    out = bench._to_native_sums(sql)
-    assert out == (
-        "SELECT SUM(a * (1 - b)) AS x, SUM(c) / COUNT(*) AS y, "
-        "SUM(d) AS z FROM t"
-    )
-    # Values must be identical up to float reduction order: both forms
-    # aggregate the same expression. (DuckDB evaluates both.)
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t AS SELECT range/7.0 AS a, 0.25 AS b, range/3.0 AS c, range::DOUBLE AS d FROM range(1000)")
-    v1 = con.execute(sql).fetchall()[0]
-    v2 = con.execute(out).fetchall()[0]
-    for p, q in zip(v1, v2):
-        assert abs(p - q) < 1e-6
-
-
 # --- PQ ANN sanity -----------------------------------------------------------
 def test_pq_topk_shape_and_selfmatch(spark, sf_dir):
     from gentropy_spark.operators.similarity import pq_topk
