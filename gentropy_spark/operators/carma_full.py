@@ -23,8 +23,9 @@ Re-expresses gentropy's CARMA
   (validated on its own fixtures at r ≈ 1) while runs are exactly
   reproducible.
 
-Spark surface: per-locus ``applyInPandas`` grouped at contig level
-(same shape and parallelism pinning as the SuSiE operator).
+Spark surface: the shared per-locus driver
+``operators.finemapping.finemap_loci``, grouped at contig level (the
+same driver as the SuSiE operators).
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from gentropy_spark.operators.finemapping import finemap_loci
 from gentropy_spark.operators.susie import minimize_bounded
 
 
@@ -257,18 +259,7 @@ def carma_finemap_full(
         ]
     )
 
-    def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(point_id).reset_index(drop=True)
-        if len(pdf) > max_variants:
-            keep = (
-                pdf.assign(_az=pdf[z_col].abs())
-                .nlargest(max_variants, ["_az", point_id])
-                .index
-            )
-            pdf = pdf.loc[sorted(keep)].reset_index(drop=True)
-        z = pdf[z_col].to_numpy(dtype=np.float64)
-        p_arr = pdf[pos].to_numpy(dtype=np.float64)
-        R = np.exp(-np.abs(p_arr[:, None] - p_arr[None, :]) / tau_ld)
+    def fit_one(pdf: pd.DataFrame, z: np.ndarray, R: np.ndarray) -> pd.DataFrame:
         res = carma_shotgun(
             z, R, lambda_val=lambda_val, tau=tau, num_causal=num_causal
         )
@@ -287,14 +278,6 @@ def carma_finemap_full(
             }
         )
 
-    def fit_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [fit_one(g) for _, g in pdf.groupby(cluster, sort=True)]
-        return pd.concat(outs, ignore_index=True)
-
-    sel = df.select(*keys, point_id, pos, z_col)
-    nparts = sel.sparkSession.sparkContext.defaultParallelism
-    return (
-        sel.repartitionByRange(nparts, study, contig)
-        .groupBy(study, contig)
-        .applyInPandas(fit_partition, schema=out_schema)
+    return finemap_loci(
+        df, keys, fit_one, out_schema, tau_ld, pos, z_col, point_id, max_variants
     )

@@ -513,11 +513,10 @@ def edge_min_labels(
         # counts in ONE job — eager=True spent a separate job per
         # round materialising before the count re-scanned it
         # (measured ~0.3s/round of pure job latency at sf0.1).
-        new_lbl = (
+        new_lbl = track_local_checkpoint(
             self_rows.union(prop)
             .groupBy("id")
             .agg(F.min("lbl").alias("lbl"), F.max("prev").alias("prev"))
-            .localCheckpoint(eager=False)
         )
         # Null-safe comparison: an id reached for the first time this
         # round carries prev = NULL; a plain != would evaluate to NULL

@@ -12,12 +12,19 @@
 - ``susie_like``: an iterative sum-of-single-effects fine-mapper in
   the spirit of susie_inf.py (:533 lines of per-locus numpy) —
   genuinely iterative linear algebra per locus, so it runs as an
-  Arrow-batched applyInPandas over locus groups. Scale: loci are
+  Arrow-batched grouped pandas UDF over locus groups. Scale: loci are
   bounded (thousands of variants), groups are independent, the
-  shuffle is one hash exchange on (study, contig).
+  shuffle is one range exchange on (study, contig).
+
+- ``finemap_loci``: the one Spark driver every per-locus numpy
+  fine-mapper (``carma_like``, ``susie_like``, SuSiE-inf, the SuSiE
+  step, CARMA shotgun) runs through: variant selection, synthetic LD,
+  the in-process locus loop and the pinned-parallelism exchange.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -115,6 +122,72 @@ def pics(
     )
 
 
+def finemap_loci(
+    df: DataFrame,
+    keys: list[str],
+    kernel: Callable[[pd.DataFrame, np.ndarray, np.ndarray], pd.DataFrame],
+    out_schema: T.StructType,
+    tau: float,
+    pos: str,
+    z_col: str,
+    point_id: str,
+    max_variants: int | None,
+) -> DataFrame:
+    """Run a per-locus numpy fine-mapper over every locus of ``df``.
+
+    ``keys`` is (study, contig) or (study, contig, cluster): the first
+    two are the shuffle group, a third splits loci inside it. Per locus
+    the rows are ordered by ``point_id``, cut to the ``max_variants``
+    largest |z| (ties on ``point_id``) when given, and handed to
+    ``kernel(pdf, z, R)`` with the synthetic distance-decay LD
+    R = exp(−|Δpos|/``tau``); the kernel returns rows of ``out_schema``.
+    """
+
+    def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(point_id).reset_index(drop=True)
+        if max_variants is not None and len(pdf) > max_variants:
+            keep = (
+                pdf.assign(_az=pdf[z_col].abs())
+                .nlargest(max_variants, ["_az", point_id])
+                .index
+            )
+            pdf = pdf.loc[sorted(keep)].reset_index(drop=True)
+        z = pdf[z_col].to_numpy(dtype=np.float64)
+        p = pdf[pos].to_numpy(dtype=np.float64)
+        R = np.exp(-np.abs(p[:, None] - p[None, :]) / tau)
+        return kernel(pdf, z, R)
+
+    def fit_partition(pdf: pd.DataFrame) -> pd.DataFrame:
+        # One Arrow exchange per (study, contig) — clumped loci are
+        # typically tiny (median 1-3 variants), so invoking the Python
+        # kernel once per LOCUS drowns in per-group Arrow/pandas
+        # overhead (~13k groups at sf0.1). Grouping at contig level
+        # keeps the shuffle key coarse and loops loci in-process.
+        if len(keys) == 2:
+            return fit_one(pdf)
+        outs = [fit_one(g) for _, g in pdf.groupby(keys[2], sort=True)]
+        return pd.concat(outs, ignore_index=True)
+
+    study, contig = keys[:2]
+    sel = df.select(*keys, point_id, pos, z_col)
+    # The shuffled rows are tiny but the per-locus kernel is Python
+    # CPU: AQE's byte-based coalescing collapses a small
+    # ENSURE_REQUIREMENTS exchange to ~1 partition and serializes all
+    # loci onto one worker (measured 40s vs 12s of actual kernel CPU).
+    # A plain hash repartition on the same keys gets optimizer-removed
+    # as redundant against the upstream window exchange; a RANGE
+    # repartition survives (different partitioning class), still
+    # satisfies the groupBy's clustered-distribution requirement, and
+    # its user-specified partition count is exempt from AQE coalescing
+    # — pinning the Python stage's parallelism.
+    nparts = sel.sparkSession.sparkContext.defaultParallelism
+    return (
+        sel.repartitionByRange(nparts, study, contig)
+        .groupBy(study, contig)
+        .applyInPandas(fit_partition, schema=out_schema)
+    )
+
+
 def carma_like(
     df: DataFrame,
     study: str = "study_id",
@@ -141,8 +214,8 @@ def carma_like(
     conditional |z| < ``z_stop``; then flag outliers where the final
     residual exceeds ``outlier_resid``.
 
-    Runs Arrow-batched via applyInPandas (locus-bounded numpy), one
-    shuffle on the locus key.
+    Runs Arrow-batched through ``finemap_loci`` (locus-bounded numpy),
+    one shuffle on the locus key.
     """
     out_schema = T.StructType(
         [
@@ -156,12 +229,8 @@ def carma_like(
         ]
     )
 
-    def search(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(point_id).reset_index(drop=True)
-        z = pdf[z_col].to_numpy(dtype=np.float64)
-        p = pdf[pos].to_numpy(dtype=np.float64)
+    def search(pdf: pd.DataFrame, z: np.ndarray, R: np.ndarray) -> pd.DataFrame:
         n = len(z)
-        R = np.exp(-np.abs(p[:, None] - p[None, :]) / tau)
         chosen: list[int] = []
         effects = np.zeros(n)
         resid = z.copy()
@@ -189,10 +258,8 @@ def carma_like(
             }
         )
 
-    return (
-        df.select(study, contig, point_id, pos, z_col)
-        .groupBy(study, contig)
-        .applyInPandas(search, schema=out_schema)
+    return finemap_loci(
+        df, [study, contig], search, out_schema, tau, pos, z_col, point_id, None
     )
 
 
@@ -225,12 +292,8 @@ def susie_like(
         ]
     )
 
-    def finemap(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(point_id).reset_index(drop=True)
-        z = pdf[z_col].to_numpy(dtype=np.float64)
-        p = pdf[pos].to_numpy(dtype=np.float64)
+    def finemap(pdf: pd.DataFrame, z: np.ndarray, R: np.ndarray) -> pd.DataFrame:
         n = len(z)
-        R = np.exp(-np.abs(p[:, None] - p[None, :]) / tau)
         alpha = np.full((n_effects, n), 1.0 / n)
         mu = np.zeros((n_effects, n))
         for _ in range(n_iter):
@@ -254,8 +317,6 @@ def susie_like(
             }
         )
 
-    return (
-        df.select(study, contig, point_id, pos, z_col)
-        .groupBy(study, contig)
-        .applyInPandas(finemap, schema=out_schema)
+    return finemap_loci(
+        df, [study, contig], finemap, out_schema, tau, pos, z_col, point_id, None
     )

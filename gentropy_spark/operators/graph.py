@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gentropy_spark.session import track_local_checkpoint
+
 
 def transitive_closure(
     edges: DataFrame,
@@ -40,21 +42,24 @@ def transitive_closure(
     enrichment): callers with deeper graphs must raise ``max_depth``.
     """
     edges = edges.select(child, parent).persist()
-    frontier = edges.select(
-        F.col(child), F.col(parent).alias("ancestor"), F.lit(1).alias("depth")
-    ).localCheckpoint(eager=True)
+    frontier = track_local_checkpoint(
+        edges.select(
+            F.col(child), F.col(parent).alias("ancestor"), F.lit(1).alias("depth")
+        ),
+        eager=True,
+    )
     parts = [frontier]
     exhausted = True
     for _ in range(max_depth - 1):
-        nxt = (
+        nxt = track_local_checkpoint(
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.ancestor") == F.col(f"e.{child}"))
             .select(
                 F.col(f"f.{child}"),
                 F.col(f"e.{parent}").alias("ancestor"),
                 (F.col("f.depth") + 1).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         if nxt.isEmpty():
             exhausted = False

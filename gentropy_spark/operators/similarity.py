@@ -228,7 +228,17 @@ def cosine_topk(
     # but its ~600-term tree costs seconds of driver-side analysis and
     # codegen PER QUERY BUILD; the UDF plan is constant-size (same
     # left-to-right parity — see cosine_pairs_udf).
-    scored = F.broadcast(q).crossJoin(c).withColumn(
+    return _cosine_rank(F.broadcast(q).crossJoin(c), k, query_id, corpus_id)
+
+
+def _cosine_rank(
+    pairs: DataFrame, k: int, query_id: str, corpus_id: str
+) -> DataFrame:
+    """Score (query ``qv``, corpus ``cv``) candidate pairs by 6dp cosine
+    and keep each query's top ``k`` — rank on the rounded value, ties
+    broken by corpus id, so the result is deterministic and
+    oracle-comparable."""
+    scored = pairs.withColumn(
         "cosine", F.round(cosine_pairs_udf()(F.col("qv"), F.col("cv")), 6)
     )
     w = Window.partitionBy(query_id).orderBy(
@@ -344,17 +354,7 @@ def lsh_topk(
     c = corpus.select(
         F.col(corpus_id), as_double(F.col(vec)).alias("cv")
     ).withColumn("bucket", bucket_expr(F.col("cv")))
-    scored = q.join(c, on="bucket").withColumn(
-        "cosine", F.round(cosine_pairs_udf()(F.col("qv"), F.col("cv")), 6)
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
+    return _cosine_rank(q.join(c, on="bucket"), k, query_id, corpus_id)
 
 
 def ivf_topk(
@@ -420,16 +420,8 @@ def ivf_topk(
         .filter(F.col("_r") <= n_probe)
         .select(query_id, "centroid_id", "qv")
     )
-    scored = probes.join(assigned, on="centroid_id").withColumn(
-        "cosine", F.round(cosine_pairs_udf()(F.col("qv"), F.col("cv")), 6)
-    )
-    w_rank = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+    return _cosine_rank(
+        probes.join(assigned, on="centroid_id"), k, query_id, corpus_id
     )
 
 
@@ -600,6 +592,81 @@ def two_level_nearest_centroid(
     )
 
 
+def _pq_tables(
+    seed_src: DataFrame,
+    c: DataFrame,
+    q: DataFrame,
+    n_subvectors: int,
+    n_codes: int,
+    sub: int,
+    query_id: str,
+    corpus_id: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Product-quantization codes and the per-query ADC lookup table.
+
+    Codebooks are the ``sub``-wide subvectors of the ``n_codes``
+    lowest-id rows of ``seed_src`` (``corpus_id``, ``cv``) — no k-means
+    RNG, so both engines encode identically. Returns the corpus codes
+    (``corpus_id``, m, code: argmin over codewords of the 6dp-rounded
+    subvector L2²) and the lookup table (``query_id``, m, code, pdist).
+    """
+    # Fixed tiny subvector width -> the codegen expression, not the
+    # Arrow kernel: encode scores n x n_subvectors x n_codes SHORT
+    # rows, where the pandas round-trip is per-row-overhead-bound
+    # (measured 60s vs ~3s at the 100x probe for 25.6M 8-dim pairs).
+    l2 = lambda a, b: sq_l2_expr(a, b, sub)  # noqa: E731
+    seeds = (
+        seed_src.orderBy(F.col(corpus_id).asc())
+        .limit(n_codes)
+        .select(
+            F.row_number()
+            .over(Window.orderBy(F.col(corpus_id).asc()))
+            .alias("code"),
+            "cv",
+        )
+    )
+    m_arr = F.array(*[F.lit(m) for m in range(n_subvectors)])
+    codebook = seeds.select(
+        "code", F.explode(m_arr).alias("m"), F.col("cv").alias("seedv")
+    ).select(
+        "m",
+        "code",
+        F.slice(F.col("seedv"), F.col("m") * sub + 1, sub).alias("bookv"),
+    )
+    # Encode: argmin_code L2^2(subvector, codebook[m][code]).
+    c_sub = c.select(
+        F.col(corpus_id), F.explode(m_arr).alias("m"), "cv"
+    ).select(
+        corpus_id, "m", F.slice(F.col("cv"), F.col("m") * sub + 1, sub).alias("subv")
+    )
+    enc_scored = c_sub.join(F.broadcast(codebook), on="m").withColumn(
+        "d", F.round(l2(F.col("subv"), F.col("bookv")), 6)
+    )
+    # Argmin as a partial AGGREGATION, not a row_number window: the
+    # window shuffles all n x n_codes scored rows (62s for 25.6M rows
+    # at the 100x probe) while min-of-struct combines map-side to one
+    # row per (corpus_id, m) before the exchange (2.8s — same values:
+    # struct ordering (d, code) IS the window's orderBy tie-break).
+    codes = (
+        enc_scored.groupBy(corpus_id, "m")
+        .agg(F.min(F.struct(F.col("d"), F.col("code"))).alias("_m"))
+        .select(corpus_id, "m", F.col("_m.code").alias("code"))
+    )
+    # Per-query ADC lookup table: partial distance to every codeword.
+    q_sub = q.select(
+        F.col(query_id), F.explode(m_arr).alias("m"), "qv"
+    ).select(
+        query_id, "m", F.slice(F.col("qv"), F.col("m") * sub + 1, sub).alias("qsubv")
+    )
+    lookup = q_sub.join(F.broadcast(codebook), on="m").select(
+        query_id,
+        "m",
+        "code",
+        F.round(l2(F.col("qsubv"), F.col("bookv")), 6).alias("pdist"),
+    )
+    return codes, lookup
+
+
 def ivfpq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -637,9 +704,7 @@ def ivfpq_topk(
     n_codes x queries rows); members meet queries through the
     centroid-id equi-join.
     """
-    sub = dim // n_subvectors
     l2v = lambda a, b: sq_l2_expr(a, b, dim)  # noqa: E731
-    l2s = lambda a, b: sq_l2_expr(a, b, sub)  # noqa: E731
 
     c = corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
     q = queries.select(F.col(query_id), as_double(F.col(vec)).alias("qv"))
@@ -680,52 +745,10 @@ def ivfpq_topk(
         )
         .select(query_id, F.explode(F.col("_c.centroid_id")).alias("centroid_id"))
     )
-    # PQ encode (the pq_topk machinery, min-struct aggregation).
-    # Seeds come from the same cached prefix as the centroids above.
-    seeds = (
-        low.orderBy(F.col(corpus_id).asc())
-        .limit(n_codes)
-        .select(
-            F.row_number()
-            .over(Window.orderBy(F.col(corpus_id).asc()))
-            .alias("code"),
-            "cv",
-        )
-    )
-    m_arr = F.array(*[F.lit(m) for m in range(n_subvectors)])
-    codebook = seeds.select(
-        "code", F.explode(m_arr).alias("m"), F.col("cv").alias("seedv")
-    ).select(
-        "m",
-        "code",
-        F.slice(F.col("seedv"), F.col("m") * sub + 1, sub).alias("bookv"),
-    )
-    c_sub = c.select(
-        F.col(corpus_id), F.explode(m_arr).alias("m"), "cv"
-    ).select(
-        corpus_id,
-        "m",
-        F.slice(F.col("cv"), F.col("m") * sub + 1, sub).alias("subv"),
-    )
-    codes = (
-        c_sub.join(F.broadcast(codebook), on="m")
-        .withColumn("d", F.round(l2s(F.col("subv"), F.col("bookv")), 6))
-        .groupBy(corpus_id, "m")
-        .agg(F.min(F.struct(F.col("d"), F.col("code"))).alias("_m"))
-        .select(corpus_id, "m", F.col("_m.code").alias("code"))
-    )
-    q_sub = q.select(
-        F.col(query_id), F.explode(m_arr).alias("m"), "qv"
-    ).select(
-        query_id,
-        "m",
-        F.slice(F.col("qv"), F.col("m") * sub + 1, sub).alias("qsubv"),
-    )
-    lookup = q_sub.join(F.broadcast(codebook), on="m").select(
-        query_id,
-        "m",
-        "code",
-        F.round(l2s(F.col("qsubv"), F.col("bookv")), 6).alias("pdist"),
+    # PQ encode; the codebook seeds come from the same cached prefix as
+    # the centroids above.
+    codes, lookup = _pq_tables(
+        low, c, q, n_subvectors, n_codes, dim // n_subvectors, query_id, corpus_id
     )
     # ADC restricted to the probed lists: the member set comes from
     # the centroid-id equi-join, codes fan out per subvector, the
@@ -817,64 +840,10 @@ def pq_topk(
     table and reduces with a decimal sum. Never a cross join against
     raw corpus vectors.
     """
-    sub = dim // n_subvectors
-    # Fixed tiny subvector width -> the codegen expression, not the
-    # Arrow kernel: encode scores n x n_subvectors x n_codes SHORT
-    # rows, where the pandas round-trip is per-row-overhead-bound
-    # (measured 60s vs ~3s at the 100x probe for 25.6M 8-dim pairs).
-    l2 = lambda a, b: sq_l2_expr(a, b, sub)  # noqa: E731
-
     c = corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
     q = queries.select(F.col(query_id), as_double(F.col(vec)).alias("qv"))
-    # Codebooks: subvectors of the n_codes lowest-id corpus vectors.
-    seeds = (
-        c.orderBy(F.col(corpus_id).asc())
-        .limit(n_codes)
-        .select(
-            F.row_number()
-            .over(Window.orderBy(F.col(corpus_id).asc()))
-            .alias("code"),
-            "cv",
-        )
-    )
-    m_arr = F.array(*[F.lit(m) for m in range(n_subvectors)])
-    codebook = seeds.select(
-        "code", F.explode(m_arr).alias("m"), F.col("cv").alias("seedv")
-    ).select(
-        "m",
-        "code",
-        F.slice(F.col("seedv"), F.col("m") * sub + 1, sub).alias("bookv"),
-    )
-    # Encode: argmin_code L2^2(subvector, codebook[m][code]).
-    c_sub = c.select(
-        F.col(corpus_id), F.explode(m_arr).alias("m"), "cv"
-    ).select(
-        corpus_id, "m", F.slice(F.col("cv"), F.col("m") * sub + 1, sub).alias("subv")
-    )
-    enc_scored = c_sub.join(F.broadcast(codebook), on="m").withColumn(
-        "d", F.round(l2(F.col("subv"), F.col("bookv")), 6)
-    )
-    # Argmin as a partial AGGREGATION, not a row_number window: the
-    # window shuffles all n x n_codes scored rows (62s for 25.6M rows
-    # at the 100x probe) while min-of-struct combines map-side to one
-    # row per (corpus_id, m) before the exchange (2.8s — same values:
-    # struct ordering (d, code) IS the window's orderBy tie-break).
-    codes = (
-        enc_scored.groupBy(corpus_id, "m")
-        .agg(F.min(F.struct(F.col("d"), F.col("code"))).alias("_m"))
-        .select(corpus_id, "m", F.col("_m.code").alias("code"))
-    )
-    # Per-query ADC lookup table: partial distance to every codeword.
-    q_sub = q.select(
-        F.col(query_id), F.explode(m_arr).alias("m"), "qv"
-    ).select(
-        query_id, "m", F.slice(F.col("qv"), F.col("m") * sub + 1, sub).alias("qsubv")
-    )
-    lookup = q_sub.join(F.broadcast(codebook), on="m").select(
-        query_id,
-        "m",
-        "code",
-        F.round(l2(F.col("qsubv"), F.col("bookv")), 6).alias("pdist"),
+    codes, lookup = _pq_tables(
+        c, c, q, n_subvectors, n_codes, dim // n_subvectors, query_id, corpus_id
     )
     # ADC: sum the per-subvector partials over the code table.
     adc = (

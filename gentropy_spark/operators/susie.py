@@ -5,8 +5,7 @@ Re-expresses gentropy's SuSiE-inf
 :243 ``_MoM``, :301 ``_MLE``, :407 ``cred_inf`` — itself derived from
 the FinucaneLab *fine-mapping-inf* package; model from Cui et al. 2023,
 "Improving fine-mapping by modeling infinitesimal effects") as an
-original, scipy-free numpy kernel plus a Spark ``applyInPandas``
-operator.
+original, scipy-free numpy kernel plus a Spark operator.
 
 Model: y = X·(Σ_l b_l) + X·α + ε with L sparse single effects b_l
 (SuSiE) plus an infinitesimal component α ~ N(0, τ²I) absorbed into
@@ -25,9 +24,9 @@ Differences from the reference, by construction not by accident:
   instead of the reference's seeded ``np.random.choice``.
 
 Scale posture: fine-mapping is per-locus embarrassingly parallel; the
-Spark surface groups by locus key and runs the kernel as an
-Arrow-batched ``applyInPandas`` — one shuffle on the locus key, numpy
-inside, no driver participation. Loci are capped at ``max_variants``
+Spark surface runs the kernel through the shared per-locus driver
+``operators.finemapping.finemap_loci`` — one shuffle on the locus key,
+numpy inside, no driver participation. Loci are capped at ``max_variants``
 by |z| (the reference's fine-mapper imposes locus size limits the same
 way) so a single pathological locus cannot OOM an executor.
 """
@@ -40,6 +39,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from gentropy_spark.operators.finemapping import finemap_loci
 
 _INVPHI = (math.sqrt(5.0) - 1.0) / 2.0
 
@@ -402,20 +403,9 @@ def susie_inf_finemap(
         ]
     )
 
-    def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit_one(pdf: pd.DataFrame, z: np.ndarray, R: np.ndarray) -> pd.DataFrame:
         """Fine-map ONE locus (pdf = rows of a single cluster)."""
-        pdf = pdf.sort_values(point_id).reset_index(drop=True)
-        if len(pdf) > max_variants:
-            keep = (
-                pdf.assign(_az=pdf[z_col].abs())
-                .nlargest(max_variants, ["_az", point_id])
-                .index
-            )
-            pdf = pdf.loc[sorted(keep)].reset_index(drop=True)
-        z = pdf[z_col].to_numpy(dtype=np.float64)
-        p_arr = pdf[pos].to_numpy(dtype=np.float64)
         p = len(z)
-        R = np.exp(-np.abs(p_arr[:, None] - p_arr[None, :]) / tau)
         eff = min(L, p)
         fit = susie_inf_fit(
             z, R=R, n=n, L=eff, method=method, est_tausq=est_tausq
@@ -444,31 +434,8 @@ def susie_inf_finemap(
             }
         )
 
-    def fit_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        # One Arrow exchange per (study, contig) — clumped loci are
-        # typically tiny (median 1-3 variants), so invoking the Python
-        # kernel once per LOCUS drowns in per-group Arrow/pandas
-        # overhead (~13k groups at sf0.1). Grouping at contig level
-        # keeps the shuffle key coarse and loops loci in-process.
-        outs = [fit_one(g) for _, g in pdf.groupby(cluster, sort=True)]
-        return pd.concat(outs, ignore_index=True)
-
-    sel = df.select(*keys, point_id, pos, z_col)
-    # The shuffled rows are tiny but the per-locus kernel is Python
-    # CPU: AQE's byte-based coalescing collapses a small
-    # ENSURE_REQUIREMENTS exchange to ~1 partition and serializes all
-    # loci onto one worker (measured 40s vs 12s of actual kernel CPU).
-    # A plain hash repartition on the same keys gets optimizer-removed
-    # as redundant against the upstream window exchange; a RANGE
-    # repartition survives (different partitioning class), still
-    # satisfies the groupBy's clustered-distribution requirement, and
-    # its user-specified partition count is exempt from AQE coalescing
-    # — pinning the Python stage's parallelism.
-    nparts = sel.sparkSession.sparkContext.defaultParallelism
-    return (
-        sel.repartitionByRange(nparts, study, contig)
-        .groupBy(study, contig)
-        .applyInPandas(fit_partition, schema=out_schema)
+    return finemap_loci(
+        df, keys, fit_one, out_schema, tau, pos, z_col, point_id, max_variants
     )
 
 
@@ -496,8 +463,8 @@ def susie_finemapper_step(
     log10 Bayes factor (lbf_cs × log10 e, :312), the lead variant
     (highest single-effect PIP in the set), set size, and the purity
     metrics (mean/min r² over the set, :358-:379) with the step's
-    purity filters applied. Same per-locus applyInPandas shape and
-    synthetic distance-decay LD as ``susie_inf_finemap``.
+    purity filters applied. Same ``finemap_loci`` driver and synthetic
+    distance-decay LD as ``susie_inf_finemap``.
     """
     keys = [study, contig, cluster]
     out_schema = T.StructType(
@@ -516,18 +483,7 @@ def susie_finemapper_step(
     )
     log10_e = 0.4342944819032518
 
-    def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(point_id).reset_index(drop=True)
-        if len(pdf) > max_variants:
-            keep = (
-                pdf.assign(_az=pdf[z_col].abs())
-                .nlargest(max_variants, ["_az", point_id])
-                .index
-            )
-            pdf = pdf.loc[sorted(keep)].reset_index(drop=True)
-        z = pdf[z_col].to_numpy(dtype=np.float64)
-        p_arr = pdf[pos].to_numpy(dtype=np.float64)
-        R = np.exp(-np.abs(p_arr[:, None] - p_arr[None, :]) / tau)
+    def fit_one(pdf: pd.DataFrame, z: np.ndarray, R: np.ndarray) -> pd.DataFrame:
         eff = min(L, len(z))
         fit = susie_inf_fit(z, R=R, n=n, L=eff, method="moments", est_tausq=True)
         rows = []
@@ -577,14 +533,6 @@ def susie_finemapper_step(
             ]
         return out
 
-    def fit_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [fit_one(g) for _, g in pdf.groupby(cluster, sort=True)]
-        return pd.concat(outs, ignore_index=True)
-
-    sel = df.select(*keys, point_id, pos, z_col)
-    nparts = sel.sparkSession.sparkContext.defaultParallelism
-    return (
-        sel.repartitionByRange(nparts, study, contig)
-        .groupBy(study, contig)
-        .applyInPandas(fit_partition, schema=out_schema)
+    return finemap_loci(
+        df, keys, fit_one, out_schema, tau, pos, z_col, point_id, max_variants
     )

@@ -891,28 +891,16 @@ GROUP BY 1, 2, 3
 def q_sumstat_qc_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All QC metrics joined into one per-study table — the
     summary_statistics_qc dataset shape (dataset/summary_statistics_qc.py)."""
-    from gentropy_spark.plans.qc import CHI2_MEDIAN_1DF, _gwas
+    from gentropy_spark.plans.qc import qc_metrics
 
     # Single-pass aggregation: the three QC metrics share one scan and
     # one shuffle instead of three scans joined (4.8s -> ~1s at sf0.1).
-    # Values are identical to the per-metric queries (same expressions),
-    # so the composed oracle SQL is unchanged.
-    g = _gwas(spark, sf_dir)
-    z = F.col("beta") / F.col("se")
-    enriched = g.withColumn("z", z).withColumn("z2", z * z)
-    out = enriched.groupBy("study_id").agg(
-        (F.expr("percentile(z2, 0.5)") / CHI2_MEDIAN_1DF).alias("gc_lambda"),
-        F.round(F.corr("z", "z_from_p"), 6).alias("pz_corr"),
-        (
-            F.sum(
-                F.round(F.col("z") - F.col("z_from_p"), 6).cast("decimal(38,6)")
-            ).cast("double")
-            / F.count("*")
-        ).alias("mean_diff"),
-        (
-            F.sum(F.col("beta").cast("decimal(38,6)")).cast("double") / F.count("*")
-        ).alias("mean_beta"),
-        F.count("*").alias("n_variants"),
+    # Values are identical to the per-metric queries (the same
+    # qc_metrics expressions), so the composed oracle SQL is unchanged.
+    out = qc_metrics(
+        spark,
+        sf_dir,
+        ["gc_lambda", "pz_corr", "mean_diff", "mean_beta", "n_variants"],
     )
     # trunc (floor of the scaled value), not round: multiply+floor are
     # IEEE-exact in both engines, while ROUND diverges on exact ties.

@@ -29,7 +29,12 @@ synthetic tables. Three families, each oracle-checked and keyed by
 ``assemble_locus_features`` is the feature-factory counterpart of
 method/l2g/feature_factory.py: full-outer combine of the families on
 the locus-gene key with 0-fill, consumed by the extended
-``l2g_feature_matrix`` in plans/l2g.py.
+``l2g_feature_matrix`` in plans/l2g.py. Each family is implemented
+once, in the fused shape the factory runs (``_fp_family``,
+``_tss_counts``, ``_e2g_family``, ``_sentinel_locals``, combined by
+``_union_max`` and finished by ``_feature_outputs``); the standalone
+``l2g_*_features`` registry keys are views of the factory — each
+selects its family's columns from the same pieces.
 
 Cross-engine exactness: posterior×severity products are quantized to
 ≤9 decimal places before the DECIMAL(38,12) partial-agg sum (products
@@ -162,48 +167,11 @@ def _trunc6(c: F.Column) -> F.Column:
 
 
 # --- VEP feature family ----------------------------------------------------
-def q_l2g_vep_features(
-    spark: SparkSession,
-    sf_dir: str,
-    _fp: DataFrame | None = None,
-) -> DataFrame:
+def q_l2g_vep_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gentropy_spark.plans.l2g import gene_index
 
-    if _fp is None:
-        _fp = _footprint_join(
-            _credset(spark, sf_dir), gene_index(spark, sf_dir)
-        )
-    j = _fp.select(
-        *_LOCUS_KEY, "gene_id", _severity_col().alias("severity"), "pics_pp"
-    )
-    local = j.groupBy(*_FEAT_KEY).agg(
-        F.max("severity").alias("vep_max"),
-        F.count("*").alias("n_v"),
-        F.sum((F.col("severity") * F.col("pics_pp")).cast(DEC12))
-        .cast("double")
-        .alias("sum_ws"),
-    )
-    w_loc = Window.partitionBy(*_LOCUS_KEY)
-    vep_mean = _trunc6(F.col("sum_ws") / F.col("n_v"))
-    scored = local.select(
-        *_FEAT_KEY, "vep_max", vep_mean.alias("vep_mean")
-    )
-    reg_max = F.max(F.when(_is_pc(), F.col("vep_max"))).over(w_loc)
-    reg_mean = F.max(F.when(_is_pc(), F.col("vep_mean"))).over(w_loc)
-
-    def nbh(local_c: F.Column, reg: F.Column) -> F.Column:
-        return (
-            F.when(_is_pc() & (reg > 0.0), _trunc6(local_c / reg))
-            .otherwise(F.lit(0.0))
-        )
-
-    return scored.select(
-        *_FEAT_KEY,
-        "vep_max",
-        "vep_mean",
-        nbh(F.col("vep_max"), reg_max).alias("vep_max_nbh"),
-        nbh(F.col("vep_mean"), reg_mean).alias("vep_mean_nbh"),
-    )
+    fp = _footprint_join(_credset(spark, sf_dir), gene_index(spark, sf_dir))
+    return _fp_family(fp).select(*_FEAT_KEY, *VEP_FEAT_COLS)
 
 
 def _vep_feat_sql() -> str:
@@ -252,69 +220,19 @@ FROM with_reg
 
 
 # --- gene-structure feature family ----------------------------------------
-def q_l2g_gene_features(
-    spark: SparkSession,
-    sf_dir: str,
-    _fp: DataFrame | None = None,
-    _leads_df: DataFrame | None = None,
-) -> DataFrame:
+def q_l2g_gene_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gentropy_spark.plans.l2g import gene_index
 
-    leads = _leads_df if _leads_df is not None else _leads(spark, sf_dir)
     genes = gene_index(spark, sf_dir)
-    # Genes with TSS (gene_start) inside the lead's count window.
-    genes_k = genes.withColumn(
-        "gk", F.expr(f"(gene_start - {BASE_US}) div {GENE_SPACING_US}")
-    )
-    k_hi = F.expr(
-        f"(lead_pos - {BASE_US} + {GENE_COUNT_FLANK_US}) div {GENE_SPACING_US}"
-    )
-    k_lo = F.expr(
-        f"(lead_pos - {BASE_US} - {GENE_COUNT_FLANK_US}) div {GENE_SPACING_US}"
-    )
-    leads_k = leads.withColumn("gk", F.explode(F.sequence(k_lo, k_hi)))
-    tssj = leads_k.join(F.broadcast(genes_k), on=["contig", "gk"]).filter(
-        (F.col("gene_start") >= F.col("lead_pos") - GENE_COUNT_FLANK_US)
-        & (F.col("gene_start") <= F.col("lead_pos") + GENE_COUNT_FLANK_US)
-    )
-    counts = tssj.groupBy(*_LOCUS_KEY).agg(
-        F.countDistinct("gene_id").alias("gene_count_w"),
-        F.countDistinct(F.when(_is_pc(), F.col("gene_id"))).alias(
-            "protein_gene_count_w"
+    fp = _footprint_join(_credset(spark, sf_dir), genes)
+    fam_own = (
+        (_fp_family(fp), ["is_protein_coding", "credset_confidence"]),
+        (
+            _tss_counts(_leads(spark, sf_dir), genes),
+            ["gene_count_w", "protein_gene_count_w"],
         ),
     )
-    tss_genes = (
-        tssj.select(*_FEAT_KEY).distinct().join(counts, on=_LOCUS_KEY)
-    )
-    # Footprint-reachable genes: protein-coding flag + locus confidence.
-    if _fp is None:
-        _fp = _footprint_join(
-            _credset(spark, sf_dir), gene_index(spark, sf_dir)
-        )
-    fp_genes = _fp.select(*_FEAT_KEY).distinct()
-    conf_score = F.element_at(
-        F.array(*[F.lit(s) for s in CONF_SCORES]),
-        ((F.col("study_id") + F.col("cluster_seq")) % 5 + 1).cast("int"),
-    )
-    fp_feats = fp_genes.select(
-        *_FEAT_KEY,
-        F.when(_is_pc(), F.lit(1.0)).otherwise(F.lit(0.0)).alias(
-            "is_protein_coding"
-        ),
-        conf_score.alias("credset_confidence"),
-    )
-    out = tss_genes.join(fp_feats, on=_FEAT_KEY, how="full")
-    return out.select(
-        *_FEAT_KEY,
-        F.coalesce("gene_count_w", F.lit(0)).alias("gene_count_w"),
-        F.coalesce("protein_gene_count_w", F.lit(0)).alias(
-            "protein_gene_count_w"
-        ),
-        F.coalesce("is_protein_coding", F.lit(0.0)).alias("is_protein_coding"),
-        F.coalesce("credset_confidence", F.lit(0.0)).alias(
-            "credset_confidence"
-        ),
-    )
+    return _feature_outputs(_union_max(fam_own, GENE_FEAT_COLS), GENE_FEAT_COLS)
 
 
 def _gene_feat_sql() -> str:
@@ -370,16 +288,14 @@ FULL JOIN fp_feats USING (study_id, contig, cluster_seq, gene_id)
 
 
 # --- interval / E2G feature family ----------------------------------------
-def q_l2g_interval_features(
-    spark: SparkSession,
-    sf_dir: str,
-    _cs: DataFrame | None = None,
-) -> DataFrame:
+def q_l2g_interval_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _e2g_family(spark, sf_dir, _credset(spark, sf_dir))
+
+
+def _e2g_family(spark: SparkSession, sf_dir: str, cs: DataFrame) -> DataFrame:
     from gentropy_spark.plans.l2g import q_interval_evidence
 
-    if _cs is None:
-        _cs = _credset(spark, sf_dir)
-    cs = _cs.filter(F.col("pics_pp") >= E2G_PP_MIN)
+    cs = cs.filter(F.col("pics_pp") >= E2G_PP_MIN)
     iv = (
         q_interval_evidence(spark, sf_dir)
         .filter(F.col("is_valid"))
@@ -544,31 +460,12 @@ def _log_scale6(x: F.Column) -> F.Column:
     return F.when(x > 0, F.round(F.log10(x) / _LOG10_W1, 6))
 
 
-def _dist_locals(
-    cs: DataFrame, leads: DataFrame, genes: DataFrame
-) -> DataFrame:
-    """Per (locus, gene): the four UNCLAMPED local distance features
-    (6dp), union-agg combined — one shuffle on the locus-gene key."""
-    # Mean half: posterior-weighted score sums over the credible set.
-    fp = _footprint_join(cs, genes)
-    score_fp = (F.lit(DIST_W_US) - _d_fp() + F.lit(1)) * F.col("pics_pp")
-    score_tss = F.when(
-        _d_tss() <= DIST_W_US,
-        (F.lit(DIST_W_US) - _d_tss() + F.lit(1)) * F.col("pics_pp"),
-    )
-    mean_agg = fp.groupBy(*_FEAT_KEY).agg(
-        F.sum(score_fp.cast(DEC12)).cast("double").alias("sum_fp"),
-        F.sum(score_tss.cast(DEC12)).cast("double").alias("sum_tss"),
-    )
-    mean6 = mean_agg.select(
-        *_FEAT_KEY,
-        _log_scale6(F.col("sum_tss")).alias("tss_mean6"),
-        _log_scale6(F.col("sum_fp")).alias("fp_mean6"),
-    )
-    # Sentinel half: unweighted lead-variant scores (>= 1, log >= 0).
+def _sentinel_locals(leads: DataFrame, genes: DataFrame) -> DataFrame:
+    """Unweighted lead-variant distance scores per (locus, gene), 6dp
+    log-scaled (scores are >= 1, so the log is >= 0): a broadcast
+    leads x genes join, zero exchanges."""
     sent_src = leads.select(*_LOCUS_KEY, F.col("lead_pos").alias("pos"))
-    sj = _footprint_join(sent_src, genes)
-    sent = sj.select(
+    return _footprint_join(sent_src, genes).select(
         *_FEAT_KEY,
         F.when(
             _d_tss() <= DIST_W_US,
@@ -576,36 +473,15 @@ def _dist_locals(
         ).alias("sent_tss6"),
         _log_scale6(F.lit(DIST_W_US) - _d_fp() + F.lit(1)).alias("sent_fp6"),
     )
-    local_cols = ["tss_mean6", "fp_mean6", "sent_tss6", "sent_fp6"]
-    branches = [
-        mean6.select(
-            *_FEAT_KEY,
-            "tss_mean6",
-            "fp_mean6",
-            F.lit(None).cast("double").alias("sent_tss6"),
-            F.lit(None).cast("double").alias("sent_fp6"),
-        ),
-        sent.select(
-            *_FEAT_KEY,
-            F.lit(None).cast("double").alias("tss_mean6"),
-            F.lit(None).cast("double").alias("fp_mean6"),
-            "sent_tss6",
-            "sent_fp6",
-        ),
-    ]
-    return (
-        branches[0]
-        .unionByName(branches[1])
-        .groupBy(*_FEAT_KEY)
-        .agg(*[F.max(c).alias(c) for c in local_cols])
-    )
 
 
-def _dist_outputs(locals_df: DataFrame) -> DataFrame:
-    """Clamp locals, compute neighbourhood ratios — one locus window."""
+def _dist_outputs() -> dict[str, F.Column]:
+    """The eight distance features from the raw (UNCLAMPED) 6dp locals:
+    sentinel values, clamped means and neighbourhood ratios, all on one
+    locus window."""
     w_loc = Window.partitionBy(*_LOCUS_KEY)
 
-    def nbh(local6: str) -> F.Column:
+    def dist_nbh(local6: str) -> F.Column:
         reg = F.max(F.when(_is_pc(), F.col(local6))).over(w_loc)
         ratio = _trunc6(F.col(local6) / reg)
         return (
@@ -624,35 +500,30 @@ def _dist_outputs(locals_df: DataFrame) -> DataFrame:
             F.coalesce(F.col(local6), F.lit(0.0))
         )
 
-    return locals_df.select(
-        *_FEAT_KEY,
-        F.coalesce(F.col("sent_tss6"), F.lit(0.0)).alias(
-            "distance_sentinel_tss"
+    return {
+        "distance_sentinel_tss": F.coalesce(F.col("sent_tss6"), F.lit(0.0)),
+        "distance_sentinel_tss_nbh": dist_nbh("sent_tss6"),
+        "distance_sentinel_footprint": F.coalesce(
+            F.col("sent_fp6"), F.lit(0.0)
         ),
-        nbh("sent_tss6").alias("distance_sentinel_tss_nbh"),
-        F.coalesce(F.col("sent_fp6"), F.lit(0.0)).alias(
-            "distance_sentinel_footprint"
-        ),
-        nbh("sent_fp6").alias("distance_sentinel_footprint_nbh"),
-        clamp0("tss_mean6").alias("distance_tss_mean"),
-        nbh("tss_mean6").alias("distance_tss_mean_nbh"),
-        clamp0("fp_mean6").alias("distance_footprint_mean"),
-        nbh("fp_mean6").alias("distance_footprint_mean_nbh"),
-    )
+        "distance_sentinel_footprint_nbh": dist_nbh("sent_fp6"),
+        "distance_tss_mean": clamp0("tss_mean6"),
+        "distance_tss_mean_nbh": dist_nbh("tss_mean6"),
+        "distance_footprint_mean": clamp0("fp_mean6"),
+        "distance_footprint_mean_nbh": dist_nbh("fp_mean6"),
+    }
 
 
-def q_l2g_distance_features(
-    spark: SparkSession,
-    sf_dir: str,
-    _cs: DataFrame | None = None,
-    _leads_df: DataFrame | None = None,
-) -> DataFrame:
+def q_l2g_distance_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gentropy_spark.plans.l2g import gene_index
 
-    cs = _cs if _cs is not None else _credset(spark, sf_dir)
-    leads = _leads_df if _leads_df is not None else _leads(spark, sf_dir)
     genes = gene_index(spark, sf_dir)
-    return _dist_outputs(_dist_locals(cs, leads, genes))
+    fp = _footprint_join(_credset(spark, sf_dir), genes)
+    fam_own = (
+        (_fp_family(fp), ["tss_mean6", "fp_mean6"]),
+        (_sentinel_locals(_leads(spark, sf_dir), genes), ["sent_tss6", "sent_fp6"]),
+    )
+    return _feature_outputs(_union_max(fam_own, _RAW_DIST_COLS), DIST_FEAT_COLS)
 
 
 def _dist_feat_sql() -> str:
@@ -772,8 +643,8 @@ def _fp_family(fp: DataFrame) -> DataFrame:
     footprint-distinct, and the distance family's posterior-weighted
     score sums (r11) all share the same (locus, gene) groupBy over the
     same footprint join — fused here so the assembled matrix pays one
-    shuffle for all three (the standalone registry entries keep their
-    separate shapes for the per-family oracles). The protein-coding
+    shuffle for all three, and the standalone VEP, gene and distance
+    keys select their columns from it. The protein-coding
     flag and credible-set confidence are pure projections of the
     grouped key, so they ride the VEP aggregate for free.
     """
@@ -807,7 +678,7 @@ def _fp_family(fp: DataFrame) -> DataFrame:
     reg_max = F.max(F.when(_is_pc(), F.col("vep_max"))).over(w_loc)
     reg_mean = F.max(F.when(_is_pc(), F.col("vep_mean"))).over(w_loc)
 
-    def nbh(local_c: F.Column, reg: F.Column) -> F.Column:
+    def vep_nbh(local_c: F.Column, reg: F.Column) -> F.Column:
         return (
             F.when(_is_pc() & (reg > 0.0), _trunc6(local_c / reg))
             .otherwise(F.lit(0.0))
@@ -821,8 +692,8 @@ def _fp_family(fp: DataFrame) -> DataFrame:
         *_FEAT_KEY,
         "vep_max",
         "vep_mean",
-        nbh(F.col("vep_max"), reg_max).alias("vep_max_nbh"),
-        nbh(F.col("vep_mean"), reg_mean).alias("vep_mean_nbh"),
+        vep_nbh(F.col("vep_max"), reg_max).alias("vep_max_nbh"),
+        vep_nbh(F.col("vep_mean"), reg_mean).alias("vep_mean_nbh"),
         F.when(_is_pc(), F.lit(1.0)).otherwise(F.lit(0.0)).alias(
             "is_protein_coding"
         ),
@@ -837,9 +708,8 @@ def _fp_family(fp: DataFrame) -> DataFrame:
 def _tss_counts(leads: DataFrame, genes: DataFrame) -> DataFrame:
     """TSS-window gene counts per (locus, gene) — the count half of the
     gene family, shaped as distinct-then-window (one exchange fewer
-    than the standalone query's groupBy-join, identical values: after
-    the per-pair distinct, the windowed row count IS the distinct gene
-    count)."""
+    than a groupBy-join, identical values: after the per-pair distinct,
+    the windowed row count IS the distinct gene count)."""
     genes_k = genes.withColumn(
         "gk", F.expr(f"(gene_start - {BASE_US}) div {GENE_SPACING_US}")
     )
@@ -871,80 +741,20 @@ def _tss_counts(leads: DataFrame, genes: DataFrame) -> DataFrame:
 
 
 # Raw (UNCLAMPED) distance locals carried through the factory union;
-# the clamp + neighbourhood ratios are computed after assembly on ONE
-# shared locus window (vs the standalone distance query's own window).
+# the clamp + neighbourhood ratios are computed after the combine on ONE
+# shared locus window.
 _RAW_DIST_COLS = ["tss_mean6", "fp_mean6", "sent_tss6", "sent_fp6"]
 
 
-def assemble_locus_features(
-    spark: SparkSession,
-    sf_dir: str,
-    _leads_df: DataFrame | None = None,
+def _union_max(
+    fam_own: tuple[tuple[DataFrame, list[str]], ...], union_cols: list[str]
 ) -> DataFrame:
-    """Feature factory: combine the four families on the locus-gene
-    key, 0-filled (method/l2g/feature_factory.py role).
-
-    Shared subplans (PICS credible set, gene footprint join, clump
-    leads, gene index) are constructed ONCE, cached, and threaded into
-    every family. The combine is a UNION + one max-groupBy rather than
-    a chain of full-outer joins: family keys are unique within each
-    family and the feature columns are disjoint, so the union-agg is
-    value-identical while paying ONE shuffle where the join chain paid
-    two shuffle-joins (each re-exchanging both sides — the window
-    outputs are partitioned on the 3-column locus, the join key is 4).
-
-    The distance family (r11) is fused rather than appended: its
-    posterior-weighted mean sums ride the footprint family's groupBy
-    (same key, same join — zero extra exchanges), its sentinel half is
-    a broadcast leads x genes join (zero exchanges), and all four
-    neighbourhood ratios + clamps come from ONE locus window over the
-    assembled matrix — where the standalone ``l2g_distance_features``
-    query (kept for its per-family oracle) pays its own agg + window.
-    """
-    from gentropy_spark.plans.l2g import gene_index
-
-    cs = _credset(spark, sf_dir)
-    genes = gene_index(spark, sf_dir)
-    # The footprint join is NOT persisted: with the r7 fusion it feeds
-    # exactly ONE aggregation (the fused family below), and its inputs
-    # are a cached credset + a broadcast gene dim — nothing to share.
-    fp = _footprint_join(cs, genes)
-    fused = _fp_family(fp)
-    leads = _leads_df if _leads_df is not None else _leads(spark, sf_dir)
-    tss = _tss_counts(leads, genes)
-    e2g = q_l2g_interval_features(spark, sf_dir, _cs=cs)
-    # Sentinel distance locals: lead variant x genes, broadcast join.
-    sent_src = leads.select(*_LOCUS_KEY, F.col("lead_pos").alias("pos"))
-    sent = _footprint_join(sent_src, genes).select(
-        *_FEAT_KEY,
-        F.when(
-            _d_tss() <= DIST_W_US,
-            _log_scale6(F.lit(DIST_W_US) - _d_tss() + F.lit(1)),
-        ).alias("sent_tss6"),
-        _log_scale6(F.lit(DIST_W_US) - _d_fp() + F.lit(1)).alias("sent_fp6"),
-    )
-
-    union_cols = [
-        *VEP_FEAT_COLS,
-        *GENE_FEAT_COLS,
-        *E2G_FEAT_COLS,
-        *_RAW_DIST_COLS,
-    ]
-    fam_own = (
-        (
-            fused,
-            [
-                *VEP_FEAT_COLS,
-                "is_protein_coding",
-                "credset_confidence",
-                "tss_mean6",
-                "fp_mean6",
-            ],
-        ),
-        (tss, ["gene_count_w", "protein_gene_count_w"]),
-        (e2g, E2G_FEAT_COLS),
-        (sent, ["sent_tss6", "sent_fp6"]),
-    )
+    """Combine families on the locus-gene key: each family contributes
+    its own columns (null elsewhere) to a UNION, and one max-groupBy
+    folds them. Family keys are unique within each family and the
+    feature columns are disjoint, so this is value-identical to a
+    full-outer join chain while paying ONE shuffle where the join chain
+    paid one per join (each re-exchanging both sides)."""
     branches = []
     for df, own in fam_own:
         branches.append(
@@ -965,49 +775,19 @@ def assemble_locus_features(
         unioned = unioned.unionByName(b)
     # ONE exchange for combine + distance windows (r18): hash the
     # union on the locus prefix so the feat-key max-groupBy AND the
-    # shared locus window below ride the same partitioning (subset
-    # rule). The union rows are already family-aggregated (≤4 rows per
-    # feat key), so the pre-combine shuffle is the same small table.
-    agg = unioned.repartition(*_LOCUS_KEY).groupBy(*_FEAT_KEY).agg(
+    # shared locus window of _feature_outputs ride the same partitioning
+    # (subset rule). The union rows are already family-aggregated (≤4
+    # rows per feat key), so the pre-combine shuffle is the same small
+    # table.
+    return unioned.repartition(*_LOCUS_KEY).groupBy(*_FEAT_KEY).agg(
         *[F.max(c).alias(c) for c in union_cols]
     )
 
-    # One shared locus window: the four distance nbh ratios + clamps
-    # (identical expressions to _dist_outputs — pinned by the driver's
-    # l2g_feature_matrix oracle and the per-family parity test).
-    w_loc = Window.partitionBy(*_LOCUS_KEY)
 
-    def nbh(local6: str) -> F.Column:
-        reg = F.max(F.when(_is_pc(), F.col(local6))).over(w_loc)
-        ratio = _trunc6(F.col(local6) / reg)
-        return (
-            F.when(
-                _is_pc()
-                & F.col(local6).isNotNull()
-                & reg.isNotNull()
-                & (reg != 0.0),
-                F.least(F.greatest(ratio, F.lit(0.0)), F.lit(1.0)),
-            )
-            .otherwise(F.lit(0.0))
-        )
-
-    def clamp0(local6: str) -> F.Column:
-        return F.when(F.col(local6) < 0, F.lit(0.0)).otherwise(
-            F.coalesce(F.col(local6), F.lit(0.0))
-        )
-
-    dist_exprs = {
-        "distance_sentinel_tss": F.coalesce(F.col("sent_tss6"), F.lit(0.0)),
-        "distance_sentinel_tss_nbh": nbh("sent_tss6"),
-        "distance_sentinel_footprint": F.coalesce(
-            F.col("sent_fp6"), F.lit(0.0)
-        ),
-        "distance_sentinel_footprint_nbh": nbh("sent_fp6"),
-        "distance_tss_mean": clamp0("tss_mean6"),
-        "distance_tss_mean_nbh": nbh("tss_mean6"),
-        "distance_footprint_mean": clamp0("fp_mean6"),
-        "distance_footprint_mean_nbh": nbh("fp_mean6"),
-    }
+def _feature_outputs(agg: DataFrame, cols: list[str]) -> DataFrame:
+    """0-fill the combined families; distance columns come from the raw
+    locals through ``_dist_outputs``."""
+    dist_exprs = _dist_outputs()
     return agg.select(
         *_FEAT_KEY,
         *[
@@ -1016,9 +796,61 @@ def assemble_locus_features(
             else F.coalesce(
                 F.col(c), F.lit(0) if c in _INT_COLS else F.lit(0.0)
             ).alias(c)
-            for c in EXT_FEAT_COLS
+            for c in cols
         ],
     )
+
+
+def assemble_locus_features(
+    spark: SparkSession,
+    sf_dir: str,
+    _leads_df: DataFrame | None = None,
+) -> DataFrame:
+    """Feature factory: combine the four families on the locus-gene
+    key, 0-filled (method/l2g/feature_factory.py role).
+
+    Shared subplans (PICS credible set, gene footprint join, clump
+    leads, gene index) are constructed ONCE, cached, and threaded into
+    every family, then combined by ``_union_max``.
+
+    The distance family (r11) is fused rather than appended: its
+    posterior-weighted mean sums ride the footprint family's groupBy
+    (same key, same join — zero extra exchanges), its sentinel half is
+    a broadcast leads x genes join (zero exchanges), and all four
+    neighbourhood ratios + clamps come from ONE locus window over the
+    assembled matrix.
+    """
+    from gentropy_spark.plans.l2g import gene_index
+
+    cs = _credset(spark, sf_dir)
+    genes = gene_index(spark, sf_dir)
+    # The footprint join is NOT persisted: with the r7 fusion it feeds
+    # exactly ONE aggregation (the fused family below), and its inputs
+    # are a cached credset + a broadcast gene dim — nothing to share.
+    fp = _footprint_join(cs, genes)
+    leads = _leads_df if _leads_df is not None else _leads(spark, sf_dir)
+    fam_own = (
+        (
+            _fp_family(fp),
+            [
+                *VEP_FEAT_COLS,
+                "is_protein_coding",
+                "credset_confidence",
+                "tss_mean6",
+                "fp_mean6",
+            ],
+        ),
+        (_tss_counts(leads, genes), ["gene_count_w", "protein_gene_count_w"]),
+        (_e2g_family(spark, sf_dir, cs), E2G_FEAT_COLS),
+        (_sentinel_locals(leads, genes), ["sent_tss6", "sent_fp6"]),
+    )
+    union_cols = [
+        *VEP_FEAT_COLS,
+        *GENE_FEAT_COLS,
+        *E2G_FEAT_COLS,
+        *_RAW_DIST_COLS,
+    ]
+    return _feature_outputs(_union_max(fam_own, union_cols), EXT_FEAT_COLS)
 
 
 def _assemble_sql() -> str:

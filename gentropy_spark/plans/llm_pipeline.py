@@ -351,6 +351,14 @@ WHERE cosine >= {format(EMB_MIN_COSINE, ".17e")}
 
 
 # --- E7: text quality profile --------------------------------------------
+def _char_ratio(pattern_drop: str) -> F.Column:
+    """Share of ``text`` characters left after removing ``pattern_drop``
+    (an exact integer-over-integer division; 1 char floor)."""
+    return F.length(F.regexp_replace(F.col("text"), pattern_drop, "")) / (
+        F.greatest(F.length(F.col("text")), F.lit(1))
+    )
+
+
 @prepared
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length/alpha/digit/whitespace/upper/stopword profile per
@@ -376,21 +384,15 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(stopword_count_sql("__toks", EN_STOPWORDS)).alias("__n_stop"),
         F.length(F.array_join(F.col("__toks"), "")).alias("__sum_len"),
     )
-    n_chars = F.length(F.col("text"))
-    denom_c = F.greatest(n_chars, F.lit(1))
     denom_t = F.greatest(F.col("__n_tokens"), F.lit(1))
-
-    def cls(pattern_keep: str) -> F.Column:
-        return F.length(F.regexp_replace(F.col("text"), pattern_keep, ""))
-
     return hof.select(
         "doc_id",
-        n_chars.alias("n_chars"),
+        F.length(F.col("text")).alias("n_chars"),
         F.col("__n_tokens").alias("n_tokens"),
-        (cls("[^a-zA-Z]") / denom_c).alias("alpha_ratio"),
-        (cls("[^0-9]") / denom_c).alias("digit_ratio"),
-        (cls("[^\\s]") / denom_c).alias("ws_ratio"),
-        (cls("[^A-Z]") / denom_c).alias("upper_ratio"),
+        _char_ratio("[^a-zA-Z]").alias("alpha_ratio"),
+        _char_ratio("[^0-9]").alias("digit_ratio"),
+        _char_ratio("[^\\s]").alias("ws_ratio"),
+        _char_ratio("[^A-Z]").alias("upper_ratio"),
         (F.col("__n_stop") / denom_t).alias("stop_ratio"),
         (F.col("__sum_len") / denom_t).alias("mean_token_len"),
     )
@@ -429,15 +431,35 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores are codegen ``size - size(array_remove chain)`` expressions
     instead of interpreted CodegenFallback filter lambdas (identical
     counts — a token matches at most one stopword per language)."""
-    from gentropy_spark.functions.text import STOPWORDS, stopword_count_sql
+    from gentropy_spark.functions.text import STOPWORDS
 
     docs = read_table(spark, sf_dir, "documents")
     toks_df = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
-    score_cols = [
-        F.expr(stopword_count_sql("__toks", words)).alias(f"__s_{lang}")
-        for lang, words in STOPWORDS.items()
+    scored = toks_df.select("doc_id", *_lang_scores(list(STOPWORDS)))
+    return scored.select("doc_id", _pred_lang().alias("pred_lang"))
+
+
+def _lang_scores(langs: list[str]) -> list[F.Column]:
+    """Per-language stopword hits ``__s_<lang>`` over ``__toks``, in the
+    order of ``langs``. One parsed SQL expression per language (r17 — a
+    single py4j round trip), in the codegen array_remove-chain form
+    (r18): the old filter-lambda HOF was CodegenFallback. Identical
+    counts (a token matches at most one stopword per language)."""
+    from gentropy_spark.functions.text import STOPWORDS, stopword_count_sql
+
+    return [
+        F.expr(stopword_count_sql("__toks", STOPWORDS[lang])).alias(
+            f"__s_{lang}"
+        )
+        for lang in langs
     ]
-    scored = toks_df.select("doc_id", *score_cols)
+
+
+def _pred_lang() -> F.Column:
+    """Argmax language over the ``__s_<lang>`` scores: ties go to the
+    earliest name, 'und' when every score is zero."""
+    from gentropy_spark.functions.text import STOPWORDS
+
     langs = sorted(STOPWORDS)
     best = F.greatest(*[F.col(f"__s_{lg}") for lg in langs])
     pred = F.lit("und")
@@ -445,10 +467,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ties.
     for lg in sorted(langs, reverse=True):
         pred = F.when(F.col(f"__s_{lg}") == best, F.lit(lg)).otherwise(pred)
-    return scored.select(
-        "doc_id",
-        F.when(best == 0, F.lit("und")).otherwise(pred).alias("pred_lang"),
-    )
+    return F.when(best == 0, F.lit("und")).otherwise(pred)
 
 
 LANGID_SQL = f"""
@@ -1673,28 +1692,13 @@ def _curate_scanned(
     # standalone q_text_quality / q_text_langid outputs paid two extra
     # documents scans plus two doc_id join exchanges for what one
     # staged projection computes in place. Values identical to the
-    # join composition (same grain, same expressions — the per-field
-    # logic mirrors q_text_quality/q_text_langid; oracle unchanged).
+    # join composition (same grain, same expressions — _char_ratio,
+    # _lang_scores and _pred_lang are the standalone keys' own helpers).
     # Staging rule as in q_text_quality: the stopword scores live in
     # their own projection so each evaluates once.
     toks_df = docs.select(
         "doc_id", "source", "text", tokens(F.col("text")).alias("__toks")
     )
-    langs = sorted(STOPWORDS)
-
-    def _score(lang: str) -> F.Column:
-        # One parsed SQL expression per language (r17 — a single py4j
-        # round trip), now the codegen array_remove-chain form (r18):
-        # the old filter-lambda HOF was CodegenFallback, ~2s of the
-        # fused scan stage at sf0.1 ran interpreted. Identical counts
-        # (a token matches at most one stopword; helper escapes
-        # quotes per the r17 advisory).
-        from gentropy_spark.functions.text import stopword_count_sql
-
-        return F.expr(stopword_count_sql("__toks", STOPWORDS[lang])).alias(
-            f"__s_{lang}"
-        )
-
     extra_cols = []
     if classifier_gate:
         from gentropy_spark.functions.xhash import _poly_hash_spark_sql
@@ -1721,13 +1725,9 @@ def _curate_scanned(
         "source",
         "text",
         F.size(F.col("__toks")).alias("n_tokens"),
-        *[_score(lang) for lang in langs],
+        *_lang_scores(sorted(STOPWORDS)),
         *extra_cols,
     )
-    best = F.greatest(*[F.col(f"__s_{lg}") for lg in langs])
-    pred = F.lit("und")
-    for lg in sorted(langs, reverse=True):
-        pred = F.when(F.col(f"__s_{lg}") == best, F.lit(lg)).otherwise(pred)
     # PERSIST the scored doc table (r14). Not an optional micro-cache:
     # downstream, the sampling filter references pred_lang, and
     # predicate pushdown SUBSTITUTES aliases on its way down — the
@@ -1759,11 +1759,8 @@ def _curate_scanned(
             "doc_id",
             "source",
             "n_tokens",
-            (
-                F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
-                / F.greatest(F.length(F.col("text")), F.lit(1))
-            ).alias("alpha_ratio"),
-            F.when(best == 0, F.lit("und")).otherwise(pred).alias("pred_lang"),
+            _char_ratio("[^a-zA-Z]").alias("alpha_ratio"),
+            _pred_lang().alias("pred_lang"),
             *score_cols,
         )
     )
@@ -2013,6 +2010,41 @@ def _pca_x() -> F.Column:
     )
 
 
+def _pca_means(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The PCA keys' shared inputs: the width-checked double array per
+    row (``__x``, evaluated once per row below every generator that
+    reads it), the 1-row count ``n`` and the d-row per-dimension means
+    (dim, mu) — one exploded-grain DECIMAL(38,12) aggregation."""
+    from gentropy_spark.operators.dedup import spread_if_narrow
+
+    emb = spread_if_narrow(
+        read_table(spark, sf_dir, "embeddings"), "vec_id"
+    )
+    xs = emb.select(_pca_x().alias("__x"))
+    ex = xs.select(F.posexplode("__x").alias("pos", "xj")).select(
+        (F.col("pos") + 1).alias("dim"), "xj"
+    )
+    n_row = emb.agg(F.count("*").cast("double").alias("n"))
+    mus = (
+        ex.groupBy("dim")
+        .agg(
+            F.sum(F.col("xj").cast("decimal(38,12)"))
+            .cast("double")
+            .alias("sx")
+        )
+        .crossJoin(F.broadcast(n_row))
+        .select("dim", (F.col("sx") / F.col("n")).alias("mu"))
+    )
+    return xs, n_row, mus
+
+
+def _mu_row(mus: DataFrame) -> DataFrame:
+    """The d-row means pivoted into a 1-row broadcast ``mu_arr``."""
+    return F.broadcast(mus.agg(_dim_table_to_array("mu").alias("mu_arr")))
+
+
 def _proj_dec12(x: F.Column, mu_arr: F.Column, l_arr: F.Column) -> F.Column:
     """Σ_j round((x_j − μ_j)·l_j, 9) as one per-row array kernel: a
     ``zip_with`` builds the 9dp terms as DECIMAL(38,12) and an
@@ -2090,27 +2122,10 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     key's task CPU. Every embedding must have width EMB_DIM; any other
     width fails the query (``_pca_x``).
     """
-    from gentropy_spark.operators.dedup import spread_if_narrow
-
-    emb = spread_if_narrow(
-        read_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
     DEC12 = "decimal(38,12)"
-    # The width-checked double array, evaluated once per row below
-    # every generator that reads it.
-    xs = emb.select(_pca_x().alias("__x"))
-    ex = xs.select(F.posexplode("__x").alias("pos", "xj")).select(
-        (F.col("pos") + 1).alias("dim"), "xj"
-    )
-    n_row = emb.agg(F.count("*").cast("double").alias("n"))
     # mus feeds the μ-array pivot (both matvec scans) and the output
     # mean column; AQE reuses its exchange for all three.
-    mus = (
-        ex.groupBy("dim")
-        .agg(F.sum(F.col("xj").cast(DEC12)).cast("double").alias("sx"))
-        .crossJoin(F.broadcast(n_row))
-        .select("dim", (F.col("sx") / F.col("n")).alias("mu"))
-    )
+    xs, n_row, mus = _pca_means(spark, sf_dir)
     # Array-form matvec (r18): μ rides a 1-row broadcast array, so the
     # per-row projection d_i is an inline expression over the row's own
     # embedding and each matvec step is ONE explode + map-side-combined
@@ -2121,7 +2136,7 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # combiner partials. Every term is bit-identical: same
     # (x_j − μ_j) doubles, same round(·, 9) products, same order-free
     # DECIMAL(38,12) sums.
-    mu_row = F.broadcast(mus.agg(_dim_table_to_array("mu").alias("mu_arr")))
+    mu_row = _mu_row(mus)
 
     def matvec(d_i: F.Column, *model_rows: DataFrame) -> DataFrame:
         """u = C v as the d-row (dim, u) table, given the per-row
@@ -2575,27 +2590,11 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact DECIMAL diagonal sums. ``prepared``, so the mus/gram persist
     marks are re-registered on every memo hit.
     """
-    from gentropy_spark.operators.dedup import spread_if_narrow
     from gentropy_spark.session import track_cache
 
     DEC12 = "decimal(38,12)"
-    emb = spread_if_narrow(
-        read_table(spark, sf_dir, "embeddings"), "vec_id"
-    )
-    # The width-checked double array, evaluated once per row below
-    # every generator that reads it.
-    xs = emb.select(_pca_x().alias("__x"))
-    # Means: one exploded-grain aggregation (E51's mu discipline).
-    ex = xs.select(F.posexplode("__x").alias("pos", "xj")).select(
-        (F.col("pos") + 1).alias("dim"), "xj"
-    )
-    n_row = emb.agg(F.count("*").cast("double").alias("n"))
-    mus = track_cache(
-        ex.groupBy("dim")
-        .agg(F.sum(F.col("xj").cast(DEC12)).cast("double").alias("sx"))
-        .crossJoin(F.broadcast(n_row))
-        .select("dim", (F.col("sx") / F.col("n")).alias("mu"))
-    )
+    xs, n_row, mus = _pca_means(spark, sf_dir)
+    mus = track_cache(mus)
     # The one corpus-grain stage: G via chained generators over the
     # row's own embedding (r18) — the old form self-joined the
     # exploded cx table on vec_id, shuffling the n×d table TWICE just
@@ -2613,7 +2612,7 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BEFORE the second posexplode, so they run once per (row, j) and
     # not once per (row, j, k); the k range is the suffix slice of the
     # row's own width.
-    mu_row = F.broadcast(mus.agg(_dim_table_to_array("mu").alias("mu_arr")))
+    mu_row = _mu_row(mus)
     e1 = xs.crossJoin(mu_row).select(
         "__x", "mu_arr", F.posexplode("__x").alias("jpos", "xj")
     )
@@ -3385,6 +3384,17 @@ def _doc_bigrams(docs: DataFrame) -> DataFrame:
     )
 
 
+def _doc_perplexity(scored: DataFrame) -> DataFrame:
+    """Per-doc bigram count, cross-entropy (6 dp) and perplexity 2^H
+    (4 dp) from per-bigram ``nll`` terms, summed in DECIMAL(38,12)."""
+    h = F.sum(F.col("nll").cast("decimal(38,12)")).cast("double") / F.count("*")
+    return scored.groupBy("doc_id").agg(
+        F.count("*").alias("n_bigrams"),
+        F.round(h, 6).alias("cross_entropy_bits"),
+        F.round(F.pow(F.lit(2.0), h), 4).alias("perplexity"),
+    )
+
+
 @prepared
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram-LM perplexity (SURVEY E30).
@@ -3443,24 +3453,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("nll"),
         )
     )
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"),
-        F.round(
-            (
-                F.sum(F.col("nll").cast("decimal(38,12)")).cast("double")
-                / F.count("*")
-            ),
-            6,
-        ).alias("cross_entropy_bits"),
-        F.round(
-            F.pow(
-                F.lit(2.0),
-                F.sum(F.col("nll").cast("decimal(38,12)")).cast("double")
-                / F.count("*"),
-            ),
-            4,
-        ).alias("perplexity"),
-    )
+    return _doc_perplexity(scored)
 
 
 def _lm_perplexity_sql() -> str:
@@ -3568,24 +3561,7 @@ def q_lm_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(t_row))
         .select("doc_id", F.round(-F.log2(p), 9).alias("nll"))
     )
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"),
-        F.round(
-            (
-                F.sum(F.col("nll").cast("decimal(38,12)")).cast("double")
-                / F.count("*")
-            ),
-            6,
-        ).alias("cross_entropy_bits"),
-        F.round(
-            F.pow(
-                F.lit(2.0),
-                F.sum(F.col("nll").cast("decimal(38,12)")).cast("double")
-                / F.count("*"),
-            ),
-            4,
-        ).alias("perplexity"),
-    )
+    return _doc_perplexity(scored)
 
 
 def _lm_kn_sql() -> str:
@@ -3643,6 +3619,23 @@ REGISTRY["lm_kn_perplexity"] = QuerySpec(q_lm_kn_perplexity, _lm_kn_sql())
 BPE_TOP_PAIRS = 20
 
 
+def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The BPE word-frequency dictionary (word, n): the one corpus-sized
+    stage of BPE training. The scan is spread when under-partitioned so
+    tokenize+count parallelizes (r15 — the 100x probe measured the
+    2-task scan, not the merge loop, as the growth driver; counts are
+    order-free so values are untouched)."""
+    from gentropy_spark.functions.text import tokens
+    from gentropy_spark.operators.dedup import spread_if_narrow
+
+    docs = spread_if_narrow(read_table(spark, sf_dir, "documents"), "doc_id")
+    return (
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+        .groupBy("word")
+        .agg(F.count("*").alias("n"))
+    )
+
+
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-scale BPE pair statistics (Sennrich et al. 2016, public
     method) — the inner loop of byte-pair-encoding tokenizer training.
@@ -3658,17 +3651,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from gentropy_spark.functions.text import tokens
-    from gentropy_spark.operators.dedup import spread_if_narrow
-
-    # Spread an under-partitioned scan: tokenize+count is the one
-    # corpus-sized stage (file-count-guarded; counts are order-free).
-    docs = spread_if_narrow(read_table(spark, sf_dir, "documents"), "doc_id")
-    word_freq = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
+    word_freq = _word_freq(spark, sf_dir)
     # expr form: substring with a DYNAMIC start position isn't
     # expressible through the Column API's substring (literal-only).
     pairs = word_freq.select(
@@ -4769,7 +4752,7 @@ def q_dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Truncate lineage per iteration (the dedup-fixpoint pattern,
         # operators/dedup.py): pr feeds the next iteration TWICE, so
         # an untruncated DAG doubles per round — 2^ITERS subplans.
-        pr = pr.localCheckpoint(eager=False)
+        pr = track_local_checkpoint(pr)
         contrib = (
             pr.join(edges, on=pr["node"] == edges["id_a"])
             .select(
@@ -6034,20 +6017,10 @@ def _bpe_train_loop(spark: SparkSession, sf_dir: str):
     Output: one row per merge step — (step, merged_pair, pair_count),
     the merge table a BPE tokenizer ships as its model artifact.
     """
-    from gentropy_spark.functions.text import tokens
-    from gentropy_spark.operators.dedup import spread_if_narrow
     from gentropy_spark.session import track_local_checkpoint
 
-    # The ONE corpus-sized stage of the trainer: spread an
-    # under-partitioned scan so tokenize+count parallelizes (r15 — the
-    # 100x probe measured the 2-task scan, not the merge loop, as the
-    # growth driver; counts are order-free so values are untouched).
-    docs = spread_if_narrow(read_table(spark, sf_dir, "documents"), "doc_id")
-    word_freq = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
+    # The ONE corpus-sized stage of the trainer.
+    word_freq = _word_freq(spark, sf_dir)
     state = word_freq.select(
         "word",
         "n",

@@ -53,22 +53,38 @@ GWAS_SQL = f"""
 """
 
 
-# --- D1: genomic-control lambda ------------------------------------------
-@prepared
-def q_gc_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
+def qc_metrics(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
+    """Per-study QC aggregates, one groupBy over one scan: any of
+    ``gc_lambda``, ``pz_corr``, ``mean_diff``, ``mean_beta`` and
+    ``n_variants``. The D1-D3 keys and the fused sumstat_qc_summary
+    select from this one set of expressions."""
     g = _gwas(spark, sf_dir)
     # z*z, not pow(z, 2): POW is libm-evaluated and may differ by 1 ulp
     # across engines; multiplication is IEEE-exact.
     z = F.col("beta") / F.col("se")
+    aggs = {
+        "gc_lambda": F.expr("percentile(z2, 0.5)") / CHI2_MEDIAN_1DF,
+        "pz_corr": F.round(F.corr("z", "z_from_p"), 6),
+        "mean_diff": F.sum(
+            F.round(F.col("z") - F.col("z_from_p"), 6).cast(DEC)
+        ).cast("double")
+        / F.count("*"),
+        "mean_beta": F.sum(F.col("beta").cast(DEC)).cast("double")
+        / F.count("*"),
+        "n_variants": F.count("*"),
+    }
     return (
-        g.withColumn("z2", z * z)
+        g.withColumn("z", z)
+        .withColumn("z2", z * z)
         .groupBy("study_id")
-        .agg(F.expr("percentile(z2, 0.5)").alias("z2_median"))
-        .select(
-            "study_id",
-            (F.col("z2_median") / CHI2_MEDIAN_1DF).alias("gc_lambda"),
-        )
+        .agg(*[aggs[c].alias(c) for c in cols])
     )
+
+
+# --- D1: genomic-control lambda ------------------------------------------
+@prepared
+def q_gc_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return qc_metrics(spark, sf_dir, ["gc_lambda"])
 
 
 GC_LAMBDA_SQL = f"""
@@ -81,20 +97,7 @@ GROUP BY study_id
 
 # --- D2: P-Z consistency --------------------------------------------------
 def q_pz_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _gwas(spark, sf_dir)
-    z = F.col("beta") / F.col("se")
-    return (
-        g.withColumn("z", z)
-        .groupBy("study_id")
-        .agg(
-            F.round(F.corr("z", "z_from_p"), 6).alias("pz_corr"),
-            (
-                F.sum(F.round(F.col("z") - F.col("z_from_p"), 6).cast(DEC))
-                .cast("double")
-                / F.count("*")
-            ).alias("mean_diff"),
-        )
-    )
+    return qc_metrics(spark, sf_dir, ["pz_corr", "mean_diff"])
 
 
 PZ_SQL = f"""
@@ -109,13 +112,7 @@ GROUP BY study_id
 
 # --- D3: mean beta --------------------------------------------------------
 def q_mean_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = _gwas(spark, sf_dir)
-    return g.groupBy("study_id").agg(
-        (F.sum(F.col("beta").cast(DEC)).cast("double") / F.count("*")).alias(
-            "mean_beta"
-        ),
-        F.count("*").alias("n_variants"),
-    )
+    return qc_metrics(spark, sf_dir, ["mean_beta", "n_variants"])
 
 
 MEAN_BETA_SQL = f"""

@@ -49,9 +49,6 @@ _SNAPSHOT_PRIORITY = [
     "dup_pagerank",
     "ann_ivfpq_topk",
     "minhash_calibration",
-    "kmv_distinct",
-    "hll_distinct",
-    "cms_heavy_hitters",
     # (b) plans/values changed THIS round (r18) -- must certify:
     # the window-fused PCA normaliser (power/topm/project/pca_topk),
     # the codegen tokens()/stopword rewrite and its heaviest consumers
@@ -105,6 +102,15 @@ _SNAPSHOT_PRIORITY = [
     "study_index_validate",
     "ukb_ppp_study_ingest",
     "variant_effect_normalise",
+    # (d) plans changed after r18, with no snapshot evidence since: the
+    # standalone L2G gene/distance keys now select from the factory's
+    # shared family pieces, and q1 runs the exact _dsum (q3/q5, which
+    # also sum through it, already sit in (c)). They replace the three
+    # sketch keys (kmv/hll/cms), whose plans are unchanged since their
+    # r18 evidence.
+    "l2g_gene_features",
+    "l2g_distance_features",
+    "q1_pricing_summary",
 ]
 
 

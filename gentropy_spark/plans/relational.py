@@ -36,6 +36,8 @@ EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 _SPLIT_SHIFT = 20  # micro-unit split base 2^20
 _SPLIT_BASE = 1 << _SPLIT_SHIFT
 _RINT_LIMIT = float(1 << 50)  # |x * 1e6| bound of the rint branch
+# |x| bound of the long micro-unit path: 9e12 * 1e6 < 2^63.
+_LONG_LIMIT = 9e12
 
 
 def _dsum(col: F.Column) -> F.Column:
@@ -77,22 +79,29 @@ def _dsum(col: F.Column) -> F.Column:
       (codegen fast path, ANSI overflows loudly). The hi/lo split keeps
       the long buffers in range up to ~9e12 rows per group at unit-ish
       magnitudes; ``uv`` itself must fit a long, i.e. |x| < ~9.2e12.
+      Rows at or above ``_LONG_LIMIT`` (and NaN/infinity) skip the long
+      sums and go to a third, plain DECIMAL(38,6) sum instead.
       Recombination happens per GROUP (not per row) in DECIMAL(38, 0),
       the division by 1e6 is exact (the quotient has <= 6 decimals,
-      below the result scale of 8), and the final decimal->double cast
-      is the same single correct rounding of the same exact rational
-      as the decimal-sum path.
+      below the result scale of 8), the large-row sum is added in
+      decimal (exact; a group with no rows on one side keeps the
+      other side's value, and an all-NULL group stays NULL), and the
+      final decimal->double cast is the same single correct rounding
+      of the same exact rational as the decimal-sum path.
     """
     y = col * F.lit(1e6)
     n = F.rint(y)
+    in_long = F.abs(col) < F.lit(_LONG_LIMIT)
     uv = F.when(
         (F.abs(y - n) < F.lit(1e-3)) & (F.abs(y) < F.lit(_RINT_LIMIT)),
         n.cast("long"),
-    ).otherwise((col.cast(DEC) * F.lit(1_000_000)).cast("long"))
+    ).when(in_long, (col.cast(DEC) * F.lit(1_000_000)).cast("long"))
     hi = F.sum(F.shiftright(uv, _SPLIT_SHIFT))
     lo = F.sum(uv.bitwiseAND(F.lit(_SPLIT_BASE - 1)))
     total = hi.cast("decimal(38,0)") * F.lit(_SPLIT_BASE) + lo
-    return (total / F.lit(1_000_000)).cast("double")
+    small = total / F.lit(1_000_000)
+    large = F.sum(F.when(~in_long, col.cast(DEC)))
+    return F.coalesce(small + large, small, large).cast("double")
 
 
 # --- A1: pricing summary (TPC-H Q1 shape) --------------------------------

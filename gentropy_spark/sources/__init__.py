@@ -1,3 +1,3 @@
-from gentropy_spark.sources.readers import Tables, read_table
+from gentropy_spark.sources.readers import read_table
 
-__all__ = ["Tables", "read_table"]
+__all__ = ["read_table"]

@@ -13,23 +13,8 @@ plain functions. Key behaviors kept:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def read_table(
@@ -43,7 +28,7 @@ def read_table(
     Args:
         spark: active session.
         sf_dir: e.g. ``/root/testdata/sf0.01``.
-        name: table name (one of TABLE_NAMES, or any parquet path stem).
+        name: table name (the parquet file stem, e.g. ``lineitem``).
         expected_schema: if given, assert read schema field names match.
 
     Returns:
@@ -130,23 +115,3 @@ def ts_micros(df: DataFrame, ts_col: str = "ts") -> "F.Column":
     if dtype == "timestamp_ntz":
         return F.unix_micros(_ntz_as_utc_instant(df, ts_col))
     return F.unix_micros(F.col(ts_col))
-
-
-@dataclass
-class Tables:
-    """Lazy handle bundle over one scale-factor directory.
-
-    Accessing ``.lineitem`` etc. returns a fresh DataFrame scan so each
-    query plan carries its own pushed filters/pruned columns.
-    """
-
-    spark: SparkSession
-    sf_dir: str
-    _cache: dict[str, DataFrame] = field(default_factory=dict)
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name.startswith("_"):
-            raise AttributeError(name)
-        if name not in TABLE_NAMES:
-            raise AttributeError(f"unknown table {name!r}")
-        return read_table(self.spark, self.sf_dir, name)

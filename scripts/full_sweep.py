@@ -6,15 +6,21 @@ every oracle key compared sorted-row/sorted-column exact, rows-only
 keys executed and counted. Mirrors the driver's compare (NaN
 normalized, isoformat timestamps) in a vanilla-shape session.
 
+Each key also records ``plan_sha``, a digest of its optimised logical
+plan with expression ids and PySpark lambda-variable suffixes stripped,
+so diffing two sweep files lists exactly the keys whose plans changed.
+
 Run: python scripts/full_sweep.py [--sf-dir DIR] [--out FILE]
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import math
 import os
+import re
 import sys
 import time
 
@@ -34,6 +40,22 @@ def _norm(v):
     return v
 
 
+# Per-process ids: ``#123`` expression ids, the ``[plan_id=123]`` of
+# exchanges inside cached relations, and the ``_123`` suffix PySpark's
+# ``freshVarName`` gives the x/y/z variables of Column-API lambdas.
+_PLAN_IDS = re.compile(r"#\d+|(plan_id=)\d+|\b([xyz])_\d+\b")
+
+
+def normalized_plan(sdf) -> str:
+    """The optimised logical plan with per-process ids stripped."""
+    plan = sdf._jdf.queryExecution().optimizedPlan().toString()
+    return _PLAN_IDS.sub(lambda m: m.group(1) or m.group(2) or "", plan)
+
+
+def plan_digest(sdf) -> str:
+    return hashlib.sha256(normalized_plan(sdf).encode()).hexdigest()[:16]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -50,12 +72,12 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from gentropy_spark.plans import full_registry
-    from gentropy_spark.session import release_caches
+    from gentropy_spark.session import _default_driver_mem, release_caches
 
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count()}]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -83,6 +105,7 @@ def main() -> None:
         release_caches()
         try:
             sdf = spec.fn(spark, args.sf_dir)
+            plan_sha = plan_digest(sdf)
             srows = [tuple(r) for r in sdf.collect()]
             if spec.oracle is None:
                 n_rows_only += 1
@@ -90,6 +113,7 @@ def main() -> None:
                     "status": "rows_only",
                     "rows": len(srows),
                     "sec": round(time.perf_counter() - t0, 2),
+                    "plan_sha": plan_sha,
                 }
                 continue
             res = con.execute(spec.oracle)
@@ -114,6 +138,7 @@ def main() -> None:
             "status": "exact" if ok else "MISMATCH",
             "rows": len(srows),
             "sec": round(time.perf_counter() - t0, 2),
+            "plan_sha": plan_sha,
         }
         if ok:
             n_ok += 1
@@ -131,7 +156,8 @@ def main() -> None:
         "head_note": args.note
         or (
             f"full-registry value-exact sweep at {sf_base} "
-            f"({args.sf_dir}; vanilla-shape session, 48g driver, "
+            f"({args.sf_dir}; vanilla-shape session, "
+            f"{_default_driver_mem()} driver, "
             "sorted-row compare vs DuckDB oracle)"
         ),
         "sf": sf_label,

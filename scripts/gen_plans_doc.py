@@ -10,7 +10,7 @@ from gentropy_spark.session import get_session
 SF = "/root/testdata/sf0.001"
 
 AUDIT = {
-    "q1_pricing_summary": "Pushed shipdate filter + pruned scan; partial (map-side) decimal sums; one exchange.",
+    "q1_pricing_summary": "Pushed shipdate filter + pruned scan; partial (map-side) exact sums (long micro-unit hi/lo split, a decimal sum only for |x| >= 9e12); one exchange.",
     "q5_local_supplier": "Dims broadcast (supplier/nation/region); AQE picks strategy for fact-scaled joins.",
     "window_clump_leads": "Single hash exchange on (study, contig) shared by the lag, ranking and aggregate windows.",
     "locus_breaker": "Same single-exchange sessionization shape.",
@@ -53,7 +53,7 @@ AUDIT = {
     "panukbb_ld_align": "Equi-join on (chromosome, position) with orientation filter; per-idx rank dedup rides one exchange; group-by-min dedup replaces nondeterministic dropDuplicates.",
     "decode_study_ingest": "Manifest regexp parse stays in codegen; aptamer aggregate joined on aptamer_id; complex dim broadcast.",
     # r11 additions
-    "l2g_distance_features": "Mean half: one (locus, gene) partial-agg groupBy over the broadcast footprint join; sentinel half: broadcast leads x genes; union-agg combine; one locus window for the four nbh ratios.",
+    "l2g_distance_features": "A view of the feature factory: mean half is the fused footprint family's (locus, gene) partial-agg groupBy over the broadcast footprint join (pruned to the distance sums); sentinel half: broadcast leads x genes; the factory's union-agg combine on one locus-prefix exchange, which the locus window for the four nbh ratios reuses.",
     "l2g_feature_matrix": "r11 fused assembly: distance-mean sums ride the footprint family's groupBy, sentinel is a broadcast join, one shared locus window computes all four distance nbh ratios after the union-agg (+3 exchanges for 8 new features).",
     "complextab_parse": "Pure regexp/split parse projection over the supplier scan; union of two fabricated files; posexplode for components; zero data-side joins.",
     "text_quality": "Staged HOF projections: tokenize once, stopword/length HOF aggregates over the column ref, pure-codegen ratio projection; zero exchanges.",

@@ -390,6 +390,8 @@ def test_dsum_split_identity_matches_decimal_sum(spark):
         # groups that mix both branches
         103: [12.34, -0.01, 0.0000025, 1e12, 99.99],
         104: [2**50 / 1e6 - 1, 2**50 / 1e6, -7.5e-6, 0.5],
+        # |x| past the long micro-unit range
+        106: [1e13, 1.0],
     }
     rows.extend((g, v) for g, vs in edge.items() for v in vs)
 

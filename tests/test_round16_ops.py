@@ -37,24 +37,34 @@ def test_bpe_encode_vocab_join_not_hinted(spark):
 def test_bpe_checkpoints_released(spark):
     """Each bpe build localCheckpoints K vocab-grain states whose
     internal RDDs the CacheManager cannot see; release_caches() must
-    free them (r15 advisory 2)."""
-    from gentropy_spark.plans.llm_pipeline import BPE_TRAIN_MERGES, q_bpe_train
+    free them (r15 advisory 2). The same holds for every other
+    iterative key that checkpoints per round: the dedup label fixpoint,
+    the PageRank iterations and the ontology closure depths."""
+    from gentropy_spark.plans.llm_pipeline import BPE_TRAIN_MERGES
+    from gentropy_spark.plans.registry import full_registry
     from gentropy_spark.session import release_caches
 
-    release_caches()  # start from a clean slate
+    reg = full_registry()
     sc = spark.sparkContext
-    before = sc._jsc.getPersistentRDDs().size()
-    q_bpe_train(spark, SF).collect()
-    during = sc._jsc.getPersistentRDDs().size()
-    assert during >= before + BPE_TRAIN_MERGES, (
-        f"expected >= {BPE_TRAIN_MERGES} checkpointed states, "
-        f"saw {during - before}"
-    )
-    release_caches()
-    after = sc._jsc.getPersistentRDDs().size()
-    assert after <= before, (
-        f"release_caches leaked {after - before} checkpointed RDDs"
-    )
+    for key, min_states in (
+        ("bpe_train", BPE_TRAIN_MERGES),
+        ("dedup_clusters", 1),
+        ("dup_pagerank", 1),
+        ("ontology_closure", 1),
+    ):
+        release_caches()  # start from a clean slate
+        before = sc._jsc.getPersistentRDDs().size()
+        reg[key].fn(spark, SF).collect()
+        during = sc._jsc.getPersistentRDDs().size()
+        assert during >= before + min_states, (
+            f"{key}: expected >= {min_states} checkpointed states, "
+            f"saw {during - before}"
+        )
+        release_caches()
+        after = sc._jsc.getPersistentRDDs().size()
+        assert after <= before, (
+            f"{key}: release_caches leaked {after - before} checkpointed RDDs"
+        )
 
 
 def test_semi_lead_clump_width_scales_with_conf(spark):
