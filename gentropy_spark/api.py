@@ -12,8 +12,12 @@ engine's operators so a reference pipeline ports line by line:
     overlaps = loci.find_overlaps(other_loci)
     coloc_res = Colocalisation.coloc(tag_overlaps)
 
-Everything delegates to ``operators/`` — the façade adds zero plan
-nodes; ``.df`` always exposes the underlying DataFrame.
+Everything delegates, and the façade adds zero plan nodes: the
+genomics verbs call ``operators/``, and the ``Corpus`` verbs call the
+same stage functions the registry keys and the fused ``corpus_curate``
+plan run (sampling, packing, PII redaction and the canonical-duplicate
+filter in plans/llm_pipeline.py), so no verb keeps its own copy.
+``.df`` always exposes the underlying DataFrame.
 """
 
 from __future__ import annotations
@@ -167,7 +171,7 @@ class Corpus:
     The document-side counterpart of SummaryStatistics: wraps a
     documents DataFrame (doc_id, text, ...) and exposes the curation
     verbs — dedup, clustering, sampling, packing, redaction — each
-    delegating to the same operators the registry queries use.
+    delegating to the same function the registry queries use.
     """
 
     df: DataFrame
@@ -193,55 +197,28 @@ class Corpus:
 
     def canonical_only(self) -> "Corpus":
         """Drop every non-canonical duplicate (cluster resolution)."""
-        clusters = self.duplicate_clusters()
-        kept = self.df.join(
-            clusters.filter(F.col("is_canonical")).select("doc_id"),
-            on="doc_id",
-        )
-        return Corpus(kept)
+        from gentropy_spark.operators.dedup import minhash_lsh_pairs
+        from gentropy_spark.plans.llm_pipeline import drop_non_canonical
+
+        return Corpus(drop_non_canonical(self.df, minhash_lsh_pairs(self.df)))
 
     def sample_stratified(
         self, rates: dict[str, str], default: str, stratum_col: str = "lang"
     ) -> "Corpus":
         """Deterministic md5-keyspace sampling per stratum (4-hex-char
-        thresholds, e.g. '28f5' keeps ~16%)."""
-        key = F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|", F.col(stratum_col), F.col("doc_id").cast("string")
-                )
-            ),
-            1,
-            4,
-        )
-        thr = F.lit(default)
-        for stratum, rate in rates.items():
-            thr = F.when(F.col(stratum_col) == stratum, F.lit(rate)).otherwise(thr)
-        return Corpus(self.df.filter(key < thr))
+        thresholds, e.g. '28f5' keeps ~16%); adds the ``sample_key``."""
+        from gentropy_spark.plans.llm_pipeline import stratified_sample
+
+        return Corpus(stratified_sample(self.df, stratum_col, rates, default))
 
     def pack_sequences(
         self, budget_tokens: int, shard_col: str = "source"
     ) -> DataFrame:
-        from pyspark.sql import Window
+        from gentropy_spark.plans.llm_pipeline import pack_documents
 
-        from gentropy_spark.functions.text import token_count_bpe_ish
-
-        w = (
-            Window.partitionBy(shard_col)
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        toked = self.df.select(
-            "doc_id", shard_col, token_count_bpe_ish(F.col("text")).alias("n_tokens")
-        )
-        return toked.withColumn("cum_tokens", F.sum("n_tokens").over(w)).withColumn(
-            "bin_id", F.expr(f"(cum_tokens - 1) div {budget_tokens}")
-        )
+        return pack_documents(self.df, budget_tokens, shard_col)
 
     def pii_redact(self) -> DataFrame:
-        from gentropy_spark.plans.llm_pipeline import PII_PATTERNS
+        from gentropy_spark.plans.llm_pipeline import redact_pii
 
-        out = F.col("text")
-        for name, pat in PII_PATTERNS:
-            out = F.regexp_replace(out, pat, f"<{name.upper()}>")
-        return self.df.withColumn("text", out)
+        return self.df.withColumn("text", redact_pii(F.col("text")))

@@ -1,15 +1,16 @@
 """Typed per-step configuration schemas for the DAG runner.
 
 The reference registers a typed dataclass config per step and lets
-Hydra validate it before execution
-(/root/reference/src/gentropy/config.py:1-893). This module is the
-dependency-free counterpart: each parameterizable step declares a
-``Param`` schema (type, default, bounds, choices); ``validate_config``
-checks a pipeline JSON against it BEFORE any Spark work and reports
-every violation with a full field path (``steps.clump.params.window``),
-and ``resolve_step`` turns a validated step into the (spark, sf_dir)
-callable the runner executes — the registry query for plain steps, a
-parameter-bound operator closure for parameterized ones.
+Hydra validate it before execution (its ``config.py``). This module is
+the dependency-free counterpart: each parameterizable step declares a
+``Param`` schema (type, bounds, choices) per keyword of its registry
+builder; ``validate_config`` checks a pipeline JSON against it BEFORE
+any Spark work and reports every violation with a full field path
+(``steps.clump.params.window``), and ``resolve_step`` turns a validated
+step into the (spark, sf_dir) callable the runner executes: the
+registry builder itself, bound to the supplied params. Defaults live
+only in the builders' signatures, and a prepared builder memoises each
+parameter binding under its own key.
 
 Steps without a schema accept no params (a supplied param is a config
 error, mirroring Hydra's strict struct mode).
@@ -17,6 +18,7 @@ error, mirroring Hydra's strict struct mode).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Any, Callable
 
@@ -25,10 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 @dataclass(frozen=True)
 class Param:
-    """One typed step parameter: type, default, optional bounds/choices."""
+    """One typed step parameter: type, optional bounds/choices."""
 
     type: type
-    default: Any
     min: float | None = None
     max: float | None = None
     choices: tuple[Any, ...] | None = None
@@ -56,166 +57,32 @@ class Param:
         return errs
 
 
-def _clump_params() -> dict[str, Param]:
-    from gentropy_spark.plans.genomics import CLUMP_WINDOW_US, SIGNIF_MIN
-
-    return {
-        "window": Param(int, CLUMP_WINDOW_US, min=1),
-        "min_signif": Param(float, SIGNIF_MIN, min=0.0),
-    }
-
-
-def _locus_breaker_params() -> dict[str, Param]:
-    from gentropy_spark.plans.genomics import (
-        LB_BASELINE,
-        LB_DIST_US,
-        LB_FLANK_US,
-        LB_LEAD,
-    )
-
-    return {
-        "baseline_signif": Param(float, LB_BASELINE, min=0.0),
-        "distance_cutoff": Param(int, LB_DIST_US, min=1),
-        "lead_signif": Param(float, LB_LEAD, min=0.0),
-        "flank": Param(int, LB_FLANK_US, min=0),
-    }
-
-
-def _minhash_params() -> dict[str, Param]:
-    from gentropy_spark.plans.llm_pipeline import (
-        MINHASH_BANDS,
-        MINHASH_NUM_HASHES,
-    )
-
-    return {
-        "num_hashes": Param(int, MINHASH_NUM_HASHES, min=2, max=512),
-        "bands": Param(int, MINHASH_BANDS, min=1, max=128),
-        "min_jaccard": Param(float, 0.2, min=0.0, max=1.0),
-    }
-
-
-def _ivf_params() -> dict[str, Param]:
-    from gentropy_spark.plans.llm_pipeline import IVF_N_CENTROIDS, IVF_N_PROBE
-
-    return {
-        "n_centroids": Param(int, IVF_N_CENTROIDS, min=1),
-        "n_probe": Param(int, IVF_N_PROBE, min=1),
-        "k": Param(int, 5, min=1),
-    }
-
-
-def _pics_params() -> dict[str, Param]:
-    from gentropy_spark.plans.genomics import PICS_TAU
-
-    return {"tau": Param(int, PICS_TAU, min=1)}
-
-
-# Parameterizable steps: query key -> lazy schema factory. Lazy so that
-# importing this module never triggers the plan-module import chain.
-STEP_PARAM_SCHEMAS: dict[str, Callable[[], dict[str, Param]]] = {
-    "window_clump_leads": _clump_params,
-    "locus_breaker": _locus_breaker_params,
-    "dedup_minhash_lsh": _minhash_params,
-    "ann_ivf_topk": _ivf_params,
-    "pics_finemap": _pics_params,
+# Parameterizable steps: query key -> {param: Param}. Every param is a
+# keyword of the step's registry builder, whose signature holds the
+# default (the module constant the oracle SQL bakes in).
+STEP_PARAM_SCHEMAS: dict[str, dict[str, Param]] = {
+    "window_clump_leads": {
+        "window": Param(int, min=1),
+        "min_signif": Param(float, min=0.0),
+    },
+    "locus_breaker": {
+        "baseline_signif": Param(float, min=0.0),
+        "distance_cutoff": Param(int, min=1),
+        "lead_signif": Param(float, min=0.0),
+        "flank": Param(int, min=0),
+    },
+    "dedup_minhash_lsh": {
+        "num_hashes": Param(int, min=2, max=512),
+        "bands": Param(int, min=1, max=128),
+        "min_jaccard": Param(float, min=0.0, max=1.0),
+    },
+    "ann_ivf_topk": {
+        "n_centroids": Param(int, min=1),
+        "n_probe": Param(int, min=1),
+        "k": Param(int, min=1),
+    },
+    "pics_finemap": {"tau": Param(int, min=1)},
 }
-
-
-def _bind_params(query: str, params: dict[str, Any]) -> Callable[
-    [SparkSession, str], DataFrame
-]:
-    """Parameter-bound operator closure for a parameterized step."""
-    if query == "window_clump_leads":
-
-        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from gentropy_spark.operators.clumping import window_clump
-            from gentropy_spark.plans.genomics import sumstats
-
-            return window_clump(
-                sumstats(spark, sf_dir),
-                window=params["window"],
-                min_signif=params["min_signif"],
-            )
-
-        return fn
-    if query == "locus_breaker":
-
-        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from gentropy_spark.operators.clumping import locus_breaker
-            from gentropy_spark.plans.genomics import sumstats
-
-            return locus_breaker(
-                sumstats(spark, sf_dir),
-                baseline_signif=params["baseline_signif"],
-                distance_cutoff=params["distance_cutoff"],
-                lead_signif=params["lead_signif"],
-                flank=params["flank"],
-            )
-
-        return fn
-    if query == "dedup_minhash_lsh":
-
-        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from gentropy_spark.operators.dedup import minhash_lsh_pairs
-            from gentropy_spark.sources.readers import read_table
-
-            return minhash_lsh_pairs(
-                read_table(spark, sf_dir, "documents"),
-                num_hashes=params["num_hashes"],
-                bands=params["bands"],
-                min_jaccard=params["min_jaccard"],
-            )
-
-        return fn
-    if query == "ann_ivf_topk":
-
-        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from pyspark.sql import functions as F
-
-            from gentropy_spark.operators.similarity import ivf_topk
-            from gentropy_spark.plans.llm_pipeline import EMB_DIM
-            from gentropy_spark.sources.readers import read_table
-
-            emb = read_table(spark, sf_dir, "embeddings")
-            queries = emb.filter(F.col("vec_id") < 10).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("vec"),
-            )
-            corpus = emb.filter(F.col("vec_id") >= 10).select(
-                F.col("vec_id").alias("corpus_id"),
-                F.col("embedding").alias("vec"),
-            )
-            return ivf_topk(
-                queries,
-                corpus,
-                n_centroids=params["n_centroids"],
-                n_probe=params["n_probe"],
-                k=params["k"],
-                dim=EMB_DIM,
-            )
-
-        return fn
-    if query == "pics_finemap":
-
-        def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from pyspark.sql import functions as F
-
-            from gentropy_spark.operators.clumping import _cluster_seq
-            from gentropy_spark.operators.finemapping import pics
-            from gentropy_spark.plans.genomics import (
-                CLUMP_WINDOW_US,
-                SIGNIF_MIN,
-                sumstats,
-            )
-
-            ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
-            clustered = _cluster_seq(
-                ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
-            )
-            return pics(clustered, tau=params["tau"])
-
-        return fn
-    raise ValueError(f"no parameter binding for {query!r}")  # pragma: no cover
 
 
 def validate_config(cfg: Any) -> list[str]:
@@ -265,9 +132,7 @@ def validate_config(cfg: Any) -> list[str]:
         if not isinstance(params, dict):
             errs.append(f"{path}.params: expected object")
             continue
-        schema = (
-            STEP_PARAM_SCHEMAS[query]() if query in STEP_PARAM_SCHEMAS else {}
-        )
+        schema = STEP_PARAM_SCHEMAS.get(query, {})
         for pname, pval in params.items():
             if pname not in schema:
                 known = sorted(schema) if schema else "none (step takes no params)"
@@ -280,19 +145,18 @@ def validate_config(cfg: Any) -> list[str]:
 def resolve_step(
     query: str, params: dict[str, Any]
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """Validated step -> executable (defaults filled for omitted params)."""
+    """Validated step -> executable: the registry builder, bound to the
+    supplied params (omitted ones keep the builder's defaults)."""
     from gentropy_spark.plans import full_registry
 
-    if query in STEP_PARAM_SCHEMAS:
-        schema = STEP_PARAM_SCHEMAS[query]()
-        bound = {
-            k: (
-                float(params[k])
-                if p.type is float and k in params
-                else params.get(k, p.default)
-            )
-            for k, p in schema.items()
-        }
-        if params:
-            return _bind_params(query, bound)
-    return full_registry()[query].fn
+    fn = full_registry()[query].fn
+    if not params:
+        return fn
+    schema = STEP_PARAM_SCHEMAS[query]
+    return functools.partial(
+        fn,
+        **{
+            k: float(v) if schema[k].type is float else v
+            for k, v in params.items()
+        },
+    )

@@ -129,11 +129,7 @@ def _translate_params(
 ) -> dict[str, Any]:
     from gentropy_spark.config import STEP_PARAM_SCHEMAS
 
-    schema = (
-        STEP_PARAM_SCHEMAS[engine_key]()
-        if engine_key in STEP_PARAM_SCHEMAS
-        else {}
-    )
+    schema = STEP_PARAM_SCHEMAS.get(engine_key, {})
     name_map = PARAM_NAME_MAP.get(engine_key, {})
     out: dict[str, Any] = {}
     for key, value in raw.items():

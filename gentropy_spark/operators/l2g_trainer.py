@@ -31,6 +31,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import SparkSession
 
+from gentropy_spark.operators.l2g_model import _eval_tree
+
 
 def _leaf_value(
     g_sum: float, h_sum: float, lam: float, alpha: float
@@ -133,16 +135,6 @@ def fit_tree(
     return grow(np.arange(len(g)), 0)
 
 
-def predict_tree(tree: dict, X: np.ndarray) -> np.ndarray:
-    if "leaf" in tree:
-        return np.full(len(X), tree["leaf"])
-    m = X[:, tree["feat"]] <= tree["thr"]
-    out = np.empty(len(X))
-    out[m] = predict_tree(tree["left"], X[m])
-    out[~m] = predict_tree(tree["right"], X[~m])
-    return out
-
-
 def fit_gbm(
     X: np.ndarray,
     y: np.ndarray,
@@ -176,8 +168,14 @@ def fit_gbm(
         ~valid_mask if valid_mask is not None else np.ones(len(y), dtype=bool)
     )
     Xt, yt = X[train_mask], y[train_mask]
+    # Feature columns by index: the frozen model's evaluator keys its
+    # columns by feature name, the trainer's trees by feature index.
+    cols_t = dict(enumerate(Xt.T))
     margin_t = np.zeros(len(yt))
-    margin_v = np.zeros(int(valid_mask.sum())) if valid_mask is not None else None
+    margin_v = None
+    if valid_mask is not None:
+        cols_v = dict(enumerate(X[valid_mask].T))
+        margin_v = np.zeros(int(valid_mask.sum()))
     trees: list[dict] = []
     best_loss, best_n, stall = np.inf, 0, 0
     for _ in range(n_trees):
@@ -189,9 +187,9 @@ def fit_gbm(
             min_child_weight=min_child_weight,
         )
         trees.append(t)
-        margin_t += lr * predict_tree(t, Xt)
+        margin_t += lr * _eval_tree(t, cols_t, len(Xt))
         if early_stopping_rounds and margin_v is not None:
-            margin_v += lr * predict_tree(t, X[valid_mask])
+            margin_v += lr * _eval_tree(t, cols_v, len(margin_v))
             pv = 1.0 / (1.0 + np.exp(-margin_v))
             loss = logloss(pv, y[valid_mask])
             if loss < best_loss - tol:
@@ -207,8 +205,9 @@ def fit_gbm(
 
 def predict_margin(trees: list[dict], X: np.ndarray, lr: float) -> np.ndarray:
     m = np.zeros(len(X))
+    cols = dict(enumerate(X.T))
     for t in trees:
-        m += lr * predict_tree(t, X)
+        m += lr * _eval_tree(t, cols, len(X))
     return m
 
 

@@ -91,11 +91,14 @@ _RANKED_SQL_TEMPLATE = """
 
 # --- C1: window-based clumping -------------------------------------------
 @prepared
-def q_window_clump_leads(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_window_clump_leads(
+    spark: SparkSession,
+    sf_dir: str,
+    window: int = CLUMP_WINDOW_US,
+    min_signif: float = SIGNIF_MIN,
+) -> DataFrame:
     return window_clump(
-        sumstats(spark, sf_dir),
-        window=CLUMP_WINDOW_US,
-        min_signif=SIGNIF_MIN,
+        sumstats(spark, sf_dir), window=window, min_signif=min_signif
     )
 
 
@@ -110,13 +113,20 @@ WHERE lead_rank = 1
 
 # --- C3: locus-breaker sessionization ------------------------------------
 @prepared
-def q_locus_breaker(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_locus_breaker(
+    spark: SparkSession,
+    sf_dir: str,
+    baseline_signif: float = LB_BASELINE,
+    distance_cutoff: int = LB_DIST_US,
+    lead_signif: float = LB_LEAD,
+    flank: int = LB_FLANK_US,
+) -> DataFrame:
     return locus_breaker(
         sumstats(spark, sf_dir),
-        baseline_signif=LB_BASELINE,
-        distance_cutoff=LB_DIST_US,
-        lead_signif=LB_LEAD,
-        flank=LB_FLANK_US,
+        baseline_signif=baseline_signif,
+        distance_cutoff=distance_cutoff,
+        lead_signif=lead_signif,
+        flank=flank,
     )
 
 
@@ -453,12 +463,14 @@ PICS_TAU = 10_800_000_000  # 3 h distance-decay scale for synthetic r²
 
 
 @prepared
-def q_pics_finemap(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_pics_finemap(
+    spark: SparkSession, sf_dir: str, tau: int = PICS_TAU
+) -> DataFrame:
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
     clustered = _cluster_seq(
         ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
     )
-    return pics(clustered, tau=PICS_TAU)
+    return pics(clustered, tau=tau)
 
 
 def _pics_sql() -> str:

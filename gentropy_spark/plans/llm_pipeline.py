@@ -140,13 +140,19 @@ WHERE ROUND(n_common / (sa.set_size + sb.set_size - n_common), 6) >= {MIN_JACCAR
 # --- E3/E4: MinHash LSH + SimHash (oracle-exact since r2: the hashes
 # are the cross-engine polynomial family from functions/xhash.py) -----------
 @prepared
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dedup_minhash(
+    spark: SparkSession,
+    sf_dir: str,
+    num_hashes: int = MINHASH_NUM_HASHES,
+    bands: int = MINHASH_BANDS,
+    min_jaccard: float = MIN_JACCARD,
+) -> DataFrame:
     return minhash_lsh_pairs(
         read_table(spark, sf_dir, "documents"),
         n=SHINGLE_N,
-        num_hashes=MINHASH_NUM_HASHES,
-        bands=MINHASH_BANDS,
-        min_jaccard=MIN_JACCARD,
+        num_hashes=num_hashes,
+        bands=bands,
+        min_jaccard=min_jaccard,
     )
 
 
@@ -731,9 +737,17 @@ REGISTRY.update(
 # --- E6b: IVF-Flat ANN (deterministic coarse quantizer) -------------------
 IVF_N_CENTROIDS = 16
 IVF_N_PROBE = 4
+IVF_K = 5
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+@prepared
+def q_ann_ivf(
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int = IVF_N_CENTROIDS,
+    n_probe: int = IVF_N_PROBE,
+    k: int = IVF_K,
+) -> DataFrame:
     from gentropy_spark.operators.similarity import ivf_topk
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -746,9 +760,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(
         queries,
         corpus,
-        n_centroids=IVF_N_CENTROIDS,
-        n_probe=IVF_N_PROBE,
-        k=5,
+        n_centroids=n_centroids,
+        n_probe=n_probe,
+        k=k,
         dim=EMB_DIM,
     )
 
@@ -801,7 +815,7 @@ SELECT query_id, corpus_id, cosine, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY cosine DESC, corpus_id) AS INT) AS rank
       FROM scored)
-WHERE rank <= 5
+WHERE rank <= {IVF_K}
 """
 
 
@@ -1103,20 +1117,29 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the same predicate runs on any engine that has md5.
     """
     docs = read_table(spark, sf_dir, "documents")
+    return stratified_sample(docs.select("doc_id", "lang", "source"))
+
+
+def stratified_sample(
+    df: DataFrame,
+    stratum_col: str = "lang",
+    rates: dict[str, str] = SAMPLE_RATES,
+    default: str = SAMPLE_DEFAULT,
+) -> DataFrame:
+    """``df`` plus its ``sample_key`` (the first 4 hex chars of
+    md5(stratum|doc_id)), keeping the rows whose key sorts below their
+    stratum's threshold in ``rates`` (``default`` for other strata)."""
     key = F.substring(
-        F.md5(F.concat_ws("|", F.col("lang"), F.col("doc_id").cast("string"))),
+        F.md5(
+            F.concat_ws("|", F.col(stratum_col), F.col("doc_id").cast("string"))
+        ),
         1,
         4,
     )
-    thr = F.lit(SAMPLE_DEFAULT)
-    for lang, rate in SAMPLE_RATES.items():
-        thr = F.when(F.col("lang") == lang, F.lit(rate)).otherwise(thr)
-    return docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        key.alias("sample_key"),
-    ).filter(F.col("sample_key") < thr)
+    thr = F.lit(default)
+    for stratum, rate in rates.items():
+        thr = F.when(F.col(stratum_col) == stratum, F.lit(rate)).otherwise(thr)
+    return df.withColumn("sample_key", key).filter(F.col("sample_key") < thr)
 
 
 _SAMPLE_THR_SQL = "CASE " + " ".join(
@@ -1163,24 +1186,42 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast per-bucket prefix offsets — identical values, bounded
     per-task sort, exchange keyed on (source, bucket).
     """
-    from gentropy_spark.functions.text import token_count_bpe_ish
-    from gentropy_spark.operators.packing import bucketed_cumsum
+    return pack_documents(read_table(spark, sf_dir, "documents"))
 
-    docs = read_table(spark, sf_dir, "documents")
+
+def pack_documents(
+    docs: DataFrame,
+    budget_tokens: int = PACK_BUDGET_TOKENS,
+    part_col: str = "source",
+) -> DataFrame:
+    """Token-count each document's ``text`` and pack the documents into
+    training bins (``pack_token_bins``)."""
+    from gentropy_spark.functions.text import token_count_bpe_ish
+
     toked = docs.select(
         "doc_id",
-        "source",
+        part_col,
         token_count_bpe_ish(F.col("text")).alias("n_tokens"),
     )
+    return pack_token_bins(toked, budget_tokens, part_col)
+
+
+def pack_token_bins(
+    toked: DataFrame,
+    budget_tokens: int = PACK_BUDGET_TOKENS,
+    part_col: str = "source",
+) -> DataFrame:
+    """``toked`` (doc_id, ``part_col``, n_tokens, ...) plus the running
+    ``cum_tokens`` per ``part_col`` in doc_id order and the contiguous-
+    fill ``bin_id`` of each document. The cumsum is two-level
+    (operators/packing.py), so no task sorts a whole part's stream."""
+    from gentropy_spark.operators.packing import bucketed_cumsum
+
     cum = bucketed_cumsum(
-        toked, part_col="source", order_col="doc_id", value_col="n_tokens"
+        toked, part_col=part_col, order_col="doc_id", value_col="n_tokens"
     )
-    return cum.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        "cum_tokens",
-        F.expr(f"(cum_tokens - 1) div {PACK_BUDGET_TOKENS}").alias("bin_id"),
+    return cum.select(*toked.columns, "cum_tokens").withColumn(
+        "bin_id", F.expr(f"(cum_tokens - 1) div {budget_tokens}")
     )
 
 
@@ -1608,21 +1649,27 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically, which the oracle enforces.
     """
     docs = read_table(spark, sf_dir, "documents")
-    out = F.col("text")
-    counts = []
-    for name, pat in PII_PATTERNS:
-        counts.append(
-            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))).alias(
-                f"n_{name}"
-            )
+    counts = [
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))).alias(
+            f"n_{name}"
         )
-        out = F.regexp_replace(out, pat, f"<{name.upper()}>")
+        for name, pat in PII_PATTERNS
+    ]
+    out = redact_pii(F.col("text"))
     return docs.select(
         "doc_id",
         *counts,
         F.md5(out).alias("redacted_md5"),
         F.length(out).alias("redacted_len"),
     )
+
+
+def redact_pii(text: F.Column) -> F.Column:
+    """``text`` with every ``PII_PATTERNS`` match replaced by its typed
+    placeholder (``<EMAIL>``, ...), applied in pattern order."""
+    for name, pat in PII_PATTERNS:
+        text = F.regexp_replace(text, pat, f"<{name.upper()}>")
+    return text
 
 
 def _pii_sql() -> str:
@@ -1790,18 +1837,8 @@ def q_corpus_curate(
     base one (pinned by a scan-count test). Off by default: the base
     key's oracle is unchanged.
     """
-    from gentropy_spark.operators.dedup import duplicate_drop_ids
-
     scanned = _curate_scanned(spark, sf_dir, classifier_gate)
-    # is_canonical via ANTI-join on the non-canonical drop set (tiny:
-    # bounded by duplicate-edge endpoints) — not an inner join against
-    # the full duplicate_clusters output, which would drag every corpus
-    # row through a cluster-size window just to test one boolean (r12;
-    # values identical by construction). The broadcast hint is explicit
-    # (r14): leaving it to AQE planned a SortMergeJoin LeftAnti in the
-    # static plan whose ensure-requirements exchanges survived the
-    # runtime BHJ conversion as dead stages.
-    drop = duplicate_drop_ids(q_dedup_minhash(spark, sf_dir))
+    canonical = drop_non_canonical(scanned, q_dedup_minhash(spark, sf_dir))
     # Decontamination via the BLOOM probe (r13, was the exact 5-gram
     # set join): the Bloom path is the scale posture E20b exists for —
     # the eval side compresses to a fixed 4096-word broadcast array and
@@ -1821,45 +1858,31 @@ def q_corpus_curate(
     )
     if classifier_gate:
         gate = gate & (F.col("quality_score") >= F.lit(CURATE_MIN_QSCORE))
-    kept = (
-        scanned
-        .join(F.broadcast(drop), on="doc_id", how="left_anti")
-        .join(decon, on="doc_id")  # inner: benchmark split drops out here
-        .filter(gate)
+    # inner join: the benchmark split drops out here
+    kept = canonical.join(decon, on="doc_id").filter(gate)
+    sampled = stratified_sample(kept, "pred_lang")
+    return pack_token_bins(
+        sampled.select("doc_id", "source", "pred_lang", "n_tokens")
     )
-    key = F.substring(
-        F.md5(
-            F.concat_ws("|", F.col("pred_lang"), F.col("doc_id").cast("string"))
-        ),
-        1,
-        4,
-    )
-    thr = F.lit(SAMPLE_DEFAULT)
-    for lg, rate in SAMPLE_RATES.items():
-        thr = F.when(F.col("pred_lang") == lg, F.lit(rate)).otherwise(thr)
-    sampled = kept.withColumn("sample_key", key).filter(
-        F.col("sample_key") < thr
-    )
-    # Two-level packing cumsum (operators/packing.py) — same values as
-    # a PARTITION BY source running sum, but no single task ever sorts
-    # a whole source's stream (the r10 scale fix, see q_pack_sequences).
-    from gentropy_spark.operators.packing import bucketed_cumsum
 
-    packed = bucketed_cumsum(
-        sampled.select("doc_id", "source", "pred_lang", "n_tokens"),
-        part_col="source",
-        order_col="doc_id",
-        value_col="n_tokens",
-    )
-    return packed.select(
-        "doc_id",
-        "source",
-        "pred_lang",
-        "n_tokens",
-        "cum_tokens",
-    ).withColumn(
-        "bin_id", F.expr(f"(cum_tokens - 1) div {PACK_BUDGET_TOKENS}")
-    )
+
+def drop_non_canonical(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``docs`` without the non-canonical members of the duplicate
+    clusters that the near-dup ``pairs`` (id_a, id_b) span.
+
+    An ANTI-join on the non-canonical drop set (tiny: bounded by
+    duplicate-edge endpoints), not an inner join against the full
+    duplicate_clusters output, which would drag every corpus row
+    through a cluster-size window just to test one boolean (r12; values
+    identical by construction). The broadcast hint is explicit (r14):
+    leaving it to AQE planned a SortMergeJoin LeftAnti in the static
+    plan whose ensure-requirements exchanges survived the runtime BHJ
+    conversion as dead stages.
+    """
+    from gentropy_spark.operators.dedup import duplicate_drop_ids
+
+    drop = duplicate_drop_ids(pairs)
+    return docs.join(F.broadcast(drop), on="doc_id", how="left_anti")
 
 
 def _curate_sql(scored: bool = False) -> str:

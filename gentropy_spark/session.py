@@ -116,11 +116,12 @@ def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
 
     Building a large plan through py4j costs 0.5-4 s of driver time
     (one JVM round-trip per Column op), so ``build(spark, sf_dir,
-    *args)`` runs once per (application, build, sf_dir, args) and
-    later calls return the SAME DataFrame — the prepared-statement
-    behaviour of a mature engine. Execution still happens per action;
-    nothing materialised is reused. A miss evicts the entries of other
-    (stopped) applications, whose DataFrames hold dead py4j references.
+    *args, **kwargs)`` runs once per (application, build, sf_dir, args,
+    sorted kwargs) and later calls return the SAME DataFrame — the
+    prepared-statement behaviour of a mature engine. Execution still
+    happens per action; nothing materialised is reused. A miss evicts
+    the entries of other (stopped) applications, whose DataFrames hold
+    dead py4j references.
 
     The ``track_cache`` handles the build records (its own persists and
     those re-registered by inner prepared hits) are re-registered on
@@ -135,9 +136,11 @@ def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
     """
 
     @functools.wraps(build)
-    def wrapper(spark: SparkSession, sf_dir: str, *args) -> DataFrame:
+    def wrapper(
+        spark: SparkSession, sf_dir: str, *args, **kwargs
+    ) -> DataFrame:
         app_id = spark.sparkContext.applicationId
-        key = (app_id, build, sf_dir, args)
+        key = (app_id, build, sf_dir, args, tuple(sorted(kwargs.items())))
         hit = _PREPARED.get(key)
         if hit is not None:
             df, handles = hit
@@ -147,7 +150,7 @@ def prepared(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
         handles: list[DataFrame] = []
         _OPEN_BUILDS.append(handles)
         try:
-            df = build(spark, sf_dir, *args)
+            df = build(spark, sf_dir, *args, **kwargs)
         finally:
             _OPEN_BUILDS.pop()
         for stale in [k for k in _PREPARED if k[0] != app_id]:

@@ -22,7 +22,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gentropy_spark.sources.readers import normalize_events_ts
+from gentropy_spark.sources.readers import normalize_events_ts, read_table
 
 DEC = "decimal(38,6)"
 WINDOW_US = 86_400_000_000  # 1 day tumbling windows (epoch-aligned)
@@ -314,7 +314,7 @@ def run_stream_static_enrich(
     """
     stream = _events_stream(spark, sf_dir)
     nation = F.broadcast(
-        spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+        read_table(spark, sf_dir, "nation").select(
             F.col("n_nationkey").alias("nation_key"),
             F.col("n_name").alias("nation_name"),
         )

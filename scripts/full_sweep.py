@@ -7,8 +7,10 @@ keys executed and counted. Mirrors the driver's compare (NaN
 normalized, isoformat timestamps) in a vanilla-shape session.
 
 Each key also records ``plan_sha``, a digest of its optimised logical
-plan with expression ids and PySpark lambda-variable suffixes stripped,
-so diffing two sweep files lists exactly the keys whose plans changed.
+plan with every per-process artefact removed (expression ids, lambda
+variable suffixes, common-subexpression numbers, cut scan metadata, the
+order of Spark's distinct-aggregate rewrite), so diffing two sweep
+files lists exactly the keys whose plans changed.
 
 Run: python scripts/full_sweep.py [--sf-dir DIR] [--out FILE]
 """
@@ -44,12 +46,109 @@ def _norm(v):
 # exchanges inside cached relations, and the ``_123`` suffix PySpark's
 # ``freshVarName`` gives the x/y/z variables of Column-API lambdas.
 _PLAN_IDS = re.compile(r"#\d+|(plan_id=)\d+|\b([xyz])_\d+\b")
+# Spark names common subexpressions ``_common_expr_N`` from a
+# process-wide counter; they are renumbered in order of appearance.
+_COMMON_EXPR = re.compile(r"_common_expr_(\d+)")
+# Scan metadata longer than 100 characters (``DataFilters: [...]...``)
+# is cut at a fixed length of the text WITH the ids, so where the cut
+# falls depends on the ids' widths; the cut value is dropped.
+_CUT_METADATA = re.compile(
+    r"(\b[A-Z]\w*: )(?:(?!, [A-Z]\w*: ).)*?\.\.\.(?=, [A-Z]\w*: |$)", re.M
+)
+
+
+def _split_top(args: str) -> list[str]:
+    """``args`` split at the commas outside any ()/[] nesting."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(args):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(args[start:i].strip())
+            start = i + 1
+    parts.append(args[start:].strip())
+    return parts
+
+
+def _parent(lines: list[str], i: int) -> int:
+    """Index of the tree parent of line ``i`` (nearest shallower line)."""
+    depth = len(lines[i]) - len(lines[i].lstrip(" +-:"))
+    for j in range(i - 1, -1, -1):
+        if len(lines[j]) - len(lines[j].lstrip(" +-:")) < depth:
+            return j
+    return -1
+
+
+def _canonical_distinct_rewrite(plan: str) -> str:
+    """Spark's distinct-aggregate rewrite (an Expand under two Aggregates)
+    orders its distinct groups by expression hash, which follows the
+    per-process expression ids. So one plan lists the Expand's columns
+    and projections and the lower Aggregate's grouping in a different
+    order, and numbers the groups' ``gid`` differently, from process to
+    process. Sort those lists, and renumber ``gid`` by the sorted
+    projections, in the upper Aggregate's FILTERs too."""
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        head, sep, args = line.partition("Expand [")
+        if not sep or "gid" not in args:
+            continue
+        rows_s, outs_s = _split_top("[" + args)
+        outs = _split_top(outs_s[1:-1])
+        rows = [_split_top(r[1:-1]) for r in _split_top(rows_s[1:-1])]
+        lower = _parent(lines, i)
+        upper = _parent(lines, lower)
+        if "gid" not in outs or upper < 0 or any(len(r) != len(outs) for r in rows):
+            continue
+        order = sorted(
+            range(len(outs)), key=lambda j: (outs[j], sorted(r[j] for r in rows))
+        )
+        g = order.index(outs.index("gid"))
+        rows = sorted(
+            ([r[j] for j in order] for r in rows),
+            key=lambda r: r[:g] + r[g + 1 :],
+        )
+        renumber = {}
+        for new_gid, r in enumerate(rows):
+            renumber[r[g]] = str(new_gid)
+            r[g] = str(new_gid)
+        lines[i] = (
+            f"{head}Expand [{', '.join('[' + ', '.join(r) + ']' for r in rows)}], "
+            f"[{', '.join(outs[j] for j in order)}]"
+        )
+        head, sep, args = lines[lower].partition("Aggregate ")
+        grouping, *rest = _split_top(args)
+        keys = _split_top(grouping[1:-1])
+        if sep and len(rest) == 1:
+            outputs = _split_top(rest[0][1:-1])
+            if outputs[: len(keys)] == keys:
+                outputs[: len(keys)] = sorted(keys)
+            lines[lower] = (
+                f"{head}Aggregate [{', '.join(sorted(keys))}], "
+                f"[{', '.join(outputs)}]"
+            )
+        lines[upper] = re.sub(
+            r"\(gid = (\d+)\)",
+            lambda m: f"(gid = {renumber.get(m.group(1), m.group(1))})",
+            lines[upper],
+        )
+    return "\n".join(lines)
 
 
 def normalized_plan(sdf) -> str:
-    """The optimised logical plan with per-process ids stripped."""
+    """The optimised logical plan with per-process ids stripped, common
+    subexpressions renumbered, cut scan metadata dropped and the
+    distinct-aggregate rewrite put in one canonical order."""
     plan = sdf._jdf.queryExecution().optimizedPlan().toString()
-    return _PLAN_IDS.sub(lambda m: m.group(1) or m.group(2) or "", plan)
+    plan = _PLAN_IDS.sub(lambda m: m.group(1) or m.group(2) or "", plan)
+    plan = _CUT_METADATA.sub(r"\1...", plan)
+    common: dict[str, int] = {}
+    plan = _COMMON_EXPR.sub(
+        lambda m: f"_common_expr_{common.setdefault(m.group(1), len(common))}",
+        plan,
+    )
+    return _canonical_distinct_rewrite(plan)
 
 
 def plan_digest(sdf) -> str:

@@ -56,3 +56,17 @@ def _release_tracked_caches():
     from gentropy_spark.session import release_caches
 
     release_caches()
+
+
+@pytest.fixture(scope="session")
+def normalized_plan():
+    """``scripts/full_sweep.py``'s plan normaliser, the input of the
+    sweep's per-key ``plan_sha``."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "scripts" / "full_sweep.py"
+    spec = importlib.util.spec_from_file_location("full_sweep", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module.normalized_plan

@@ -60,3 +60,71 @@ def test_corpus_facade_roundtrip(spark, sf_dir):
     assert packed.filter(F.col("bin_id") < 0).count() == 0
     red = corpus.pii_redact()
     assert red.count() == n_docs
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_corpus_verbs_equal_registry_keys(spark, sf_dir):
+    """Each Corpus verb runs the function its registry key runs, so it
+    returns that key's rows."""
+    from gentropy_spark.api import Corpus
+    from gentropy_spark.plans import full_registry
+    from gentropy_spark.plans.llm_pipeline import (
+        PACK_BUDGET_TOKENS,
+        SAMPLE_DEFAULT,
+        SAMPLE_RATES,
+    )
+    from gentropy_spark.sources.readers import read_table
+
+    reg = full_registry()
+    corpus = Corpus(read_table(spark, sf_dir, "documents"))
+
+    packed = reg["pack_sequences"].fn(spark, sf_dir)
+    assert _sorted_rows(corpus.pack_sequences(PACK_BUDGET_TOKENS)) == _sorted_rows(
+        packed
+    )
+
+    sampled = reg["sample_stratified"].fn(spark, sf_dir)
+    facade = corpus.sample_stratified(SAMPLE_RATES, SAMPLE_DEFAULT).df
+    assert _sorted_rows(facade.select(*sampled.columns)) == _sorted_rows(sampled)
+
+    redacted = reg["pii_redact"].fn(spark, sf_dir)
+    facade = corpus.pii_redact().select(
+        "doc_id", F.md5("text").alias("redacted_md5")
+    )
+    assert _sorted_rows(facade) == _sorted_rows(
+        redacted.select("doc_id", "redacted_md5")
+    )
+
+    clusters = reg["dedup_clusters"].fn(spark, sf_dir)
+    canonical = clusters.filter(F.col("is_canonical")).select("doc_id")
+    assert _sorted_rows(corpus.canonical_only().df.select("doc_id")) == (
+        _sorted_rows(canonical)
+    )
+
+
+def test_facade_pack_never_shuffles_documents_on_source_alone(spark, sf_dir):
+    """The façade packs with the registry's two-level cumsum: document
+    rows are shuffled on (source, __pack_bucket), and the one exchange
+    on source alone carries the per-(source, bucket) totals to the
+    offsets window, never a whole source's documents."""
+    import re
+
+    from gentropy_spark.api import Corpus
+    from gentropy_spark.sources.readers import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    plan = Corpus(docs).pack_sequences(256)._jdf.queryExecution().executedPlan()
+    lines = plan.toString().splitlines()
+    assert any(
+        "Exchange hashpartitioning" in line and "__pack_bucket" in line
+        for line in lines
+    )
+    for i, line in enumerate(lines):
+        if re.search(r"Exchange hashpartitioning\(source#\d+, \d+\)", line):
+            child = lines[i + 1]
+            assert "Aggregate(key=[source#" in child and "__pack_bucket" in child, (
+                "\n".join(lines)
+            )

@@ -13,7 +13,7 @@ import json
 
 import pytest
 
-from gentropy_spark.config import Param, validate_config
+from gentropy_spark.config import STEP_PARAM_SCHEMAS, Param, validate_config
 
 
 def _base_cfg(tmp_path):
@@ -30,15 +30,15 @@ def _base_cfg(tmp_path):
 
 
 def test_param_check_types_and_bounds():
-    p = Param(int, 5, min=1, max=10)
+    p = Param(int, min=1, max=10)
     assert p.check(5, "x") == []
     assert "expected int" in p.check("5", "x")[0]
     assert "expected int, got bool" in p.check(True, "x")[0]
     assert "< min" in p.check(0, "x")[0]
     assert "> max" in p.check(11, "x")[0]
-    pf = Param(float, 0.5, min=0.0, max=1.0)
+    pf = Param(float, min=0.0, max=1.0)
     assert pf.check(1, "x") == []  # int widens to float
-    pc = Param(str, "a", choices=("a", "b"))
+    pc = Param(str, choices=("a", "b"))
     assert "not in" in pc.check("z", "x")[0]
 
 
@@ -119,17 +119,69 @@ def test_resolve_step_defaults_match_registry(spark):
 
 
 def test_every_schema_param_has_registry_consistent_default():
-    """Schema defaults equal the module constants the oracle SQL bakes
-    in — a param-less parameterized run is bit-identical to the
-    registry query."""
-    from gentropy_spark.config import STEP_PARAM_SCHEMAS
+    """Every schema param is a keyword of its step's registry builder,
+    whose signature holds the default (the module constant the oracle
+    SQL bakes in), and that default passes the param's check. The DAG
+    exposes 13 params."""
+    import inspect
 
-    for query, schema_fn in STEP_PARAM_SCHEMAS.items():
-        schema = schema_fn()
+    from gentropy_spark.plans import full_registry
+
+    reg = full_registry()
+    for query, schema in STEP_PARAM_SCHEMAS.items():
         assert schema, query
+        signature = inspect.signature(reg[query].fn).parameters
         for name, param in schema.items():
             assert isinstance(param, Param), (query, name)
-            assert param.check(param.default, f"{query}.{name}") == []
+            assert name in signature, (query, name)
+            default = signature[name].default
+            assert default is not inspect.Parameter.empty, (query, name)
+            assert param.check(default, f"{query}.{name}") == []
+    assert sum(len(schema) for schema in STEP_PARAM_SCHEMAS.values()) == 13
+
+
+@pytest.mark.parametrize("query", sorted(STEP_PARAM_SCHEMAS))
+def test_param_step_is_the_memoised_registry_builder(
+    spark, sf_dir, normalized_plan, query
+):
+    """A step given every param (at its default) runs the registry
+    builder itself: the prepared memo returns the same DataFrame on a
+    second resolve, and its plan is the registry key's plan."""
+    import inspect
+
+    from gentropy_spark.config import resolve_step
+    from gentropy_spark.plans import full_registry
+
+    fn = full_registry()[query].fn
+    signature = inspect.signature(fn).parameters
+    params = {name: signature[name].default for name in STEP_PARAM_SCHEMAS[query]}
+    df = resolve_step(query, params)(spark, sf_dir)
+    assert resolve_step(query, params)(spark, sf_dir) is df
+    assert normalized_plan(df) == normalized_plan(fn(spark, sf_dir))
+
+
+def test_config_imports_no_operator_module():
+    """config.py binds params to the registry builders; an import from
+    gentropy_spark.operators there would be a kept copy of a builder."""
+    import ast
+    from pathlib import Path
+
+    import gentropy_spark.config as config
+
+    tree = ast.parse(Path(config.__file__).read_text())
+    imported = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported += [alias.name for alias in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.append(node.module)
+            imported += [f"{node.module}.{alias.name}" for alias in node.names]
+    assert not [
+        m
+        for m in imported
+        if m == "gentropy_spark.operators"
+        or m.startswith("gentropy_spark.operators.")
+    ]
 
 
 def test_full_post_gwas_pipeline_dag(tmp_path, spark):

@@ -381,6 +381,19 @@ def test_no_cartesian_product_anywhere(spark, sf_dir):
     assert not hoisted, f"row-level work above a Generate: {hoisted}"
 
 
+def test_normalized_plan_is_reproducible_across_builds(
+    spark, sf_dir, normalized_plan
+):
+    """Each build of table_profile gets fresh expression ids, and Spark's
+    distinct-aggregate rewrite orders its groups (the Expand's columns
+    and projections, the gid numbers) by them. The sweep's normalised
+    plan, whose digest is plan_sha, must not change between builds."""
+    from gentropy_spark.plans import full_registry
+
+    fn = full_registry()["table_profile"].fn
+    assert len({normalized_plan(fn(spark, sf_dir)) for _ in range(3)}) == 1
+
+
 def test_pack_sequences_exchange_keyed_on_bucket(spark, sf_dir):
     """r10 scale fix: the packing cumsum must NOT be a single-level
     PARTITION BY source window (source is low-cardinality — one task

@@ -1,7 +1,7 @@
 """The ``prepared`` plan memo (session.py) and the package's Python workers.
 
 A prepared builder returns the SAME resolved DataFrame per (application,
-builder, sf_dir, extra args, profile env flags), and re-registers the
+builder, sf_dir, extra args, sorted kwargs), and re-registers the
 ``track_cache`` handles its build recorded on every hit, including the
 handles of inner prepared builders it reached.
 """
@@ -34,6 +34,7 @@ PREPARED_KEYS = {
     "l2g_score",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
+    "ann_ivf_topk",
     "ann_cosine_topk",
     "dedup_embedding_cosine",
     "text_quality",
@@ -107,6 +108,27 @@ def test_prepared_identity_and_keying(spark, sf_dir, tmp_path):
     for key in ("dedup_clusters", "corpus_curate", "bpe_train", "bpe_encode"):
         assert not S.is_prepared(reg[key].fn)
     assert S.is_prepared(fn) and not S.is_prepared(fn.__wrapped__)
+
+
+def test_prepared_keys_on_sorted_kwargs(spark, sf_dir):
+    """Keyword params are part of the key, in any order; a different
+    binding is a different plan."""
+    from gentropy_spark.plans.genomics import (
+        CLUMP_WINDOW_US,
+        SIGNIF_MIN,
+        q_window_clump_leads,
+    )
+
+    wide = q_window_clump_leads(
+        spark, sf_dir, window=2 * CLUMP_WINDOW_US, min_signif=SIGNIF_MIN
+    )
+    assert (
+        q_window_clump_leads(
+            spark, sf_dir, min_signif=SIGNIF_MIN, window=2 * CLUMP_WINDOW_US
+        )
+        is wide
+    )
+    assert q_window_clump_leads(spark, sf_dir) is not wide
 
 
 def test_prepared_hit_repersists_tracked_caches_after_release(spark, sf_dir):
