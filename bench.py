@@ -412,7 +412,8 @@ def main() -> None:
         # (r15 verdict item 7).
         "heavy_query_spread_sec": spreads,
         # Per-key prepared-plan provenance: true = the resolved
-        # DataFrame plan is memoized per (app, sf_dir, profile), so
+        # DataFrame plan is memoized per (app, builder, sf_dir, args,
+        # kwargs), so
         # the min-of-2's warm run excludes py4j plan construction
         # (legitimate prepared-statement behaviour; execution still
         # runs per action). "subplans-only" = corpus_curate reads
@@ -445,13 +446,11 @@ def main() -> None:
                 "Spark runs the scan+partial-agg in ONE task while "
                 "DuckDB parallelises inside the row group. With "
                 "production multi-row-group files the asymmetry "
-                "vanishes. Since r13 the bench runs the production "
-                "native-double sum profile by default (the 10x probe "
-                "showed the residual gap is Spark's BigDecimal sum "
-                "buffer vs DuckDB's native decimal kernels — a "
-                "single-node kernel gap, not a plan defect); the "
-                "decimal-parity split-LONG path remains the certified "
-                "one in every correctness gate."
+                "vanishes. q1, q3 and q5 run the exact kernel "
+                "(functions/exact.py exact_sum: per-row rint "
+                "conversion and split-LONG sums, bit-identical to the "
+                "DECIMAL(38,6) sum), the same path every correctness "
+                "gate certifies; there is no native-double profile."
             ),
             "lm_perplexity": (
                 "retired from the watch list (r13, verdict #9): "

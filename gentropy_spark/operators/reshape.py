@@ -17,7 +17,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -82,18 +82,18 @@ def long_to_wide(
     var_col: str,
     value_col: str,
     value_list: Sequence[str],
-    agg: str = "first",
+    agg: Callable[[Column], Column] = F.first,
 ) -> DataFrame:
-    """Pivot long rows into one column per ``value_list`` entry.
+    """Pivot long rows into one column per ``value_list`` entry, each
+    the aggregate ``agg`` of ``value_col``.
 
     ``value_list`` must be supplied explicitly: letting Spark infer it
     requires an eager distinct scan, unacceptable on a 100 TB input.
     """
-    aggfn = getattr(F, agg)
     return (
         df.groupBy(*id_vars)
         .pivot(var_col, list(value_list))
-        .agg(aggfn(F.col(value_col)))
+        .agg(agg(F.col(value_col)))
     )
 
 

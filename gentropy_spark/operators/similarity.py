@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.session import track_cache
 
 
@@ -759,11 +760,7 @@ def ivfpq_topk(
         .join(codes, on=corpus_id)
         .join(F.broadcast(lookup), on=[query_id, "m", "code"])
         .groupBy(query_id, corpus_id)
-        .agg(
-            F.sum(F.col("pdist").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("adc_dist")
-        )
+        .agg(exact_sum(F.col("pdist")).alias("adc_dist"))
     )
     top = (
         adc.groupBy(query_id)
@@ -849,11 +846,7 @@ def pq_topk(
     adc = (
         codes.join(F.broadcast(lookup), on=["m", "code"])
         .groupBy(query_id, corpus_id)
-        .agg(
-            F.sum(F.col("pdist").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("adc_dist")
-        )
+        .agg(exact_sum(F.col("pdist")).alias("adc_dist"))
     )
     w_rank = Window.partitionBy(query_id).orderBy(
         F.col("adc_dist").asc(), F.col(corpus_id).asc()

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.operators.clumping import (
     _cluster_seq,
     exclude_regions,
@@ -29,7 +30,6 @@ from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table, ts_micros
 
-DEC = "decimal(38,6)"
 
 # Clumping calibration (positions are µs; events span ~weeks).
 SIGNIF_MIN = 100.0
@@ -233,7 +233,7 @@ def _tag_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("logbf", F.col("signif") / 10.0)
         .withColumn(
             "pp",
-            F.col("signif") / F.sum(F.col("signif").cast(DEC)).over(w).cast("double"),
+            F.col("signif") / exact_sum(F.col("signif"), over=w),
         )
     )
     # Synthetic per-tag effect size: the repo-wide beta convention
@@ -402,7 +402,7 @@ def q_credible_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both engines, so the per-row pp — and hence every cumulative sum —
     # is bit-identical cross-engine.
     raw_pp = (
-        F.col("signif") / F.sum(F.col("signif").cast(DEC)).over(grp).cast("double")
+        F.col("signif") / exact_sum(F.col("signif"), over=grp)
     )
     pp = F.floor(raw_pp * 1e9) / 1e9
     ordered = Window.partitionBy("study_id", "contig").orderBy(
@@ -884,7 +884,7 @@ def q_locus_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_variants"),
         F.countDistinct("pos").alias("n_unique_positions"),
         (F.max("pos") - F.min("pos")).alias("locus_span"),
-        F.sum(F.col("signif").cast(DEC)).cast("double").alias("signal_mass"),
+        exact_sum(F.col("signif")).alias("signal_mass"),
     )
 
 
@@ -1081,7 +1081,7 @@ def q_locus_statistics_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame
     agg = tagged.groupBy("study_id", "contig", "cluster_seq").agg(
         F.count("*").alias("n_tags"),
         F.countDistinct("pos").alias("n_unique_positions"),
-        F.sum(F.col("signif").cast(DEC)).cast("double").alias("tag_signal_mass"),
+        exact_sum(F.col("signif")).alias("tag_signal_mass"),
     )
     return (
         loci.select(

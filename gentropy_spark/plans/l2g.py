@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gentropy_spark.functions.distributions import chi2_sf_1df_col, chi2_sf_1df_sql
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.plans.genomics import SUMSTATS_SQL, sumstats
 from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.session import prepared
@@ -66,28 +67,17 @@ GENE_INDEX_SQL = f"""
 """
 
 
-# --- v2g distance weighting ----------------------------------------------
-@prepared
-def q_v2g_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variants joined to genes within flank; linear distance decay weight.
+def _footprint_join(variants: DataFrame, genes: DataFrame) -> DataFrame:
+    """Variants × genes within the footprint flank.
 
-    The gene index is tiny → broadcast; the range predicate prunes on
-    the contig equi-key first (AQE handles the rest at scale).
+    Tile equi-join: a contig-only join would build |variants|x|genes/contig|
+    rows before the range filter. Genes sit on a regular grid, so each
+    variant can only reach tiles k_lo..k_hi (≤3 of them — the full
+    inclusive range, NOT just the endpoints: with reach wider than the
+    grid spacing the middle tile holds a real candidate) — explode
+    those and equi-join on (contig, tile); the exact range predicate
+    stays. The gene index is tiny → broadcast.
     """
-    variants = sumstats(spark, sf_dir).filter(F.col("signif") >= 50.0)
-    genes = gene_index(spark, sf_dir)
-    dist = F.greatest(
-        F.col("gene_start") - F.col("pos"),
-        F.col("pos") - F.col("gene_end"),
-        F.lit(0),
-    )
-    # Tile equi-join: a contig-only join would build |variants|x|genes/contig|
-    # rows before the range filter. Genes sit on a regular grid, so each
-    # variant can only reach tiles k_lo..k_hi (≤3 of them — the full
-    # inclusive range, NOT just the endpoints: with reach wider than the
-    # grid spacing the middle tile holds a real candidate) — explode
-    # those and equi-join on (contig, tile); the exact range predicate
-    # stays.
     genes_k = genes.withColumn(
         "gk", F.expr(f"(gene_start - {BASE_US}) div {GENE_SPACING_US}")
     )
@@ -96,10 +86,27 @@ def q_v2g_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(pos - {BASE_US} - {GENE_WIDTH_US} - {V2G_FLANK_US}) div {GENE_SPACING_US}"
     )
     vars_k = variants.withColumn("gk", F.explode(F.sequence(k_lo, k_hi)))
-    joined = vars_k.join(F.broadcast(genes_k), on=["contig", "gk"], how="inner").filter(
+    return vars_k.join(F.broadcast(genes_k), on=["contig", "gk"]).filter(
         (F.col("pos") >= F.col("gene_start") - V2G_FLANK_US)
         & (F.col("pos") <= F.col("gene_end") + V2G_FLANK_US)
     )
+
+
+# --- v2g distance weighting ----------------------------------------------
+@prepared
+def q_v2g_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Variants joined to genes within flank; linear distance decay weight.
+
+    ``_footprint_join`` prunes on the (contig, tile) equi-key before the
+    range predicate (AQE handles the rest at scale).
+    """
+    variants = sumstats(spark, sf_dir).filter(F.col("signif") >= 50.0)
+    dist = F.greatest(
+        F.col("gene_start") - F.col("pos"),
+        F.col("pos") - F.col("gene_end"),
+        F.lit(0),
+    )
+    joined = _footprint_join(variants, gene_index(spark, sf_dir))
     return joined.select(
         "point_id",
         "study_id",
@@ -364,7 +371,7 @@ def _l2g_features_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").over(w).alias("genes_in_flank"),
         F.round(
             F.col("max_weight")
-            / F.sum(F.col("max_weight").cast("decimal(38,6)")).over(w).cast("double"),
+            / exact_sum(F.col("max_weight"), over=w),
             6,
         ).alias("rel_weight"),
     )

@@ -55,15 +55,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.plans.synthmap import (
     BASE_US,
     GENE_SPACING_US,
-    GENE_WIDTH_US,
     V2G_FLANK_US,
 )
-
-DEC12 = "decimal(38,12)"
 
 # TSS window for the gene-count features — the "500kb" analog on the
 # synthetic grid (±6h captures 1–3 genes, so counts vary).
@@ -112,22 +110,6 @@ def _leads(spark: SparkSession, sf_dir: str) -> DataFrame:
     return track_cache(q_window_clump_leads(spark, sf_dir))
 
 
-def _footprint_join(variants: DataFrame, genes: DataFrame) -> DataFrame:
-    """Variants × genes within the footprint flank (grid tile equi-join)."""
-    genes_k = genes.withColumn(
-        "gk", F.expr(f"(gene_start - {BASE_US}) div {GENE_SPACING_US}")
-    )
-    k_hi = F.expr(f"(pos - {BASE_US} + {V2G_FLANK_US}) div {GENE_SPACING_US}")
-    k_lo = F.expr(
-        f"(pos - {BASE_US} - {GENE_WIDTH_US} - {V2G_FLANK_US}) div {GENE_SPACING_US}"
-    )
-    vars_k = variants.withColumn("gk", F.explode(F.sequence(k_lo, k_hi)))
-    return vars_k.join(F.broadcast(genes_k), on=["contig", "gk"]).filter(
-        (F.col("pos") >= F.col("gene_start") - V2G_FLANK_US)
-        & (F.col("pos") <= F.col("gene_end") + V2G_FLANK_US)
-    )
-
-
 def _severity_col() -> F.Column:
     """Consequence severity of a (variant pos, gene) pair — the same
     term→score map as vep_consequence_annotate (plans/variants.py)."""
@@ -168,7 +150,7 @@ def _trunc6(c: F.Column) -> F.Column:
 
 # --- VEP feature family ----------------------------------------------------
 def q_l2g_vep_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gentropy_spark.plans.l2g import gene_index
+    from gentropy_spark.plans.l2g import _footprint_join, gene_index
 
     fp = _footprint_join(_credset(spark, sf_dir), gene_index(spark, sf_dir))
     return _fp_family(fp).select(*_FEAT_KEY, *VEP_FEAT_COLS)
@@ -221,7 +203,7 @@ FROM with_reg
 
 # --- gene-structure feature family ----------------------------------------
 def q_l2g_gene_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gentropy_spark.plans.l2g import gene_index
+    from gentropy_spark.plans.l2g import _footprint_join, gene_index
 
     genes = gene_index(spark, sf_dir)
     fp = _footprint_join(_credset(spark, sf_dir), genes)
@@ -338,14 +320,11 @@ def _e2g_family(spark: SparkSession, sf_dir: str, cs: DataFrame) -> DataFrame:
         .agg(F.max("score3").alias("vmax"))
     )
     e2g = per_vg.groupBy(*_FEAT_KEY).agg(
-        F.sum((F.col("pics_pp") * F.col("vmax")).cast(DEC12))
-        .cast("double")
-        .alias("e2g_mean")
+        exact_sum(F.col("pics_pp") * F.col("vmax"), 12).alias("e2g_mean")
     )
     w_loc = Window.partitionBy(*_LOCUS_KEY)
     locus_mean = (
-        F.sum(F.col("e2g_mean").cast(DEC12)).over(w_loc).cast("double")
-        / F.count("*").over(w_loc)
+        exact_sum(F.col("e2g_mean"), 12, over=w_loc) / F.count("*").over(w_loc)
     )
     return e2g.select(
         *_FEAT_KEY,
@@ -464,6 +443,8 @@ def _sentinel_locals(leads: DataFrame, genes: DataFrame) -> DataFrame:
     """Unweighted lead-variant distance scores per (locus, gene), 6dp
     log-scaled (scores are >= 1, so the log is >= 0): a broadcast
     leads x genes join, zero exchanges."""
+    from gentropy_spark.plans.l2g import _footprint_join
+
     sent_src = leads.select(*_LOCUS_KEY, F.col("lead_pos").alias("pos"))
     return _footprint_join(sent_src, genes).select(
         *_FEAT_KEY,
@@ -515,7 +496,7 @@ def _dist_outputs() -> dict[str, F.Column]:
 
 
 def q_l2g_distance_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gentropy_spark.plans.l2g import gene_index
+    from gentropy_spark.plans.l2g import _footprint_join, gene_index
 
     genes = gene_index(spark, sf_dir)
     fp = _footprint_join(_credset(spark, sf_dir), genes)
@@ -664,11 +645,9 @@ def _fp_family(fp: DataFrame) -> DataFrame:
     local = j.groupBy(*_FEAT_KEY).agg(
         F.max("severity").alias("vep_max"),
         F.count("*").alias("n_v"),
-        F.sum((F.col("severity") * F.col("pics_pp")).cast(DEC12))
-        .cast("double")
-        .alias("sum_ws"),
-        F.sum(F.col("__score_fp").cast(DEC12)).cast("double").alias("sum_fp"),
-        F.sum(F.col("__score_tss").cast(DEC12)).cast("double").alias("sum_tss"),
+        exact_sum(F.col("severity") * F.col("pics_pp"), 12).alias("sum_ws"),
+        exact_sum(F.col("__score_fp"), 12).alias("sum_fp"),
+        exact_sum(F.col("__score_tss"), 12).alias("sum_tss"),
     )
     w_loc = Window.partitionBy(*_LOCUS_KEY)
     vep_mean = _trunc6(F.col("sum_ws") / F.col("n_v"))
@@ -820,7 +799,7 @@ def assemble_locus_features(
     neighbourhood ratios + clamps come from ONE locus window over the
     assembled matrix.
     """
-    from gentropy_spark.plans.l2g import gene_index
+    from gentropy_spark.plans.l2g import _footprint_join, gene_index
 
     cs = _credset(spark, sf_dir)
     genes = gene_index(spark, sf_dir)

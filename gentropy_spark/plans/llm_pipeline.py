@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gentropy_spark.functions.exact import exact_decimal_sum, exact_sum
 from gentropy_spark.functions.text import (
     normalized_fingerprint,
     token_count_bpe_ish,
@@ -272,8 +273,9 @@ COS_SQL = (
 )
 
 
-@prepared
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ann_split(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The ANN keys' (queries, corpus) split of ``embeddings``: vec_id < 10
+    are the queries (query_id, vec), the rest the corpus (corpus_id, vec)."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec")
@@ -281,6 +283,12 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")
     )
+    return queries, corpus
+
+
+@prepared
+def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    queries, corpus = _ann_split(spark, sf_dir)
     return cosine_topk(queries, corpus, k=5, dim=64)
 
 
@@ -542,13 +550,7 @@ FROM fp
 # hyperplanes give bit-identical buckets in both engines; recall < 1 vs
 # brute force by LSH design, but the LSH result itself is exact) ----------
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")
-    )
+    queries, corpus = _ann_split(spark, sf_dir)
     return lsh_topk(
         queries, corpus, det_hyperplanes(ANN_N_PLANES, EMB_DIM), k=5, dim=EMB_DIM
     )
@@ -662,10 +664,7 @@ def q_text_logfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.round(
-            F.sum(F.round(F.log10("corpus_freq"), 9).cast("decimal(38,9)"))
-            .cast("double")
-            / F.count("*"),
-            6,
+            exact_sum(F.round(F.log10("corpus_freq"), 9), 9) / F.count("*"), 6
         ).alias("mean_log_freq"),
     )
 
@@ -750,13 +749,7 @@ def q_ann_ivf(
 ) -> DataFrame:
     from gentropy_spark.operators.similarity import ivf_topk
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")
-    )
+    queries, corpus = _ann_split(spark, sf_dir)
     return ivf_topk(
         queries,
         corpus,
@@ -835,13 +828,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners (the standard PQ-then-rerank output)."""
     from gentropy_spark.operators.similarity import pq_topk
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")
-    )
+    queries, corpus = _ann_split(spark, sf_dir)
     return pq_topk(
         queries,
         corpus,
@@ -942,13 +929,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay query-independent and both engines bit-align."""
     from gentropy_spark.operators.similarity import ivfpq_topk
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("vec")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("vec")
-    )
+    queries, corpus = _ann_split(spark, sf_dir)
     return ivfpq_topk(
         queries,
         corpus,
@@ -2052,11 +2033,7 @@ def _pca_means(
     n_row = emb.agg(F.count("*").cast("double").alias("n"))
     mus = (
         ex.groupBy("dim")
-        .agg(
-            F.sum(F.col("xj").cast("decimal(38,12)"))
-            .cast("double")
-            .alias("sx")
-        )
+        .agg(exact_sum(F.col("xj"), 12).alias("sx"))
         .crossJoin(F.broadcast(n_row))
         .select("dim", (F.col("sx") / F.col("n")).alias("mu"))
     )
@@ -2145,7 +2122,6 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     key's task CPU. Every embedding must have width EMB_DIM; any other
     width fails the query (``_pca_x``).
     """
-    DEC12 = "decimal(38,12)"
     # mus feeds the μ-array pivot (both matvec scans) and the output
     # mean column; AQE reuses its exchange for all three.
     xs, n_row, mus = _pca_means(spark, sf_dir)
@@ -2185,11 +2161,13 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                     9,
                 )
-                .cast(DEC12)
+                # cast below the aggregate (exact_sum's own cast is then
+                # a no-op): the same decimal sum takes ~25% less task CPU
+                .cast("decimal(38,12)")
                 .alias("t"),
             )
             .groupBy("dim")
-            .agg(F.sum("t").cast("double").alias("su"))
+            .agg(exact_sum(F.col("t"), 12).alias("su"))
             .crossJoin(F.broadcast(n_row))
             .select("dim", (F.col("su") / F.col("n")).alias("u"))
         )
@@ -2208,11 +2186,7 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round(u*u, 9) terms, same DECIMAL(38,12) order-free sum, same
     # double cast before sqrt.
     w_all = Window.partitionBy()
-    nrm1 = F.sqrt(
-        F.sum(F.round(F.col("u") * F.col("u"), 9).cast(DEC12))
-        .over(w_all)
-        .cast("double")
-    )
+    nrm1 = F.sqrt(exact_sum(F.round(F.col("u") * F.col("u"), 9), 12, over=w_all))
     v1 = u1.select("dim", F.round(F.col("u") / nrm1, 12).alias("v"))
     # Step 2 onto v1: v rides a 1-row broadcast array and d_i is the
     # DECIMAL array kernel (== the relational SUM of the same 9dp
@@ -2225,11 +2199,7 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         mu_row,
         v_row,
     )
-    nrm2 = F.sqrt(
-        F.sum(F.round(F.col("u") * F.col("u"), 9).cast(DEC12))
-        .over(w_all)
-        .cast("double")
-    )
+    nrm2 = F.sqrt(exact_sum(F.round(F.col("u") * F.col("u"), 9), 12, over=w_all))
     return (
         u2.withColumn("nrm", nrm2)
         .join(F.broadcast(mus), on="dim")
@@ -2344,7 +2314,6 @@ def q_ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gentropy_spark.session import track_cache
 
-    DEC12 = "decimal(38,12)"
     emb = spread_if_narrow(
         read_table(spark, sf_dir, "embeddings"), "vec_id"
     )
@@ -2615,7 +2584,6 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from gentropy_spark.session import track_cache
 
-    DEC12 = "decimal(38,12)"
     xs, n_row, mus = _pca_means(spark, sf_dir)
     mus = track_cache(mus)
     # The one corpus-grain stage: G via chained generators over the
@@ -2673,11 +2641,11 @@ def q_embedding_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 9,
             )
-            .cast(DEC12)
+            .cast("decimal(38,12)")  # below the aggregate, as in the matvec
             .alias("t"),
         )
         .groupBy("j", "k")
-        .agg(F.sum("t").alias("s"))
+        .agg(exact_decimal_sum(F.col("t"), 12).alias("s"))
         .crossJoin(F.broadcast(n_row))
         .select(
             "j", "k", "s", (F.col("s").cast("double") / F.col("n")).alias("g")
@@ -2998,11 +2966,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return assigned.groupBy("centroid_id").agg(
         F.count("*").alias("n_assigned"),
-        F.round(
-            F.sum(F.col("dist2").cast("decimal(38,6)")).cast("double")
-            / F.count("*"),
-            6,
-        ).alias("avg_dist2"),
+        F.round(exact_sum(F.col("dist2")) / F.count("*"), 6).alias("avg_dist2"),
     )
 
 
@@ -3410,7 +3374,7 @@ def _doc_bigrams(docs: DataFrame) -> DataFrame:
 def _doc_perplexity(scored: DataFrame) -> DataFrame:
     """Per-doc bigram count, cross-entropy (6 dp) and perplexity 2^H
     (4 dp) from per-bigram ``nll`` terms, summed in DECIMAL(38,12)."""
-    h = F.sum(F.col("nll").cast("decimal(38,12)")).cast("double") / F.count("*")
+    h = exact_sum(F.col("nll"), 12) / F.count("*")
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         F.round(h, 6).alias("cross_entropy_bits"),
@@ -3801,12 +3765,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_feat"),
-            F.round(
-                F.sum(F.col("log_ratio").cast("decimal(38,12)")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("log_importance"),
+            F.round(exact_sum(F.col("log_ratio"), 12), 6).alias("log_importance"),
         )
     )
 
@@ -4448,17 +4407,14 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.log(F.col("c").cast("double")), 6).alias("y"),
         F.col("c"),
     )
-    dq = lambda col: F.sum(F.round(col, 12).cast("decimal(38,12)")).cast(  # noqa: E731
-        "double"
-    )
     agg = ranked.agg(
         F.count("*").alias("nv"),
         F.sum("c").alias("nt"),
-        dq(F.col("x")).alias("sx"),
-        dq(F.col("y")).alias("sy"),
-        dq(F.col("x") * F.col("x")).alias("sxx"),
-        dq(F.col("y") * F.col("y")).alias("syy"),
-        dq(F.col("x") * F.col("y")).alias("sxy"),
+        exact_sum(F.round(F.col("x"), 12), 12).alias("sx"),
+        exact_sum(F.round(F.col("y"), 12), 12).alias("sy"),
+        exact_sum(F.round(F.col("x") * F.col("x"), 12), 12).alias("sxx"),
+        exact_sum(F.round(F.col("y") * F.col("y"), 12), 12).alias("syy"),
+        exact_sum(F.round(F.col("x") * F.col("y"), 12), 12).alias("sxy"),
     )
     n = F.col("nv").cast("double")
     cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -4758,9 +4714,7 @@ def q_dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("deg"),
         # weights carry 6 dp, so the strength sum is exact in
         # DECIMAL(38,6) — order-independent
-        F.sum(F.col("jaccard").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("wsum"),
+        exact_sum(F.col("jaccard")).alias("wsum"),
     )
     nodes = deg.select(F.col("id_a").alias("node"), "deg", "wsum")
     n_nodes = nodes.agg(F.count("*").alias("n"))
@@ -4785,11 +4739,7 @@ def q_dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("c"),
             )
             .groupBy("node")
-            .agg(
-                F.sum(F.col("c").cast("decimal(38,12)"))
-                .cast("double")
-                .alias("inflow")
-            )
+            .agg(exact_sum(F.col("c"), 12).alias("inflow"))
         )
         pr = (
             pr.select("node", "deg", "wsum", "n")
@@ -4995,13 +4945,10 @@ def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_corpus") + F.col("v")
     )
     m = (p + q) / 2
-    dq = lambda col: F.sum(F.round(col, 12).cast("decimal(38,12)")).cast(  # noqa: E731
-        "double"
-    )
     agg = grid.groupBy("source", "n_src").agg(
-        dq(p * F.log(p / q)).alias("kl"),
-        dq(p * F.log(p / m)).alias("js_p"),
-        dq(q * F.log(q / m)).alias("js_q"),
+        exact_sum(F.round(p * F.log(p / q), 12), 12).alias("kl"),
+        exact_sum(F.round(p * F.log(p / m), 12), 12).alias("js_p"),
+        exact_sum(F.round(q * F.log(q / m), 12), 12).alias("js_q"),
     )
     return agg.select(
         "source",
@@ -5217,9 +5164,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", contrib.alias("c"))
         .groupBy("query_id", "doc_id")
         .agg(
-            F.round(
-                F.sum(F.col("c").cast("decimal(38,6)")).cast("double"), 6
-            ).alias("bm25")
+            F.round(exact_sum(F.col("c")), 6).alias("bm25")
         )
     )
     w = Window.partitionBy("query_id").orderBy(

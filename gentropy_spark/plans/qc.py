@@ -18,12 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.operators.coloc import grouped_logsumexp
 from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table, ts_micros
 
-DEC = "decimal(38,6)"
 CHI2_MEDIAN_1DF = 0.45493642311957185  # scipy.stats.chi2.ppf(0.5, df=1)
 
 BETA_SQL = "(value - 150.0) / 100.0"
@@ -65,12 +65,9 @@ def qc_metrics(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
     aggs = {
         "gc_lambda": F.expr("percentile(z2, 0.5)") / CHI2_MEDIAN_1DF,
         "pz_corr": F.round(F.corr("z", "z_from_p"), 6),
-        "mean_diff": F.sum(
-            F.round(F.col("z") - F.col("z_from_p"), 6).cast(DEC)
-        ).cast("double")
+        "mean_diff": exact_sum(F.round(F.col("z") - F.col("z_from_p"), 6))
         / F.count("*"),
-        "mean_beta": F.sum(F.col("beta").cast(DEC)).cast("double")
-        / F.count("*"),
+        "mean_beta": exact_sum(F.col("beta")) / F.count("*"),
         "n_variants": F.count("*"),
     }
     return (
@@ -258,8 +255,8 @@ def q_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = tagged.groupBy("contig", "bucket").agg(
         F.count("*").alias("n_studies"),
-        F.sum(F.col("wb").cast("decimal(38,12)")).cast("double").alias("sum_wb"),
-        F.sum(F.col("w").cast("decimal(38,12)")).cast("double").alias("sum_w"),
+        exact_sum(F.col("wb"), 12).alias("sum_wb"),
+        exact_sum(F.col("w"), 12).alias("sum_w"),
     )
     meta_beta = F.col("sum_wb") / F.col("sum_w")
     meta_se = F.sqrt(1.0 / F.col("sum_w"))

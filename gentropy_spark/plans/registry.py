@@ -104,8 +104,9 @@ _SNAPSHOT_PRIORITY = [
     "variant_effect_normalise",
     # (d) plans changed after r18, with no snapshot evidence since: the
     # standalone L2G gene/distance keys now select from the factory's
-    # shared family pieces, and q1 runs the exact _dsum (q3/q5, which
-    # also sum through it, already sit in (c)). They replace the three
+    # shared family pieces, and q1 runs the exact long-sum kernel
+    # (now functions/exact.py; q3/q5, which also sum through it,
+    # already sit in (c)). They replace the three
     # sketch keys (kmv/hll/cms), whose plans are unchanged since their
     # r18 evidence.
     "l2g_gene_features",

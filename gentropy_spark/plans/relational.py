@@ -3,12 +3,8 @@
 These exercise the engine's scan → filter → join → aggregate spine on
 the TPC-H-shaped tables. Design rules for oracle-exactness:
 
-- One exact sum discipline: every SUM over doubles equals
-  CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE). Decimal addition is
-  associative, so Spark's partial-aggregation order and DuckDB's serial
-  order give bit-equal results (a plain double SUM is order-dependent
-  in the last ulp). ``_dsum`` computes that value through exact long
-  micro-unit sums; there is no inexact profile.
+- Every SUM over doubles is ``functions.exact.exact_sum`` (the one
+  exact sum discipline, described there).
 - Every average is decimal-sum / count in double.
 - Quantile/corr-style statistics are rounded to 6 dp on both sides.
 - Tie-breaking orderings are always total (include a unique key).
@@ -24,84 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gentropy_spark.functions.arrays import HARMONIC_NORM, harmonic_sum
+from gentropy_spark.functions.exact import exact_decimal_sum, exact_sum
 from gentropy_spark.operators.reshape import long_to_wide, top_k_per_group, wide_to_long
 from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.session import prepared
 from gentropy_spark.sources.readers import read_table
 
-DEC = "decimal(38,6)"
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-
-
-_SPLIT_SHIFT = 20  # micro-unit split base 2^20
-_SPLIT_BASE = 1 << _SPLIT_SHIFT
-_RINT_LIMIT = float(1 << 50)  # |x * 1e6| bound of the rint branch
-# |x| bound of the long micro-unit path: 9e12 * 1e6 < 2^63.
-_LONG_LIMIT = 9e12
-
-
-def _dsum(col: F.Column) -> F.Column:
-    """Order-independent sum of a double column, bit-identical to
-    ``CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)`` for every input.
-
-    Two costs of the decimal path are avoided:
-
-    - The per-row ``CAST(x AS DECIMAL(38,6))`` is BigDecimal work. It
-      yields ``uv``, the micro-unit integer of ``x``; for almost every
-      row ``rint(x * 1e6)`` is the same integer for the price of one
-      double multiply. With ``y = x * 1e6`` the conversion is
-
-          CASE WHEN |y - rint(y)| < 1e-3 AND |y| < 2^50
-               THEN CAST(rint(y) AS BIGINT)
-               ELSE CAST(CAST(x AS DECIMAL(38,6)) * 1e6 AS BIGINT) END
-
-      Why the first branch is exact: Spark's cast parses the decimal
-      string of ``x`` (Java's ``Double.toString``; any string that
-      round-trips to ``x`` will do) and rounds it HALF_UP to 6 dp.
-      That string is within ulp(x)/2 of ``x``, i.e. less than 1/8 in
-      micro-units, because ulp(x) * 1e6 < 2 * ulp(y) and ulp(y) <= 1/8
-      below 2^50. The product ``y`` is within ulp(y)/2 <= 1/16 of
-      ``x * 1e6``. So when ``y`` lies within 1e-3 of the integer ``n``
-      the string is within 1/8 + 1/16 + 1e-3 < 1/2 of ``n`` in
-      micro-units: far from a HALF_UP tie, and the cast rounds to the
-      same ``n`` that ``rint`` picks. Near 2^52, ulp(y) reaches 1 and
-      the argument fails, hence the 2^50 bound. Everything else (7-dp
-      ties, large magnitudes, NaN, NULL) takes the decimal branch.
-    - A DECIMAL(38,6) sum buffer is BigDecimal-backed in Spark (the
-      compact-long fast path stops at precision 18), but the same
-      exact value is reachable through LONG arithmetic:
-
-          SUM(dec) == (SUM(uv >> 20) * 2^20 + SUM(uv & (2^20 - 1))) / 1e6
-
-      — arithmetic shift is floor division and two's-complement AND
-      gives a non-negative remainder, so the identity holds for
-      negative values too, and both partial sums are plain long adds
-      (codegen fast path, ANSI overflows loudly). The hi/lo split keeps
-      the long buffers in range up to ~9e12 rows per group at unit-ish
-      magnitudes; ``uv`` itself must fit a long, i.e. |x| < ~9.2e12.
-      Rows at or above ``_LONG_LIMIT`` (and NaN/infinity) skip the long
-      sums and go to a third, plain DECIMAL(38,6) sum instead.
-      Recombination happens per GROUP (not per row) in DECIMAL(38, 0),
-      the division by 1e6 is exact (the quotient has <= 6 decimals,
-      below the result scale of 8), the large-row sum is added in
-      decimal (exact; a group with no rows on one side keeps the
-      other side's value, and an all-NULL group stays NULL), and the
-      final decimal->double cast is the same single correct rounding
-      of the same exact rational as the decimal-sum path.
-    """
-    y = col * F.lit(1e6)
-    n = F.rint(y)
-    in_long = F.abs(col) < F.lit(_LONG_LIMIT)
-    uv = F.when(
-        (F.abs(y - n) < F.lit(1e-3)) & (F.abs(y) < F.lit(_RINT_LIMIT)),
-        n.cast("long"),
-    ).when(in_long, (col.cast(DEC) * F.lit(1_000_000)).cast("long"))
-    hi = F.sum(F.shiftright(uv, _SPLIT_SHIFT))
-    lo = F.sum(uv.bitwiseAND(F.lit(_SPLIT_BASE - 1)))
-    total = hi.cast("decimal(38,0)") * F.lit(_SPLIT_BASE) + lo
-    small = total / F.lit(1_000_000)
-    large = F.sum(F.when(~in_long, col.cast(DEC)))
-    return F.coalesce(small + large, small, large).cast("double")
 
 
 # --- A1: pricing summary (TPC-H Q1 shape) --------------------------------
@@ -114,13 +39,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("2001-09-01"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dsum(F.col("l_quantity")).alias("sum_qty"),
-            _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-            _dsum(disc_price).alias("sum_disc_price"),
-            _dsum(charge).alias("sum_charge"),
-            (_dsum(F.col("l_quantity")) / F.count("*")).alias("avg_qty"),
-            (_dsum(F.col("l_extendedprice")) / F.count("*")).alias("avg_price"),
-            (_dsum(F.col("l_discount")) / F.count("*")).alias("avg_disc"),
+            exact_sum(F.col("l_quantity")).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+            exact_sum(disc_price).alias("sum_disc_price"),
+            exact_sum(charge).alias("sum_charge"),
+            (exact_sum(F.col("l_quantity")) / F.count("*")).alias("avg_qty"),
+            (exact_sum(F.col("l_extendedprice")) / F.count("*")).alias("avg_price"),
+            (exact_sum(F.col("l_discount")) / F.count("*")).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
     )
@@ -166,7 +91,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("o_orderdate"),
             "o_orderpriority",
         )
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
         .limit(10)
     )
@@ -216,7 +141,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(_dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
 
 
@@ -286,19 +211,13 @@ WIDE_TO_LONG_SQL = " UNION ALL ".join(
 
 # --- A6: long -> wide pivot ----------------------------------------------
 def q_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = read_table(spark, sf_dir, "events").withColumn(
-        "value_dec", F.col("value").cast(DEC)
-    )
-    out = long_to_wide(
-        ev,
+    return long_to_wide(
+        read_table(spark, sf_dir, "events"),
         id_vars=["user_id"],
         var_col="event_type",
-        value_col="value_dec",
+        value_col="value",
         value_list=EVENT_TYPES,
-        agg="sum",
-    )
-    return out.select(
-        "user_id", *[F.col(t).cast("double").alias(t) for t in EVENT_TYPES]
+        agg=exact_sum,
     )
 
 
@@ -706,12 +625,8 @@ def q_rollup_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             # decimal(38,6) output surfaces as pandas `object` while
             # DuckDB's DECIMAL converts to float64 — identical values,
             # divergent physical dtype, failed driver hash.
-            F.sum(F.col("l_quantity").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            exact_sum(F.col("l_quantity")).alias("sum_qty"),
+            exact_sum(F.col("l_extendedprice")).alias("sum_price"),
         )
         .select(
             "l_returnflag", "l_linestatus", "gid", "n_rows", "sum_qty", "sum_price"
@@ -755,7 +670,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey"))
         .agg(
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(38,6)")), 2)
+            F.round(exact_decimal_sum(F.col("o_totalprice")), 2)
             .cast("double")
             .alias("new_balance")
         )

@@ -249,6 +249,7 @@ def q_hopping_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     join."""
     from pyspark.sql import functions as F
 
+    from gentropy_spark.functions.exact import exact_sum
     from gentropy_spark.sources.readers import read_table, ts_micros
 
     ev = read_table(spark, sf_dir, "events")
@@ -276,9 +277,7 @@ def q_hopping_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.groupBy("win_seq", "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("sum_value"),
+            exact_sum(F.col("value")).alias("sum_value"),
         )
         .select(
             (F.col("win_seq") * HOP_SLIDE_US).alias("window_start_us"),

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.plans.genomics import CREDIBLE_SQL, SUMSTATS_SQL, q_credible_set
 from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.session import prepared
@@ -106,7 +107,7 @@ def q_credible_set_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     t6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
     return cs.groupBy("study_id", "contig").agg(
         F.count("*").alias("set_size"),
-        t6(F.sum(F.col("pp").cast("decimal(38,9)")).cast("double")).alias("pp_mass"),
+        t6(exact_sum(F.col("pp"), 9)).alias("pp_mass"),
         F.max("pp").alias("top_pp"),
     ).select(
         "study_id",

@@ -10,7 +10,7 @@ with a complete drain, streaming and batch semantics coincide).
 
 Scale notes: file-stream → watermark 1h → tumbling window per
 (user_id, window) is a streaming state store keyed by a
-high-cardinality composite; sums use decimal to stay merge-exact
+high-cardinality composite; sums are exact (``exact_sum``) to stay merge-exact
 across micro-batches; at cluster scale the same plan runs continuous
 with checkpointing — the query shape is identical.
 """
@@ -22,9 +22,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.sources.readers import normalize_events_ts, read_table
 
-DEC = "decimal(38,6)"
 WINDOW_US = 86_400_000_000  # 1 day tumbling windows (epoch-aligned)
 
 
@@ -79,7 +79,7 @@ def windowed_event_agg(stream: DataFrame) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
+            exact_sum(F.col("value")).alias("sum_value"),
         )
         .select(
             F.unix_micros(F.col("w.start")).alias("window_start_us"),
@@ -324,7 +324,7 @@ def run_stream_static_enrich(
     ).join(nation, on="nation_key")
     out = enriched.groupBy("nation_key", "nation_name").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
+        exact_sum(F.col("value")).alias("sum_value"),
     )
     return _drain(out, query_name, "complete")
 
@@ -357,7 +357,7 @@ def run_sliding_available_now(
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
+            exact_sum(F.col("value")).alias("sum_value"),
         )
         .select(
             F.unix_micros(F.col("w.start")).alias("window_start_us"),

@@ -10,7 +10,7 @@ from gentropy_spark.session import get_session
 SF = "/root/testdata/sf0.001"
 
 AUDIT = {
-    "q1_pricing_summary": "Pushed shipdate filter + pruned scan; partial (map-side) exact sums (long micro-unit hi/lo split, a decimal sum only for |x| >= 9e12); one exchange.",
+    "q1_pricing_summary": "Pushed shipdate filter + pruned scan; partial (map-side) exact sums (exact_sum: three long limb sums of the micro-units, a decimal sum only for |x*1e6| >= 9e18); one exchange.",
     "q5_local_supplier": "Dims broadcast (supplier/nation/region); AQE picks strategy for fact-scaled joins.",
     "window_clump_leads": "Single hash exchange on (study, contig) shared by the lag, ranking and aggregate windows.",
     "locus_breaker": "Same single-exchange sessionization shape.",
@@ -21,7 +21,7 @@ AUDIT = {
     "dedup_minhash_lsh": "Persisted shingle index; banded signature equi-join; verification join is semi-join-pruned. r13: the few-file re-spread is HASH partitioning on doc_id (round-robin's defensive sortBeforeRepartition full-row sort cost ~0.5s/run warm) and fires only when file layout is KNOWN and under-split.",
     "ann_cosine_topk": "Unrolled 64-dim dot products (whole-stage codegen); per-query window ranking.",
     "dedup_embedding_cosine": "Arrow-batched packed-sign-bit UDF (constant codegen size) -> cached projection -> banded equi-join; UDF cosine verify.",
-    "meta_analysis": "Partial-aggregable decimal sums per bucket; z emitted via IEEE-exact arithmetic.",
+    "meta_analysis": "Partial-aggregable exact sums (exact_sum, scale 12) per bucket; z emitted via IEEE-exact arithmetic.",
     "ld_index_build": "Symmetric banded pairs by explode-to-equi-join (r6 — replaces range-join nested loop + transpose union); one pipeline, hash join on (contig, idx).",
     "asof_join": "Union both sides tagged; ONE exchange on user_id; last-non-null carry-forward window. No range join.",
     "kmv_distinct": "Distinct (group, hash) partial-agg; per-group top-K window shares the group partitioning.",
@@ -30,13 +30,13 @@ AUDIT = {
     "merge_upsert": "Full-outer sort-merge on the key; change-set aggregation partial-agg'd before the join.",
     "decontaminate": "Benchmark shingles deduped small then broadcast; training side aggregates ride one shuffle.",
     "pii_redact": "Pure regexp projection over the scan: zero exchanges, full whole-stage codegen.",
-    "bm25_topk": "Inverted-index retrieval: postings from ONE corpus scan (partial-agg tf), broadcast query-term set, df on the query-vocabulary slice only, broadcast 1-row (N, avgdl); per-term contributions 6dp-rounded then DECIMAL-summed; bounded-query guard (BM25_MAX_QUERY_DOCS) enforced LAZILY via a raise_error branch riding the stats build side (r15 — plan build stays job-free).",
+    "bm25_topk": "Inverted-index retrieval: postings from ONE corpus scan (partial-agg tf), broadcast query-term set, df on the query-vocabulary slice only, broadcast 1-row (N, avgdl); per-term contributions 6dp-rounded then exact-summed (exact_sum); bounded-query guard (BM25_MAX_QUERY_DOCS) enforced LAZILY via a raise_error branch riding the stats build side (r15 — plan build stays job-free).",
     "semdedup_prune": "r16 two-level assignment (r15 verdict item 1): centroids hash to ceil(sqrt(K)) coarse cells, vectors meet them via the cell EQUI-JOIN (the n x K broadcast crossJoin and its O(K) centroid broadcast are gone); coarse/candidate distances in whole-stage codegen (sq_l2_expr), every argmin a min-of-struct partial agg so the 64-dim vectors shuffle once per vector; exact whenever K2 <= NPROBE (all oracle SFs, structurally). Within-cluster pairs stay the centroid_id equi-join + Arrow cosine verify; pair work linear at fixed target occupancy.",
     "quality_classifier": "Zero UDFs: cross-engine Horner hash to 512 buckets, integer LCG weights, EXACT int64 logit accumulation (S/(M*L) - 0.5 -- no float sum order exists), one sigmoid projection, one partial-agg groupBy on doc_id; spread_if_narrow on the scan (r15 — the CPU-bound hash projection serialized on a 2-task scan in the 100x probe: growth 24x -> 2.3x).",
     "bpe_train": "K=4 declarative merge stages over the aggregated word dictionary (corpus-sized work = ONE vocab groupBy, spread_if_narrow on the scan); per stage: adjacent-pair partial-agg counts, deterministic sort-limit argmax broadcast as a 1-row build side, and the merge as a left FOLD over the symbol array (r15 — string replace under-merged adjacent occurrences, the r14 advisory); localCheckpoint truncates lineage per iteration. Loop cost independent of corpus size.",
     "bpe_encode": "Encode = dictionary problem: the merge loop's final per-word symbolization (vocab-grain) broadcast-joined onto the token stream, one doc-grain partial-agg groupBy; corpus-sized work is the spread scan + join probe, never per-document merging.",
     "epoch_shuffle": "Hash-keyed permutation: one projection (Horner hash of doc_id:epoch), shard-partitioned window for positions -- no global sort, shuffle only on the shard key.",
-    "ann_pq_topk": "PQ encode via per-subspace codebook broadcast + ROUND-before-argmin as a min-of-struct partial aggregation over codegen subvector distances (r16: the row_number window shuffled all n x m x codes scored rows and the Arrow kernel paid ~60s of per-row overhead on 25.6M 8-dim pairs at 100x); ADC distances DECIMAL-summed per (query, corpus) pair so ranking is partition-order-free; exact-cosine rerank only on the k winners. 100x A/B 19.75s vs DuckDB 19.02s.",
+    "ann_pq_topk": "PQ encode via per-subspace codebook broadcast + ROUND-before-argmin as a min-of-struct partial aggregation over codegen subvector distances (r16: the row_number window shuffled all n x m x codes scored rows and the Arrow kernel paid ~60s of per-row overhead on 25.6M 8-dim pairs at 100x); ADC distances exact-summed (exact_sum) per (query, corpus) pair so ranking is partition-order-free; exact-cosine rerank only on the k winners. 100x A/B 19.75s vs DuckDB 19.02s.",
     "finemap_calibration": "Driver-side seeded simulation by nature (the reference harness posture); report row pinned as a VALUES-literal oracle.",
     "corpus_curate": "Six pipeline stages as ONE DAG: shared document scan, broadcast joins for small sides, final two-level pack. r12: is_canonical via broadcast ANTI join on the tiny non-canonical drop set (no corpus-wide cluster window in the curation path). r13: the quality gate and language ID are FUSED into the document scan (one staged projection, zero joins -- was 2 scans + 2 doc_id joins), and decontamination runs the Bloom probe (E20b scale posture: fixed 4096-word broadcast array, no benchmark-shingle equi-join; oracle updated to the bloom semantics, bit-identical). r14: the scored-doc projection is persisted (track_cache) -- predicate pushdown was substituting the sampling key's interpreted langid HOF chain down into the scan Filter and re-evaluating it per row (3.8s single-task CPU on the event-log timeline); the cache-fill plan has no downstream predicates, the spread repartition parallelizes the fill, and both cumsum fork branches read the cache. Pair table via the prepared-plan memo; drop-set anti-join broadcast explicitly.",
     "kmeans_step": "Broadcast centroids; HOF distances in codegen; one partial-agg groupBy for occupancy stats.",
@@ -61,7 +61,7 @@ AUDIT = {
     "bloom_decontaminate": "Bloom build = bit_or partial-agg over benchmark shingle positions (shuffle <= 4096 words, no build-side distinct -- bit_or absorbs duplicates); probe = K inline element_at lookups against the ONE-row broadcast dense word array; per-doc counts ride ONE doc_id groupBy (r13: the per-(doc, shingle) min-regroup was redundant -- shingles() emits distinct pairs).",
     # r17 additions
     "ann_pca_topk": "E51 loading/means ride a 1-row broadcast of d-length arrays (the composition point); projections = one per-row DECIMAL array kernel over the scan (zip_with terms, aggregate sum; its size does not grow with d), cached (feeds corpus bins AND query probes); bin range a 1-row broadcast; candidates meet via the bin EQUI-join (3 exploded probe keys per query, never a query x corpus product); exact cosine + per-query window only on the ~3/16 slice.",
-    "embedding_pca_topm": "Covariance method: ONE corpus pass builds the d x d Gram table (explode -> vec_id self-join -> d^2-group DECIMAL partial agg; only combiner output crosses the wire), then ALL power blocks + matrix-level Hotelling deflations run as ONE Arrow task over 4096 values with exact HALF_UP Decimal arithmetic (= the relational SUM). Exactly two data-grain stages (mean agg, Gram agg); measured in over three rejected cuts (explode+join matvecs ~30 jobs; unrolled DECIMAL codegen chains OOM'd janino; relational tiny-table iteration ~20 scheduler-bound jobs).",
+    "embedding_pca_topm": "Covariance method: ONE corpus pass builds the d x d Gram table (explode -> vec_id self-join -> d^2-group exact-sum (exact_decimal_sum) partial agg; only combiner output crosses the wire), then ALL power blocks + matrix-level Hotelling deflations run as ONE Arrow task over 4096 values with exact HALF_UP Decimal arithmetic (= the relational SUM). Exactly two data-grain stages (mean agg, Gram agg); measured in over three rejected cuts (explode+join matvecs ~30 jobs; unrolled DECIMAL codegen chains OOM'd janino; relational tiny-table iteration ~20 scheduler-bound jobs).",
     "embedding_pca_project": "E54's output pivoted to three d-length arrays on a 1-row broadcast; both coordinates are DECIMAL array kernels (zip_with terms, aggregate sum; their size does not grow with d) in ONE projection over the embeddings scan -- zero exchanges downstream of the model build (the pii_redact class). Partial sums re-cast to DECIMAL(38,12) per addition (Spark's decimal + re-scales a digit narrower per chained term -- unfixed, 9dp partials round silently).",
 }
 

@@ -9,8 +9,11 @@ Usage: python scripts/train_l2g_gbm.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import pprint
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

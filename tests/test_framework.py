@@ -741,6 +741,108 @@ def test_package_reads_only_deployment_env_vars():
     assert not bad, f"env reads outside the deployment settings: {bad}"
 
 
+def test_parity_sums_go_through_exact_sum():
+    """No ``F.sum`` under ``gentropy_spark/`` outside ``functions/exact.py``
+    sums a decimal cast: every exact sum of doubles is ``exact_sum`` /
+    ``exact_decimal_sum``. A cast counts when its type is a
+    ``"decimal..."`` literal, a module or local name bound to one, or a
+    ``DecimalType(...)`` call. An ``F.sum`` is flagged when its argument
+    holds such a cast, a Python name assigned one, or the name of a
+    column that ``withColumn`` or ``.alias`` set to one anywhere in the
+    same module (``F.sum("t")``, ``F.sum(F.col("t"))``). Not seen: sums
+    in SQL strings (``F.expr``, ``spark.sql``), ``agg`` dicts, a ``sum``
+    reached under another name, and a column bound in one module and
+    summed in another (as ``pivot_wide`` once handed a decimal column
+    to ``operators/reshape.long_to_wide``). Fails naming each flagged
+    ``F.sum``."""
+    import ast
+    from pathlib import Path
+
+    pkg_dir = Path(_repo_root()) / "gentropy_spark"
+    bad = []
+    for path in sorted(pkg_dir.rglob("*.py")):
+        if path == pkg_dir / "functions" / "exact.py":
+            continue
+        tree = ast.parse(path.read_text())
+        dec_types = {
+            t.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Constant)
+            and str(node.value.value).lower().startswith("decimal")
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+
+        def is_dec_cast(node) -> bool:
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("cast", "try_cast")
+                and node.args
+            ):
+                return False
+            to = node.args[0]
+            return (
+                (isinstance(to, ast.Constant) and str(to.value).lower().startswith("decimal"))
+                or (isinstance(to, ast.Name) and to.id in dec_types)
+                or (
+                    isinstance(to, ast.Call)
+                    and getattr(to.func, "id", getattr(to.func, "attr", None)) == "DecimalType"
+                )
+            )
+
+        # Python names and column names bound to a decimal cast
+        dec_vars, dec_cols = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Assign) and is_dec_cast(node.value):
+                dec_vars |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            args = node.args
+            if (
+                node.func.attr == "withColumn"
+                and len(args) == 2
+                and isinstance(args[0], ast.Constant)
+                and is_dec_cast(args[1])
+            ):
+                dec_cols.add(args[0].value)
+            if (
+                node.func.attr == "alias"
+                and args
+                and isinstance(args[0], ast.Constant)
+                and is_dec_cast(node.func.value)
+            ):
+                dec_cols.add(args[0].value)
+
+        def sums_dec(arg) -> bool:
+            if any(is_dec_cast(n) for n in ast.walk(arg)):
+                return True
+            if isinstance(arg, ast.Constant):
+                return arg.value in dec_cols
+            if isinstance(arg, ast.Name):
+                return arg.id in dec_vars
+            return (
+                isinstance(arg, ast.Call)
+                and getattr(arg.func, "attr", None) == "col"
+                and bool(arg.args)
+                and isinstance(arg.args[0], ast.Constant)
+                and arg.args[0].value in dec_cols
+            )
+
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "sum"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+                and any(sums_dec(a) for a in node.args)
+            ):
+                bad.append(f"{path.relative_to(pkg_dir)}:{node.lineno}")
+    assert not bad, f"{len(bad)} decimal-cast sums outside exact_sum: {bad}"
+
+
 def test_ntz_normalization_is_session_tz_independent(spark):
     """normalize_events_ts must interpret an NTZ wall clock as UTC no
     matter what spark.sql.session.timeZone is set to."""

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -351,74 +352,161 @@ def test_dsir_importance_zero_sum_property(spark):
     assert mean_ratio <= 1e-9  # -KL <= 0
 
 
-def test_dsum_split_identity_matches_decimal_sum(spark):
-    """Property: the split-sum dsum (plans/relational.py) is
-    bit-identical to CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)
-    for mixed-sign values, many groups, NULLs, all-NULL groups, and
-    both branches of the per-row conversion — the negative-value
-    arithmetic-shift/AND identity, the rint guard and the NULL
-    propagation are exactly what the q1/q3/q5 parity rests on."""
+@pytest.mark.parametrize("scale", [6, 9, 12])
+def test_exact_sum_matches_decimal_sum(spark, scale):
+    """Property: ``exact_sum`` (functions/exact.py) is bit-identical to
+    CAST(SUM(CAST(x AS DECIMAL(38,s))) AS DOUBLE), grouped and over a
+    window, for mixed-sign values, many groups, NULLs, all-NULL groups,
+    and both branches of the per-row conversion — the negative-value
+    shift/AND limb identity, the rint guard and the NULL propagation
+    are exactly what every parity sum rests on. ``exact_decimal_sum``
+    equals the decimal sum itself, type included. Single-row groups
+    pin the per-row conversion on unrounded values of every magnitude
+    and on values just either side of a HALF_UP tie."""
     import random
+    from decimal import ROUND_HALF_UP, Decimal
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Window
 
-    from gentropy_spark.plans.relational import DEC, _dsum
+    from gentropy_spark.functions.exact import exact_decimal_sum, exact_sum
 
-    rng = random.Random(20260814)
+    u = 10**scale  # units per 1.0
+    rng = random.Random(20260814 + scale)
     rows = []
     for g in range(40):
         for _ in range(rng.randint(1, 60)):
             if rng.random() < 0.05:
                 v = None
             else:
-                v = rng.uniform(-1e6, 1e6) * (10 ** rng.randint(-6, 3))
+                v = rng.uniform(-1e6, 1e6) * (10 ** rng.randint(-6, 3)) * 1e6 / u
+                if rng.random() < 0.5:
+                    # values with at most `scale` decimals, as the
+                    # round(·, 9) terms summed at scale 12
+                    v = round(v, rng.randint(0, scale))
             rows.append((g, v))
-    rows.extend([(98, None), (99, -0.000001), (99, 0.0000015)])
-    # The per-row conversion takes rint(x * 1e6) only within 1e-3 of an
-    # integer and below |x * 1e6| = 2^50; everything else takes the
-    # decimal cast. Pin both branches and the edges between them.
+    rows.extend([(98, None), (99, -1.0 / u), (99, 1.5 / u)])
+    # The per-row conversion takes rint(x * 10^s) while
+    # |y - rint(y)| + |y| * 2^-51 < 1/2 (y = x * 10^s); everything else
+    # takes the decimal cast. Pin both branches and the edges between
+    # them.
     edge = {
-        # 7-dp HALF_UP ties, both signs
-        100: [s * (k * 1e-6 + 5e-7) for k in (0, 1, 7, 123456, 10**9) for s in (1, -1)],
-        # just inside and just outside |x * 1e6| = 2^50
-        101: [s * (2**50 + d) / 1e6 for d in (-3, -1, 0, 1, 3) for s in (1, -1)],
-        # large magnitudes (x = 1e12, |x * 1e6| = 2^53); rint(x * 1e6)
-        # is off by up to ulp/2 = 64 micro-units at 1e18, which the
+        # ties at scale + 1 dp, both signs
+        100: [s * (k + 0.5) / u for k in (0, 1, 7, 123456, 10**9) for s in (1, -1)],
+        # just inside and just outside |x * 10^s| = 2^50
+        101: [s * (2**50 + d) / u for d in (-3, -1, 0, 1, 3) for s in (1, -1)],
+        # large magnitudes (|x * 10^s| = 1e18 and 2^53); rint(x * 10^s)
+        # is off by up to ulp/2 = 64 units at 1e18, which the
         # cancelling pair makes visible in the sum
-        102: [1e12, -1e12, 2**53 / 1e6, -(2**53) / 1e6],
-        105: [1e12 + 0.25, -1e12],
+        102: [1e18 / u, -1e18 / u, 2**53 / u, -(2**53) / u],
+        105: [1e18 / u + 0.25e6 / u, -1e18 / u],
         # groups that mix both branches
-        103: [12.34, -0.01, 0.0000025, 1e12, 99.99],
-        104: [2**50 / 1e6 - 1, 2**50 / 1e6, -7.5e-6, 0.5],
-        # |x| past the long micro-unit range
-        106: [1e13, 1.0],
+        103: [12.34, -0.01, 2.5e-6, 1e18 / u, 99.99],
+        104: [2**50 / u - 1e6 / u, 2**50 / u, -7.5e-6, 0.5],
+        # |x * 10^s| past the long unit range
+        106: [1e19 / u, 1.0],
     }
     rows.extend((g, v) for g, vs in edge.items() for v in vs)
+    # one row per group: unrounded values over 22 decades, values a
+    # few ulps either side of a tie (k + 1/2 units), and the ties on
+    # which rint(y) misses the cast's integer though |y - rint(y)| < 1/2
+    # (found through a model of the cast: HALF_UP of the shortest
+    # round-trip string), which the guard must refuse
+    single = [
+        rng.choice((1, -1)) * rng.uniform(1, 10) * 10.0 ** rng.randint(-9, 12)
+        for _ in range(600)
+    ]
+    misses = []
+    for _ in range(40000):
+        t = (rng.randint(0, 10 ** rng.randint(0, 14)) + 0.5) / u
+        m = rng.randint(-6, 6)
+        for _ in range(abs(m)):
+            t = math.nextafter(t, math.copysign(math.inf, m))
+        y = t * u
+        cast = Decimal(repr(t)).scaleb(scale).quantize(Decimal(1), ROUND_HALF_UP)
+        if abs(y - round(y)) < 0.5 and round(y) != cast:
+            misses.append(-t if len(misses) % 2 else t)
+        elif len(single) < 1200:
+            single.append(t)
+    single.extend(misses)
+    rows.extend((1000 + i, v) for i, v in enumerate(single))
 
     def rint_branch(v: float) -> bool:
-        y = v * 1e6
-        return abs(y - round(y)) < 1e-3 and abs(y) < 2**50
+        y = v * u
+        return abs(y - round(y)) + abs(y) * 2.0**-51 < 0.5
 
-    for g in (103, 104):
-        assert len({rint_branch(v) for v in edge[g]}) == 2, g
-    assert not any(rint_branch(v) for g in (100, 102, 105) for v in edge[g])
-    df = spark.createDataFrame(rows, ["g", "x"])
+    if scale <= 6:  # the scales that run the long-sum kernel
+        for g in (103, 104):
+            assert len({rint_branch(v) for v in edge[g]}) == 2, g
+        assert not any(rint_branch(v) for g in (100, 102, 105) for v in edge[g])
+        assert any(rint_branch(v) for g, v in rows if g < 40 and v is not None)
+        # the guard admits rows far from an integer, and refuses ties
+        near_half = [v for v in single if abs(v * u - round(v * u)) > 0.45]
+        assert any(rint_branch(v) for v in near_half)
+        assert len(misses) >= 10 and not any(rint_branch(v) for v in misses)
+
+    dec = f"decimal(38,{scale})"
+    df = spark.createDataFrame(rows, "g long, x double")
+    x = F.col("x")
+    want_dec = F.sum(x.cast(dec))
     got = (
-        df.groupBy("g").agg(_dsum(F.col("x")).alias("s")).orderBy("g").collect()
+        df.groupBy("g")
+        .agg(exact_sum(x, scale).alias("s"), exact_decimal_sum(x, scale).alias("d"))
+        .orderBy("g")
     )
     want = (
         df.groupBy("g")
-        .agg(F.sum(F.col("x").cast(DEC)).cast("double").alias("s"))
+        .agg(want_dec.cast("double").alias("s"), want_dec.alias("d"))
         .orderBy("g")
-        .collect()
     )
-    assert len(got) == len(want)
-    for a, b in zip(got, want):
-        assert a.g == b.g
-        # bit-identical, not approximately equal
-        assert (a.s is None) == (b.s is None), a.g
-        if a.s is not None:
-            assert a.s == b.s and str(a.s) == str(b.s), (a.g, a.s, b.s)
+    assert got.schema == want.schema
+    w = Window.partitionBy("g")
+    got_w = df.select("g", exact_sum(x, scale, over=w).alias("s")).distinct()
+    want_w = df.select("g", want_dec.over(w).cast("double").alias("s")).distinct()
+    for got_rows, want_rows in (
+        (got.collect(), want.collect()),
+        (got_w.orderBy("g").collect(), want_w.orderBy("g").collect()),
+    ):
+        assert len(got_rows) == len(want_rows) == len({r[0] for r in rows})
+        for a, b in zip(got_rows, want_rows):
+            assert a.g == b.g
+            for f in a.__fields__[1:]:
+                # bit-identical, not approximately equal
+                assert (a[f] is None) == (b[f] is None), (a.g, f)
+                assert a[f] == b[f] and str(a[f]) == str(b[f]), (a.g, f, a[f], b[f])
+
+
+@pytest.mark.parametrize("scale", [6, 9, 12])
+def test_exact_sum_keeps_decimal_range(spark, scale):
+    """``exact_sum`` holds the decimal sum's range, |sum| < 10^(38-s):
+    a group of 1.2M rows just inside the long unit range (|x * 10^s|
+    = 8.9e18, a sum of ~1.07e25 units, past what a two-limb long split
+    holds) and groups whose large rows sum past 10^(37-s) come out
+    bit-identical to the decimal sum, where a long overflow or a
+    DECIMAL(37,s) part would raise."""
+    n = 1_200_000
+    near_long = 8.9e18 / 10**scale
+    many = spark.range(n).select(
+        F.lit(0).cast("long").alias("g"),
+        (F.lit(near_long) * (1 + (F.col("id") % 7) * 1e-6)).alias("x"),
+    )
+    big = 4.0 * 10.0 ** (37 - scale)
+    rows = [(2, big), (2, big), (2, 1.5), (2, near_long), (3, -big), (3, -big), (3, -0.25)]
+    df = many.unionByName(spark.createDataFrame(rows, "g long, x double"))
+    from gentropy_spark.functions.exact import exact_decimal_sum, exact_sum
+
+    dec = f"decimal(38,{scale})"
+    want_dec = F.sum(F.col("x").cast(dec))
+    got = df.groupBy("g").agg(
+        exact_sum(F.col("x"), scale).alias("s"),
+        exact_decimal_sum(F.col("x"), scale).alias("d"),
+    )
+    want = df.groupBy("g").agg(want_dec.cast("double").alias("s"), want_dec.alias("d"))
+    got_rows = sorted(got.collect())
+    want_rows = sorted(want.collect())
+    assert len(got_rows) == 3
+    assert [tuple(r) for r in got_rows] == [tuple(r) for r in want_rows]
+    assert [str(r.s) for r in got_rows] == [str(r.s) for r in want_rows]
+    assert abs(got_rows[1].d) > 10 ** (37 - scale)
 
 
 @settings(max_examples=8, deadline=None)
