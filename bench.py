@@ -24,8 +24,7 @@ bare ``execute()`` is LAZY for streaming-friendly plans
 Spark-side checksum action was likewise rejected: xxhash64 over
 complex output types runs interpreted and taxed wide outputs ~1s
 where DuckDB's hash is native. Ratios before/after the method change
-are NOT directly comparable; shared_subset_ratio_vs_prev carries both
-numbers.
+are NOT directly comparable.
 """
 
 from __future__ import annotations
@@ -118,105 +117,6 @@ HEADLINE = [
     # workload beyond that chain, so one headline slot covers both.
     "embedding_pca_project",
 ]
-
-
-def _prev_bench() -> tuple[int, dict, dict, object, str] | None:
-    """Latest BENCH_r{N}.json next to this file, or None.
-
-    Driver records wrap the payload as {"tail": <last-2000-chars>,
-    "parsed": <json-or-null>}. Three shapes occur in the wild, newest
-    first:
-
-    1. parsed payload WITH a per-query "duckdb" dict (never emitted by
-       the slim stdout line, but tolerated),
-    2. parsed payload WITHOUT one (the r11+ slim line: per-query duck
-       seconds live only in the committed BENCH_FULL.json sibling) —
-       recover "duckdb" from BENCH_FULL.json when its round/sf match,
-    3. parsed=null with a 2000-char tail (the r9/r10 long lines) —
-       reconstruct from the flat "duckdb"/"per_query_ratio" dicts that
-       sit at the line's end (spark seconds = ratio * duckdb per key).
-    """
-    import glob
-    import re
-
-    best_n, best_path = -1, None
-    here = os.path.dirname(os.path.abspath(__file__))
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_n:
-            best_n, best_path = int(m.group(1)), p
-    if best_path is None:
-        return None
-    try:
-        with open(best_path) as fh:
-            d = json.load(fh)
-        if isinstance(d.get("parsed"), dict):
-            d = d["parsed"]
-        if "queries" not in d and isinstance(d.get("tail"), str):
-            tail = d["tail"]
-
-            def _flat_dict(key: str) -> dict:
-                m = re.search(rf'"{key}":\s*(\{{[^{{}}]*\}})', tail)
-                return json.loads(m.group(1)) if m else {}
-
-            duck = _flat_dict("duckdb")
-            ratio = _flat_dict("per_query_ratio")
-            queries = {
-                k: round(ratio[k] * duck[k], 3)
-                for k in ratio
-                if k in duck
-            }
-            sf_m = re.search(r'"sf":\s*([0-9.]+)', tail)
-            return (
-                best_n,
-                queries,
-                duck,
-                float(sf_m.group(1)) if sf_m else None,
-                "tail_reconstruction",
-            )
-        queries = d.get("queries", {})
-        duck = d.get("duckdb", {})
-        duck_source = "record"
-        if queries and not duck:
-            # Slim parsed payload (shape 2): the per-query duckdb dict
-            # was trimmed from the stdout line to stay under the
-            # driver's capture limit; the full payload is committed
-            # next to the record.  Only trust it when it plausibly
-            # describes the SAME run: same sf and the query keys line
-            # up. CAVEAT (r12): BENCH_FULL.json is rewritten by every
-            # local bench run, so between the driver's record and the
-            # next commit the sibling's duck seconds can come from a
-            # DIFFERENT run of the same round — the pairing is then
-            # approximate (host drift applies). The caller receives
-            # the provenance and a duckdb_total consistency ratio so
-            # the shared-subset comparison is labelled, not silently
-            # blended.
-            full_path = os.path.join(here, str(d.get("full") or "BENCH_FULL.json"))
-            try:
-                with open(full_path) as fh:
-                    full = json.load(fh)
-                full_duck = full.get("duckdb", {})
-                if (
-                    isinstance(full_duck, dict)
-                    and full.get("sf") == d.get("sf")
-                    and len(set(queries) & set(full_duck)) >= min(10, len(queries))
-                ):
-                    duck = full_duck
-                    duck_source = "full_sibling"
-                    prev_total = d.get("duckdb_total")
-                    if prev_total:
-                        shared_total = sum(
-                            v for k, v in full_duck.items() if k in queries
-                        )
-                        duck_source = (
-                            f"full_sibling(consistency="
-                            f"{shared_total / prev_total:.2f})"
-                        )
-            except Exception:  # noqa: BLE001 — sibling missing/corrupt
-                pass
-        return best_n, queries, duck, d.get("sf"), duck_source
-    except Exception:  # noqa: BLE001 — a corrupt old record is not fatal
-        return None
 
 
 def main() -> None:
@@ -329,40 +229,6 @@ def main() -> None:
     if duck_con is not None:
         duck_con.close()
 
-    # Shared-subset ratio vs the previous round's record: same query
-    # keys, both engines, so the comparison is drift-normalised.
-    shared_vs_prev = None
-    prev = _prev_bench()
-    sf_now = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    if prev is not None and str(prev[3]) == sf_now:
-        prev_n, prev_q, prev_d = prev[0], prev[1], prev[2]
-        shared = sorted(
-            k for k in timings if k in duck_timings
-            and k in prev_q and k in prev_d and prev_d.get(k)
-        )
-        if shared:
-            prev_duck_total = sum(prev_d[k] for k in shared)
-            cur_duck_total = sum(duck_timings[k] for k in shared)
-            if prev_duck_total > 0 and cur_duck_total > 0:
-                shared_vs_prev = {
-                    "prev_round": prev_n,
-                    "n_shared": len(shared),
-                    "prev_ratio": round(
-                        sum(prev_q[k] for k in shared) / prev_duck_total, 3
-                    ),
-                    "current_ratio": round(
-                        sum(timings[k] for k in shared) / cur_duck_total, 3
-                    ),
-                    # Where the prev duck seconds came from: "record"
-                    # is exact; "full_sibling(...)" pairs the driver's
-                    # spark seconds with the committed BENCH_FULL run
-                    # of the same round (approximate under host drift —
-                    # the consistency value is sibling/record duck
-                    # totals); "tail_reconstruction" is the r9/r10
-                    # recovery path.
-                    "prev_duck_source": prev[4],
-                }
-
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark_on_common = sum(timings[k] for k in duck_timings)
     duck_total = sum(duck_timings.values())
@@ -382,11 +248,6 @@ def main() -> None:
         # Per-job constant (fresh trivial plan): queries at or under a
         # few multiples of this floor are overhead-bound, not plan-bound.
         "spark_fixed_overhead_sec": round(floor, 3),
-        **(
-            {"shared_subset_ratio_vs_prev": shared_vs_prev}
-            if shared_vs_prev
-            else {}
-        ),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # Prepared-plan provenance (r13 verdict item 7): how many timed
         # keys hit the prepared-plan memo on their warm repeat; the
@@ -491,8 +352,7 @@ def main() -> None:
                 "A/B: semdedup 0.8x, ivfpq 1.8x, kn 1.1x, pca 1.6x) "
                 "with 100x growth 5.3x/5.9x/4.5x/2.9x. Added to the "
                 "headline DELIBERATELY despite raising the aggregate "
-                "ratio — the shared-subset drift comparison in the "
-                "payload is the round-over-round signal."
+                "ratio."
             ),
             "embedding_pca_project": (
                 "times the FULL E54 chain (mean agg + d^2 Gram agg + "

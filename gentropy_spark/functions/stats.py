@@ -54,11 +54,9 @@ def effect_ci(beta: Column, se: Column) -> tuple[Column, Column]:
     )
 
 
-def stderr_from_ci(ci_upper: Column, ci_lower: Column, odds_ratio_based: bool = True) -> Column:
-    """SE from CI bounds; log-difference when the CI is odds-ratio based."""
-    if odds_ratio_based:
-        return F.abs(F.log(ci_upper) - F.log(ci_lower)) / (2 * Z_95)
-    return F.abs(ci_upper - ci_lower) / (2 * Z_95)
+def stderr_from_ci(ci_upper: Column, ci_lower: Column) -> Column:
+    """SE from the bounds of an odds-ratio CI (log-difference)."""
+    return F.abs(F.log(ci_upper) - F.log(ci_lower)) / (2 * Z_95)
 
 
 def harmonise_effect(
@@ -83,7 +81,7 @@ def harmonise_effect(
         F.when(se.isNotNull(), se)
         .when(
             ci_upper.isNotNull() & ci_lower.isNotNull() & odds_ratio.isNotNull(),
-            stderr_from_ci(ci_upper, ci_lower, odds_ratio_based=True),
+            stderr_from_ci(ci_upper, ci_lower),
         )
         .alias("se_h")
     )

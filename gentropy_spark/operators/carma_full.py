@@ -111,7 +111,6 @@ def carma_shotgun(
     lambda_val: float = 1.0,
     tau: float = 0.04,
     num_causal: int = 10,
-    outlier_switch: bool = True,
     outlier_bf_index: float = 1.0 / 3.2,
     max_rounds: int = 100,
 ) -> dict:
@@ -150,27 +149,26 @@ def carma_shotgun(
         # Outlier screen on the best growing/swapped configuration,
         # repeated like the reference's rejection loop but on the
         # argmax rather than a sample.
-        if outlier_switch:
-            while True:
-                grown = [
-                    c for c in candidates if len(c) > 1 and set(c) - cur
+        while True:
+            grown = [
+                c for c in candidates if len(c) > 1 and set(c) - cur
+            ]
+            if not grown:
+                break
+            best_grown = max(grown, key=lambda c: (visited[c], c))
+            test_S = np.asarray(best_grown, dtype=int)
+            log_bf = _outlier_log_bf(test_S, R, z, tau)
+            if math.exp(log_bf) < outlier_bf_index:
+                new_members = set(best_grown) - cur
+                outliers |= new_members
+                candidates = [
+                    c for c in candidates if not (set(c) & new_members)
                 ]
-                if not grown:
-                    break
-                best_grown = max(grown, key=lambda c: (visited[c], c))
-                test_S = np.asarray(best_grown, dtype=int)
-                log_bf = _outlier_log_bf(test_S, R, z, tau)
-                if math.exp(log_bf) < outlier_bf_index:
-                    new_members = set(best_grown) - cur
-                    outliers |= new_members
-                    candidates = [
-                        c for c in candidates if not (set(c) & new_members)
-                    ]
-                    for c in list(visited):
-                        if set(c) & new_members:
-                            del visited[c]
-                else:
-                    break
+                for c in list(visited):
+                    if set(c) & new_members:
+                        del visited[c]
+            else:
+                break
         if not candidates:
             break
         best = max(candidates, key=lambda c: (visited[c], c))
@@ -227,12 +225,6 @@ def carma_shotgun(
 
 def carma_finemap_full(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    cluster: str = "cluster_seq",
-    pos: str = "pos",
-    z_col: str = "z",
-    point_id: str = "point_id",
     tau_ld: float = 10_800_000_000.0,
     tau: float = 0.04,
     lambda_val: float = 1.0,
@@ -246,13 +238,13 @@ def carma_finemap_full(
     variant with its model-averaged PIP, outlier flag and the best
     configuration's membership.
     """
-    keys = [study, contig, cluster]
+    keys = ["study_id", "contig", "cluster_seq"]
     out_schema = T.StructType(
         [
-            df.schema[study],
-            df.schema[contig],
-            df.schema[cluster],
-            df.schema[point_id],
+            df.schema["study_id"],
+            df.schema["contig"],
+            df.schema["cluster_seq"],
+            df.schema["point_id"],
             T.StructField("pip", T.DoubleType()),
             T.StructField("is_outlier", T.BooleanType()),
             T.StructField("in_best_model", T.BooleanType()),
@@ -268,10 +260,10 @@ def carma_finemap_full(
         n = len(z)
         return pd.DataFrame(
             {
-                study: pdf[study],
-                contig: pdf[contig],
-                cluster: pdf[cluster],
-                point_id: pdf[point_id],
+                "study_id": pdf["study_id"],
+                "contig": pdf["contig"],
+                "cluster_seq": pdf["cluster_seq"],
+                "point_id": pdf["point_id"],
                 "pip": np.round(res["pip"], 6),
                 "is_outlier": [i in out_set for i in range(n)],
                 "in_best_model": [i in best for i in range(n)],
@@ -279,5 +271,5 @@ def carma_finemap_full(
         )
 
     return finemap_loci(
-        df, keys, fit_one, out_schema, tau_ld, pos, z_col, point_id, max_variants
+        df, keys, fit_one, out_schema, tau_ld, max_variants
     )

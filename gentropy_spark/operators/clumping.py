@@ -1,7 +1,8 @@
 """Distance-based clumping operators (SURVEY §2.C1–C3).
 
-Re-expresses gentropy's two clumping methods as generic, column-name-
-parameterised DataFrame transforms:
+Re-expresses gentropy's two clumping methods as DataFrame transforms
+over the summary-statistics columns (study_id, contig, pos, signif,
+point_id):
 
 - ``window_clump``: distance-window peak clumping. Reference:
   /root/reference/src/gentropy/method/window_based_clumping.py:28
@@ -46,19 +47,19 @@ from pyspark.sql import types as T
 def _cluster_seq(
     df: DataFrame,
     study: str,
-    contig: str,
-    pos: str,
     point_id: str,
     max_gap: int,
 ) -> DataFrame:
     """Assign a per-(study, contig) cluster sequence number.
 
-    A new cluster starts where the gap to the previous point exceeds
+    A new cluster starts where the gap to the previous ``pos`` exceeds
     ``max_gap``; the running sum of boundary flags numbers the
     clusters. Deterministic total order via (pos, point_id).
     """
-    w = Window.partitionBy(study, contig).orderBy(F.col(pos).asc(), F.col(point_id).asc())
-    gap = F.col(pos) - F.lag(pos).over(w)
+    w = Window.partitionBy(study, "contig").orderBy(
+        F.col("pos").asc(), F.col(point_id).asc()
+    )
+    gap = F.col("pos") - F.lag("pos").over(w)
     boundary = F.when(gap.isNull() | (gap > max_gap), F.lit(1)).otherwise(F.lit(0))
     return df.withColumn(
         "cluster_seq",
@@ -68,11 +69,6 @@ def _cluster_seq(
 
 def window_clump(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    pos: str = "pos",
-    signif: str = "signif",
-    point_id: str = "point_id",
     window: int = 500_000,
     min_signif: float | None = None,
 ) -> DataFrame:
@@ -83,40 +79,35 @@ def window_clump(
     lead_point_id, lead_pos, lead_signif).
     """
     if min_signif is not None:
-        df = df.filter(F.col(signif) >= min_signif)
-    clustered = _cluster_seq(df, study, contig, pos, point_id, window)
-    cluster_keys = [study, contig, "cluster_seq"]
+        df = df.filter(F.col("signif") >= min_signif)
+    clustered = _cluster_seq(df, "study_id", "point_id", window)
+    cluster_keys = ["study_id", "contig", "cluster_seq"]
     rank_w = Window.partitionBy(*cluster_keys).orderBy(
-        F.col(signif).desc(), F.col(pos).asc(), F.col(point_id).asc()
+        F.col("signif").desc(), F.col("pos").asc(), F.col("point_id").asc()
     )
     agg_w = Window.partitionBy(*cluster_keys)
     return (
         clustered.withColumn("lead_rank", F.row_number().over(rank_w))
         .withColumn("n_members", F.count("*").over(agg_w))
-        .withColumn("cluster_start", F.min(pos).over(agg_w))
-        .withColumn("cluster_end", F.max(pos).over(agg_w))
+        .withColumn("cluster_start", F.min("pos").over(agg_w))
+        .withColumn("cluster_end", F.max("pos").over(agg_w))
         .filter(F.col("lead_rank") == 1)
         .select(
-            F.col(study),
-            F.col(contig),
+            F.col("study_id"),
+            F.col("contig"),
             F.col("cluster_seq"),
             F.col("n_members"),
             F.col("cluster_start"),
             F.col("cluster_end"),
-            F.col(point_id).alias("lead_point_id"),
-            F.col(pos).alias("lead_pos"),
-            F.col(signif).alias("lead_signif"),
+            F.col("point_id").alias("lead_point_id"),
+            F.col("pos").alias("lead_pos"),
+            F.col("signif").alias("lead_signif"),
         )
     )
 
 
 def locus_breaker(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    pos: str = "pos",
-    signif: str = "signif",
-    point_id: str = "point_id",
     baseline_signif: float = 0.0,
     distance_cutoff: int = 250_000,
     lead_signif: float = 0.0,
@@ -129,42 +120,37 @@ def locus_breaker(
     both sides (start clamped at 0); loci whose lead significance is
     below ``lead_signif`` are dropped.
     """
-    filtered = df.filter(F.col(signif) >= baseline_signif)
-    clustered = _cluster_seq(filtered, study, contig, pos, point_id, distance_cutoff)
-    cluster_keys = [study, contig, "cluster_seq"]
+    filtered = df.filter(F.col("signif") >= baseline_signif)
+    clustered = _cluster_seq(filtered, "study_id", "point_id", distance_cutoff)
+    cluster_keys = ["study_id", "contig", "cluster_seq"]
     rank_w = Window.partitionBy(*cluster_keys).orderBy(
-        F.col(signif).desc(), F.col(pos).asc(), F.col(point_id).asc()
+        F.col("signif").desc(), F.col("pos").asc(), F.col("point_id").asc()
     )
     agg_w = Window.partitionBy(*cluster_keys)
     return (
         clustered.withColumn("lead_rank", F.row_number().over(rank_w))
         .withColumn("n_members", F.count("*").over(agg_w))
         .withColumn(
-            "locus_start", F.greatest(F.min(pos).over(agg_w) - flank, F.lit(0))
+            "locus_start", F.greatest(F.min("pos").over(agg_w) - flank, F.lit(0))
         )
-        .withColumn("locus_end", F.max(pos).over(agg_w) + flank)
-        .filter((F.col("lead_rank") == 1) & (F.col(signif) >= lead_signif))
+        .withColumn("locus_end", F.max("pos").over(agg_w) + flank)
+        .filter((F.col("lead_rank") == 1) & (F.col("signif") >= lead_signif))
         .select(
-            F.col(study),
-            F.col(contig),
+            F.col("study_id"),
+            F.col("contig"),
             F.col("cluster_seq"),
             F.col("n_members"),
             F.col("locus_start"),
             F.col("locus_end"),
-            F.col(point_id).alias("lead_point_id"),
-            F.col(pos).alias("lead_pos"),
-            F.col(signif).alias("lead_signif"),
+            F.col("point_id").alias("lead_point_id"),
+            F.col("pos").alias("lead_pos"),
+            F.col("signif").alias("lead_signif"),
         )
     )
 
 
 def semi_lead_clump(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    pos: str = "pos",
-    signif: str = "signif",
-    point_id: str = "point_id",
     window: int = 500_000,
     min_signif: float | None = None,
 ) -> DataFrame:
@@ -202,23 +188,23 @@ def semi_lead_clump(
     ``is_semi_lead`` for the split members. ``emit`` asserts it.
     """
     if min_signif is not None:
-        df = df.filter(F.col(signif) >= min_signif)
-    clustered = _cluster_seq(df, study, contig, pos, point_id, window)
+        df = df.filter(F.col("signif") >= min_signif)
+    clustered = _cluster_seq(df, "study_id", "point_id", window)
 
     out_schema = T.StructType(
         [
-            clustered.schema[study],
-            clustered.schema[contig],
+            clustered.schema["study_id"],
+            clustered.schema["contig"],
             T.StructField("cluster_seq", T.LongType()),
-            clustered.schema[point_id],
-            clustered.schema[pos],
-            clustered.schema[signif],
+            clustered.schema["point_id"],
+            clustered.schema["pos"],
+            clustered.schema["signif"],
             T.StructField("is_semi_lead", T.BooleanType()),
         ]
     )
-    out_cols = [study, contig, "cluster_seq", point_id, pos, signif,
+    out_cols = ["study_id", "contig", "cluster_seq", "point_id", "pos", "signif",
                 "is_semi_lead"]
-    key_cols = [study, contig, "cluster_seq"]
+    key_cols = ["study_id", "contig", "cluster_seq"]
 
     def prune_stream(batches):
         import numpy as np
@@ -243,7 +229,7 @@ def semi_lead_clump(
             gid = np.cumsum(new) - 1
             sizes = np.bincount(gid)
             starts = np.nonzero(new)[0]
-            positions = head[pos].to_numpy()
+            positions = head["pos"].to_numpy()
             flags = np.ones(len(head), dtype=bool)
             for g in np.nonzero(sizes > 1)[0]:
                 s = int(starts[g])
@@ -281,13 +267,13 @@ def semi_lead_clump(
             yield emit(carry)
 
     return (
-        clustered.select(*key_cols, point_id, pos, signif)
+        clustered.select(*key_cols, "point_id", "pos", "signif")
         .repartition(*[F.col(c) for c in key_cols])
         .sortWithinPartitions(
             *key_cols,
-            F.col(signif).desc(),
-            F.col(pos).asc(),
-            F.col(point_id).asc(),
+            F.col("signif").desc(),
+            F.col("pos").asc(),
+            F.col("point_id").asc(),
         )
         .mapInPandas(prune_stream, schema=out_schema)
     )
@@ -296,8 +282,6 @@ def semi_lead_clump(
 def exclude_regions(
     df: DataFrame,
     regions: Iterable[tuple[str, int, int]],
-    contig: str = "contig",
-    pos: str = "pos",
 ) -> DataFrame:
     """Drop points falling inside any blacklist region.
 
@@ -308,9 +292,9 @@ def exclude_regions(
     keep = F.lit(True)
     for region_contig, start, end in regions:
         inside = (
-            (F.col(contig) == region_contig)
-            & (F.col(pos) >= start)
-            & (F.col(pos) <= end)
+            (F.col("contig") == region_contig)
+            & (F.col("pos") >= start)
+            & (F.col("pos") <= end)
         )
         keep = keep & ~inside
     return df.filter(keep)

@@ -221,8 +221,6 @@ def coloc(
 def ecaviar_clpp(
     overlaps: DataFrame,
     group_cols: Sequence[str],
-    left_pp: str = "left_pp",
-    right_pp: str = "right_pp",
     extra_aggs: Sequence | None = None,
 ) -> DataFrame:
     """eCAVIAR colocalisation posterior probability per overlap group.
@@ -232,14 +230,12 @@ def ecaviar_clpp(
     """
     return overlaps.groupBy(*group_cols).agg(
         F.count("*").alias("n_overlapping"),
-        F.sum(F.col(left_pp) * F.col(right_pp)).alias("clpp"),
+        F.sum(F.col("left_pp") * F.col("right_pp")).alias("clpp"),
         *(extra_aggs or ()),
     )
 
 
-def beta_ratio_sign_avg(
-    left_beta: str = "left_beta", right_beta: str = "right_beta"
-) -> F.Column:
+def beta_ratio_sign_avg() -> F.Column:
     """Average sign of the left/right beta ratio across a locus pair.
 
     Reference: dataset/study_locus_overlap.py:55-84
@@ -260,13 +256,13 @@ def beta_ratio_sign_avg(
     division and cross-engine signum() return-type differences.
     """
     valid = (
-        F.col(left_beta).isNotNull()
-        & F.col(right_beta).isNotNull()
-        & (F.col(left_beta) != 0)
-        & (F.col(right_beta) != 0)
+        F.col("left_beta").isNotNull()
+        & F.col("right_beta").isNotNull()
+        & (F.col("left_beta") != 0)
+        & (F.col("right_beta") != 0)
     )
     sign = F.when(
-        F.col(left_beta) * F.col(right_beta) > 0, F.lit(1.0)
+        F.col("left_beta") * F.col("right_beta") > 0, F.lit(1.0)
     ).otherwise(F.lit(-1.0))
     return F.avg(F.when(valid, sign)).alias("beta_ratio_sign_avg")
 

@@ -31,18 +31,18 @@ from gentropy_spark.functions.xhash import (
 from gentropy_spark.session import track_cache
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Hash-group exact duplicates; keeper = lowest id per group."""
     w = Window.partitionBy("content_hash")
     return (
-        df.withColumn("content_hash", F.md5(F.col(text_col)))
+        df.withColumn("content_hash", F.md5(F.col("text")))
         .withColumn("group_n", F.count("*").over(w))
-        .withColumn("keeper_id", F.min(id_col).over(w))
+        .withColumn("keeper_id", F.min("doc_id").over(w))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "content_hash",
             "group_n",
-            (F.col(id_col) == F.col("keeper_id")).alias("is_keeper"),
+            (F.col("doc_id") == F.col("keeper_id")).alias("is_keeper"),
         )
     )
 
@@ -78,7 +78,6 @@ def shingles(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    spread: bool = True,
 ) -> DataFrame:
     """Distinct word n-gram shingles per document (one row per shingle).
 
@@ -103,12 +102,9 @@ def shingles(
     hash vs 2.0s no-spread, bench-shaped min-of-2 at sf0.1); and
     ``inputFiles() == []`` (local relations, derived plans, non-file
     sources) means *unknown* layout, not "one file" — those inputs are
-    left alone rather than unconditionally shuffled. Callers that KNOW
-    their input is tiny (the decontamination eval split: broadcastable
-    by contract) pass ``spread=False`` and skip the exchange entirely.
+    left alone rather than unconditionally shuffled.
     """
-    if spread:
-        df = spread_if_narrow(df, id_col)
+    df = spread_if_narrow(df, id_col)
     toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
     toks = F.col("_toks")
     # Guard: Spark's sequence(0, -1) would generate a DESCENDING range,
@@ -172,8 +168,6 @@ def _jaccard_verify(
 
 def rare_shingle_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     max_df: int = 10,
     min_jaccard: float = 0.2,
@@ -193,7 +187,7 @@ def rare_shingle_jaccard_pairs(
     # this materialisation is the bucketed shingle-index table a real
     # dedup pipeline would write anyway. Handles are registered with
     # session.track_cache so long-running sessions stay bounded.
-    sh = track_cache(shingles(df, text_col, id_col, n))
+    sh = track_cache(shingles(df, "text", "doc_id", n))
     rare = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df_count"))
@@ -201,12 +195,12 @@ def rare_shingle_jaccard_pairs(
         .select("shingle")
     )
     rare_sh = track_cache(sh.join(rare, on="shingle", how="inner"))
-    sizes = rare_sh.groupBy(id_col).agg(F.count("*").alias("set_size"))
+    sizes = rare_sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
 
     # Rare-shingle fan-out is bounded by max_df, so the shingle-keyed
     # self-join is safe here (each shingle yields <= max_df² pairs).
-    a = rare_sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = rare_sh.select(F.col(id_col).alias("id_b"), "shingle")
+    a = rare_sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = rare_sh.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
         a.join(b, on="shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -214,8 +208,8 @@ def rare_shingle_jaccard_pairs(
         .agg(F.count("*").alias("n_common"))
     )
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("set_size", "size_a"), on="id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("set_size", "size_b"), on="id_b")
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("set_size", "size_a"), on="id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("set_size", "size_b"), on="id_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -305,8 +299,6 @@ def minhash_lsh_pairs(
 
 def simhash_buckets(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 62,
 ) -> DataFrame:
     """62-bit SimHash per document (SURVEY E4).
@@ -319,16 +311,16 @@ def simhash_buckets(
     an explode + groupBy (bit, sign-sum) aggregation — fully
     distributed, no UDFs.
     """
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
     hashed = tok.select(
-        id_col,
+        "doc_id",
         poly_hash("tok", base=B1, mod=M1).alias("h1"),
         poly_hash("tok", base=B2, mod=M2).alias("h2"),
     )
     # Bit positions are compile-time constants — unroll to keep
     # shiftright on the fast literal path.
     bits_df = hashed.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 *[
@@ -349,11 +341,11 @@ def simhash_buckets(
                 ]
             )
         ).alias("bd"),
-    ).select(id_col, "bd.bit", "bd.delta")
+    ).select("doc_id", "bd.bit", "bd.delta")
     return (
-        bits_df.groupBy(id_col, "bit")
+        bits_df.groupBy("doc_id", "bit")
         .agg(F.sum("delta").alias("s"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(
                 F.when(
@@ -369,7 +361,6 @@ def duplicate_clusters(
     edges: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 25,
-    stats: dict | None = None,
     assert_edges_covered: bool = False,
 ) -> DataFrame:
     """Connected components over verified duplicate pairs (SURVEY E15).
@@ -426,7 +417,7 @@ def duplicate_clusters(
                 "table is stale or wider than the corpus"
             )
     nodes = docs.select(F.col(id_col).alias("id"))
-    lbl = edge_min_labels(edges, max_iters=max_iters, stats=stats)
+    lbl = edge_min_labels(edges, max_iters=max_iters)
     # Per-cluster sizes on the CONVERGED LABEL SET (tiny), not a
     # corpus-wide window: the old ``COUNT(*) OVER (PARTITION BY lbl)``
     # sorted and exchanged the whole corpus to mostly count singletons.
@@ -539,7 +530,6 @@ def edge_min_labels(
 
 def duplicate_drop_ids(
     edges: DataFrame,
-    id_col: str = "doc_id",
     max_iters: int = 25,
 ) -> DataFrame:
     """The NON-canonical duplicate ids — every edge endpoint whose
@@ -555,5 +545,5 @@ def duplicate_drop_ids(
     silently ignores them — no error surfaces."""
     lbl = edge_min_labels(edges, max_iters=max_iters)
     return lbl.filter(F.col("id") != F.col("lbl")).select(
-        F.col("id").alias(id_col)
+        F.col("id").alias("doc_id")
     )

@@ -39,12 +39,6 @@ PICS_K = 6.4  # reference pics.py:69 — empiric curve-fit constant
 
 def pics_annotate(
     clustered: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    cluster: str = "cluster_seq",
-    pos: str = "pos",
-    signif: str = "signif",
-    point_id: str = "point_id",
     nlp_scale: float = 10.0,
     tau: int = 10_800_000_000,
 ) -> DataFrame:
@@ -57,22 +51,22 @@ def pics_annotate(
     (study, contig) exchange instead of computing PICS as a separate
     subplan and joining back.
     """
-    keys = [study, contig, cluster]
+    keys = ["study_id", "contig", "cluster_seq"]
     ordered = Window.partitionBy(*keys).orderBy(
-        F.col(signif).desc(), F.col(pos).asc(), F.col(point_id).asc()
+        F.col("signif").desc(), F.col("pos").asc(), F.col("point_id").asc()
     )
     grp = Window.partitionBy(*keys)
 
-    nlp_lead = F.first(F.col(signif) / nlp_scale).over(ordered)
-    lead_pos = F.first(F.col(pos)).over(ordered)
-    r2 = F.exp(-F.abs(F.col(pos) - lead_pos) / F.lit(float(tau)))
+    nlp_lead = F.first(F.col("signif") / nlp_scale).over(ordered)
+    lead_pos = F.first(F.col("pos")).over(ordered)
+    r2 = F.exp(-F.abs(F.col("pos") - lead_pos) / F.lit(float(tau)))
     mu = nlp_lead * r2
     std = F.sqrt(1.0 - F.pow(F.sqrt(r2), PICS_K)) * F.sqrt(nlp_lead) / 2.0
     # Zero-signal guard: nlp_lead == 0 makes std == 0 and (nlp-mu)/std a
     # 0/0 NaN that would poison the whole cluster's prob_sum. The limit
     # of 2·sf((nlp−mu)/std) as nlp_lead → 0⁺ is 2·sf(0) = 1, so emit
     # that directly.
-    prob = F.when(F.col(pos) == lead_pos, F.lit(1.0)).when(
+    prob = F.when(F.col("pos") == lead_pos, F.lit(1.0)).when(
         (r2 >= 0.5) & (nlp_lead > 0.0), 2.0 * norm_sf_col((nlp_lead - mu) / std)
     ).when(r2 >= 0.5, F.lit(1.0))
 
@@ -92,12 +86,6 @@ def pics_annotate(
 
 def pics(
     clustered: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    cluster: str = "cluster_seq",
-    pos: str = "pos",
-    signif: str = "signif",
-    point_id: str = "point_id",
     nlp_scale: float = 10.0,
     tau: int = 10_800_000_000,
 ) -> DataFrame:
@@ -107,16 +95,13 @@ def pics(
     distance decay (exp(−|Δpos|/τ)); members with r² < 0.5 get a null
     posterior exactly as the reference nullifies weakly-linked tags.
     """
-    annotated = pics_annotate(
-        clustered, study, contig, cluster, pos, signif, point_id,
-        nlp_scale, tau,
-    )
+    annotated = pics_annotate(clustered, nlp_scale, tau)
     return annotated.select(
-        F.col(study),
-        F.col(contig),
-        F.col(cluster),
-        F.col(point_id),
-        F.col(pos),
+        F.col("study_id"),
+        F.col("contig"),
+        F.col("cluster_seq"),
+        F.col("point_id"),
+        F.col("pos"),
         F.col("pics_r2").alias("r2"),
         F.col("pics_pp"),
     )
@@ -128,9 +113,6 @@ def finemap_loci(
     kernel: Callable[[pd.DataFrame, np.ndarray, np.ndarray], pd.DataFrame],
     out_schema: T.StructType,
     tau: float,
-    pos: str,
-    z_col: str,
-    point_id: str,
     max_variants: int | None,
 ) -> DataFrame:
     """Run a per-locus numpy fine-mapper over every locus of ``df``.
@@ -138,22 +120,23 @@ def finemap_loci(
     ``keys`` is (study, contig) or (study, contig, cluster): the first
     two are the shuffle group, a third splits loci inside it. Per locus
     the rows are ordered by ``point_id``, cut to the ``max_variants``
-    largest |z| (ties on ``point_id``) when given, and handed to
+    largest |``z``| (ties on ``point_id``) when given, and handed to
     ``kernel(pdf, z, R)`` with the synthetic distance-decay LD
-    R = exp(−|Δpos|/``tau``); the kernel returns rows of ``out_schema``.
+    R = exp(−|Δ``pos``|/``tau``); the kernel returns rows of
+    ``out_schema``.
     """
 
     def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(point_id).reset_index(drop=True)
+        pdf = pdf.sort_values("point_id").reset_index(drop=True)
         if max_variants is not None and len(pdf) > max_variants:
             keep = (
-                pdf.assign(_az=pdf[z_col].abs())
-                .nlargest(max_variants, ["_az", point_id])
+                pdf.assign(_az=pdf["z"].abs())
+                .nlargest(max_variants, ["_az", "point_id"])
                 .index
             )
             pdf = pdf.loc[sorted(keep)].reset_index(drop=True)
-        z = pdf[z_col].to_numpy(dtype=np.float64)
-        p = pdf[pos].to_numpy(dtype=np.float64)
+        z = pdf["z"].to_numpy(dtype=np.float64)
+        p = pdf["pos"].to_numpy(dtype=np.float64)
         R = np.exp(-np.abs(p[:, None] - p[None, :]) / tau)
         return kernel(pdf, z, R)
 
@@ -169,7 +152,7 @@ def finemap_loci(
         return pd.concat(outs, ignore_index=True)
 
     study, contig = keys[:2]
-    sel = df.select(*keys, point_id, pos, z_col)
+    sel = df.select(*keys, "point_id", "pos", "z")
     # The shuffled rows are tiny but the per-locus kernel is Python
     # CPU: AQE's byte-based coalescing collapses a small
     # ENSURE_REQUIREMENTS exchange to ~1 partition and serializes all
@@ -190,11 +173,6 @@ def finemap_loci(
 
 def carma_like(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    pos: str = "pos",
-    z_col: str = "z",
-    point_id: str = "point_id",
     max_causal: int = 5,
     z_stop: float = 3.0,
     outlier_resid: float = 3.0,
@@ -219,9 +197,9 @@ def carma_like(
     """
     out_schema = T.StructType(
         [
-            df.schema[study],
-            df.schema[contig],
-            df.schema[point_id],
+            df.schema["study_id"],
+            df.schema["contig"],
+            df.schema["point_id"],
             T.StructField("in_model", T.BooleanType()),
             T.StructField("model_order", T.IntegerType()),
             T.StructField("residual_z", T.DoubleType()),
@@ -248,9 +226,9 @@ def carma_like(
         order = {idx: i + 1 for i, idx in enumerate(chosen)}
         return pd.DataFrame(
             {
-                study: pdf[study],
-                contig: pdf[contig],
-                point_id: pdf[point_id],
+                "study_id": pdf["study_id"],
+                "contig": pdf["contig"],
+                "point_id": pdf["point_id"],
                 "in_model": [i in order for i in range(n)],
                 "model_order": [order.get(i, 0) for i in range(n)],
                 "residual_z": np.round(resid, 6),
@@ -259,17 +237,12 @@ def carma_like(
         )
 
     return finemap_loci(
-        df, [study, contig], search, out_schema, tau, pos, z_col, point_id, None
+        df, ["study_id", "contig"], search, out_schema, tau, None
     )
 
 
 def susie_like(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    pos: str = "pos",
-    z_col: str = "z",
-    point_id: str = "point_id",
     n_effects: int = 3,
     n_iter: int = 20,
     tau: float = 10_800_000_000.0,
@@ -284,9 +257,9 @@ def susie_like(
     """
     out_schema = T.StructType(
         [
-            df.schema[study],
-            df.schema[contig],
-            df.schema[point_id],
+            df.schema["study_id"],
+            df.schema["contig"],
+            df.schema["point_id"],
             T.StructField("pip", T.DoubleType()),
             T.StructField("top_effect", T.IntegerType()),
         ]
@@ -309,14 +282,14 @@ def susie_like(
         top = alpha.argmax(axis=0).astype("int32")
         return pd.DataFrame(
             {
-                study: pdf[study],
-                contig: pdf[contig],
-                point_id: pdf[point_id],
+                "study_id": pdf["study_id"],
+                "contig": pdf["contig"],
+                "point_id": pdf["point_id"],
                 "pip": np.round(pip, 6),
                 "top_effect": top,
             }
         )
 
     return finemap_loci(
-        df, [study, contig], finemap, out_schema, tau, pos, z_col, point_id, None
+        df, ["study_id", "contig"], finemap, out_schema, tau, None
     )

@@ -20,8 +20,6 @@ from gentropy_spark.session import track_local_checkpoint
 
 def transitive_closure(
     edges: DataFrame,
-    child: str = "child",
-    parent: str = "parent",
     max_depth: int = 20,
 ) -> DataFrame:
     """All (child, ancestor, depth) pairs reachable through the edges.
@@ -41,10 +39,10 @@ def transitive_closure(
     quietly misses deep ancestors corrupts every downstream
     enrichment): callers with deeper graphs must raise ``max_depth``.
     """
-    edges = edges.select(child, parent).persist()
+    edges = edges.select("child", "parent").persist()
     frontier = track_local_checkpoint(
         edges.select(
-            F.col(child), F.col(parent).alias("ancestor"), F.lit(1).alias("depth")
+            F.col("child"), F.col("parent").alias("ancestor"), F.lit(1).alias("depth")
         ),
         eager=True,
     )
@@ -53,10 +51,10 @@ def transitive_closure(
     for _ in range(max_depth - 1):
         nxt = track_local_checkpoint(
             frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.ancestor") == F.col(f"e.{child}"))
+            .join(edges.alias("e"), F.col("f.ancestor") == F.col("e.child"))
             .select(
-                F.col(f"f.{child}"),
-                F.col(f"e.{parent}").alias("ancestor"),
+                F.col("f.child"),
+                F.col("e.parent").alias("ancestor"),
                 (F.col("f.depth") + 1).alias("depth"),
             ),
             eager=True,
@@ -69,7 +67,7 @@ def transitive_closure(
     if exhausted:
         probe = (
             frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.ancestor") == F.col(f"e.{child}"))
+            .join(edges.alias("e"), F.col("f.ancestor") == F.col("e.child"))
         )
         if not probe.isEmpty():
             edges.unpersist()

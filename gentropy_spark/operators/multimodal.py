@@ -59,12 +59,12 @@ def _decode_stub(payload: bytes) -> tuple[int, int, int, int]:
     return n, n % 640, (n * 7) % 480, n % 16 + 1
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Simulate a multimodal table: UTF-8 bytes as the opaque payload +
     a typed metadata struct (the shape a real ingest would produce)."""
     return df.select(
         "doc_id",
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.struct(
             F.col("n_chars").alias("n_chars"),
             F.col("lang").alias("media_lang"),

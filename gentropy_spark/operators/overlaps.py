@@ -24,11 +24,9 @@ from pyspark.sql import functions as F
 def overlap_join(
     left: DataFrame,
     right: DataFrame,
-    contig: str = "contig",
     start: str = "locus_start",
     end: str = "locus_end",
     tile_width: int | None = None,
-    right_contig: str | None = None,
     right_start: str | None = None,
     right_end: str | None = None,
 ) -> DataFrame:
@@ -36,30 +34,25 @@ def overlap_join(
 
     Overlap is inclusive: ``l.start <= r.end AND r.start <= l.end``.
     Columns from each side are prefixed ``left_``/``right_`` (except
-    the shared contig).
+    the shared ``contig``).
 
     Args:
         tile_width: if set, use the tiled equi-join strategy (scale
             path); if None, plain contig equi-join + range predicate
             (correct and AQE-friendly when either side is small).
-        right_contig / right_start / right_end: the right side's column
-            names when they differ from the left's (default: same names
-            both sides).
+        right_start / right_end: the right side's span column names
+            when they differ from the left's (default: same names both
+            sides).
     """
-    r_contig_name = right_contig or contig
     r_start_name = right_start or start
     r_end_name = right_end or end
     lhs = left.select(
-        F.col(contig).alias("contig"),
-        *[F.col(c).alias(f"left_{c}") for c in left.columns if c != contig],
+        F.col("contig").alias("contig"),
+        *[F.col(c).alias(f"left_{c}") for c in left.columns if c != "contig"],
     )
     rhs = right.select(
-        F.col(r_contig_name).alias("contig"),
-        *[
-            F.col(c).alias(f"right_{c}")
-            for c in right.columns
-            if c != r_contig_name
-        ],
+        F.col("contig").alias("contig"),
+        *[F.col(c).alias(f"right_{c}") for c in right.columns if c != "contig"],
     )
     l_start, l_end = F.col(f"left_{start}"), F.col(f"left_{end}")
     r_start, r_end = F.col(f"right_{r_start_name}"), F.col(f"right_{r_end_name}")
@@ -99,7 +92,6 @@ def span_self_pairs(
     key_cols: list[str],
     pos_col: str,
     span: int,
-    payload_suffix: str = "_b",
 ):
     """Bounded-span self-pairing as a bucketed equi-join (scale shape).
 
@@ -114,13 +106,13 @@ def span_self_pairs(
     after the join, so semantics are identical to the range join.
 
     Returns pairs with the left columns as-is and every right column
-    renamed with ``payload_suffix``.
+    renamed with the suffix ``_b``.
     """
     from pyspark.sql import functions as F
 
     right = df.select(
-        *[F.col(c).alias(f"{c}{payload_suffix}") for c in df.columns]
-    ).withColumn("_tile_r", F.expr(f"{pos_col}{payload_suffix} div {span}"))
+        *[F.col(c).alias(f"{c}_b") for c in df.columns]
+    ).withColumn("_tile_r", F.expr(f"{pos_col}_b div {span}"))
     left = df.withColumn(
         "_tile",
         F.explode(
@@ -132,11 +124,11 @@ def span_self_pairs(
     )
     cond = F.col("_tile") == F.col("_tile_r")
     for c in key_cols:
-        cond = cond & (F.col(c) == F.col(f"{c}{payload_suffix}"))
+        cond = cond & (F.col(c) == F.col(f"{c}_b"))
     return (
         left.join(right, cond)
         .filter(
-            F.abs(F.col(pos_col) - F.col(f"{pos_col}{payload_suffix}")) <= span
+            F.abs(F.col(pos_col) - F.col(f"{pos_col}_b")) <= span
         )
         .drop("_tile", "_tile_r")
     )

@@ -59,7 +59,6 @@ def bucketed_cumsum(
     part_col: str,
     order_col: str,
     value_col: str,
-    out_col: str = "cum_tokens",
     bucket_span: int = DEFAULT_BUCKET_SPAN,
 ) -> DataFrame:
     """Running sum of ``value_col`` per ``part_col`` ordered by
@@ -155,6 +154,6 @@ def bucketed_cumsum(
     )
     return (
         cum_in.join(offsets, on=[part_col, "__pack_bucket"])
-        .withColumn(out_col, (F.col("__offset") + F.col("__cum_in")).cast("long"))
+        .withColumn("cum_tokens", (F.col("__offset") + F.col("__cum_in")).cast("long"))
         .drop("__pack_bucket", "__cum_in", "__offset")
     )

@@ -28,7 +28,6 @@ def top_k_per_group(
     group_cols: Sequence[str],
     order_cols: Sequence[Column],
     k: int = 1,
-    rank_col: str = "rank_in_group",
 ) -> DataFrame:
     """Keep the top-k rows per group under a deterministic ordering.
 
@@ -38,15 +37,14 @@ def top_k_per_group(
         order_cols: ordering columns (include tie-breakers for
             determinism — required for oracle-exact results).
         k: rows to keep per group.
-        rank_col: name of the emitted rank column.
 
     Returns:
-        Input rows restricted to rank <= k, with ``rank_col`` added.
+        Input rows restricted to rank <= k, with ``rank_in_group`` added.
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rank_in_group", F.row_number().over(w))
+        .filter(F.col("rank_in_group") <= k)
     )
 
 
@@ -54,8 +52,6 @@ def wide_to_long(
     df: DataFrame,
     id_vars: Sequence[str],
     value_vars: Sequence[str],
-    var_name: str = "attribute",
-    value_name: str = "value",
 ) -> DataFrame:
     """Melt wide columns into (attribute, value) rows.
 
@@ -65,15 +61,15 @@ def wide_to_long(
     pairs = F.array(
         *[
             F.struct(
-                F.lit(c).alias(var_name),
-                F.col(c).cast("double").alias(value_name),
+                F.lit(c).alias("attribute"),
+                F.col(c).cast("double").alias("value"),
             )
             for c in value_vars
         ]
     )
     return df.select(
         *id_vars, F.explode(pairs).alias("_kv")
-    ).select(*id_vars, f"_kv.{var_name}", f"_kv.{value_name}")
+    ).select(*id_vars, "_kv.attribute", "_kv.value")
 
 
 def long_to_wide(
@@ -102,9 +98,8 @@ def salted_join(
     right,
     key: str,
     n_salts: int = 16,
-    how: str = "inner",
 ):
-    """Skew-defeating equi-join via key salting (SURVEY A17).
+    """Skew-defeating inner equi-join via key salting (SURVEY A17).
 
     For a join key with pathological heavy hitters (see
     ``key_skew_profile``), AQE's skew-join splitting handles the SORT
@@ -115,23 +110,11 @@ def salted_join(
     hot keys now occupy ``n_salts`` tasks. Output equals the plain
     join (each left row matches exactly its salt's replica).
 
-    ``how`` is restricted to inner/left/left_semi/left_anti: the right
-    side is replicated ``n_salts``×, so any join that emits UNMATCHED
-    right rows (right/full outer) would emit each of them once per
-    replica — a different result from the plain join.
-
     Use ONLY when the skew profile demands it: the build side is
     replicated ``n_salts``× — that is the explicit price of evenness.
     """
     from pyspark.sql import functions as F
 
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "left_anti", "leftanti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join: how={how!r} would duplicate unmatched "
-            f"replicated right rows; use one of {sorted(allowed)}"
-        )
     lt = left.withColumn(
         "_salt",
         F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts)),
@@ -139,5 +122,5 @@ def salted_join(
     rt = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     ).withColumn("_salt", F.col("_salt").cast("bigint"))
-    out = lt.join(rt, on=[key, "_salt"], how=how)
+    out = lt.join(rt, on=[key, "_salt"], how="inner")
     return out.drop("_salt")

@@ -192,10 +192,6 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "corpus_id",
-    vec: str = "vec",
-    dim: int | None = None,
     max_queries: int | None = 10_000,
 ) -> DataFrame:
     """Brute-force cosine top-k for a BOUNDED query set.
@@ -217,24 +213,22 @@ def cosine_topk(
     if max_queries is not None:
         # Guard job scans only the id column and stops at max_queries+1
         # rows — the action is O(max_queries), not a corpus pass.
-        n_q = queries.select(query_id).limit(max_queries + 1).count()
+        n_q = queries.select("query_id").limit(max_queries + 1).count()
         if n_q > max_queries:
             raise ValueError(
-                f"cosine_topk is a bounded-query broadcast kernel "
+                "cosine_topk is a bounded-query broadcast kernel "
                 f"(> {max_queries} queries); use lsh_topk for large query sets"
             )
-    q = queries.select(F.col(query_id), as_double(F.col(vec)).alias("qv"))
-    c = corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
+    q = queries.select(F.col("query_id"), as_double(F.col("vec")).alias("qv"))
+    c = corpus.select(F.col("corpus_id"), as_double(F.col("vec")).alias("cv"))
     # Arrow-batched cosine: the unrolled 3×dim expression is correct
     # but its ~600-term tree costs seconds of driver-side analysis and
     # codegen PER QUERY BUILD; the UDF plan is constant-size (same
     # left-to-right parity — see cosine_pairs_udf).
-    return _cosine_rank(F.broadcast(q).crossJoin(c), k, query_id, corpus_id)
+    return _cosine_rank(F.broadcast(q).crossJoin(c), k)
 
 
-def _cosine_rank(
-    pairs: DataFrame, k: int, query_id: str, corpus_id: str
-) -> DataFrame:
+def _cosine_rank(pairs: DataFrame, k: int) -> DataFrame:
     """Score (query ``qv``, corpus ``cv``) candidate pairs by 6dp cosine
     and keep each query's top ``k`` — rank on the rounded value, ties
     broken by corpus id, so the result is deterministic and
@@ -242,20 +236,18 @@ def _cosine_rank(
     scored = pairs.withColumn(
         "cosine", F.round(cosine_pairs_udf()(F.col("qv"), F.col("cv")), 6)
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("corpus_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
+        .select("query_id", "corpus_id", "cosine", "rank")
     )
 
 
 def lsh_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
     n_planes: int = 64,
     bands: int = 4,
     min_cosine: float = 0.95,
@@ -283,7 +275,7 @@ def lsh_dup_pairs(
     bits_per_band = n_planes // bands
     mask = (1 << bits_per_band) - 1
     base = track_cache(
-        df.select(F.col(id_col).alias("vid"), as_double(F.col(vec)).alias("v"))
+        df.select(F.col("vec_id").alias("vid"), as_double(F.col("embedding")).alias("v"))
         .withColumn("packed", packed_sign_bits(hyperplanes)(F.col("v")))
     )
     banded = base.select(
@@ -327,10 +319,6 @@ def lsh_topk(
     corpus: DataFrame,
     hyperplanes: list[list[float]],
     k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "corpus_id",
-    vec: str = "vec",
-    dim: int | None = None,
 ) -> DataFrame:
     """Random-hyperplane LSH ANN (SURVEY E6): bucket by sign pattern,
     brute-force cosine within bucket only.
@@ -350,12 +338,12 @@ def lsh_topk(
         return out
 
     q = queries.select(
-        F.col(query_id), as_double(F.col(vec)).alias("qv")
+        F.col("query_id"), as_double(F.col("vec")).alias("qv")
     ).withColumn("bucket", bucket_expr(F.col("qv")))
     c = corpus.select(
-        F.col(corpus_id), as_double(F.col(vec)).alias("cv")
+        F.col("corpus_id"), as_double(F.col("vec")).alias("cv")
     ).withColumn("bucket", bucket_expr(F.col("cv")))
-    return _cosine_rank(q.join(c, on="bucket"), k, query_id, corpus_id)
+    return _cosine_rank(q.join(c, on="bucket"), k)
 
 
 def ivf_topk(
@@ -364,10 +352,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "corpus_id",
-    vec: str = "vec",
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF-Flat approximate nearest neighbours (SURVEY E6 scale path #2).
 
@@ -389,40 +373,40 @@ def ivf_topk(
     # Distributed TakeOrdered — per-partition top-N then a driver merge
     # of N*parts candidate ids, never a single-partition global window.
     centroids = (
-        corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
-        .orderBy(F.col(corpus_id).asc())
+        corpus.select(F.col("corpus_id"), as_double(F.col("vec")).alias("cv"))
+        .orderBy(F.col("corpus_id").asc())
         .limit(n_centroids)
-        .select(F.col(corpus_id).alias("centroid_id"), F.col("cv").alias("centv"))
+        .select(F.col("corpus_id").alias("centroid_id"), F.col("cv").alias("centv"))
     )
-    c = corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
+    c = corpus.select(F.col("corpus_id"), as_double(F.col("vec")).alias("cv"))
     # Assign each corpus vector to its best centroid (argmax cosine,
     # ties toward the lower centroid id).
     assign_scored = c.crossJoin(F.broadcast(centroids)).withColumn(
         "csim", F.round(cosine_pairs_udf()(F.col("cv"), F.col("centv")), 6)
     )
-    w_assign = Window.partitionBy(corpus_id).orderBy(
+    w_assign = Window.partitionBy("corpus_id").orderBy(
         F.col("csim").desc(), F.col("centroid_id").asc()
     )
     assigned = (
         assign_scored.withColumn("_r", F.row_number().over(w_assign))
         .filter(F.col("_r") == 1)
-        .select(corpus_id, "centroid_id", "cv")
+        .select("corpus_id", "centroid_id", "cv")
     )
     # Each query probes its n_probe closest centroids.
-    q = queries.select(F.col(query_id), as_double(F.col(vec)).alias("qv"))
+    q = queries.select(F.col("query_id"), as_double(F.col("vec")).alias("qv"))
     probe_scored = q.crossJoin(F.broadcast(centroids)).withColumn(
         "csim", F.round(cosine_pairs_udf()(F.col("qv"), F.col("centv")), 6)
     )
-    w_probe = Window.partitionBy(query_id).orderBy(
+    w_probe = Window.partitionBy("query_id").orderBy(
         F.col("csim").desc(), F.col("centroid_id").asc()
     )
     probes = (
         probe_scored.withColumn("_r", F.row_number().over(w_probe))
         .filter(F.col("_r") <= n_probe)
-        .select(query_id, "centroid_id", "qv")
+        .select("query_id", "centroid_id", "qv")
     )
     return _cosine_rank(
-        probes.join(assigned, on="centroid_id"), k, query_id, corpus_id
+        probes.join(assigned, on="centroid_id"), k
     )
 
 
@@ -457,14 +441,7 @@ def two_level_nearest_centroid(
     centroids: DataFrame,
     coarse: DataFrame,
     n_probe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "c",
-    cell_id: str = "cell_id",
-    cell_vec: str = "cellv",
     dim: int | None = None,
-    probe_occupied_cells: bool = True,
 ) -> DataFrame:
     """Nearest-centroid assignment through a coarse quantizer — the
     FAISS two-level IVF pattern, built so the CENTROID SET IS NEVER
@@ -487,20 +464,11 @@ def two_level_nearest_centroid(
     cells gets its best probed candidate), which is the published
     trade SemDeDup/FAISS make at scale.
 
-    TOTALITY (r16 advisory): with ``probe_occupied_cells`` (the
-    default) step 2 ranks only cells that received >= 1 centroid in
-    step 1 — exactly FAISS's posture of probing non-empty inverted
-    lists — so every probed cell yields candidates and the operator
-    returns one row for EVERY vector, for generic inputs. (Without
-    it, a vector whose n_probe nearest cells all happen to be empty
-    would silently drop out of the inner joins.) This also sharpens
-    the exactness boundary to K2_occupied <= n_probe and never
-    changes results where all cells are occupied. The restriction
-    re-evaluates the centroid-grain hash aggregation once more (K
-    rows — noise); callers whose quantizer is structurally
-    all-occupied (semdedup: every coarse cell's vector is itself a
-    centroid, distance 0) may pass ``False`` to keep the minimal
-    plan.
+    PRECONDITION: every coarse cell holds at least one centroid after
+    step 1. A vector whose ``n_probe`` nearest cells are all empty
+    finds no candidate and drops out of the inner joins. The semdedup
+    quantizer holds it by construction: every coarse cell's vector is
+    itself a centroid, at distance 0.
 
     Every argmin/top-N here is a partial AGGREGATION (min-of-struct /
     collect_list+slice), never a row_number window: windows must
@@ -512,7 +480,9 @@ def two_level_nearest_centroid(
     orderBy(dist, id) row_number()=1; the trailing vector field never
     participates in the comparison because the id field is unique.
 
-    Returns one row per vector: (id_col, centroid_id, dist2, vec_col).
+    Inputs: ``vecs`` (vec_id, v), ``centroids`` (centroid_id, c) and
+    ``coarse`` (cell_id, cellv). Returns one row per vector:
+    (vec_id, centroid_id, dist2, v).
     """
     if dim is not None:
         # Known dimensionality: stay in whole-stage codegen (see
@@ -524,72 +494,64 @@ def two_level_nearest_centroid(
     cent_cells = (
         centroids.crossJoin(F.broadcast(coarse))
         .withColumn(
-            "cdist", F.round(l2(F.col(centroid_vec), F.col(cell_vec)), 6)
+            "cdist", F.round(l2(F.col("c"), F.col("cellv")), 6)
         )
-        .groupBy(centroid_id)
+        .groupBy("centroid_id")
         .agg(
             F.min(
                 F.struct(
-                    F.col("cdist"), F.col(cell_id), F.col(centroid_vec)
+                    F.col("cdist"), F.col("cell_id"), F.col("c")
                 )
             ).alias("_m")
         )
         .select(
-            centroid_id,
-            F.col(f"_m.{centroid_vec}").alias(centroid_vec),
-            F.col(f"_m.{cell_id}").alias(cell_id),
+            "centroid_id",
+            F.col("_m.c").alias("c"),
+            F.col("_m.cell_id").alias("cell_id"),
         )
     )
-    if probe_occupied_cells:
-        # Only rank cells that hold at least one centroid (see
-        # TOTALITY above) — a coarse-grain semi-join, <= K2 rows out.
-        probe_cells = coarse.join(
-            cent_cells.select(cell_id).distinct(), on=cell_id, how="left_semi"
-        )
-    else:
-        probe_cells = coarse
     # Probe ranking is vector-free: 16-byte (pdist, cell_id) structs
     # aggregate map-side into one <=K2-length array per vector, the
     # n_probe best explode back out, and the vector column rejoins
     # once by id.
     probes = (
-        vecs.select(id_col, vec_col)
-        .crossJoin(F.broadcast(probe_cells))
+        vecs.select("vec_id", "v")
+        .crossJoin(F.broadcast(coarse))
         .withColumn(
-            "pdist", F.round(l2(F.col(vec_col), F.col(cell_vec)), 6)
+            "pdist", F.round(l2(F.col("v"), F.col("cellv")), 6)
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.slice(
                 F.array_sort(
-                    F.collect_list(F.struct(F.col("pdist"), F.col(cell_id)))
+                    F.collect_list(F.struct(F.col("pdist"), F.col("cell_id")))
                 ),
                 1,
                 n_probe,
             ).alias("_cells")
         )
         .select(
-            id_col,
-            F.explode(F.col(f"_cells.{cell_id}")).alias(cell_id),
+            "vec_id",
+            F.explode(F.col("_cells.cell_id")).alias("cell_id"),
         )
     )
     scored = (
-        probes.join(vecs, on=id_col)
-        .join(cent_cells, on=cell_id)
+        probes.join(vecs, on="vec_id")
+        .join(cent_cells, on="cell_id")
         .withColumn(
-            "dist2", F.round(l2(F.col(vec_col), F.col(centroid_vec)), 6)
+            "dist2", F.round(l2(F.col("v"), F.col("c")), 6)
         )
     )
-    best = scored.groupBy(id_col).agg(
+    best = scored.groupBy("vec_id").agg(
         F.min(
-            F.struct(F.col("dist2"), F.col(centroid_id), F.col(vec_col))
+            F.struct(F.col("dist2"), F.col("centroid_id"), F.col("v"))
         ).alias("_m")
     )
     return best.select(
-        id_col,
-        F.col(f"_m.{centroid_id}").alias(centroid_id),
+        "vec_id",
+        F.col("_m.centroid_id").alias("centroid_id"),
         F.col("_m.dist2").alias("dist2"),
-        F.col(f"_m.{vec_col}").alias(vec_col),
+        F.col("_m.v").alias("v"),
     )
 
 
@@ -600,8 +562,6 @@ def _pq_tables(
     n_subvectors: int,
     n_codes: int,
     sub: int,
-    query_id: str,
-    corpus_id: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codes and the per-query ADC lookup table.
 
@@ -617,11 +577,11 @@ def _pq_tables(
     # (measured 60s vs ~3s at the 100x probe for 25.6M 8-dim pairs).
     l2 = lambda a, b: sq_l2_expr(a, b, sub)  # noqa: E731
     seeds = (
-        seed_src.orderBy(F.col(corpus_id).asc())
+        seed_src.orderBy(F.col("corpus_id").asc())
         .limit(n_codes)
         .select(
             F.row_number()
-            .over(Window.orderBy(F.col(corpus_id).asc()))
+            .over(Window.orderBy(F.col("corpus_id").asc()))
             .alias("code"),
             "cv",
         )
@@ -636,9 +596,9 @@ def _pq_tables(
     )
     # Encode: argmin_code L2^2(subvector, codebook[m][code]).
     c_sub = c.select(
-        F.col(corpus_id), F.explode(m_arr).alias("m"), "cv"
+        F.col("corpus_id"), F.explode(m_arr).alias("m"), "cv"
     ).select(
-        corpus_id, "m", F.slice(F.col("cv"), F.col("m") * sub + 1, sub).alias("subv")
+        "corpus_id", "m", F.slice(F.col("cv"), F.col("m") * sub + 1, sub).alias("subv")
     )
     enc_scored = c_sub.join(F.broadcast(codebook), on="m").withColumn(
         "d", F.round(l2(F.col("subv"), F.col("bookv")), 6)
@@ -649,18 +609,18 @@ def _pq_tables(
     # row per (corpus_id, m) before the exchange (2.8s — same values:
     # struct ordering (d, code) IS the window's orderBy tie-break).
     codes = (
-        enc_scored.groupBy(corpus_id, "m")
+        enc_scored.groupBy("corpus_id", "m")
         .agg(F.min(F.struct(F.col("d"), F.col("code"))).alias("_m"))
-        .select(corpus_id, "m", F.col("_m.code").alias("code"))
+        .select("corpus_id", "m", F.col("_m.code").alias("code"))
     )
     # Per-query ADC lookup table: partial distance to every codeword.
     q_sub = q.select(
-        F.col(query_id), F.explode(m_arr).alias("m"), "qv"
+        F.col("query_id"), F.explode(m_arr).alias("m"), "qv"
     ).select(
-        query_id, "m", F.slice(F.col("qv"), F.col("m") * sub + 1, sub).alias("qsubv")
+        "query_id", "m", F.slice(F.col("qv"), F.col("m") * sub + 1, sub).alias("qsubv")
     )
     lookup = q_sub.join(F.broadcast(codebook), on="m").select(
-        query_id,
+        "query_id",
         "m",
         "code",
         F.round(l2(F.col("qsubv"), F.col("bookv")), 6).alias("pdist"),
@@ -676,9 +636,6 @@ def ivfpq_topk(
     n_subvectors: int = 8,
     n_codes: int = 16,
     k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "corpus_id",
-    vec: str = "vec",
     dim: int = 64,
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbours — the composed
@@ -707,8 +664,8 @@ def ivfpq_topk(
     """
     l2v = lambda a, b: sq_l2_expr(a, b, dim)  # noqa: E731
 
-    c = corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
-    q = queries.select(F.col(query_id), as_double(F.col(vec)).alias("qv"))
+    c = corpus.select(F.col("corpus_id"), as_double(F.col("vec")).alias("cv"))
+    q = queries.select(F.col("query_id"), as_double(F.col("vec")).alias("qv"))
     # ONE cached lowest-ids prefix serves both constant tables (r17):
     # the list centroids (n_lists lowest ids) and the PQ codebook
     # seeds (n_codes lowest ids) are overlapping prefixes of the same
@@ -716,25 +673,25 @@ def ivfpq_topk(
     # scan. The cache is max(n_lists, n_codes) rows; the re-sort per
     # consumer is over those rows only. One corpus scan saved per run
     # (at production scale: a full pass over the vector table).
-    low = track_cache(c.orderBy(F.col(corpus_id).asc()).limit(max(n_lists, n_codes)))
+    low = track_cache(c.orderBy(F.col("corpus_id").asc()).limit(max(n_lists, n_codes)))
     cents = (
-        low.orderBy(F.col(corpus_id).asc())
+        low.orderBy(F.col("corpus_id").asc())
         .limit(n_lists)
         .select(
-            F.col(corpus_id).alias("centroid_id"), F.col("cv").alias("centv")
+            F.col("corpus_id").alias("centroid_id"), F.col("cv").alias("centv")
         )
     )
     assigned = (
         c.crossJoin(F.broadcast(cents))
         .withColumn("ld", F.round(l2v(F.col("cv"), F.col("centv")), 6))
-        .groupBy(corpus_id)
+        .groupBy("corpus_id")
         .agg(F.min(F.struct(F.col("ld"), F.col("centroid_id"))).alias("_m"))
-        .select(corpus_id, F.col("_m.centroid_id").alias("centroid_id"))
+        .select("corpus_id", F.col("_m.centroid_id").alias("centroid_id"))
     )
     probes = (
         q.crossJoin(F.broadcast(cents))
         .withColumn("ld", F.round(l2v(F.col("qv"), F.col("centv")), 6))
-        .groupBy(query_id)
+        .groupBy("query_id")
         .agg(
             F.slice(
                 F.array_sort(
@@ -744,49 +701,49 @@ def ivfpq_topk(
                 n_probe,
             ).alias("_c")
         )
-        .select(query_id, F.explode(F.col("_c.centroid_id")).alias("centroid_id"))
+        .select("query_id", F.explode(F.col("_c.centroid_id")).alias("centroid_id"))
     )
     # PQ encode; the codebook seeds come from the same cached prefix as
     # the centroids above.
     codes, lookup = _pq_tables(
-        low, c, q, n_subvectors, n_codes, dim // n_subvectors, query_id, corpus_id
+        low, c, q, n_subvectors, n_codes, dim // n_subvectors
     )
     # ADC restricted to the probed lists: the member set comes from
     # the centroid-id equi-join, codes fan out per subvector, the
     # per-query lookup table rides a broadcast.
     adc = (
         probes.join(assigned, on="centroid_id")
-        .select(query_id, corpus_id)
-        .join(codes, on=corpus_id)
-        .join(F.broadcast(lookup), on=[query_id, "m", "code"])
-        .groupBy(query_id, corpus_id)
+        .select("query_id", "corpus_id")
+        .join(codes, on="corpus_id")
+        .join(F.broadcast(lookup), on=["query_id", "m", "code"])
+        .groupBy("query_id", "corpus_id")
         .agg(exact_sum(F.col("pdist")).alias("adc_dist"))
     )
     top = (
-        adc.groupBy(query_id)
+        adc.groupBy("query_id")
         .agg(
             F.slice(
                 F.array_sort(
-                    F.collect_list(F.struct(F.col("adc_dist"), F.col(corpus_id)))
+                    F.collect_list(F.struct(F.col("adc_dist"), F.col("corpus_id")))
                 ),
                 1,
                 k,
             ).alias("_t")
         )
-        .select(query_id, F.posexplode(F.col("_t")).alias("_pos", "_e"))
+        .select("query_id", F.posexplode(F.col("_t")).alias("_pos", "_e"))
         .select(
-            query_id,
-            F.col(f"_e.{corpus_id}").alias(corpus_id),
+            "query_id",
+            F.col("_e.corpus_id").alias("corpus_id"),
             (F.col("_pos") + 1).cast("int").alias("ivfpq_rank"),
             F.col("_e.adc_dist").alias("adc_dist"),
         )
     )
     return (
-        top.join(c, on=corpus_id)
-        .join(F.broadcast(q), on=query_id)
+        top.join(c, on="corpus_id")
+        .join(F.broadcast(q), on="query_id")
         .select(
-            query_id,
-            corpus_id,
+            "query_id",
+            "corpus_id",
             "ivfpq_rank",
             "adc_dist",
             F.round(cosine_pairs_udf()(F.col("qv"), F.col("cv")), 6).alias(
@@ -802,9 +759,6 @@ def pq_topk(
     n_subvectors: int = 8,
     n_codes: int = 16,
     k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "corpus_id",
-    vec: str = "vec",
     dim: int = 64,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (SURVEY E6
@@ -837,19 +791,19 @@ def pq_topk(
     table and reduces with a decimal sum. Never a cross join against
     raw corpus vectors.
     """
-    c = corpus.select(F.col(corpus_id), as_double(F.col(vec)).alias("cv"))
-    q = queries.select(F.col(query_id), as_double(F.col(vec)).alias("qv"))
+    c = corpus.select(F.col("corpus_id"), as_double(F.col("vec")).alias("cv"))
+    q = queries.select(F.col("query_id"), as_double(F.col("vec")).alias("qv"))
     codes, lookup = _pq_tables(
-        c, c, q, n_subvectors, n_codes, dim // n_subvectors, query_id, corpus_id
+        c, c, q, n_subvectors, n_codes, dim // n_subvectors
     )
     # ADC: sum the per-subvector partials over the code table.
     adc = (
         codes.join(F.broadcast(lookup), on=["m", "code"])
-        .groupBy(query_id, corpus_id)
+        .groupBy("query_id", "corpus_id")
         .agg(exact_sum(F.col("pdist")).alias("adc_dist"))
     )
-    w_rank = Window.partitionBy(query_id).orderBy(
-        F.col("adc_dist").asc(), F.col(corpus_id).asc()
+    w_rank = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("corpus_id").asc()
     )
     top = (
         adc.withColumn("pq_rank", F.row_number().over(w_rank))
@@ -857,11 +811,11 @@ def pq_topk(
     )
     # Exact rerank annotation on the k winners only.
     return (
-        top.join(c, on=corpus_id)
-        .join(F.broadcast(q), on=query_id)
+        top.join(c, on="corpus_id")
+        .join(F.broadcast(q), on="query_id")
         .select(
-            query_id,
-            corpus_id,
+            "query_id",
+            "corpus_id",
             "pq_rank",
             "adc_dist",
             F.round(cosine_pairs_udf()(F.col("qv"), F.col("cv")), 6).alias(

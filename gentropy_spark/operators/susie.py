@@ -2,7 +2,7 @@
 
 Re-expresses gentropy's SuSiE-inf
 (/root/reference/src/gentropy/method/susie_inf.py:33 ``susie_inf``,
-:243 ``_MoM``, :301 ``_MLE``, :407 ``cred_inf`` — itself derived from
+:243 ``_MoM``, :407 ``cred_inf`` — itself derived from
 the FinucaneLab *fine-mapping-inf* package; model from Cui et al. 2023,
 "Improving fine-mapping by modeling infinitesimal effects") as an
 original, scipy-free numpy kernel plus a Spark operator.
@@ -15,11 +15,12 @@ O(p²) matrix-vector work instead of O(p³).
 
 Differences from the reference, by construction not by accident:
 - scipy-free: ``numpy.linalg.eigh`` for the eigendecomposition (the
-  algorithm is invariant to eigenvector sign/order), a golden-section
-  bounded scalar minimizer (tighter tolerance than scipy's default
-  ``minimize_scalar(..., method='bounded')``) for the s²_l and MLE σ²
-  updates, and alternating bounded minimization instead of L-BFGS-B
-  for the joint (σ², τ²) MLE.
+  algorithm is invariant to eigenvector sign/order) and a
+  golden-section bounded scalar minimizer (tighter tolerance than
+  scipy's default ``minimize_scalar(..., method='bounded')``) for the
+  s²_l updates.
+- (σ², τ²) are estimated by the method of moments only; the
+  reference's ``_MLE`` alternative is not ported.
 - Credible-set purity subsampling is deterministic (top-100 by PIP)
   instead of the reference's seeded ``np.random.choice``.
 
@@ -130,40 +131,29 @@ def _logsumexp(x: np.ndarray) -> float:
 
 def susie_inf_fit(
     z: np.ndarray,
-    R: np.ndarray | None = None,
+    R: np.ndarray,
     n: int = 100_000,
     L: int = 10,
     meansq: float = 1.0,
-    V: np.ndarray | None = None,
-    Dsq: np.ndarray | None = None,
-    est_ssq: bool = True,
-    ssq: np.ndarray | None = None,
     ssq_range: tuple[float, float] = (0.0, 1.0),
-    est_sigmasq: bool = True,
     est_tausq: bool = False,
     sigmasq: float = 1.0,
     tausq: float = 0.0,
-    sigmasq_range: tuple[float, float] | None = None,
-    tausq_range: tuple[float, float] | None = None,
-    method: str = "moments",
     maxiter: int = 100,
     pip_tol: float = 1e-3,
 ) -> dict:
     """Fit SuSiE-inf from z-scores and an LD matrix.
 
-    Returns a dict with PIP/mu/omega/lbf_variable (p×L), ssq (L),
-    sigmasq, tausq, alpha (p), lbf (L) — same keys and semantics as the
-    reference so downstream conversion code ports one-to-one.
+    Each effect's prior variance s²_l is estimated by maximum
+    likelihood, and σ² (with τ² when ``est_tausq``) by the method of
+    moments. Returns a dict with PIP/mu/omega/lbf_variable (p×L), ssq
+    (L), sigmasq, tausq, alpha (p), lbf (L) — same keys and semantics
+    as the reference so downstream conversion code ports one-to-one.
     """
     z = np.asarray(z, dtype=np.float64)
     p = z.shape[0]
-    if V is None or Dsq is None:
-        if R is None:
-            raise ValueError("need R (LD) or its eigendecomposition (V, Dsq)")
-        evals, V = np.linalg.eigh(np.asarray(R, dtype=np.float64))
-        Dsq = np.maximum(n * evals, 0.0)
-    else:
-        Dsq = np.maximum(np.asarray(Dsq, dtype=np.float64), 0.0)
+    evals, V = np.linalg.eigh(np.asarray(R, dtype=np.float64))
+    Dsq = np.maximum(n * evals, 0.0)
     Xty = math.sqrt(n) * z
     VtXty = V.T @ Xty
     yty = n * meansq
@@ -172,7 +162,7 @@ def susie_inf_fit(
     diag_XtOX = np.sum(V * V * (Dsq / var), axis=1)
     XtOy = V @ (VtXty / var)
 
-    ssq = np.full(L, 0.2) if ssq is None else np.asarray(ssq, dtype=np.float64)
+    ssq = np.full(L, 0.2)
     PIP = np.full((p, L), 1.0 / p)
     mu = np.zeros((p, L))
     lbf = np.zeros((p, L))
@@ -186,19 +176,19 @@ def susie_inf_fit(
             b_other = np.sum(mu * PIP, axis=1) - mu[:, ell] * PIP[:, ell]
             XtOXb = V @ ((V.T @ b_other) * Dsq / var)
             XtOr = XtOy - XtOXb
-            if est_ssq:
-                # MLE of the effect-size prior variance s²_l: maximize
-                # the single-effect marginal likelihood (= logsumexp of
-                # per-SNP evidences) over the bounded range.
-                def neg_evidence(s: float) -> float:
-                    t = s * diag_XtOX
-                    return -_logsumexp(
-                        -0.5 * np.log1p(t)
-                        + s * XtOr**2 / (2.0 * (1.0 + t))
-                        + logpi0
-                    )
 
-                ssq[ell] = minimize_bounded(neg_evidence, *ssq_range)
+            # MLE of the effect-size prior variance s²_l: maximize the
+            # single-effect marginal likelihood (= logsumexp of per-SNP
+            # evidences) over the bounded range.
+            def neg_evidence(s: float) -> float:
+                t = s * diag_XtOX
+                return -_logsumexp(
+                    -0.5 * np.log1p(t)
+                    + s * XtOr**2 / (2.0 * (1.0 + t))
+                    + logpi0
+                )
+
+            ssq[ell] = minimize_bounded(neg_evidence, *ssq_range)
             omega[:, ell] = diag_XtOX + 1.0 / ssq[ell]
             mu[:, ell] = XtOr / omega[:, ell]
             lbf[:, ell] = XtOr**2 / (2.0 * omega[:, ell]) - 0.5 * np.log(
@@ -207,22 +197,12 @@ def susie_inf_fit(
             log_post = lbf[:, ell] + logpi0
             PIP[:, ell] = np.exp(log_post - _logsumexp(log_post))
 
-        if est_sigmasq or est_tausq:
-            if method == "moments":
-                sigmasq, tausq = _update_moments(
-                    PIP, mu, omega, sigmasq, tausq, n, V, Dsq, VtXty, Xty,
-                    yty, est_sigmasq, est_tausq,
-                )
-            elif method == "MLE":
-                sigmasq, tausq = _update_mle(
-                    PIP, mu, omega, sigmasq, tausq, n, V, Dsq, VtXty, yty,
-                    est_sigmasq, est_tausq, sigmasq_range, tausq_range,
-                )
-            else:
-                raise ValueError(f"unknown variance-estimation method {method!r}")
-            var = tausq * Dsq + sigmasq
-            diag_XtOX = np.sum(V * V * (Dsq / var), axis=1)
-            XtOy = V @ (VtXty / var)
+        sigmasq, tausq = _update_moments(
+            PIP, mu, omega, tausq, n, V, Dsq, VtXty, Xty, yty, est_tausq
+        )
+        var = tausq * Dsq + sigmasq
+        diag_XtOX = np.sum(V * V * (Dsq / var), axis=1)
+        XtOy = V @ (VtXty / var)
 
         if np.max(np.abs(PIP_prev - PIP)) < pip_tol:
             break
@@ -246,7 +226,7 @@ def susie_inf_fit(
 
 def _posterior_second_moments(PIP, mu, omega, V):
     """diag(V' M V) where M = E[BB'] − Σ_l E[b_l]E[b_l]' + Σ_l Var-ish,
-    i.e. the posterior second-moment correction both MoM and MLE need."""
+    i.e. the posterior second-moment correction the MoM update needs."""
     b = np.sum(mu * PIP, axis=1)
     Vtb = V.T @ b
     diag = Vtb**2
@@ -260,8 +240,7 @@ def _posterior_second_moments(PIP, mu, omega, V):
 
 
 def _update_moments(
-    PIP, mu, omega, sigmasq, tausq, n, V, Dsq, VtXty, Xty, yty,
-    est_sigmasq, est_tausq,
+    PIP, mu, omega, tausq, n, V, Dsq, VtXty, Xty, yty, est_tausq
 ):
     """Method-of-moments (σ², τ²) update: match E‖r‖² and E‖X'r‖²."""
     b, Vtb, diagVtMV = _posterior_second_moments(PIP, mu, omega, V)
@@ -280,51 +259,7 @@ def _update_moments(
         if s_hat > 0 and t_hat > 0:
             return s_hat, t_hat
         return m1 / n, 0.0
-    if est_sigmasq:
-        return (m1 - sumD * tausq) / n, tausq
-    return sigmasq, tausq
-
-
-def _update_mle(
-    PIP, mu, omega, sigmasq, tausq, n, V, Dsq, VtXty, yty,
-    est_sigmasq, est_tausq, sigmasq_range, tausq_range,
-):
-    """MLE (σ², τ²) update of the marginalized Gaussian likelihood.
-
-    The reference uses L-BFGS-B on the 2-d objective; here three sweeps
-    of alternating golden-section minimization over the same bounded
-    box (the objective is smooth and near-separable in practice).
-    """
-    p = V.shape[0]
-    if sigmasq_range is None:
-        sigmasq_range = (0.2 * yty / n, 1.2 * yty / n)
-    if tausq_range is None:
-        tausq_range = (1e-12, 1.2 * yty / (n * p))
-    _, Vtb, diagVtMV = _posterior_second_moments(PIP, mu, omega, V)
-
-    def nll(s: float, t: float) -> float:
-        w = t * Dsq + s
-        return float(
-            0.5 * (n - p) * np.log(s)
-            + 0.5 * yty / s
-            + np.sum(
-                0.5 * np.log(w)
-                - 0.5 * (t / s) * VtXty**2 / w
-                - Vtb * VtXty / w
-                + 0.5 * (Dsq / w) * diagVtMV
-            )
-        )
-
-    s_cur, t_cur = sigmasq, tausq
-    if est_tausq:
-        for _ in range(3):
-            s_cur = minimize_bounded(lambda s: nll(s, t_cur), *sigmasq_range)
-            t_cur = minimize_bounded(lambda t: nll(s_cur, t), *tausq_range)
-        return s_cur, t_cur
-    if est_sigmasq:
-        s_cur = minimize_bounded(lambda s: nll(s, t_cur), *sigmasq_range)
-        return s_cur, t_cur
-    return s_cur, t_cur
+    return (m1 - sumD * tausq) / n, tausq
 
 
 def credible_sets(
@@ -363,17 +298,9 @@ def credible_sets(
 
 def susie_inf_finemap(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    cluster: str = "cluster_seq",
-    pos: str = "pos",
-    z_col: str = "z",
-    point_id: str = "point_id",
     L: int = 5,
     n: int = 100_000,
     tau: float = 10_800_000_000.0,
-    method: str = "moments",
-    est_tausq: bool = True,
     coverage: float = 0.95,
     max_variants: int = 1_000,
 ) -> DataFrame:
@@ -388,13 +315,13 @@ def susie_inf_finemap(
     belongs to (−1 if none). Values rounded to 6 dp so results are
     deterministic under Arrow batch reordering.
     """
-    keys = [study, contig, cluster]
+    keys = ["study_id", "contig", "cluster_seq"]
     out_schema = T.StructType(
         [
-            df.schema[study],
-            df.schema[contig],
-            df.schema[cluster],
-            df.schema[point_id],
+            df.schema["study_id"],
+            df.schema["contig"],
+            df.schema["cluster_seq"],
+            df.schema["point_id"],
             T.StructField("pip", T.DoubleType()),
             T.StructField("post_mean", T.DoubleType()),
             T.StructField("lbf_best", T.DoubleType()),
@@ -408,7 +335,7 @@ def susie_inf_finemap(
         p = len(z)
         eff = min(L, p)
         fit = susie_inf_fit(
-            z, R=R, n=n, L=eff, method=method, est_tausq=est_tausq
+            z, R=R, n=n, L=eff, est_tausq=True
         )
         pip_all = 1.0 - np.prod(1.0 - fit["PIP"], axis=1)
         post_mean = np.sum(fit["mu"] * fit["PIP"], axis=1)
@@ -422,10 +349,10 @@ def susie_inf_finemap(
                     cs_idx[v] = ci
         return pd.DataFrame(
             {
-                study: pdf[study],
-                contig: pdf[contig],
-                cluster: pdf[cluster],
-                point_id: pdf[point_id],
+                "study_id": pdf["study_id"],
+                "contig": pdf["contig"],
+                "cluster_seq": pdf["cluster_seq"],
+                "point_id": pdf["point_id"],
                 "pip": np.round(pip_all, 6),
                 "post_mean": np.round(post_mean, 6),
                 "lbf_best": np.round(lbf_best, 6),
@@ -435,18 +362,12 @@ def susie_inf_finemap(
         )
 
     return finemap_loci(
-        df, keys, fit_one, out_schema, tau, pos, z_col, point_id, max_variants
+        df, keys, fit_one, out_schema, tau, max_variants
     )
 
 
 def susie_finemapper_step(
     df: DataFrame,
-    study: str = "study_id",
-    contig: str = "contig",
-    cluster: str = "cluster_seq",
-    pos: str = "pos",
-    z_col: str = "z",
-    point_id: str = "point_id",
     L: int = 5,
     n: int = 100_000,
     tau: float = 10_800_000_000.0,
@@ -466,14 +387,14 @@ def susie_finemapper_step(
     purity filters applied. Same ``finemap_loci`` driver and synthetic
     distance-decay LD as ``susie_inf_finemap``.
     """
-    keys = [study, contig, cluster]
+    keys = ["study_id", "contig", "cluster_seq"]
     out_schema = T.StructType(
         [
-            df.schema[study],
-            df.schema[contig],
-            df.schema[cluster],
+            df.schema["study_id"],
+            df.schema["contig"],
+            df.schema["cluster_seq"],
             T.StructField("credible_set_index", T.IntegerType()),
-            T.StructField("lead_point_id", df.schema[point_id].dataType),
+            T.StructField("lead_point_id", df.schema["point_id"].dataType),
             T.StructField("lead_pip", T.DoubleType()),
             T.StructField("cs_log10_bf", T.DoubleType()),
             T.StructField("n_in_set", T.IntegerType()),
@@ -485,7 +406,7 @@ def susie_finemapper_step(
 
     def fit_one(pdf: pd.DataFrame, z: np.ndarray, R: np.ndarray) -> pd.DataFrame:
         eff = min(L, len(z))
-        fit = susie_inf_fit(z, R=R, n=n, L=eff, method="moments", est_tausq=True)
+        fit = susie_inf_fit(z, R=R, n=n, L=eff, est_tausq=True)
         rows = []
         for ci, cs in enumerate(
             credible_sets(fit["PIP"], R, coverage=coverage)
@@ -499,11 +420,11 @@ def susie_finemapper_step(
             m = pdf.iloc[0]
             rows.append(
                 (
-                    m[study],
-                    m[contig],
-                    m[cluster],
+                    m["study_id"],
+                    m["contig"],
+                    m["cluster_seq"],
                     ci,
-                    pdf[point_id].iloc[lead_local],
+                    pdf["point_id"].iloc[lead_local],
                     round(float(fit["PIP"][lead_local, ell]), 6),
                     round(float(fit["lbf"][ell] * log10_e), 6),
                     int(len(idx)),
@@ -514,9 +435,9 @@ def susie_finemapper_step(
         out = pd.DataFrame(
             rows,
             columns=[
-                study,
-                contig,
-                cluster,
+                "study_id",
+                "contig",
+                "cluster_seq",
                 "credible_set_index",
                 "lead_point_id",
                 "lead_pip",
@@ -534,5 +455,5 @@ def susie_finemapper_step(
         return out
 
     return finemap_loci(
-        df, keys, fit_one, out_schema, tau, pos, z_col, point_id, max_variants
+        df, keys, fit_one, out_schema, tau, max_variants
     )

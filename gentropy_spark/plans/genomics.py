@@ -468,7 +468,7 @@ def q_pics_finemap(
 ) -> DataFrame:
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
     clustered = _cluster_seq(
-        ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
+        ss, "study_id", "point_id", CLUMP_WINDOW_US
     )
     return pics(clustered, tau=tau)
 
@@ -636,14 +636,12 @@ def q_susie_inf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
     clustered = _cluster_seq(
-        ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
+        ss, "study_id", "point_id", CLUMP_WINDOW_US
     )
     return susie_inf_finemap(
         clustered.withColumn("z", F.col("signif") / 10.0),
         tau=float(PICS_TAU),
         L=5,
-        method="moments",
-        est_tausq=True,
     )
 
 
@@ -663,7 +661,7 @@ def q_susie_finemapper_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
     clustered = _cluster_seq(
-        ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
+        ss, "study_id", "point_id", CLUMP_WINDOW_US
     )
     return susie_finemapper_step(
         clustered.withColumn("z", F.col("signif") / 10.0),
@@ -680,7 +678,7 @@ def q_carma_shotgun(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= SIGNIF_MIN)
     clustered = _cluster_seq(
-        ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
+        ss, "study_id", "point_id", CLUMP_WINDOW_US
     )
     return carma_finemap_full(
         clustered.withColumn("z", F.col("signif") / 10.0),
@@ -879,7 +877,7 @@ def q_locus_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, signal mass (study_locus.py:1018 ``annotate_locus_statistics``
     + :892 ``unique_variants_in_locus``)."""
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= LB_BASELINE)
-    clustered = _cluster_seq(ss, "study_id", "contig", "pos", "point_id", LB_DIST_US)
+    clustered = _cluster_seq(ss, "study_id", "point_id", LB_DIST_US)
     return clustered.groupBy("study_id", "contig", "cluster_seq").agg(
         F.count("*").alias("n_variants"),
         F.countDistinct("pos").alias("n_unique_positions"),

@@ -415,7 +415,7 @@ def q_pics_finemap_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ss = sumstats(spark, sf_dir).filter(F.col("signif") >= LD_INDEX_SIGNIF)
     clustered = _cluster_seq(
-        ss, "study_id", "contig", "pos", "point_id", CLUMP_WINDOW_US
+        ss, "study_id", "point_id", CLUMP_WINDOW_US
     )
     keys = ["study_id", "contig", "cluster_seq"]
     ordered = Window.partitionBy(*keys).orderBy(

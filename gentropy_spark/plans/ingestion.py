@@ -1111,9 +1111,7 @@ def q_biosample_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(sk > 0)
         .distinct()
     )
-    closure = transitive_closure(
-        edges1.unionByName(edges2).distinct(), "child", "parent"
-    )
+    closure = transitive_closure(edges1.unionByName(edges2).distinct())
     ancestors = closure.groupBy(F.col("child").alias("biosample_id")).agg(
         F.array_sort(F.collect_set("ancestor")).alias("ancestors")
     )

@@ -289,7 +289,7 @@ def _ann_split(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 @prepared
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, corpus = _ann_split(spark, sf_dir)
-    return cosine_topk(queries, corpus, k=5, dim=64)
+    return cosine_topk(queries, corpus, k=5)
 
 
 ANN_TOPK_SQL = f"""
@@ -552,7 +552,7 @@ FROM fp
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, corpus = _ann_split(spark, sf_dir)
     return lsh_topk(
-        queries, corpus, det_hyperplanes(ANN_N_PLANES, EMB_DIM), k=5, dim=EMB_DIM
+        queries, corpus, det_hyperplanes(ANN_N_PLANES, EMB_DIM), k=5
     )
 
 
@@ -756,7 +756,6 @@ def q_ann_ivf(
         n_centroids=n_centroids,
         n_probe=n_probe,
         k=k,
-        dim=EMB_DIM,
     )
 
 
@@ -5346,17 +5345,15 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dist2").desc(), F.col("vec_id")
     )
     assigned = track_cache(
-        # probe_occupied_cells=False: every coarse cell's vector is
-        # itself a centroid here (cell j = vec j, j < K2 <= K), so the
-        # quantizer is structurally all-occupied and the totality
-        # restriction would only re-evaluate the centroid-hash agg.
+        # Every coarse cell's vector is itself a centroid here (cell
+        # j = vec j, j < K2 <= K), so the quantizer is structurally
+        # all-occupied: the operator's precondition holds.
         two_level_nearest_centroid(
             vecs,
             cents,
             coarse,
             n_probe=SEMDEDUP_NPROBE,
             dim=EMB_DIM,
-            probe_occupied_cells=False,
         )
         .withColumn("priority", F.row_number().over(w_prio))
         .select("vec_id", "centroid_id", "dist2", "priority", "v")

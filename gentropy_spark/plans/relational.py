@@ -197,8 +197,6 @@ def q_wide_to_long(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         id_vars=["l_orderkey", "l_linenumber"],
         value_vars=MELT_VARS,
-        var_name="attribute",
-        value_name="value",
     )
 
 

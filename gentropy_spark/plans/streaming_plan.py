@@ -7,7 +7,12 @@ from pyspark.sql import DataFrame, SparkSession
 from gentropy_spark.operators.multimodal import attach_binary_payload, decode_features
 from gentropy_spark.plans.registry import QuerySpec
 from gentropy_spark.sources.readers import read_table
-from gentropy_spark.streaming.windowed import WINDOW_US, run_available_now
+from gentropy_spark.streaming.windowed import (
+    SESSION_GAP_US,
+    STREAM_ENRICH_LOOKBACK_US,
+    WINDOW_US,
+    run_available_now,
+)
 
 
 # --- F6: watermarked streaming windowed aggregation ----------------------
@@ -72,7 +77,6 @@ GROUP BY 1, 2, 3
 
 
 # --- F6c: custom stateful sessionization (applyInPandasWithState) --------
-SESSION_GAP_US = 43_200_000_000
 SESSION_GAP_MS = SESSION_GAP_US // 1000
 
 
@@ -160,7 +164,6 @@ REGISTRY["multimodal_frame_sample"] = QuerySpec(
 
 
 # --- F9: stream-stream time-bounded enrichment join -----------------------
-STREAM_ENRICH_LOOKBACK_US = 86_400_000_000  # 1 day
 
 
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -113,8 +113,6 @@ def _accession(key_col):
 
 def split_ancestry_even(
     pairs: DataFrame,
-    label_col: str = "ancestry_label",
-    count_col: str = "n_individuals",
 ) -> DataFrame:
     """Explode a multi-ancestry label into even-split per-ancestry rows.
 
@@ -125,12 +123,12 @@ def split_ancestry_even(
     edge cases (zero counts, in-parens commas, k∤n remainders) are
     property-testable against the exact production expression.
     """
-    label_parts = F.split(F.col(label_col), _ANC_SPLIT_RE)
-    others = [c for c in pairs.columns if c not in (label_col, count_col)]
+    label_parts = F.split(F.col("ancestry_label"), _ANC_SPLIT_RE)
+    others = [c for c in pairs.columns if c not in ("ancestry_label", "n_individuals")]
     return pairs.select(
         *others,
         F.explode(label_parts).alias("ancestry"),
-        (F.col(count_col) / F.size(label_parts))
+        (F.col("n_individuals") / F.size(label_parts))
         .cast("long")
         .alias("part_count"),
     )
@@ -138,8 +136,6 @@ def split_ancestry_even(
 
 def parse_sample_counts(
     parsed: DataFrame,
-    study_col: str = "study_id",
-    size_col: str = "initial_sample_size",
 ) -> DataFrame:
     """Per-study n_cases / n_controls / n_samples from the free-text
     initialSampleSize string.
@@ -152,8 +148,8 @@ def parse_sample_counts(
     """
     return (
         parsed.select(
-            study_col,
-            F.explode_outer(F.split(F.col(size_col), r",\s+")).alias(
+            "study_id",
+            F.explode_outer(F.split(F.col("initial_sample_size"), r",\s+")).alias(
                 "samples"
             ),
         )
@@ -166,7 +162,7 @@ def parse_sample_counts(
                 F.regexp_replace(F.col("samples"), ",", ""), r"[0-9]+", 0
             ).try_cast("long"),
         )
-        .groupBy(study_col)
+        .groupBy("study_id")
         .agg(
             F.coalesce(
                 F.sum(
@@ -885,14 +881,11 @@ def q_gwas_study_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     st_ass = assoc.join(F.broadcast(studies), on="study_id", how="inner")
     # assoc is distinct on (study, variant, description) and the study
     # dim is unique on study_id, so the joined rows are already
-    # distinct — skip the resolver's defensive 5-column re-dedup (a
-    # full-width hash aggregate + exchange over the joined payload).
-    return resolve_substudies(st_ass, assume_distinct=True)
+    # distinct: the resolver ranks them without a re-dedup.
+    return resolve_substudies(st_ass)
 
 
-def resolve_substudies(
-    st_ass: DataFrame, *, assume_distinct: bool = False
-) -> DataFrame:
+def resolve_substudies(st_ass: DataFrame) -> DataFrame:
     """Sub-study resolution + ambiguity flag over joined associations.
 
     Input: (study_id, variant_id, sub_study_description, study_trait,
@@ -901,9 +894,9 @@ def resolve_substudies(
     property-testable against the exact production expressions
     (reference: study_splitter.py:21,:52,:66; associations.py:1194).
 
-    ``assume_distinct=True`` lets a caller that already deduplicated
-    its association rows skip the input re-dedup; dense_rank itself is
-    duplicate-invariant, so this only changes work, never values.
+    The rows are ranked as given, without a re-dedup: the one caller's
+    rows are already distinct, and dense_rank is duplicate-invariant,
+    so duplicate input rows would change work, never values.
     """
     parts = F.split(F.col("sub_study_description"), r"\|")
     a_trait = F.try_element_at(parts, F.lit(1))
@@ -914,17 +907,7 @@ def resolve_substudies(
     a_efo = F.try_element_at(parts, F.lit(3))
     w_split = Window.partitionBy("study_id").orderBy("sub_study_description")
     w_study = Window.partitionBy("study_id")
-    # Deduplicate BEFORE the rank window: dense_rank counts distinct
-    # ORDER BY values, so ranking the distinct association rows yields
-    # byte-identical ranks while the window sort runs over the
-    # deduplicated set (~8x smaller here; at catalog scale the
-    # association:distinct ratio is the fan-out of top hits per
-    # sub-study). The distinct itself is a hash aggregate with
-    # map-side partial combine — duplicates collapse before the
-    # shuffle, where the previous formulation sorted every raw
-    # association row (wide string payloads) under the window.
-    base = st_ass if assume_distinct else st_ass.distinct()
-    ranked = base.withColumn(
+    ranked = st_ass.withColumn(
         "sub_rank", F.dense_rank().over(w_split)
     ).withColumn("n_substudies", F.max("sub_rank").over(w_study))
     resolved = ranked.select(
@@ -1875,7 +1858,7 @@ def q_gwas_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     clustered = _cluster_seq(
-        loci, "updated_study_id", "contig", "pos", "variant_id", _TOPHIT_DIST
+        loci, "updated_study_id", "variant_id", _TOPHIT_DIST
     )
     w_rank = W.partitionBy("updated_study_id", "contig", "cluster_seq").orderBy(
         F.col("signif").desc(), F.col("pos").asc(), F.col("variant_id").asc()

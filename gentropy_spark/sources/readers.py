@@ -47,7 +47,7 @@ def read_table(
     return normalize_events_ts(df)
 
 
-def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the event-time column to a plain (instant) TIMESTAMP.
 
     The driver's testdata has shipped ``events.ts`` in three physical
@@ -63,19 +63,19 @@ def normalize_events_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    dtype = dict(df.dtypes).get(ts_col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype in ("bigint", "long"):
         # nanosecond long → floor to micros (DuckDB epoch_us semantics)
         return df.withColumn(
-            ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
     if dtype == "timestamp_ntz":
-        return df.withColumn(ts_col, _ntz_as_utc_instant(df, ts_col))
+        return df.withColumn("ts", _ntz_as_utc_instant(df))
     return df
 
 
-def _ntz_as_utc_instant(df: DataFrame, c: str) -> "F.Column":
-    """NTZ wall clock → the instant with that wall clock in UTC,
+def _ntz_as_utc_instant(df: DataFrame) -> "F.Column":
+    """NTZ wall clock of ``ts`` → the instant with that wall clock in UTC,
     independent of ``spark.sql.session.timeZone``.
 
     ``to_utc_timestamp(ntz, 'UTC')`` is NOT that: Spark first
@@ -94,14 +94,14 @@ def _ntz_as_utc_instant(df: DataFrame, c: str) -> "F.Column":
     # and session.timeZone always has a value (falls back to JVM tz).
     tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
     if tz in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
-        return F.col(c).cast("timestamp")
+        return F.col("ts").cast("timestamp")
     return F.expr(
-        f"make_timestamp(year({c}), month({c}), day({c}), "
-        f"hour({c}), minute({c}), extract(SECOND FROM {c}), 'UTC')"
+        "make_timestamp(year(ts), month(ts), day(ts), "
+        "hour(ts), minute(ts), extract(SECOND FROM ts), 'UTC')"
     )
 
 
-def ts_micros(df: DataFrame, ts_col: str = "ts") -> "F.Column":
+def ts_micros(df: DataFrame) -> "F.Column":
     """Microsecond epoch position from a timestamp-ish column.
 
     Handles all three physical shapes of events.ts (see
@@ -109,9 +109,9 @@ def ts_micros(df: DataFrame, ts_col: str = "ts") -> "F.Column":
     """
     from pyspark.sql import functions as F
 
-    dtype = dict(df.dtypes).get(ts_col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype in ("bigint", "long"):
-        return F.expr(f"{ts_col} div 1000")
+        return F.expr("ts div 1000")
     if dtype == "timestamp_ntz":
-        return F.unix_micros(_ntz_as_utc_instant(df, ts_col))
-    return F.unix_micros(F.col(ts_col))
+        return F.unix_micros(_ntz_as_utc_instant(df))
+    return F.unix_micros(F.col("ts"))

@@ -26,6 +26,8 @@ from gentropy_spark.functions.exact import exact_sum
 from gentropy_spark.sources.readers import normalize_events_ts, read_table
 
 WINDOW_US = 86_400_000_000  # 1 day tumbling windows (epoch-aligned)
+SESSION_GAP_US = 43_200_000_000  # stateful sessionizer's quiet gap
+STREAM_ENRICH_LOOKBACK_US = 86_400_000_000  # stream-stream join: 1 day
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,19 +111,17 @@ def dedup_keys(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_dedup_available_now(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup"
-) -> DataFrame:
+def run_dedup_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events file-stream through the stateful dedup."""
-    return _drain(dedup_keys(_events_stream(spark, sf_dir)), query_name, "complete")
+    return _drain(dedup_keys(_events_stream(spark, sf_dir)), "stream_dedup", "complete")
 
 
-def sessionize_stateful(stream: DataFrame, gap_us: int = 43_200_000_000) -> DataFrame:
+def sessionize_stateful(stream: DataFrame) -> DataFrame:
     """Custom stateful streaming sessionization (applyInPandasWithState).
 
     The streaming counterpart of the locus-breaker operator: per
     (user, type) key, contiguous runs of events separated by more than
-    ``gap_us`` become sessions.
+    ``SESSION_GAP_US`` become sessions.
 
     Cross-batch contract (r3 — replaces the r2 single-batch
     simplification that flushed open state every micro-batch, splitting
@@ -157,7 +157,7 @@ def sessionize_stateful(stream: DataFrame, gap_us: int = 43_200_000_000) -> Data
         ]
     )
     cols = ["user_id", "event_type", "session_start", "session_end", "n_events"]
-    gap_ms = gap_us // 1000
+    gap_ms = SESSION_GAP_US // 1000
 
     def fn(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
@@ -189,7 +189,7 @@ def sessionize_stateful(stream: DataFrame, gap_us: int = 43_200_000_000) -> Data
         for pos in sorted(poses):
             if cur is None:
                 cur = [pos, pos, 1]
-            elif pos - cur[1] > gap_us:
+            elif pos - cur[1] > SESSION_GAP_US:
                 rows.append((key[0], key[1], cur[0], cur[1], cur[2]))
                 cur = [pos, pos, 1]
             else:
@@ -226,34 +226,29 @@ def sessionize_stateful(stream: DataFrame, gap_us: int = 43_200_000_000) -> Data
     )
 
 
-def run_sessionize_available_now(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_sessionize"
-) -> DataFrame:
+def run_sessionize_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events file-stream through the stateful sessionizer."""
     out = sessionize_stateful(_events_stream(spark, sf_dir))
-    return _drain(out, query_name, "append")
+    return _drain(out, "stream_sessionize", "append")
 
 
-def run_available_now(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_window_agg"
-) -> DataFrame:
+def run_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the events file-stream with trigger(availableNow) and
     return the windowed aggregate as a batch DataFrame."""
     out = windowed_event_agg(_events_stream(spark, sf_dir))
-    return _drain(out, query_name, "complete")
+    return _drain(out, "stream_window_agg", "complete")
 
 
-def stream_stream_enrich(
-    left: DataFrame, right: DataFrame, lookback_us: int = 86_400_000_000
-) -> DataFrame:
+def stream_stream_enrich(left: DataFrame, right: DataFrame) -> DataFrame:
     """Watermarked stream-stream inner join (SURVEY F9).
 
     Each observation event joins every reference event of the same user
-    from the preceding ``lookback_us`` window (bounds inclusive). This
-    is the genuine two-sided streaming join: both sides keep a
-    watermark-bounded state store, and the time-range condition lets
-    Spark evict reference state older than (watermark - lookback) — the
-    only shape that survives an unbounded stream. The asof operator
+    from the preceding ``STREAM_ENRICH_LOOKBACK_US`` window (bounds
+    inclusive). This is the genuine two-sided streaming join: both
+    sides keep a watermark-bounded state store, and the time-range
+    condition lets Spark evict reference state older than
+    (watermark - lookback) — the only shape that survives an unbounded
+    stream. The asof operator
     (plans/relational.py) picks ONE reference via window carry-forward;
     this one enriches with ALL in-window references.
     """
@@ -274,7 +269,7 @@ def stream_stream_enrich(
         F.expr(
             f"""
             user_id = r_user_id AND
-            r_time >= l_time - INTERVAL {lookback_us // 1_000_000} SECONDS AND
+            r_time >= l_time - INTERVAL {STREAM_ENRICH_LOOKBACK_US // 1_000_000} SECONDS AND
             r_time <= l_time
             """
         ),
@@ -289,19 +284,15 @@ def stream_stream_enrich(
     )
 
 
-def run_stream_enrich_available_now(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_enrich"
-) -> DataFrame:
+def run_stream_enrich_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the stream-stream enrichment join over the events file."""
     left = _events_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 1)
     right = _events_stream(spark, sf_dir).filter(F.col("event_id") % 2 == 0)
     out = stream_stream_enrich(left, right)
-    return _drain(out, query_name, "append")
+    return _drain(out, "stream_enrich", "append")
 
 
-def run_stream_static_enrich(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_static_enrich"
-) -> DataFrame:
+def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream enriched against a STATIC broadcast dimension (SURVEY F11).
 
     The third streaming-join shape (alongside the windowed agg and the
@@ -326,13 +317,12 @@ def run_stream_static_enrich(
         F.count("*").alias("n_events"),
         exact_sum(F.col("value")).alias("sum_value"),
     )
-    return _drain(out, query_name, "complete")
+    return _drain(out, "stream_static_enrich", "complete")
 
 
 def run_sliding_available_now(
     spark: SparkSession,
     sf_dir: str,
-    query_name: str = "stream_sliding_agg",
     window_us: int = 86_400_000_000,
     slide_us: int = 21_600_000_000,
 ) -> DataFrame:
@@ -366,7 +356,7 @@ def run_sliding_available_now(
             "sum_value",
         )
     )
-    return _drain(out, query_name, "complete")
+    return _drain(out, "stream_sliding_agg", "complete")
 
 
 def run_upsert_sink(
@@ -374,7 +364,6 @@ def run_upsert_sink(
     src_dir: str,
     target_dir: str,
     checkpoint: str,
-    glob: str = "events*.parquet",
 ) -> None:
     """Streaming aggregate → foreachBatch MERGE into a parquet target
     (SURVEY F15).
@@ -394,7 +383,7 @@ def run_upsert_sink(
     schema = spark.read.parquet(f"{src_dir}/events.parquet").schema
     stream = normalize_events_ts(
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "events*.parquet")
         .parquet(src_dir)
     )
     agg = dedup_keys(stream)

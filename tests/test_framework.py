@@ -138,9 +138,7 @@ def test_sessionize_multibatch_no_split(spark, sf_dir, tmp_path):
 
     single = {
         tuple(r)
-        for r in run_sessionize_available_now(
-            spark, sf_dir, "sess_singlebatch"
-        ).collect()
+        for r in run_sessionize_available_now(spark, sf_dir).collect()
     }
     assert multi == single
 
@@ -549,91 +547,6 @@ def _repo_root() -> str:
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_bench_prev_round_tail_recovery():
-    """bench._prev_bench must recover a usable (spark, duckdb) per-query
-    overlap from the latest driver record regardless of its shape:
-    parsed-with-duckdb, slim-parsed (duck dict only in BENCH_FULL.json),
-    or parsed=null tail reconstruction (r9/r10)."""
-    import glob
-    import os
-    import sys
-
-    root = _repo_root()
-    sys.path.insert(0, root)
-    import bench
-
-    if not glob.glob(os.path.join(root, "BENCH_r*.json")):
-        pytest.skip("no BENCH_r*.json driver records in this checkout")
-    prev = bench._prev_bench()
-    assert prev is not None
-    n, queries, duck, sf, duck_source = prev
-    assert n >= 1
-    assert duck_source in ("record", "tail_reconstruction") or duck_source.startswith(
-        "full_sibling"
-    )
-    # A slim record with a stale sibling (different sf / key set —
-    # e.g. after a local bench run at another sf rewrote
-    # BENCH_FULL.json) legitimately yields NO duck pairing; bench then
-    # skips the shared-subset comparison. When a pairing IS recovered
-    # it must be usable.
-    shared = set(queries) & set(duck)
-    if duck:
-        assert len(shared) >= 20, (len(queries), len(duck))
-    # spot-check internal consistency: every recovered spark second is
-    # positive and finite
-    assert all(v > 0 for k, v in queries.items() if k in shared)
-    assert all(v > 0 for v in queries.values())
-
-
-def test_bench_prev_round_slim_parsed_record(tmp_path, monkeypatch):
-    """The r11 breakage class, pinned synthetically: a driver record
-    whose parsed payload carries "queries" but NO per-query "duckdb"
-    dict (the slim stdout line) must fall back to the sibling
-    BENCH_FULL.json — and must NOT trust a stale sibling whose sf or
-    key set disagrees."""
-    import importlib
-    import json
-    import sys
-
-    sys.path.insert(0, _repo_root())
-    import bench
-
-    q = {f"q{i}": 1.0 + i / 10 for i in range(25)}
-    d = {f"q{i}": 0.5 + i / 20 for i in range(25)}
-    slim = {
-        "n": 1,
-        "rc": 0,
-        "tail": "x",
-        "parsed": {"queries": q, "sf": 0.1, "full": "BENCH_FULL.json"},
-    }
-    (tmp_path / "BENCH_r99.json").write_text(json.dumps(slim))
-    (tmp_path / "BENCH_FULL.json").write_text(
-        json.dumps({"queries": q, "duckdb": d, "sf": 0.1})
-    )
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    prev = bench._prev_bench()
-    assert prev is not None and prev[0] == 99
-    assert prev[1] == q and prev[2] == d and prev[3] == 0.1
-    # provenance: the duck dict came from the sibling, and the
-    # consistency ratio vs the record's duckdb_total is carried
-    assert prev[4].startswith("full_sibling"), prev[4]
-
-    # stale sibling: sf mismatch -> duck dict must come back empty
-    (tmp_path / "BENCH_FULL.json").write_text(
-        json.dumps({"queries": q, "duckdb": d, "sf": 0.01})
-    )
-    importlib.invalidate_caches()
-    prev = bench._prev_bench()
-    assert prev is not None and prev[2] == {}
-
-    # stale sibling: disjoint key set -> rejected too
-    (tmp_path / "BENCH_FULL.json").write_text(
-        json.dumps({"queries": q, "duckdb": {"other": 1.0}, "sf": 0.1})
-    )
-    prev = bench._prev_bench()
-    assert prev is not None and prev[2] == {}
-
-
 def test_every_package_module_is_reached_from_an_entry_point():
     """No library module may sit outside what the entry points reach.
 
@@ -739,6 +652,138 @@ def test_package_reads_only_deployment_env_vars():
             elif key.value not in _DEPLOYMENT_ENVS:
                 bad.append(f"{where} {key.value}")
     assert not bad, f"env reads outside the deployment settings: {bad}"
+
+
+# Options that stay although one value reaches them outside the tests,
+# each with its reason: "name" exempts every parameter of a function of
+# that name, "name.param" one parameter.
+_SINGLE_VALUE_OPTIONS = {
+    "get_session.master": "deployment setting",
+    "get_session.extra_conf": "deployment setting",
+    "main.argv": "the CLI test seam (cli.main, hydra_compat.main)",
+    "duplicate_clusters.assert_edges_covered": "input check",
+    "read_table.expected_schema": "input check",
+    "edge_min_labels.stats": "the only way to see the fixpoint's round count",
+    "encode_*": "fixture encoders, kept for the codec round-trip tests",
+}
+
+
+def test_every_option_takes_two_values_outside_tests():
+    """Every parameter of a function under ``gentropy_spark/`` whose
+    default is a string, a bool or ``None`` takes at least two values
+    across the calls in ``gentropy_spark/``, ``bench.py``,
+    ``__spark_entry__.py`` and ``scripts/``. Otherwise it is a literal
+    that only its default reaches, and belongs in the function body.
+
+    Call sites are matched by function name (``f(...)``, ``x.f(...)``,
+    ``partial(f, ...)``; a class name calls its ``__init__``), so two
+    functions of one name share their calls. A call that omits the
+    parameter passes the default; a non-literal argument, ``*args`` or
+    ``**kw`` counts as a second value. The params of
+    ``config.STEP_PARAM_SCHEMAS`` count as set on every ``q_*`` builder
+    (``config.resolve_step`` binds them). ``api.py`` is the user
+    surface, so its own parameters are exempt, and so is
+    ``_SINGLE_VALUE_OPTIONS``. Fails naming each parameter with the
+    one value it takes."""
+    import ast
+    from fnmatch import fnmatch
+    from pathlib import Path
+
+    root = Path(_repo_root())
+    pkg_dir = root / "gentropy_spark"
+    callers = [*pkg_dir.rglob("*.py"), root / "bench.py", root / "__spark_entry__.py"]
+    callers += sorted((root / "scripts").glob("*.py"))
+    trees = {path: ast.parse(path.read_text()) for path in callers}
+
+    config = trees[pkg_dir / "config.py"]
+    dag_params = {
+        key.value
+        for node in ast.walk(config)
+        if isinstance(node, ast.AnnAssign)
+        and getattr(node.target, "id", None) == "STEP_PARAM_SCHEMAS"
+        for step in node.value.values
+        for key in step.keys
+    }
+
+    # One walk per module: functions with their class, calls, and bare
+    # name references (a registry entry, a callback: a call that passes
+    # no argument). The walk is breadth-first, so a class is seen
+    # before its methods.
+    defs, calls, refs = [], {}, []
+    for path, tree in trees.items():
+        owner, called, loads = {}, set(), []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ClassDef):
+                owner.update((fn, node.name) for fn in node.body)
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.append((path, node, owner.get(node)))
+            elif isinstance(node, ast.Call):
+                f, args = node.func, node.args
+                called.add(f)
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                if name == "partial" and args:
+                    called.add(args[0])
+                    name = getattr(args[0], "id", None) or getattr(args[0], "attr", None)
+                    args = args[1:]
+                calls.setdefault(name, []).append((args, node.keywords))
+            elif isinstance(getattr(node, "ctx", None), ast.Load):
+                loads.append(node)
+        refs += [node for node in loads if node not in called]
+
+    # (call name, param, positional index or None, default, where)
+    options = []
+    for path, fn, cls in defs:
+        if pkg_dir not in path.parents or path.name == "api.py":
+            continue
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        if cls and positional and positional[0].arg in ("self", "cls"):
+            positional = positional[1:]
+        name = cls if cls and fn.name == "__init__" else fn.name
+        first = len(positional) - len(a.defaults)
+        params = [(p, i, a.defaults[i - first]) for i, p in enumerate(positional) if i >= first]
+        params += [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+        for p, i, d in params:
+            if not (
+                isinstance(d, ast.Constant)
+                and (d.value is None or isinstance(d.value, (str, bool)))
+            ):
+                continue
+            if any(
+                fnmatch(fn.name, k) or fnmatch(f"{fn.name}.{p.arg}", k)
+                for k in _SINGLE_VALUE_OPTIONS
+            ):
+                continue
+            if fn.name.startswith("q_") and p.arg in dag_params:
+                continue
+            where = f"{path.relative_to(pkg_dir)}:{fn.lineno}"
+            options.append((name, p.arg, i, repr(d.value), f"{where} {fn.name}({p.arg}={d.value!r})"))
+    names = {name for name, *_ in options}
+    for node in refs:
+        name = getattr(node, "id", None) or getattr(node, "attr", None)
+        if name in names:
+            calls.setdefault(name, []).append(([], []))
+
+    bad = []
+    for name, param, index, default, where in options:
+        values = set()
+        for args, keywords in calls.get(name, []):
+            starred = [k for k, arg in enumerate(args) if isinstance(arg, ast.Starred)]
+            kw = {k.arg: k.value for k in keywords}
+            if None in kw or (index is not None and starred and starred[0] <= index):
+                values.add(None)  # *args / **kw forward
+                continue
+            passed = index is not None and index < len(args)
+            arg = args[index] if passed else kw.get(param)
+            if arg is None:
+                values.add(default)
+            elif isinstance(arg, ast.Constant):
+                values.add(repr(arg.value))
+            else:
+                values.add(None)
+        if len(values) < 2 and None not in values:
+            bad.append(where)
+    assert not bad, f"{len(bad)} options that one value reaches: {bad}"
 
 
 def test_parity_sums_go_through_exact_sum():

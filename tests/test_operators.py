@@ -313,10 +313,10 @@ def test_ivf_topk_subset_of_bruteforce(spark, sf_dir):
     )
     flat = {
         (r.query_id, r.corpus_id): r.cosine
-        for r in cosine_topk(queries, corpus, k=100, dim=64).collect()
+        for r in cosine_topk(queries, corpus, k=100).collect()
     }
     ivf = ivf_topk(
-        queries, corpus, n_centroids=8, n_probe=8, k=5, dim=64
+        queries, corpus, n_centroids=8, n_probe=8, k=5
     ).collect()
     # full probing == flat top-k (exactness when every list is searched)
     flat_top5 = {}
@@ -704,20 +704,6 @@ def test_bucketed_cumsum_single_scan_exchange_reuse(spark):
         and "ReusedExchange" not in line
     ]
     assert len(big_exchanges) == 1, final_section
-
-
-def test_salted_join_rejects_right_and_full_outer(spark):
-    from gentropy_spark.operators.reshape import salted_join
-
-    left = spark.range(4).withColumnRenamed("id", "k")
-    right = spark.range(8).withColumnRenamed("id", "k")
-    for bad in ("right", "full_outer", "full", "outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(left, right, key="k", how=bad)
-    # the supported modes still work and match the plain join
-    plain = left.join(right, on="k", how="left").count()
-    assert salted_join(left, right, key="k", how="left").count() == plain
-
 
 
 def test_duplicate_clusters_string_ids_converge(spark):

@@ -209,10 +209,9 @@ def test_bucketed_cumsum_duplicate_order_keys_exact_totals(spark):
     ]
     df = spark.createDataFrame(rows, "part string, ord long, val long")
     out = bucketed_cumsum(
-        df, part_col="part", order_col="ord", value_col="val",
-        out_col="cum", bucket_span=4,
+        df, part_col="part", order_col="ord", value_col="val", bucket_span=4
     )
-    got = {(r["ord"], r["val"]): r["cum"] for r in out.collect()}
+    got = {(r["ord"], r["val"]): r["cum_tokens"] for r in out.collect()}
     # bucket-1 rows see the FULL bucket-0 total (14), not an
     # arbitrary-tie-pick partial.
     assert got[(5, 7)] == 21
@@ -230,10 +229,8 @@ def test_bucketed_cumsum_unique_keys_match_single_level_window(spark):
     rows = [(f"p{i % 3}", i, (i * 7) % 13) for i in range(200)]
     df = spark.createDataFrame(rows, "part string, ord long, val long")
     two = {
-        (r["part"], r["ord"]): r["cum"]
-        for r in bucketed_cumsum(
-            df, "part", "ord", "val", out_col="cum", bucket_span=16
-        ).collect()
+        (r["part"], r["ord"]): r["cum_tokens"]
+        for r in bucketed_cumsum(df, "part", "ord", "val", bucket_span=16).collect()
     }
     w = (
         Window.partitionBy("part")

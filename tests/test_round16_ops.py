@@ -245,13 +245,8 @@ def test_semdedup_assignment_has_no_centroid_crossjoin(spark):
         .filter(F.col("vec_id") < F.col("_k2"))
         .select(F.col("vec_id").alias("cell_id"), F.col("v").alias("cellv"))
     )
-    # probe_occupied_cells=False mirrors q_semdedup_prune's call (its
-    # quantizer is structurally all-occupied); the totality variant
-    # adds one centroid-grain occupied-cells semi-join, which is
-    # covered by tests/test_round17_ops.py.
     assigned = two_level_nearest_centroid(
-        vecs, cents, coarse, n_probe=SEMDEDUP_NPROBE,
-        probe_occupied_cells=False,
+        vecs, cents, coarse, n_probe=SEMDEDUP_NPROBE
     )
     opt = assigned._jdf.queryExecution().optimizedPlan().toString()
     join_lines = [ln for ln in opt.splitlines() if "Join" in ln]

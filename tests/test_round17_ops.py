@@ -22,12 +22,10 @@ def _grid_vectors(n: int, dim: int = 4) -> list[tuple[int, list[float]]]:
     return out
 
 
-def test_two_level_totality_empty_probed_cells(spark):
-    """r16 advisory 2: with probe_occupied_cells (the default) every
-    vector gets exactly one assignment even when its nearest cells
-    hold zero centroids; with the flag off, such vectors drop (the
-    documented minimal-plan contract semdedup uses, where the
-    quantizer is structurally all-occupied)."""
+def test_two_level_empty_probed_cells_drop(spark):
+    """A vector whose nearest cells hold zero centroids drops out: the
+    documented precondition (every coarse cell holds a centroid) that
+    semdedup's quantizer meets structurally."""
     from gentropy_spark.operators.similarity import two_level_nearest_centroid
 
     # Two far-apart cells; ALL centroids hash to cell 1, so cell 0 is
@@ -40,26 +38,16 @@ def test_two_level_totality_empty_probed_cells(spark):
     cdf = spark.createDataFrame(cents, "centroid_id long, c array<double>")
     odf = spark.createDataFrame(cells, "cell_id long, cellv array<double>")
 
-    total = two_level_nearest_centroid(vdf, cdf, odf, n_probe=1).collect()
-    assert {r.vec_id for r in total} == {100, 101}, (
-        "default operator must be total: one row per vector"
-    )
-    # vector 100's only occupied probe is cell 1 -> nearest centroid 0
-    by_id = {r.vec_id: r.centroid_id for r in total}
-    assert by_id[100] == 0 and by_id[101] == 1
-
-    minimal = two_level_nearest_centroid(
-        vdf, cdf, odf, n_probe=1, probe_occupied_cells=False
-    ).collect()
+    minimal = two_level_nearest_centroid(vdf, cdf, odf, n_probe=1).collect()
     assert {r.vec_id for r in minimal} == {101}, (
         "minimal-plan contract: empty-probe vectors drop"
     )
 
 
 def test_two_level_occupied_probing_matches_exact_when_boundary(spark):
-    """Occupied-cell probing keeps the structural exactness bound:
-    probing every OCCUPIED cell is exact even when K2 > n_probe, as
-    long as n_probe >= #occupied cells."""
+    """Probing every cell (n_probe >= K2) keeps the structural
+    exactness bound on a tie-heavy grid, where all centroids may land
+    in fewer cells than K2."""
     from gentropy_spark.operators.similarity import two_level_nearest_centroid
 
     pts = _grid_vectors(60)
@@ -207,8 +195,7 @@ def test_assignment_eval_matches_operator(spark, np_):
     op = {
         r.vec_id: (r.centroid_id, r.dist2)
         for r in two_level_nearest_centroid(
-            vecs, cents, coarse, n_probe=np_, dim=EMB_DIM,
-            probe_occupied_cells=False,
+            vecs, cents, coarse, n_probe=np_, dim=EMB_DIM
         ).collect()
     }
     from gentropy_spark.plans.llm_pipeline import q_assignment_recall_eval
@@ -221,8 +208,7 @@ def test_assignment_eval_matches_operator(spark, np_):
     exact = {
         r.vec_id: r.centroid_id
         for r in two_level_nearest_centroid(
-            vecs, cents, coarse, n_probe=10**6, dim=EMB_DIM,
-            probe_occupied_cells=False,
+            vecs, cents, coarse, n_probe=10**6, dim=EMB_DIM
         ).collect()
     }
     want = round(

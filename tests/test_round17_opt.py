@@ -33,7 +33,7 @@ def test_bloom_dense_array_matches_python_reference(spark, sf_dir):
 
     docs = read_table(spark, sf_dir, "documents")
     bench = docs.filter(F.expr(_BENCH_PRED))
-    sh = shingles(bench, n=DECON_NGRAM, spread=False).select("shingle")
+    sh = shingles(bench, n=DECON_NGRAM).select("shingle")
     h = poly_hash(F.col("shingle"))
     pos_rows = sh.select(
         *[

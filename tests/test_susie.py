@@ -3,9 +3,7 @@
 The kernel is validated against the reference implementation's own
 published fixtures (tests/gentropy/data_samples/01_test_*.csv): the
 method-of-moments log-BFs must match to numpy allclose (observed max
-abs diff ~1.4e-8); the MLE path uses a different optimizer (alternating
-bounded Brent instead of L-BFGS-B) so it is checked structurally (same
-causal SNP, correlation > 0.999).
+abs diff ~1.4e-8).
 """
 
 from __future__ import annotations
@@ -31,8 +29,7 @@ def _load_fixtures():
     ld = np.loadtxt(f"{_FIXDIR}/01_test_ld.csv", delimiter=",")
     z = np.array(pd.read_csv(f"{_FIXDIR}/01_test_z.csv").iloc[:, 1])
     lbf_mom = np.loadtxt(f"{_FIXDIR}/01_test_lbf_moments.csv")
-    lbf_mle = np.loadtxt(f"{_FIXDIR}/01_test_lbf_mle.csv")
-    return ld, z, lbf_mom, lbf_mle
+    return ld, z, lbf_mom
 
 
 def test_brent_minimizer_quadratic():
@@ -42,25 +39,16 @@ def test_brent_minimizer_quadratic():
 
 @pytest.mark.skipif(not _HAVE_FIXTURES, reason="reference fixtures not present")
 def test_susie_inf_moments_matches_reference_fixture():
-    ld, z, lbf_mom, _ = _load_fixtures()
-    fit = susie_inf_fit(z, R=ld, est_tausq=True, method="moments")
+    ld, z, lbf_mom = _load_fixtures()
+    fit = susie_inf_fit(z, R=ld, est_tausq=True)
     assert np.allclose(fit["lbf_variable"][:, 0], lbf_mom), (
         f"max diff {np.abs(fit['lbf_variable'][:, 0] - lbf_mom).max()}"
     )
 
 
 @pytest.mark.skipif(not _HAVE_FIXTURES, reason="reference fixtures not present")
-def test_susie_inf_mle_structurally_matches_reference_fixture():
-    ld, z, _, lbf_mle = _load_fixtures()
-    fit = susie_inf_fit(z, R=ld, est_tausq=True, method="MLE")
-    mine = fit["lbf_variable"][:, 0]
-    assert np.argmax(mine) == np.argmax(lbf_mle)
-    assert np.corrcoef(mine, lbf_mle)[0, 1] > 0.999
-
-
-@pytest.mark.skipif(not _HAVE_FIXTURES, reason="reference fixtures not present")
 def test_susie_inf_credible_set_matches_reference_fixture():
-    ld, z, _, _ = _load_fixtures()
+    ld, z, _ = _load_fixtures()
     fit = susie_inf_fit(z, R=ld, est_tausq=True)
     cred = credible_sets(fit["PIP"], R=ld, coverage=0.99)
     assert cred[0] == [5]
