@@ -1,134 +1,52 @@
-"""Real media codecs, library-free (r8: PPM/BMP/WAV; r9: PNG/JPEG/MP4).
+"""Media codecs for the multimodal keys, library-free (stdlib + numpy).
 
-The sandbox ships no image/audio libraries, but with stdlib + numpy
-alone the decode step is REAL for: PPM (P6), BMP (BITMAPINFOHEADER /
-24-bit BI_RGB), WAV (PCM16), PNG (zlib inflate + all five scanline
-filters, color types 0/2/3/4/6 at 8-bit depth), JPEG — baseline AND
-progressive/SOF2 with spectral selection + successive approximation
-(operators/jpeg.py: stream-table-driven Huffman + numpy IDCT) — and
-the MP4/ISO-BMFF CONTAINER (box parsing: duration timescale, track
-count, video track dims — sample data intentionally not decoded,
-mean_value NULL). The deterministic stub remains only for formats
-outside that scope (arithmetic-coded JPEG, raw H.264 pixel decode); an
-ffmpeg-backed decoder slots into ``decode_any``'s fallback branch
-without touching the mapInPandas contract (operators/multimodal.py).
+``decode_any`` dispatches on magic bytes to the decoders in
+``DECODERS`` and returns one dict in the unified media schema:
+    codec: 'wav' | 'png' | 'gif' | 'stub'
+    width, height: pixel dims (images; for WAV, width is the frame
+        count and height None)
+    n_channels: samples per pixel / audio channels
+    sample_rate: audio frame rate (None for images)
+    mean_value: mean sample value over all channels (float; NULL on
+        the stub)
 
-All decoders take raw ``bytes`` and return a plain dict with the
-unified media schema:
-    codec: 'ppm' | 'bmp' | 'wav' | 'png' | 'jpeg' | 'mp4' | 'stub'
-    width, height: pixel dims (images; None for audio)
-    n_channels: samples per pixel / audio channels / mp4 track count
-    sample_rate: audio frame rate / mp4 movie timescale (None: images)
-    mean_value: mean sample value over all channels (float; NULL when
-        sample data is not decoded — mp4, stub)
+What each decoder takes is what the registry keys can feed it:
+- multimodal_decode (``multimodal.decode_features``) passes the UTF-8
+  bytes of ``documents.text``. Such a payload can start with
+  ``RIFF…WAVE`` or ``GIF87a``/``GIF89a``, so the WAV and GIF decoders
+  take outside input; it can never start with PNG's 0x89. Everything
+  else, and any payload a decoder rejects, ends on the all-NULL stub.
+- multimodal_codec_verify (plans/streaming_plan.py) round-trips its own
+  ``encode_png``/``encode_gif``/``encode_wav`` payloads. So ``decode_png``
+  reads the one stream ``encode_png`` writes (8-bit RGB, not
+  interlaced, row filters cycling 0..4); any other IHDR raises and
+  lands on the stub.
 """
 
 from __future__ import annotations
 
 import struct
 import wave
+import zlib
 from io import BytesIO
 
 import numpy as np
 
+from gentropy_spark.operators.gif import decode_gif
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
 def sniff(payload: bytes) -> str:
-    """Magic-byte container detection."""
-    if payload[:2] == b"P6":
-        return "ppm"
-    if payload[:2] == b"BM":
-        return "bmp"
+    """Magic-byte container detection: a ``DECODERS`` key or
+    'unknown'."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return "wav"
     if payload[:8] == PNG_SIGNATURE:
         return "png"
-    if payload[:2] == b"\xff\xd8":
-        return "jpeg"
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         return "gif"
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        return "mp4"
     return "unknown"
-
-
-def _ppm_header(payload: bytes) -> tuple[int, int, int, int]:
-    """Parse the P6 header (magic, width, height, maxval), skipping
-    comments; returns (width, height, maxval, data_offset)."""
-    tokens: list[bytes] = []
-    i = 2  # past 'P6'
-    while len(tokens) < 3:
-        # skip whitespace
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":  # comment to EOL
-            while i < len(payload) and payload[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        tokens.append(payload[i:j])
-        i = j
-    i += 1  # single whitespace after maxval
-    w, h, maxval = (int(t) for t in tokens)
-    return w, h, maxval, i
-
-
-def decode_ppm(payload: bytes) -> dict:
-    """Binary PPM (P6): header + raw interleaved RGB (8- or 16-bit
-    big-endian samples per the netpbm spec)."""
-    w, h, maxval, off = _ppm_header(payload)
-    if maxval >= 65536:
-        raise ValueError("invalid PPM maxval")
-    n = w * h * 3
-    if maxval >= 256:
-        px = np.frombuffer(payload, dtype=">u2", count=n, offset=off)
-    else:
-        px = np.frombuffer(payload, dtype=np.uint8, count=n, offset=off)
-    return {
-        "codec": "ppm",
-        "width": w,
-        "height": h,
-        "n_channels": 3,
-        "sample_rate": None,
-        "mean_value": float(px.mean()) if n else 0.0,
-    }
-
-
-def decode_bmp(payload: bytes) -> dict:
-    """Windows BMP, BITMAPINFOHEADER, 24-bit uncompressed (BI_RGB).
-
-    Rows are bottom-up and padded to 4-byte boundaries — padding is
-    excluded from the mean.
-    """
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size = struct.unpack_from("<I", payload, 14)[0]
-    if hdr_size < 40:
-        raise ValueError("BITMAPCOREHEADER not supported")
-    w, h = struct.unpack_from("<ii", payload, 18)
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise ValueError(f"unsupported BMP: {bpp}bpp compression={compression}")
-    height = abs(h)
-    row_bytes = w * 3
-    stride = (row_bytes + 3) & ~3
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=stride * height, offset=data_off
-    ).reshape(height, stride)[:, :row_bytes]
-    return {
-        "codec": "bmp",
-        "width": w,
-        "height": height,
-        "n_channels": 3,
-        "sample_rate": None,
-        "mean_value": float(rows.mean()) if rows.size else 0.0,
-    }
 
 
 def decode_wav(payload: bytes) -> dict:
@@ -158,10 +76,6 @@ def decode_wav(payload: bytes) -> dict:
         "sample_rate": min(rate, int32_max),
         "mean_value": float(np.abs(samples).mean()) if samples.size else 0.0,
     }
-
-
-# PNG color type → samples per pixel (spec §11.2.2).
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
 def _png_chunks(payload: bytes):
@@ -235,141 +149,52 @@ def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
     return out
 
 
-# Adam7 pass geometry: (col0, colstep, row0, rowstep) per pass.
-_ADAM7 = (
-    (0, 8, 0, 8),
-    (4, 8, 0, 8),
-    (0, 4, 4, 8),
-    (2, 4, 0, 4),
-    (0, 2, 2, 4),
-    (1, 2, 0, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _adam7_reassemble(
-    raw: bytes, width: int, height: int, bpp: int
-) -> np.ndarray:
-    """Seven independently-filtered sub-images → full (h, stride)
-    array (``bpp`` = BYTES per pixel, so 16-bit depth reuses this
-    unchanged). Each non-empty pass carries its own scanline filters,
-    so _png_unfilter runs per pass and the pixels scatter to their
-    interlace positions."""
-    out = np.zeros((height, width * bpp), dtype=np.uint8)
-    img = out.reshape(height, width, bpp)
-    pos = 0
-    for col0, colstep, row0, rowstep in _ADAM7:
-        pw = -(-(width - col0) // colstep) if width > col0 else 0
-        ph = -(-(height - row0) // rowstep) if height > row0 else 0
-        if pw == 0 or ph == 0:
-            continue
-        stride = pw * bpp
-        nbytes = ph * (stride + 1)
-        sub = _png_unfilter(raw[pos : pos + nbytes], ph, stride, bpp)
-        pos += nbytes
-        img[row0::rowstep, col0::colstep] = sub.reshape(ph, pw, bpp)
-    return out
-
-
 def decode_png(payload: bytes) -> dict:
-    """PNG via stdlib zlib + numpy filter reconstruction.
-
-    Supports bit depths 8 and 16 (big-endian samples), color types 0
-    (gray), 2 (RGB), 3 (palette, 8-bit only per spec), 4 (gray+alpha),
-    6 (RGBA), both non-interlaced and Adam7 interlaced."""
-    import zlib
-
+    """8-bit RGB, non-interlaced PNG via stdlib zlib + numpy filter
+    reconstruction. Any other bit depth, colour type, interlace,
+    compression or filter method raises."""
     if payload[:8] != PNG_SIGNATURE:
         raise ValueError("not a PNG")
     width = height = None
-    channels = bit_depth = color_type = None
-    palette = None
-    interlaced = False
     idat = bytearray()
     for ctype, data in _png_chunks(payload):
         if ctype == b"IHDR":
             width, height, bit_depth, color_type, comp, filt, interlace = (
                 struct.unpack(">IIBBBBB", data)
             )
-            if bit_depth not in (8, 16):
-                raise ValueError(f"unsupported PNG bit depth {bit_depth}")
-            if bit_depth == 16 and color_type == 3:
-                raise ValueError("16-bit palette PNG is not legal")
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown PNG interlace {interlace}")
-            if comp != 0 or filt != 0:
-                raise ValueError("non-standard PNG compression/filter")
-            channels = _PNG_CHANNELS.get(color_type)
-            if channels is None:
-                raise ValueError(f"unknown PNG color type {color_type}")
-            interlaced = interlace == 1
-        elif ctype == b"PLTE":
-            palette = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
+            if (bit_depth, color_type, comp, filt, interlace) != (8, 2, 0, 0, 0):
+                raise ValueError(
+                    f"unsupported PNG: bit depth {bit_depth}, color type "
+                    f"{color_type}, interlace {interlace}"
+                )
         elif ctype == b"IDAT":
             idat.extend(data)
     if width is None or not idat:
         raise ValueError("missing IHDR/IDAT")
-    raw = zlib.decompress(bytes(idat))
-    # Filters operate on BYTES with the pixel byte-width as the left
-    # distance, so 16-bit depth reuses the same unfilter with
-    # bpp = channels * 2; samples then reinterpret as big-endian u16.
-    sample_bytes = bit_depth // 8
-    bpp = channels * sample_bytes
-    stride = width * bpp
-    if interlaced:
-        pixels = _adam7_reassemble(raw, width, height, bpp)
-    else:
-        pixels = _png_unfilter(raw, height, stride, bpp)
-    if bit_depth == 16:
-        pixels = (
-            pixels.reshape(-1, 2).astype(np.uint16)[:, 0] * 256
-            + pixels.reshape(-1, 2)[:, 1]
-        )
-    if color_type == 3:
-        if palette is None:
-            raise ValueError("palette PNG without PLTE")
-        samples = palette[pixels.reshape(-1)]
-        n_channels = 3
-    else:
-        samples = pixels
-        n_channels = channels
+    pixels = _png_unfilter(zlib.decompress(bytes(idat)), height, width * 3, 3)
     return {
         "codec": "png",
         "width": width,
         "height": height,
-        "n_channels": n_channels,
+        "n_channels": 3,
         "sample_rate": None,
-        "mean_value": float(samples.mean()) if samples.size else 0.0,
+        "mean_value": float(pixels.mean()) if pixels.size else 0.0,
     }
 
 
+# The container kinds ``decode_any`` decodes, by ``sniff`` label.
+DECODERS = {"wav": decode_wav, "png": decode_png, "gif": decode_gif}
+
+
 def decode_any(payload: bytes) -> dict:
-    """Dispatch on magic bytes; unknown containers fall back to the
-    deterministic stub (the remaining scope limit is MP4/H.264 video
-    pixel data and arithmetic-coded JPEG — baseline AND progressive
-    JPEG, PNG, GIF, PPM, BMP and WAV all decode for real)."""
-    kind = sniff(payload)
-    try:
-        if kind == "ppm":
-            return decode_ppm(payload)
-        if kind == "bmp":
-            return decode_bmp(payload)
-        if kind == "wav":
-            return decode_wav(payload)
-        if kind == "png":
-            return decode_png(payload)
-        if kind == "gif":
-            from gentropy_spark.operators.gif import decode_gif
-
-            return decode_gif(payload)
-        if kind == "jpeg":
-            from gentropy_spark.operators.jpeg import decode_jpeg
-
-            return decode_jpeg(payload)
-        if kind == "mp4":
-            return decode_mp4(payload)
-    except Exception:  # noqa: BLE001 — corrupt media must not kill a batch
-        pass
+    """Dispatch on magic bytes; an unknown container, or a payload its
+    decoder rejects, falls back to the all-NULL stub."""
+    decoder = DECODERS.get(sniff(payload))
+    if decoder is not None:
+        try:
+            return decoder(payload)
+        except Exception:  # noqa: BLE001 — corrupt media must not kill a batch
+            pass
     return {
         "codec": "stub",
         "width": None,
@@ -380,35 +205,8 @@ def decode_any(payload: bytes) -> dict:
     }
 
 
-# --- test-support encoders (exact inverses of the decoders) ---------------
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → binary P6."""
-    h, w, _ = pixels.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels.astype(np.uint8).tobytes()
-
-
-def encode_bmp(pixels: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 (BGR, top-down in memory) → 24-bit BMP
-    (bottom-up rows, 4-byte padded)."""
-    h, w, _ = pixels.shape
-    row_bytes = w * 3
-    stride = (row_bytes + 3) & ~3
-    pad = b"\x00" * (stride - row_bytes)
-    body = b"".join(
-        pixels[r].astype(np.uint8).tobytes() + pad for r in range(h - 1, -1, -1)
-    )
-    data_off = 14 + 40
-    file_size = data_off + len(body)
-    header = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, data_off)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
-    )
-    return header + info + body
-
-
+# --- encoders (exact inverses of the decoders) ---------------------------
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + ctype
@@ -417,14 +215,19 @@ def _png_chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
-def _png_filter_rows(pixels: np.ndarray, filter_type: int | None) -> bytearray:
-    """Filter one sub-image's scanlines (shared by plain + Adam7)."""
+def encode_png(pixels: np.ndarray) -> bytes:
+    """(h, w, 3) uint8 → 8-bit RGB PNG bytes (exact inverse of
+    decode_png). Row r uses filter r % 5, so one round trip of five or
+    more rows runs all five unfilter paths."""
     h, w, c = pixels.shape
+    if c != 3:
+        raise ValueError(f"encode_png writes RGB, got {c} channels")
+    pixels = pixels.astype(np.uint8)
     raw = bytearray()
     prev = np.zeros(w * c, dtype=np.uint8)
     for r in range(h):
         row = pixels[r].reshape(-1)
-        ft = filter_type if filter_type is not None else r % 5
+        ft = r % 5
         if ft == 0:
             filt = row.copy()
         elif ft == 1:  # Sub
@@ -447,67 +250,7 @@ def _png_filter_rows(pixels: np.ndarray, filter_type: int | None) -> bytearray:
         raw.append(ft)
         raw.extend(filt.tobytes())
         prev = row
-    return raw
-
-
-def encode_png(
-    pixels: np.ndarray,
-    color_type: int | None = None,
-    filter_type: int | None = None,
-    interlace: bool = False,
-) -> bytes:
-    """uint8 pixel array → PNG bytes (exact inverse of decode_png).
-
-    ``pixels``: (h, w) for gray (color_type 0), (h, w, c) otherwise
-    (c = 2 gray+alpha, 3 RGB, 4 RGBA). ``color_type`` defaults from
-    the array shape; passing one that disagrees with the channel
-    count raises (the IHDR would declare a different stride than the
-    scanline data and decode garbage). ``filter_type`` fixes one
-    scanline filter for every row; None cycles 0..4 per row so a
-    single round-trip test exercises ALL five unfilter paths.
-    ``interlace`` writes Adam7: seven independently-filtered
-    sub-images in pass order.
-    """
-    import zlib
-
-    if pixels.ndim == 2:
-        pixels = pixels[:, :, None]
-    h, w, c = pixels.shape
-    _CT_CHANNELS = {0: 1, 4: 2, 2: 3, 6: 4}
-    if color_type is None:
-        by_channels = {n: ct for ct, n in _CT_CHANNELS.items()}
-        if c not in by_channels:
-            raise ValueError(f"unsupported channel count {c}")
-        color_type = by_channels[c]
-    elif _CT_CHANNELS.get(color_type) != c:
-        raise ValueError(
-            f"color_type {color_type} expects "
-            f"{_CT_CHANNELS.get(color_type)} channels, got {c}"
-        )
-    if pixels.dtype == np.uint16:
-        # 16-bit: serialize big-endian sample bytes; filters see bytes
-        bit_depth = 16
-        pixels = (
-            pixels.astype(">u2")
-            .view(np.uint8)
-            .reshape(h, w, c * 2)
-        )
-        c *= 2
-    else:
-        bit_depth = 8
-        pixels = pixels.astype(np.uint8)
-    if interlace:
-        raw = bytearray()
-        for col0, colstep, row0, rowstep in _ADAM7:
-            sub = pixels[row0::rowstep, col0::colstep]
-            if sub.size == 0:
-                continue
-            raw += _png_filter_rows(sub, filter_type)
-    else:
-        raw = _png_filter_rows(pixels, filter_type)
-    ihdr = struct.pack(
-        ">IIBBBBB", w, h, bit_depth, color_type, 0, 0, 1 if interlace else 0
-    )
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     return (
         PNG_SIGNATURE
         + _png_chunk(b"IHDR", ihdr)
@@ -525,117 +268,3 @@ def encode_wav(samples: np.ndarray, rate: int = 16_000, channels: int = 1) -> by
         wf.setframerate(rate)
         wf.writeframes(samples.astype("<i2").tobytes())
     return buf.getvalue()
-
-
-# --- MP4 / ISO-BMFF container metadata (r9) ---------------------------------
-# Full H.264 pixel decode is genuinely out of scope for a stdlib-only
-# container, but the ISO base-media FILE FORMAT (ISO 14496-12) is pure
-# length-prefixed box parsing: duration, track count and the video
-# track's coded dimensions all live in plain big-endian headers. So the
-# multimodal decode step reports REAL container metadata for MP4 —
-# only the sample (pixel/audio) data stays undecoded (mean_value NULL,
-# like the stub path, which is the honest signal for "bytes not
-# decoded").
-def _mp4_boxes(payload: bytes, start: int, end: int):
-    """Yield (type, body_start, body_end) for the boxes in [start, end)."""
-    pos = start
-    while pos + 8 <= end:
-        (size,) = struct.unpack_from(">I", payload, pos)
-        btype = payload[pos + 4 : pos + 8]
-        header = 8
-        if size == 1:  # 64-bit largesize
-            if pos + 16 > end:
-                raise ValueError("truncated largesize box")
-            (size,) = struct.unpack_from(">Q", payload, pos + 8)
-            header = 16
-        elif size == 0:  # to end of enclosing box
-            size = end - pos
-        if size < header or pos + size > end:
-            raise ValueError("bad MP4 box size")
-        yield btype, pos + header, pos + size
-        pos += size
-
-
-def decode_mp4(payload: bytes) -> dict:
-    """ISO-BMFF metadata: movie duration, track count, video dims.
-
-    width/height come from the first video track's ``tkhd`` (16.16
-    fixed point); sample_rate carries the ``mvhd`` timescale (ticks/s)
-    — the closest audio-free analog of a rate in the unified schema;
-    n_channels carries the TRACK COUNT. mean_value is NULL: sample
-    data is intentionally not decoded.
-    """
-    if payload[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF container")
-    timescale = None
-    n_tracks = 0
-    width = height = None
-    moov = None
-    for btype, b0, b1 in _mp4_boxes(payload, 0, len(payload)):
-        if btype == b"moov":
-            moov = (b0, b1)
-            break
-    if moov is None:
-        raise ValueError("no moov box")
-    for btype, b0, b1 in _mp4_boxes(payload, *moov):
-        if btype == b"mvhd":
-            version = payload[b0]
-            off = b0 + (20 if version == 1 else 12)
-            (timescale,) = struct.unpack_from(">I", payload, off)
-        elif btype == b"trak":
-            n_tracks += 1
-            for t, t0, t1 in _mp4_boxes(payload, b0, b1):
-                if t == b"tkhd" and width is None:
-                    # width/height: last 8 bytes, 16.16 fixed point
-                    w_fx, h_fx = struct.unpack_from(">II", payload, t1 - 8)
-                    if w_fx and h_fx:
-                        width, height = w_fx >> 16, h_fx >> 16
-    return {
-        "codec": "mp4",
-        "width": width,
-        "height": height,
-        "n_channels": n_tracks,
-        "sample_rate": timescale,
-        "mean_value": None,  # sample data not decoded — honest NULL
-    }
-
-
-def encode_mp4_skeleton(
-    width: int = 640,
-    height: int = 360,
-    timescale: int = 1000,
-    n_tracks: int = 1,
-) -> bytes:
-    """Minimal valid ISO-BMFF skeleton (test support): ftyp + moov
-    with mvhd and ``n_tracks`` trak/tkhd boxes, no media data."""
-
-    def box(btype: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + btype + body
-
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
-    mvhd = box(
-        b"mvhd",
-        bytes(4)  # version 0 + flags
-        + struct.pack(">II", 0, 0)  # creation/modification
-        + struct.pack(">II", timescale, timescale * 2)  # scale, duration
-        + struct.pack(">I", 0x00010000)  # rate 1.0
-        + struct.pack(">H", 0x0100)  # volume
-        + bytes(10)
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + bytes(24)
-        + struct.pack(">I", n_tracks + 1),  # next track id
-    )
-    traks = b""
-    for tid in range(1, n_tracks + 1):
-        tkhd = box(
-            b"tkhd",
-            bytes(4)
-            + struct.pack(">IIII", 0, 0, tid, 0)
-            + struct.pack(">I", timescale * 2)
-            + bytes(8)
-            + struct.pack(">HHHH", 0, 0, 0, 0)
-            + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-            + struct.pack(">II", width << 16, height << 16),
-        )
-        traks += box(b"trak", tkhd)
-    return ftyp + box(b"moov", mvhd + traks)

@@ -8,8 +8,11 @@ clear-code technique (a CLEAR before each dictionary overflow keeps
 every emitted code a literal — larger output, trivially correct),
 which gives byte-exact round-trips for the unit tests.
 
-Like operators/jpeg.py this is test-support + real-decode plumbing for
-``decode_any``; no external imaging library is involved.
+``decode_gif`` is one of ``codecs.DECODERS``: a text payload of the
+multimodal_decode key can start with ``GIF87a``/``GIF89a``, and
+multimodal_codec_verify round-trips ``encode_gif(px, compress=True)``.
+``decode_gif_pixels`` is the pixel-level reference the LZW round-trip
+tests compare against. No external imaging library is involved.
 """
 
 from __future__ import annotations

@@ -3,22 +3,13 @@
 Treat image/audio/video as opaque ``binary`` columns with typed
 metadata, processed by Arrow-batched ``mapInPandas`` kernels.
 
-r8/r9: the decode step is a REAL decoder for every image/audio
-format in scope — PPM (P6), BMP (24-bit BI_RGB), WAV (PCM16), PNG
-(stdlib zlib inflate + all five scanline filters, color types
-0/2/3/4/6 at 8-bit depth) and baseline JPEG (operators/jpeg.py:
-stream-table-driven Huffman decode + numpy IDCT, grayscale/YCbCr at
-any h×v sampling incl. 4:2:0, restart markers, baseline AND
-progressive/SOF2 with spectral selection + successive approximation)
-— dispatched on magic bytes, stdlib + numpy only. MP4/ISO-BMFF
-containers parse for real too (box walk: video dims, movie timescale,
-track count — sample data honestly NULL). The deterministic
-byte-derived stub now covers
-only arithmetic-coded JPEG and raw H.264 pixel decode (the
-documented scope limit: an H.264 entropy decoder is genuinely out of
-scope for this container); an ffmpeg decoder slots into
-``codecs.decode_any``'s fallback branch without touching the plan,
-schema, or batch shape.
+``decode_features`` runs ``codecs.decode_any`` on every payload: the
+WAV, PNG and GIF decoders (stdlib + numpy, dispatched on magic bytes)
+fill the real-codec fields, and any other payload gets the all-NULL
+stub. The byte-derived ``_decode_stub`` fields (n_bytes, fake dims,
+n_frames) stand in for a video decoder; an ffmpeg-backed decoder slots
+into ``codecs.DECODERS`` without touching the plan, schema, or batch
+shape.
 """
 
 from __future__ import annotations

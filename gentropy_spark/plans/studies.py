@@ -134,51 +134,56 @@ def split_ancestry_even(
     )
 
 
-def parse_sample_counts(
-    parsed: DataFrame,
-) -> DataFrame:
-    """Per-study n_cases / n_controls / n_samples from the free-text
-    initialSampleSize string.
+def sample_counts() -> list[F.Column]:
+    """n_cases / n_controls / n_samples of the free-text
+    ``initial_sample_size`` string, as per-row array expressions.
 
     Reference semantics (gwas_catalog/study_index.py:545): split the
     string on ',\\s+' (in-number commas like '10,000' have no trailing
     space and survive), strip remaining commas, extract the leading
     integer, route by 'cases'/'controls' substring, sum per study.
-    Entries with no digits contribute NULL (excluded from sums).
+    Entries with no digits contribute NULL: cases and controls still
+    sum to 0, and n_samples is NULL when no entry carries a digit.
+
+    The study table is study-grain unique (the accession surrogate is
+    injective), so a fold over one row's parts equals the per-study
+    grouped sums without a second scan, exchange or join (r18).
     """
-    return (
-        parsed.select(
-            "study_id",
-            F.explode_outer(F.split(F.col("initial_sample_size"), r",\s+")).alias(
-                "samples"
-            ),
-        )
-        .withColumn(
-            "n",
-            # try_cast: regexp_extract yields '' (not NULL) on
-            # no-match, and ANSI CAST('') throws — the oracle's
-            # NULLIF guard must map to NULL here too.
-            F.regexp_extract(
-                F.regexp_replace(F.col("samples"), ",", ""), r"[0-9]+", 0
-            ).try_cast("long"),
-        )
-        .groupBy("study_id")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("samples").contains("cases"), F.col("n"))
-                ),
-                F.lit(0),
-            ).alias("n_cases"),
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("samples").contains("controls"), F.col("n"))
-                ),
-                F.lit(0),
-            ).alias("n_controls"),
-            F.sum("n").alias("n_samples"),
-        )
+    parts = F.split(F.col("initial_sample_size"), r",\s+")
+    nums = F.transform(
+        parts,
+        lambda s: F.regexp_extract(
+            F.regexp_replace(s, ",", ""), "[0-9]+", 0
+        ).try_cast("long"),
     )
+    tagged = F.zip_with(
+        parts, nums, lambda s, n: F.struct(s.alias("s"), n.alias("n"))
+    )
+
+    def side_sum(substr: str) -> F.Column:
+        return F.coalesce(
+            F.aggregate(
+                tagged,
+                F.lit(0).cast("long"),
+                lambda acc, x: acc
+                + F.coalesce(
+                    F.when(x["s"].contains(substr), x["n"]),
+                    F.lit(0).cast("long"),
+                ),
+            ),
+            F.lit(0).cast("long"),
+        )
+
+    valid = F.filter(nums, lambda n: n.isNotNull())
+    n_samples = F.when(
+        valid.isNotNull() & (F.size(valid) > 0),
+        F.aggregate(valid, F.lit(0).cast("long"), lambda a, x: a + x),
+    )
+    return [
+        side_sum("cases").alias("n_cases"),
+        side_sum("controls").alias("n_controls"),
+        n_samples.alias("n_samples"),
+    ]
 
 
 def _raw_gwas_studies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,46 +371,6 @@ def q_gwas_study_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ";",
         ),
     )
-    # n_cases / n_controls / n_samples as codegen array expressions over
-    # the SAME row (r18): ``parsed`` is study-grain UNIQUE (the
-    # accession surrogate is injective), so the old
-    # explode_outer→groupBy→self-left-join (parse_sample_counts) paid a
-    # second full orders scan, a study-keyed exchange and a join for a
-    # quantity computable in place. Identical values: per split part,
-    # the same regexp-extracted leading integer, routed by the same
-    # 'cases'/'controls' substring tests; the whole-fold coalesce
-    # mirrors the old coalesce(sum(..), 0), and n_samples stays NULL
-    # when no part carries a digit (sum-of-empty semantics).
-    parts = F.split(F.col("initial_sample_size"), r",\s+")
-    nums = F.transform(
-        parts,
-        lambda s: F.regexp_extract(
-            F.regexp_replace(s, ",", ""), "[0-9]+", 0
-        ).try_cast("long"),
-    )
-    tagged = F.zip_with(
-        parts, nums, lambda s, n: F.struct(s.alias("s"), n.alias("n"))
-    )
-
-    def side_sum(substr: str) -> F.Column:
-        return F.coalesce(
-            F.aggregate(
-                tagged,
-                F.lit(0).cast("long"),
-                lambda acc, x: acc
-                + F.coalesce(
-                    F.when(x["s"].contains(substr), x["n"]),
-                    F.lit(0).cast("long"),
-                ),
-            ),
-            F.lit(0).cast("long"),
-        )
-
-    valid = F.filter(nums, lambda n: n.isNotNull())
-    n_samples = F.when(
-        valid.isNotNull() & (F.size(valid) > 0),
-        F.aggregate(valid, F.lit(0).cast("long"), lambda a, x: a + x),
-    )
     parsed = studies.select(
         F.coalesce(
             F.col("accession"),
@@ -430,9 +395,7 @@ def q_gwas_study_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cohorts_csv"),
         "initial_sample_size",
         "has_sumstats",
-        side_sum("cases").alias("n_cases"),
-        side_sum("controls").alias("n_controls"),
-        n_samples.alias("n_samples"),
+        *sample_counts(),
     )
 
     # Distinct (label,count) pairs per study+stage = the reference's

@@ -613,6 +613,23 @@ def test_every_package_module_is_reached_from_an_entry_point():
     assert not unreached, f"modules no entry point reaches: {unreached}"
 
 
+def test_decode_any_takes_every_dispatch_branch(spark, sf_dir):
+    """The ``codec`` values of multimodal_decode and
+    multimodal_codec_verify at sf0.001 are exactly the kinds that
+    ``decode_any`` dispatches on, plus the stub. The import walk above
+    cannot see a decoder that no key's payload reaches, because
+    ``decode_any`` imports every decoder it dispatches to."""
+    from gentropy_spark.operators.codecs import DECODERS
+    from gentropy_spark.plans.registry import full_registry
+
+    registry = full_registry()
+    seen = set()
+    for key in ("multimodal_decode", "multimodal_codec_verify"):
+        df = registry[key].fn(spark, sf_dir)
+        seen |= {r.codec for r in df.select("codec").distinct().collect()}
+    assert seen == {*DECODERS, "stub"}
+
+
 # The deployment settings the package reads from the environment. A
 # new env var that changes plans or results would be a second profile
 # of the engine; make it an explicit argument instead.
@@ -664,7 +681,8 @@ _SINGLE_VALUE_OPTIONS = {
     "duplicate_clusters.assert_edges_covered": "input check",
     "read_table.expected_schema": "input check",
     "edge_min_labels.stats": "the only way to see the fixpoint's round count",
-    "encode_*": "fixture encoders, kept for the codec round-trip tests",
+    "encode_gif.interlace": "builds the interlaced input of decode_gif, which text payloads reach",
+    "encode_gif.compress": "builds the literal-LZW input of decode_gif, which text payloads reach",
 }
 
 

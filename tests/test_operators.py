@@ -745,41 +745,7 @@ def test_trainer_empty_validation_fold_disables_early_stopping():
     assert np.isfinite(p1).all()
 
 
-# --- real uncompressed-format codecs (operators/codecs.py) -----------------
-def test_ppm_roundtrip_byte_exact():
-    from gentropy_spark.operators.codecs import decode_ppm, encode_ppm
-
-    rng = np.random.RandomState(3)
-    px = rng.randint(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    meta = decode_ppm(encode_ppm(px))
-    assert (meta["width"], meta["height"], meta["n_channels"]) == (7, 5, 3)
-    assert meta["mean_value"] == pytest.approx(float(px.mean()))
-
-
-
-def test_ppm_header_comments_skipped():
-    from gentropy_spark.operators.codecs import decode_ppm
-
-    payload = b"P6\n# a comment\n2 1\n# another\n255\n" + bytes(
-        [10, 20, 30, 40, 50, 60]
-    )
-    meta = decode_ppm(payload)
-    assert (meta["width"], meta["height"]) == (2, 1)
-    assert meta["mean_value"] == pytest.approx(35.0)
-
-
-
-def test_bmp_roundtrip_handles_row_padding():
-    from gentropy_spark.operators.codecs import decode_bmp, encode_bmp
-
-    # width 3 → 9-byte rows padded to 12: padding must NOT skew the mean.
-    px = np.full((2, 3, 3), 200, dtype=np.uint8)
-    meta = decode_bmp(encode_bmp(px))
-    assert (meta["width"], meta["height"]) == (3, 2)
-    assert meta["mean_value"] == pytest.approx(200.0)
-
-
-
+# --- media codecs (operators/codecs.py) ------------------------------------
 def test_wav_pcm16_decode():
     from gentropy_spark.operators.codecs import decode_wav, encode_wav
 
@@ -794,37 +760,38 @@ def test_wav_pcm16_decode():
 
 
 def test_decode_any_dispatch_and_corrupt_fallback():
-    from gentropy_spark.operators.codecs import decode_any, encode_ppm
+    from gentropy_spark.operators.codecs import decode_any, encode_wav
 
-    px = np.zeros((2, 2, 3), dtype=np.uint8)
-    assert decode_any(encode_ppm(px))["codec"] == "ppm"
+    wav = encode_wav(np.zeros(4, dtype=np.int16))
+    assert decode_any(wav)["codec"] == "wav"
     assert decode_any(b"plain text payload")["codec"] == "stub"
-    # Truncated PPM (valid magic, corrupt body) must fall back, not raise.
-    assert decode_any(b"P6\n100 100\n255\n\x00\x01")["codec"] == "stub"
+    # Truncated WAV (valid magic, corrupt body) must fall back, not raise.
+    assert decode_any(wav[:20])["codec"] == "stub"
 
 
 
 def test_decode_features_real_media_through_mapinpandas(spark):
-    """End-to-end: real BMP/PPM/WAV payloads through the SAME
+    """End-to-end: real PNG/GIF/WAV payloads through the SAME
     mapInPandas decode plan as the registry query — real fields
     populated, stub rows get NULLs."""
-    from gentropy_spark.operators.codecs import encode_bmp, encode_ppm, encode_wav
+    from gentropy_spark.operators.codecs import encode_png, encode_wav
+    from gentropy_spark.operators.gif import encode_gif
     from gentropy_spark.operators.multimodal import decode_features
 
-    ppm = encode_ppm(np.full((4, 6, 3), 100, dtype=np.uint8))
-    bmp = encode_bmp(np.full((3, 5, 3), 50, dtype=np.uint8))
+    png = encode_png(np.full((4, 6, 3), 100, dtype=np.uint8))
+    gif = encode_gif(np.full((3, 5, 3), 50, dtype=np.uint8))
     wav = encode_wav(np.array([500, -500], dtype=np.int16), rate=44100)
     rows = [
-        (1, bytearray(ppm)),
-        (2, bytearray(bmp)),
+        (1, bytearray(png)),
+        (2, bytearray(gif)),
         (3, bytearray(wav)),
         (4, bytearray(b"just text")),
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, payload BINARY")
     got = {r.doc_id: r for r in decode_features(df).collect()}
-    assert got[1].codec == "ppm" and (got[1].width, got[1].height) == (6, 4)
+    assert got[1].codec == "png" and (got[1].width, got[1].height) == (6, 4)
     assert got[1].mean_value == pytest.approx(100.0)
-    assert got[2].codec == "bmp" and (got[2].width, got[2].height) == (5, 3)
+    assert got[2].codec == "gif" and (got[2].width, got[2].height) == (5, 3)
     assert got[3].codec == "wav" and got[3].sample_rate == 44100
     assert got[4].codec == "stub" and got[4].width is None
     # The stub byte-features remain populated for every row.

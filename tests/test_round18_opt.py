@@ -9,6 +9,7 @@ each change.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
 
 
 # --- codegen stopword count / tokens() --------------------------------------
@@ -78,11 +79,60 @@ def test_stopword_count_sql_escapes_quotes(spark):
 # --- gwas_study_ingest: fused sample-count projection ------------------------
 # n_cases / n_controls / n_samples moved from parse_sample_counts's
 # explode_outer -> groupBy -> self-left-join (a second full orders scan
-# + a study-keyed exchange) to per-row array expressions. The study
-# table is study-grain unique, so the per-row fold must equal the
-# grouped sums on every edge case the parser handles.
+# + a study-keyed exchange) to per-row array expressions
+# (studies.sample_counts). The study table is study-grain unique, so the
+# per-row fold must equal the grouped sums on every edge case the
+# parser handles. parse_sample_counts is kept here as that grouped
+# reference.
+def parse_sample_counts(
+    parsed: DataFrame,
+) -> DataFrame:
+    """Per-study n_cases / n_controls / n_samples from the free-text
+    initialSampleSize string.
+
+    Reference semantics (gwas_catalog/study_index.py:545): split the
+    string on ',\\s+' (in-number commas like '10,000' have no trailing
+    space and survive), strip remaining commas, extract the leading
+    integer, route by 'cases'/'controls' substring, sum per study.
+    Entries with no digits contribute NULL (excluded from sums).
+    """
+    return (
+        parsed.select(
+            "study_id",
+            F.explode_outer(F.split(F.col("initial_sample_size"), r",\s+")).alias(
+                "samples"
+            ),
+        )
+        .withColumn(
+            "n",
+            # try_cast: regexp_extract yields '' (not NULL) on
+            # no-match, and ANSI CAST('') throws — the oracle's
+            # NULLIF guard must map to NULL here too.
+            F.regexp_extract(
+                F.regexp_replace(F.col("samples"), ",", ""), r"[0-9]+", 0
+            ).try_cast("long"),
+        )
+        .groupBy("study_id")
+        .agg(
+            F.coalesce(
+                F.sum(
+                    F.when(F.col("samples").contains("cases"), F.col("n"))
+                ),
+                F.lit(0),
+            ).alias("n_cases"),
+            F.coalesce(
+                F.sum(
+                    F.when(F.col("samples").contains("controls"), F.col("n"))
+                ),
+                F.lit(0),
+            ).alias("n_controls"),
+            F.sum("n").alias("n_samples"),
+        )
+    )
+
+
 def test_gwas_sample_counts_projection_matches_reference(spark):
-    from gentropy_spark.plans.studies import parse_sample_counts
+    from gentropy_spark.plans.studies import sample_counts
 
     cases = [
         (1, "1,000 cases, 2,500 controls"),
@@ -99,46 +149,9 @@ def test_gwas_sample_counts_projection_matches_reference(spark):
         r["study_id"]: (r["n_cases"], r["n_controls"], r["n_samples"])
         for r in parse_sample_counts(df).collect()
     }
-    # the fused projection, reproduced exactly as q_gwas_study_ingest
-    # builds it
-    parts = F.split(F.col("initial_sample_size"), r",\s+")
-    nums = F.transform(
-        parts,
-        lambda s: F.regexp_extract(
-            F.regexp_replace(s, ",", ""), "[0-9]+", 0
-        ).try_cast("long"),
-    )
-    tagged = F.zip_with(
-        parts, nums, lambda s, n: F.struct(s.alias("s"), n.alias("n"))
-    )
-
-    def side_sum(substr):
-        return F.coalesce(
-            F.aggregate(
-                tagged,
-                F.lit(0).cast("long"),
-                lambda acc, x: acc
-                + F.coalesce(
-                    F.when(x["s"].contains(substr), x["n"]),
-                    F.lit(0).cast("long"),
-                ),
-            ),
-            F.lit(0).cast("long"),
-        )
-
-    valid = F.filter(nums, lambda n: n.isNotNull())
-    n_samples = F.when(
-        valid.isNotNull() & (F.size(valid) > 0),
-        F.aggregate(valid, F.lit(0).cast("long"), lambda a, x: a + x),
-    )
     got = {
         r["study_id"]: (r["n_cases"], r["n_controls"], r["n_samples"])
-        for r in df.select(
-            "study_id",
-            side_sum("cases").alias("n_cases"),
-            side_sum("controls").alias("n_controls"),
-            n_samples.alias("n_samples"),
-        ).collect()
+        for r in df.select("study_id", *sample_counts()).collect()
     }
     assert got == ref, {k: (got[k], ref[k]) for k in got if got[k] != ref[k]}
 

@@ -1,9 +1,11 @@
 """Round-9 targeted tests.
 
 1. PNG codec (operators/codecs.py): real zlib-inflate + filter
-   reconstruction, exercised against encode_png round trips covering
-   all five scanline filters and color types 0/2/3/4/6, plus the
-   corrupt/unsupported fallbacks and the mapInPandas pipeline path.
+   reconstruction of 8-bit RGB, exercised against encode_png round
+   trips covering all five scanline filters, plus the unsupported
+   IHDR shapes and corrupt streams that fall back to the stub, and the
+   mapInPandas pipeline path. GIF (operators/gif.py) round trips and
+   the stub contract follow.
 2. study_locus_qc_flags plan shape is covered in test_plans.py.
 """
 
@@ -22,12 +24,12 @@ def _rng(seed=7):
 
 # --- PNG round trips -------------------------------------------------------
 def test_png_rgb_roundtrip_all_filters():
-    """encode_png with filter_type=None cycles filters 0..4 per row,
-    so one decode covers every unfilter path byte-exactly."""
+    """encode_png cycles filters 0..4 per row, so one decode covers
+    every unfilter path byte-exactly."""
     from gentropy_spark.operators.codecs import decode_png, encode_png
 
     px = _rng().integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
-    meta = decode_png(encode_png(px, color_type=2, filter_type=None))
+    meta = decode_png(encode_png(px))
     assert meta["codec"] == "png"
     assert (meta["width"], meta["height"], meta["n_channels"]) == (5, 7, 3)
     assert meta["mean_value"] == pytest.approx(float(px.mean()))
@@ -35,11 +37,38 @@ def test_png_rgb_roundtrip_all_filters():
 
 @pytest.mark.parametrize("ftype", [0, 1, 2, 3, 4])
 def test_png_single_filter_exact(ftype):
-    from gentropy_spark.operators.codecs import decode_png, encode_png
+    """The scanlines encode_png writes with filter ``ftype`` (rows r
+    with r % 5 == ftype) unfilter to the exact source bytes."""
+    from gentropy_spark.operators.codecs import (
+        _png_chunks,
+        _png_unfilter,
+        encode_png,
+    )
 
-    px = _rng(ftype).integers(0, 256, size=(4, 6, 3), dtype=np.uint8)
-    meta = decode_png(encode_png(px, filter_type=ftype))
-    assert meta["mean_value"] == pytest.approx(float(px.mean()))
+    px = _rng(ftype).integers(0, 256, size=(10, 6, 3), dtype=np.uint8)
+    b = encode_png(px)
+    raw = zlib.decompress(b"".join(d for t, d in _png_chunks(b) if t == b"IDAT"))
+    assert [raw[r * (6 * 3 + 1)] for r in range(10)] == [r % 5 for r in range(10)]
+    out = _png_unfilter(raw, 10, 6 * 3, 3)
+    rows = [r for r in range(10) if r % 5 == ftype]
+    assert (out[rows] == px[rows].reshape(len(rows), -1)).all()
+
+
+def _png_stream(px, bit_depth=8, color_type=2, interlace=0):
+    """A complete PNG of (h, w, c) ``px`` with filter 0 on every row."""
+    from gentropy_spark.operators.codecs import PNG_SIGNATURE, _png_chunk
+
+    h, w = px.shape[:2]
+    if bit_depth == 16:
+        px = px.astype(">u2")
+    raw = b"".join(b"\x00" + row.tobytes() for row in px)
+    ihdr = struct.pack(">IIBBBBB", w, h, bit_depth, color_type, 0, 0, interlace)
+    return (
+        PNG_SIGNATURE
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw))
+        + _png_chunk(b"IEND", b"")
+    )
 
 
 @pytest.mark.parametrize(
@@ -47,40 +76,38 @@ def test_png_single_filter_exact(ftype):
     [(0, 1), (2, 3), (4, 2), (6, 4)],
 )
 def test_png_color_types(color_type, channels):
-    from gentropy_spark.operators.codecs import decode_png, encode_png
+    """RGB (color type 2) decodes; a complete, well-formed stream of
+    any other color type raises in decode_png and lands on the stub."""
+    from gentropy_spark.operators.codecs import decode_any, decode_png
 
-    shape = (5, 4) if channels == 1 else (5, 4, channels)
-    px = _rng(color_type).integers(0, 256, size=shape, dtype=np.uint8)
-    meta = decode_png(encode_png(px, color_type=color_type))
+    px = _rng(color_type).integers(0, 256, size=(5, 4, channels), dtype=np.uint8)
+    png = _png_stream(px, color_type=color_type)
+    if color_type != 2:
+        with pytest.raises(ValueError):
+            decode_png(png)
+        assert decode_any(png)["codec"] == "stub"
+        return
+    meta = decode_any(png)
     assert meta["codec"] == "png"
     assert (meta["width"], meta["height"]) == (4, 5)
     assert meta["n_channels"] == channels
     assert meta["mean_value"] == pytest.approx(float(px.mean()))
 
 
-def test_png_palette_expands_plte():
-    """Color type 3: indices resolve through PLTE, mean over RGB."""
-    from gentropy_spark.operators.codecs import (
-        PNG_SIGNATURE,
-        _png_chunk,
-        decode_png,
-    )
+@pytest.mark.parametrize("bit_depth,interlace", [(16, 0), (8, 1)])
+def test_png_complete_16bit_and_adam7_streams_fall_back_to_stub(
+    bit_depth, interlace
+):
+    """Complete 1x1 RGB streams: Adam7's one non-empty pass is the
+    plain scanline, and the 16-bit scanline is longer than the 8-bit
+    one, so only the IHDR check stops a wrong decode."""
+    from gentropy_spark.operators.codecs import decode_any, decode_png
 
-    palette = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 128]], np.uint8)
-    idx = np.array([[0, 1, 2], [2, 1, 0]], np.uint8)
-    raw = b"".join(b"\x00" + row.tobytes() for row in idx)
-    ihdr = struct.pack(">IIBBBBB", 3, 2, 8, 3, 0, 0, 0)
-    png = (
-        PNG_SIGNATURE
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", palette.tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-    meta = decode_png(png)
-    assert meta["n_channels"] == 3
-    expected = palette[idx.reshape(-1)].mean()
-    assert meta["mean_value"] == pytest.approx(float(expected))
+    px = np.array([[[1, 2, 3]]], np.uint8)
+    png = _png_stream(px, bit_depth=bit_depth, interlace=interlace)
+    with pytest.raises(ValueError):
+        decode_png(png)
+    assert decode_any(png)["codec"] == "stub"
 
 
 def test_png_unsupported_shapes_fall_back_to_stub():
@@ -107,21 +134,19 @@ def test_png_unsupported_shapes_fall_back_to_stub():
 
 def test_png_through_mapinpandas_pipeline(spark):
     """A PNG payload rides the same decode_features contract as
-    PPM/BMP/WAV — schema, batching, N rows in → N rows out."""
-    from gentropy_spark.operators.codecs import encode_png, encode_ppm
+    GIF/WAV — schema, batching, N rows in → N rows out."""
+    from gentropy_spark.operators.codecs import encode_png
     from gentropy_spark.operators.multimodal import decode_features
 
     px = _rng(3).integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
     rows = [
         (1, bytearray(encode_png(px))),
-        (2, bytearray(encode_ppm(px))),
         (3, bytearray(b"not media")),
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r.doc_id: r for r in decode_features(df).collect()}
     assert got[1].codec == "png" and (got[1].width, got[1].height) == (8, 8)
     assert got[1].mean_value == pytest.approx(float(px.mean()))
-    assert got[2].codec == "ppm"
     assert got[3].codec == "stub"
 
 
@@ -272,223 +297,6 @@ def test_salted_join_spreads_hot_key_measured(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
-# --- baseline JPEG codec (operators/jpeg.py) --------------------------------
-def test_jpeg_flat_color_roundtrip_exact():
-    """A constant block is pure DC — it must survive quantization
-    exactly, in both 4:4:4 and 4:2:0."""
-    from gentropy_spark.operators.jpeg import decode_jpeg_pixels, encode_jpeg
-
-    flat = np.full((16, 24, 3), [120, 60, 200], dtype=np.uint8)
-    assert np.array_equal(
-        decode_jpeg_pixels(encode_jpeg(flat, quality=90)), flat
-    )
-    flat2 = np.full((20, 28, 3), [33, 99, 180], dtype=np.uint8)
-    out = decode_jpeg_pixels(encode_jpeg(flat2, quality=90, subsample=True))
-    assert np.array_equal(out, flat2)
-
-
-def _psnr(a, b):
-    mse = ((a.astype(float) - b.astype(float)) ** 2).mean()
-    return 10 * np.log10(255**2 / mse) if mse else np.inf
-
-
-@pytest.mark.parametrize("subsample,floor", [(False, 45.0), (True, 38.0)])
-def test_jpeg_gradient_psnr(subsample, floor):
-    from gentropy_spark.operators.jpeg import decode_jpeg_pixels, encode_jpeg
-
-    x = np.linspace(0, 255, 48)
-    grad = np.stack(np.meshgrid(x, x), -1).mean(-1)
-    img = np.stack([grad, grad[::-1], grad.T], -1).astype(np.uint8)
-    dec = decode_jpeg_pixels(encode_jpeg(img, quality=90, subsample=subsample))
-    assert dec.shape == img.shape
-    assert _psnr(dec, img) >= floor
-
-
-def test_jpeg_noise_gray_and_odd_dims():
-    from gentropy_spark.operators.jpeg import (
-        decode_jpeg,
-        decode_jpeg_pixels,
-        encode_jpeg,
-    )
-
-    noise = _rng(5).integers(0, 256, (40, 56, 3), dtype=np.uint8)
-    dec = decode_jpeg_pixels(encode_jpeg(noise, quality=95))
-    assert dec.shape == noise.shape
-    assert _psnr(dec, noise) >= 30.0  # worst-case content at q=95
-
-    g = _rng(6).integers(0, 256, (17, 31), dtype=np.uint8)
-    meta = decode_jpeg(encode_jpeg(g, quality=90))
-    assert (meta["width"], meta["height"], meta["n_channels"]) == (31, 17, 1)
-
-    odd = _rng(7).integers(0, 256, (13, 11, 3), dtype=np.uint8)
-    assert decode_jpeg_pixels(encode_jpeg(odd, quality=85)).shape == (13, 11, 3)
-
-
-def test_jpeg_unsupported_and_corrupt_fall_back_to_stub():
-    """Lossless SOF3 and truncated scans route to the stub through
-    decode_any; baseline and progressive decode for real."""
-    from gentropy_spark.operators.codecs import decode_any
-    from gentropy_spark.operators.jpeg import encode_jpeg
-
-    good = encode_jpeg(np.full((8, 8, 3), 77, np.uint8))
-    meta = decode_any(good)
-    assert meta["codec"] == "jpeg" and meta["mean_value"] == pytest.approx(77.0)
-
-    # a baseline stream relabeled SOF2 is a valid single-full-band
-    # progressive frame — the r9 progressive decoder handles it
-    prog = bytearray(good)
-    idx = bytes(prog).find(b"\xff\xc0")
-    prog[idx + 1] = 0xC2
-    assert decode_any(bytes(prog))["codec"] == "jpeg"
-
-    # flip to SOF3 (lossless, genuinely unsupported) → stub
-    lossless = bytearray(good)
-    lossless[idx + 1] = 0xC3
-    assert decode_any(bytes(lossless))["codec"] == "stub"
-
-    assert decode_any(good[: len(good) // 2])["codec"] == "stub"
-
-
-# --- progressive JPEG (SOF2) -------------------------------------------------
-def test_jpeg_progressive_identical_to_baseline():
-    """Successive approximation ending at Al=0 is lossless over the
-    quantized coefficients, so progressive and baseline encodings of
-    the same image must decode to byte-identical pixels."""
-    from gentropy_spark.operators.jpeg import (
-        decode_jpeg_pixels, encode_jpeg, encode_jpeg_progressive)
-
-    for shape, sub in [((33, 29, 3), False), ((16, 16), False),
-                       ((40, 37, 3), True), ((64, 48), False)]:
-        px = _rng(sum(shape)).integers(0, 256, size=shape, dtype=np.uint8)
-        b = decode_jpeg_pixels(encode_jpeg(px, quality=88, subsample=sub))
-        p = decode_jpeg_pixels(
-            encode_jpeg_progressive(px, quality=88, subsample=sub)
-        )
-        assert np.array_equal(b, p), f"{shape} sub={sub}"
-
-
-def test_jpeg_progressive_flat_exact_and_decode_any():
-    from gentropy_spark.operators.codecs import decode_any
-    from gentropy_spark.operators.jpeg import (
-        decode_jpeg_pixels, encode_jpeg_progressive)
-
-    flat = np.full((24, 24, 3), 130, dtype=np.uint8)
-    assert np.array_equal(
-        decode_jpeg_pixels(encode_jpeg_progressive(flat, quality=90)), flat
-    )
-    meta = decode_any(encode_jpeg_progressive(flat, quality=90))
-    assert meta["codec"] == "jpeg"
-    assert meta["mean_value"] == pytest.approx(130.0)
-
-
-def test_jpeg_progressive_randomized_content():
-    """Randomized sizes / content classes / scan scripts: impulse and
-    checkerboard images produce the sparse spectra that drive long
-    zero runs (EOB folding, refinement ZRL) — every decode must equal
-    the baseline decode bit-for-bit."""
-    from gentropy_spark.operators.jpeg import (
-        decode_jpeg_pixels, encode_jpeg, encode_jpeg_progressive)
-
-    rng = _rng(123)
-    for trial in range(16):
-        kind = trial % 3
-        h, w = int(rng.integers(8, 60)), int(rng.integers(8, 60))
-        color = bool(rng.integers(0, 2))
-        sub = color and bool(rng.integers(0, 2))
-        shape = (h, w, 3) if color else (h, w)
-        if kind == 0:
-            px = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        elif kind == 1:
-            px = np.full(shape, 128, dtype=np.uint8)
-            for _ in range(int(rng.integers(1, 6))):
-                px[int(rng.integers(0, h)), int(rng.integers(0, w))] = (
-                    rng.integers(0, 256)
-                )
-        else:
-            base = (
-                ((np.arange(h)[:, None] // 4 + np.arange(w)[None, :] // 4)
-                 % 2) * 255
-            ).astype(np.uint8)
-            px = np.stack([base] * 3, axis=-1) if color else base
-        q = int(rng.integers(60, 96))
-        kw = dict(
-            dc_al=int(rng.integers(0, 3)),
-            ac_al=int(rng.integers(0, 4)),
-            band_split=int(rng.integers(1, 63)),
-        )
-        b = decode_jpeg_pixels(encode_jpeg(px, quality=q, subsample=sub))
-        p = decode_jpeg_pixels(
-            encode_jpeg_progressive(px, quality=q, subsample=sub, **kw)
-        )
-        assert np.array_equal(b, p), (trial, shape, sub, q, kw)
-
-
-def test_jpeg_progressive_scan_scripts():
-    """Deeper approximation ladders and other band splits decode
-    identically — more refinement scans, same coefficients."""
-    from gentropy_spark.operators.jpeg import (
-        decode_jpeg_pixels, encode_jpeg, encode_jpeg_progressive)
-
-    px = _rng(77).integers(0, 256, size=(24, 31, 3), dtype=np.uint8)
-    b = decode_jpeg_pixels(encode_jpeg(px, quality=85))
-    for kw in (dict(dc_al=2, ac_al=3, band_split=2),
-               dict(dc_al=0, ac_al=1, band_split=20),
-               dict(dc_al=1, ac_al=2, band_split=62)):
-        p = decode_jpeg_pixels(
-            encode_jpeg_progressive(px, quality=85, **kw)
-        )
-        assert np.array_equal(b, p), kw
-
-
-def test_jpeg_through_mapinpandas_pipeline(spark):
-    from gentropy_spark.operators.jpeg import encode_jpeg
-    from gentropy_spark.operators.multimodal import decode_features
-
-    px = _rng(9).integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_jpeg(px, quality=95)))],
-        "doc_id long, payload binary",
-    )
-    row = decode_features(df).collect()[0]
-    assert row.codec == "jpeg"
-    assert (row.width, row.height, row.n_channels) == (8, 8, 3)
-    assert row.mean_value == pytest.approx(float(px.mean()), abs=3.0)
-
-
-# --- MP4 / ISO-BMFF container metadata --------------------------------------
-def test_mp4_container_metadata_parses():
-    from gentropy_spark.operators.codecs import decode_any, encode_mp4_skeleton
-
-    m = decode_any(encode_mp4_skeleton(1280, 720, 90000, n_tracks=2))
-    assert m["codec"] == "mp4"
-    assert (m["width"], m["height"]) == (1280, 720)
-    assert m["n_channels"] == 2  # track count
-    assert m["sample_rate"] == 90000  # movie timescale
-    assert m["mean_value"] is None  # sample data intentionally undecoded
-
-
-def test_mp4_truncated_falls_back_to_stub():
-    from gentropy_spark.operators.codecs import decode_any, encode_mp4_skeleton
-
-    payload = encode_mp4_skeleton()
-    assert decode_any(payload[:40])["codec"] == "stub"
-    # valid ftyp but no moov
-    assert decode_any(payload[:24])["codec"] == "stub"
-
-
-def test_mp4_through_mapinpandas_pipeline(spark):
-    from gentropy_spark.operators.codecs import encode_mp4_skeleton
-    from gentropy_spark.operators.multimodal import decode_features
-
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_mp4_skeleton(640, 360, 1000, 1)))],
-        "doc_id long, payload binary",
-    )
-    row = decode_features(df).collect()[0]
-    assert row.codec == "mp4" and (row.width, row.height) == (640, 360)
-    assert row.mean_value is None
-
-
 # --- randomized codec round trips (hypothesis) ------------------------------
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -503,65 +311,22 @@ _CODEC_SETTINGS = settings(
 @given(
     h=st.integers(min_value=1, max_value=24),
     w=st.integers(min_value=1, max_value=24),
-    channels=st.sampled_from([1, 2, 3, 4]),
+    channels=st.sampled_from([3]),
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
 @_CODEC_SETTINGS
 def test_png_roundtrip_property(h, w, channels, seed):
-    """PNG is lossless: any size x channel-count round-trips to the
-    exact mean (filters cycle per row, so all five paths run)."""
+    """PNG is lossless: any size round-trips to the exact mean
+    (filters cycle per row, so all five paths run)."""
     from gentropy_spark.operators.codecs import decode_png, encode_png
 
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    shape = (h, w) if channels == 1 else (h, w, channels)
-    px = np.random.default_rng(seed).integers(0, 256, shape, dtype=np.uint8)
-    meta = decode_png(encode_png(px, color_type=ctype))
+    px = np.random.default_rng(seed).integers(
+        0, 256, (h, w, channels), dtype=np.uint8
+    )
+    meta = decode_png(encode_png(px))
     assert (meta["width"], meta["height"]) == (w, h)
     assert meta["n_channels"] == channels
     assert meta["mean_value"] == pytest.approx(float(px.mean()))
-
-
-@given(
-    h=st.integers(min_value=1, max_value=20),
-    w=st.integers(min_value=1, max_value=20),
-    quality=st.integers(min_value=70, max_value=100),
-    subsample=st.booleans(),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-@_CODEC_SETTINGS
-def test_jpeg_roundtrip_property(h, w, quality, subsample, seed):
-    """Baseline JPEG at q>=70: dims/channels exact for any size
-    (including non-multiple-of-8 and 1-pixel edges), mean within a
-    loose lossy tolerance, every pixel within quantization reach."""
-    from gentropy_spark.operators.jpeg import decode_jpeg_pixels, encode_jpeg
-
-    px = np.random.default_rng(seed).integers(0, 256, (h, w, 3), np.uint8)
-    dec = decode_jpeg_pixels(
-        encode_jpeg(px, quality=quality, subsample=subsample)
-    )
-    assert dec.shape == (h, w, 3)
-    assert abs(float(dec.mean()) - float(px.mean())) < 48.0
-
-
-# --- review r9b: EOI-stripped files decode (implicit EOI at EOF) ----------
-def test_jpeg_eoi_stripped_decodes_identically():
-    """In-the-wild JPEGs are commonly truncated right after the last
-    scan's entropy data; EOF must act as an implicit EOI for both
-    baseline and progressive streams (review finding r9b)."""
-    from gentropy_spark.operators.jpeg import (
-        decode_jpeg_pixels,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    px = _rng(11).integers(0, 256, size=(24, 17, 3), dtype=np.uint8)
-    for enc in (encode_jpeg, encode_jpeg_progressive):
-        b = enc(px)
-        assert b.endswith(b"\xff\xd9")
-        assert (decode_jpeg_pixels(b[:-2]) == decode_jpeg_pixels(b)).all()
-    # headerless / scanless garbage must still fail loudly
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(b"\xff\xd8\xff\xdb\x00\x04\x00\x00")
 
 
 # --- GIF codec (r9b): LZW decode + interlace + multi-frame ----------------
@@ -612,50 +377,6 @@ def test_gif_too_many_colors_raises():
     rgb = _rng(8).integers(0, 256, size=(32, 32, 3), dtype=np.uint8)
     with pytest.raises(ValueError):
         encode_gif(rgb)  # ~1024 distinct colors
-
-
-# --- PNG Adam7 interlace (r9b) --------------------------------------------
-@pytest.mark.parametrize(
-    "color_type,channels", [(0, 1), (2, 3), (4, 2), (6, 4)]
-)
-def test_png_adam7_pixel_exact(color_type, channels):
-    """Interlaced encode → decode reassembles the EXACT pixel array
-    (checked byte-level through the decompressed pass data)."""
-    import zlib
-
-    from gentropy_spark.operators.codecs import (
-        _adam7_reassemble,
-        _png_chunks,
-        encode_png,
-    )
-
-    shape = (13, 9, channels) if channels > 1 else (13, 9)
-    px = _rng(color_type).integers(0, 256, size=shape, dtype=np.uint8)
-    b = encode_png(px, color_type=color_type, filter_type=None, interlace=True)
-    idat = b"".join(d for t, d in _png_chunks(b) if t == b"IDAT")
-    out = _adam7_reassemble(zlib.decompress(idat), 9, 13, channels)
-    assert (out.reshape(px.shape) == px).all()
-
-
-@pytest.mark.parametrize("h,w", [(1, 1), (9, 1), (1, 9), (4, 4), (33, 31)])
-def test_png_adam7_edge_dims(h, w):
-    """Dims smaller than the pass grid leave some passes empty; the
-    decode must still see every pixel exactly once."""
-    from gentropy_spark.operators.codecs import decode_png, encode_png
-
-    px = _rng(h * 100 + w).integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    meta = decode_png(encode_png(px, interlace=True))
-    assert (meta["width"], meta["height"]) == (w, h)
-    assert meta["mean_value"] == pytest.approx(float(px.mean()))
-
-
-def test_png_adam7_through_decode_any():
-    from gentropy_spark.operators.codecs import decode_any, encode_png
-
-    px = _rng(3).integers(0, 256, size=(16, 11, 3), dtype=np.uint8)
-    meta = decode_any(encode_png(px, interlace=True))
-    assert meta["codec"] == "png"
-    assert meta["mean_value"] == pytest.approx(float(px.mean()))
 
 
 # --- GIF dictionary-LZW compressor (r9b) ----------------------------------
@@ -716,48 +437,18 @@ def test_gif_roundtrip_property(h, w, ncolors, seed, compress, interlace):
     assert (decode_gif_pixels(b) == img).all()
 
 
-# --- 16-bit PNG / PPM depth support (r9b) ---------------------------------
-@pytest.mark.parametrize(
-    "color_type,channels", [(0, 1), (2, 3), (4, 2), (6, 4)]
-)
-@pytest.mark.parametrize("interlace", [False, True])
-def test_png_16bit_roundtrip(color_type, channels, interlace):
-    from gentropy_spark.operators.codecs import decode_png, encode_png
-
-    shape = (11, 7, channels) if channels > 1 else (11, 7)
-    px = _rng(color_type + interlace).integers(
-        0, 65536, size=shape, dtype=np.uint16
-    )
-    meta = decode_png(
-        encode_png(px, color_type=color_type, interlace=interlace)
-    )
-    assert meta["mean_value"] == pytest.approx(float(px.mean()))
-
-
-def test_ppm_16bit_big_endian():
-    from gentropy_spark.operators.codecs import decode_ppm
-
-    px = _rng(30).integers(0, 65536, size=(5, 4, 3), dtype=np.uint16)
-    payload = b"P6\n4 5\n65535\n" + px.astype(">u2").tobytes()
-    meta = decode_ppm(payload)
-    assert meta["codec"] == "ppm"
-    assert (meta["width"], meta["height"]) == (4, 5)
-    assert meta["mean_value"] == pytest.approx(float(px.mean()))
-
-
 def test_multimodal_stub_ledger_contract():
-    """r11 (verdict #9): the two DECLARED codec stubs — arithmetic-coded
-    JPEG and raw H.264 pixel data — must keep their NULL-metadata
-    contract: decode_any returns codec='stub' with every metadata field
-    NULL (never a fabricated decode), and MP4/H.264 containers return
-    real box metadata with mean_value NULL (sample data not decoded)."""
+    """r11 (verdict #9): undecoded media — arithmetic-coded JPEG and
+    raw H.264 pixel data — keeps the NULL-metadata contract: decode_any
+    returns codec='stub' with every metadata field NULL (never a
+    fabricated decode)."""
     import struct
 
-    from gentropy_spark.operators.codecs import decode_any, decode_mp4
+    from gentropy_spark.operators.codecs import decode_any
 
     # Arithmetic-coded JPEG: SOI + SOF9 (extended sequential,
-    # arithmetic coding) frame header. decode_jpeg must raise and
-    # decode_any must land on the stub contract.
+    # arithmetic coding) frame header. decode_any must land on the
+    # stub contract.
     sof9 = (
         b"\xff\xd8"  # SOI
         + b"\xff\xc9" + struct.pack(">H", 11)  # SOF9, len
@@ -778,25 +469,4 @@ def test_multimodal_stub_ledger_contract():
     annexb = b"\x00\x00\x00\x01\x67" + bytes(32)
     out = decode_any(annexb)
     assert out["codec"] == "stub"
-    assert out["mean_value"] is None
-
-    # H.264 inside MP4: box metadata is real (dims from tkhd), but
-    # mean_value stays NULL — the pixel decode is the declared stub.
-    def box(btype: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + btype + body
-
-    mvhd = box(
-        b"mvhd",
-        bytes(1) + bytes(3) + bytes(8) + struct.pack(">I", 1000) + bytes(84),
-    )
-    tkhd_body = bytes(1) + bytes(3) + bytes(76) + struct.pack(
-        ">II", 64 << 16, 48 << 16
-    )
-    trak = box(b"trak", box(b"tkhd", tkhd_body))
-    payload = box(b"ftyp", b"isom\x00\x00\x02\x00isomavc1") + box(
-        b"moov", mvhd + trak
-    )
-    out = decode_mp4(payload)
-    assert out["codec"] == "mp4"
-    assert out["width"] == 64 and out["height"] == 48
     assert out["mean_value"] is None

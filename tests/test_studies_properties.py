@@ -86,7 +86,7 @@ def test_sample_size_counts_property(spark, studies):
     """n_cases/n_controls/n_samples equal the independent recount, with
     '{:,}'-formatted numbers (in-number commas at every thousands
     boundary) surviving the ',\\s+' entry split."""
-    from gentropy_spark.plans.studies import parse_sample_counts
+    from gentropy_spark.plans.studies import sample_counts
 
     data = []
     for i, entries in enumerate(studies):
@@ -95,7 +95,10 @@ def test_sample_size_counts_property(spark, studies):
         )
         data.append((i, s))
     df = spark.createDataFrame(data, "study_id long, initial_sample_size string")
-    got = {r.study_id: r for r in parse_sample_counts(df).collect()}
+    got = {
+        r.study_id: r
+        for r in df.select("study_id", *sample_counts()).collect()
+    }
     for i, entries in enumerate(studies):
         exp_cases = sum(n for n, kind, _ in entries if kind == "cases")
         exp_ctrl = sum(n for n, kind, _ in entries if kind == "controls")
@@ -110,7 +113,7 @@ def test_sample_size_no_digit_entries_are_null_not_zero(spark):
     """Entries without digits contribute NULL (skipped by SUM), and a
     study with ONLY digitless entries gets NULL n_samples but zero
     cases/controls (the COALESCE guard)."""
-    from gentropy_spark.plans.studies import parse_sample_counts
+    from gentropy_spark.plans.studies import sample_counts
 
     df = spark.createDataFrame(
         [
@@ -119,7 +122,10 @@ def test_sample_size_no_digit_entries_are_null_not_zero(spark):
         ],
         "study_id long, initial_sample_size string",
     )
-    got = {r.study_id: r for r in parse_sample_counts(df).collect()}
+    got = {
+        r.study_id: r
+        for r in df.select("study_id", *sample_counts()).collect()
+    }
     assert (got[1].n_cases, got[1].n_controls, got[1].n_samples) == (0, 5000, 5000)
     assert (got[2].n_cases, got[2].n_controls) == (0, 0)
     assert got[2].n_samples is None
